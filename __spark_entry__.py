@@ -177,10 +177,10 @@ def q_type_normalize(spark, sf_dir):
 
 def q_null_scrub(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    return d.select(
+    return d.selectExpr(
         "doc_id",
-        document.scrub_value(F.col("source")).alias("source_clean"),
-        document.scrub_value(F.col("lang")).alias("lang_clean"),
+        f"{document.scrub_sql('source')} AS source_clean",
+        f"{document.scrub_sql('lang')} AS lang_clean",
     )
 
 

@@ -27,8 +27,6 @@ import argparse
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..operators import document, routing
 from ..plans.mapping import synthesize_mapping
@@ -166,23 +164,11 @@ def build_documents(spark: SparkSession, cfg: Hive2ESConfig) -> tuple[DataFrame,
         for col, keys in keys_cache.items():
             df = document.flatten_map_column(df, col, keys=keys)
 
-    df = document.normalize_types(df, cfg.type_overrides)
-    df = document.scrub_nulls(df)
-
-    id_col = cfg.id_col
-    if id_col is None:
-        # deterministic synthesized id: hash of the full row (idempotent
-        # across reruns, unlike the reference's random fallback
-        # Hive2ES.scala:60-62)
-        df = df.withColumn("_gen_id", F.md5(F.to_json(F.struct(*df.columns))))
-        id_col = "_gen_id"
-
-    docs = document.to_documents(
-        df,
-        id_col=id_col,
-        routing_col=cfg.routing_col,
-        doc_columns=[c for c in df.columns if c != "_gen_id"],
-    )
+    # normalize -> scrub -> (_id, _routing, doc) as one fused projection;
+    # no id column -> _id = md5(doc), a deterministic hash of the full row
+    # (idempotent across reruns, unlike the reference's random fallback
+    # Hive2ES.scala:60-62)
+    docs = document.project_documents(df, cfg.id_col, cfg.routing_col, cfg.type_overrides)
     if cfg.repartition:
         routed = routing.repartition_for_shards(
             docs, "_routing", cfg.num_shards, cfg.partition_multiple

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .util import fan_out
+from .util import sql_ident as _bq
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -91,11 +92,6 @@ def shingles(text: Column | str, k: int = 3) -> Column:
     larger plans (see its docstring)."""
     c = F.col(text) if isinstance(text, str) else text
     return shingles_from_tokens(F.split(c, " "), k)
-
-
-def _bq(name: str) -> str:
-    """Backtick-quote an identifier for a SQL expression string."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _shingle_sql(toks_sql: str, k: int) -> str:

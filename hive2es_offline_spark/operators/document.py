@@ -17,6 +17,12 @@ dropped to ``RDD[Row]`` at ``Hive2ES.scala:46`` and lost all three):
   aggregation over exploded map keys instead of the reference's full
   RDD scan + distinct + collect.
 
+The value rules (type normalization, null scrub) and the document body are
+rendered once each as Spark-SQL text (``normalize_sql``, ``scrub_sql``,
+``_documents``); ``project_documents`` fuses all three into one
+``selectExpr`` so the driver builds the projection in a handful of py4j
+round trips however wide the table is.
+
 Scale notes: every op here is a narrow transformation except
 ``discover_map_keys`` (one distinct aggregation, map-side combined) — so the
 document pipeline adds zero shuffles to a scan at 100 TB.  Key discovery is
@@ -27,9 +33,11 @@ key cardinality is a schema explosion, which the reference silently risks via
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .util import sql_ident, sql_string
 
 # ---------------------------------------------------------------------------
 # field names (reference O8)
@@ -86,43 +94,53 @@ def es_type_for(data_type: T.DataType, override: str | None = None) -> str:
     return ES_TYPE_RULES.get(s, s)
 
 
+#: manual override (ES type) -> Spark cast target (``PAHive2ES.scala:180-192``);
+#: an unknown ES type falls back to string
+_OVERRIDE_CASTS = {
+    "long": "bigint",
+    "integer": "int",
+    "double": "double",
+    "float": "float",
+    "string": "string",
+    "boolean": "boolean",
+}
+
+_DATE_TYPES = (T.DateType, T.TimestampType, T.TimestampNTZType)
+
+
+def normalize_sql(
+    field: T.StructField, override: str | None = None, date_format: str = "yyyyMMdd"
+) -> tuple[str, bool]:
+    """Spark-SQL text of one column's document value, and whether that
+    value is a string: decimal -> double (``BigDecimal.doubleValue()``,
+    ``PAHive2ES.scala:193``), date/timestamp -> formatted string
+    (``PAHive2ES.scala:178-179``), a manual per-field override wins
+    (``PAHive2ES.scala:180-192``).  Integral and string columns pass
+    through (bigint==long, int==integer)."""
+    c = sql_ident(field.name)
+    if override:
+        target = _OVERRIDE_CASTS.get(override, "string")
+        return f"CAST({c} AS {target})", target == "string"
+    if isinstance(field.dataType, T.DecimalType):
+        return f"CAST({c} AS double)", False
+    if isinstance(field.dataType, _DATE_TYPES):
+        return f"date_format({c}, {sql_string(date_format)})", True
+    return c, isinstance(field.dataType, T.StringType)
+
+
 def normalize_types(
     df: DataFrame,
     overrides: dict[str, str] | None = None,
     date_format: str = "yyyyMMdd",
 ) -> DataFrame:
-    """Apply the reference's document value normalization per column:
-
-    decimal -> double (``BigDecimal.doubleValue()``, ``PAHive2ES.scala:193``),
-    date/timestamp -> formatted string (``PAHive2ES.scala:178-179``), manual
-    per-field overrides win (``PAHive2ES.scala:180-192``).  Integral and
-    string columns pass through (bigint==long, int==integer).
-    """
+    """Apply ``normalize_sql`` to every column (one projection)."""
     overrides = overrides or {}
-    cols: list[Column] = []
-    for f in df.schema.fields:
-        c = F.col(f.name)
-        target = overrides.get(f.name)
-        if target:
-            c = _cast_override(c, target)
-        elif isinstance(f.dataType, T.DecimalType):
-            c = c.cast("double")
-        elif isinstance(f.dataType, (T.DateType, T.TimestampType, T.TimestampNTZType)):
-            c = F.date_format(c, date_format)
-        cols.append(c.alias(f.name))
-    return df.select(*cols)
-
-
-def _cast_override(c: Column, es_type: str) -> Column:
-    spark_type = {
-        "long": "bigint",
-        "integer": "int",
-        "double": "double",
-        "float": "float",
-        "string": "string",
-        "boolean": "boolean",
-    }.get(es_type, "string")
-    return c.cast(spark_type)
+    return df.selectExpr(
+        *[
+            f"{normalize_sql(f, overrides.get(f.name), date_format)[0]} AS {sql_ident(f.name)}"
+            for f in df.schema.fields
+        ]
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -130,11 +148,14 @@ def _cast_override(c: Column, es_type: str) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def scrub_value(c: Column) -> Column:
-    """null / '' / 'null' (case-insensitive) -> NULL for string values
+def scrub_sql(expr: str) -> str:
+    """Spark-SQL text of the null scrub: null / '' / 'null'
+    (case-insensitive, trimmed) -> NULL for a string value
     (``PAHive2ES.scala:164-173``)."""
-    t = F.trim(c)
-    return F.when((t == "") | (F.lower(t) == "null"), F.lit(None)).otherwise(c)
+    return (
+        f"CASE WHEN trim({expr}) = '' OR lower(trim({expr})) = 'null' "
+        f"THEN NULL ELSE {expr} END"
+    )
 
 
 def scrub_nulls(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
@@ -147,10 +168,10 @@ def scrub_nulls(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
         if columns is not None
         else [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
     )
-    return df.select(
+    return df.selectExpr(
         *[
-            scrub_value(F.col(f.name)).alias(f.name) if f.name in targets else F.col(f.name)
-            for f in df.schema.fields
+            f"{scrub_sql(sql_ident(c))} AS {sql_ident(c)}" if c in targets else sql_ident(c)
+            for c in df.columns
         ]
     )
 
@@ -173,16 +194,62 @@ def to_documents(
     deterministic fallback (the id cast) keeps reruns idempotent, which the
     sink's create-mode dedup requires.
     """
-    body = doc_columns or [c for c in df.columns]
-    routing = F.coalesce(
-        *( [F.col(routing_col).cast("string")] if routing_col else [] ),
-        F.col(id_col).cast("string"),
-    )
-    return df.select(
-        F.col(id_col).cast("string").alias("_id"),
-        routing.alias("_routing"),
-        F.to_json(F.struct(*[F.col(c) for c in body])).alias("doc"),
-    )
+    return _documents(df, {c: sql_ident(c) for c in df.columns}, id_col, routing_col, doc_columns)
+
+
+def project_documents(
+    df: DataFrame,
+    id_col: str | None = None,
+    routing_col: str | None = None,
+    overrides: dict[str, str] | None = None,
+) -> DataFrame:
+    """``to_documents(scrub_nulls(normalize_types(df)))`` as ONE fused
+    ``selectExpr``: each column's value is rendered once as SQL text
+    (``normalize_sql``, then ``scrub_sql`` when the value is a string) and
+    the whole row -> document projection is parsed as a single plan — a
+    handful of py4j round trips instead of several per column.
+
+    ``id_col=None`` synthesizes ``_id = md5(doc)`` in a second, one-line
+    projection: a hash of the full normalized row, idempotent across reruns
+    (unlike the reference's random fallback, ``Hive2ES.scala:60-62``).  The
+    JSON body is serialized once and hashed, byte-identical to
+    ``md5(to_json(struct(<normalized columns>)))`` because both serialize
+    the same columns in the same order."""
+    overrides = overrides or {}
+    values = {}
+    for f in df.schema.fields:
+        expr, is_string = normalize_sql(f, overrides.get(f.name))
+        values[f.name] = scrub_sql(expr) if is_string else expr
+    return _documents(df, values, id_col, routing_col)
+
+
+def _documents(
+    df: DataFrame,
+    values: dict[str, str],
+    id_col: str | None,
+    routing_col: str | None,
+    doc_columns: list[str] | None = None,
+) -> DataFrame:
+    """The (_id, _routing, doc) projection over per-column value SQL (a
+    name missing from ``values`` stays a plain reference, so Spark reports
+    it as an unresolved column)."""
+
+    def value(c: str) -> str:
+        return values.get(c, sql_ident(c))
+
+    body = ", ".join(f"{value(c)} AS {sql_ident(c)}" for c in doc_columns or values)
+    doc = f"to_json(struct({body})) AS doc"
+    route = [f"CAST({value(routing_col)} AS string)"] if routing_col else []
+    if id_col is not None:
+        _id = f"CAST({value(id_col)} AS string)"
+        return df.selectExpr(
+            f"{_id} AS _id", f"coalesce({', '.join(route + [_id])}) AS _routing", doc
+        )
+    # doc is referenced three times below, so Catalyst keeps it in its own
+    # projection (CollapseProject never duplicates a non-trivial expression):
+    # the JSON body is built once per row and hashed
+    routed = df.selectExpr(f"{route[0] if route else 'CAST(NULL AS string)'} AS _routing", doc)
+    return routed.selectExpr("md5(doc) AS _id", "coalesce(_routing, md5(doc)) AS _routing", "doc")
 
 
 def parse_json_column(

@@ -24,11 +24,12 @@ reference:
   written by ``multiple`` concurrent tasks instead of one straggler.
 
 Scale notes: one wide exchange, keyed by a 4-byte int.  The reference
-shuffled serialized fastjson objects; here the shuffle happens BEFORE
-document serialization so only normalized columns cross the wire.  The
-probe-key array is a plan literal of ``N`` ints (N = shards*multiple;
-~10k for a 1000-shard index at the default multiple) — negligible plan
-size, zero per-row Python.
+shuffled serialized fastjson objects, and so does this engine:
+``jobs/hive2es.build_documents`` repartitions AFTER the document
+projection, so each row crosses the wire as ``_id``, ``_routing`` and the
+``doc`` JSON string.  The probe-key array is a plan literal of ``N`` ints
+(N = shards*multiple; ~10k for a 1000-shard index at the default
+multiple) — negligible plan size, zero per-row Python.
 """
 
 from __future__ import annotations

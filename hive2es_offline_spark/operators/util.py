@@ -43,3 +43,14 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def sql_ident(name: str) -> str:
+    """Backtick-quote an identifier for a Spark-SQL expression string."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(s: str) -> str:
+    """Spark-SQL single-quoted string literal (escapedStringLiterals=false
+    default: backslash escapes are processed, so double them)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"

@@ -73,6 +73,9 @@ from contextlib import contextmanager
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..operators.util import sql_ident as _bq_ident
+from ..operators.util import sql_string as _sq
+
 __all__ = [
     "analyze_col", "analyze_text", "using", "current_analyzer",
     "DUCKDB_TOKEN_RE", "ANALYZERS", "register_analyzer", "analyzer_names",
@@ -1244,17 +1247,6 @@ def analyze_col(col: "Column | str", analyzer: str | None = None) -> Column:
 # ---------------------------------------------------------------------------
 # SQL-string rendering of the chain (py4j round-trip economy, r15)
 # ---------------------------------------------------------------------------
-
-
-def _bq_ident(name: str) -> str:
-    """Backtick-quote an identifier for a SQL expression string."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _sq(s: str) -> str:
-    """Spark-SQL single-quoted string literal (escapedStringLiterals=false
-    default: backslash escapes are processed, so double them)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _spark_stem_steps(lang: str = "english") -> list[str]:

@@ -18,20 +18,25 @@ Layout:
 
 Scale notes: the write is ``partitionBy("shard")`` on the already
 shard-co-located DataFrame, so each task writes only its own shard dirs (no
-second shuffle).  Validation reads the manifest, not the data.  The rename
-publish is atomic on HDFS-like filesystems — identical guarantee to the
-reference.
+second shuffle), and it is the sink's only Spark job.  The manifest's
+per-shard counts come from the written files' parquet footers
+(``shard_counts``), so they count what is actually on disk without
+re-reading the data; publish checks the staged files against the manifest
+the same way before the rename.  The rename publish is atomic on HDFS-like
+filesystems — identical guarantee to the reference.  Like the rename, the
+footer count assumes a root the driver can open as a POSIX path.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..plans.mapping import index_settings_final, index_settings_for_load
 
@@ -52,19 +57,10 @@ def write_bundle(
     OVER the serving defaults (the reference's --final-index-setting,
     ``ESClient.java:251-266``)."""
     staging = os.path.join(root, f"{index_name}_tmp")
-    renamed = docs.withColumnRenamed(shard_col, "shard")
-    renamed.write.mode("overwrite").partitionBy("shard").parquet(staging)
-    spark = docs.sparkSession
-    # validation counts come from re-reading what was actually written
-    # (schema passed explicitly so an empty bundle is readable too)
-    counts = {
-        int(r["shard"]): int(r["cnt"])
-        for r in spark.read.schema(renamed.schema)
-        .parquet(staging)
-        .groupBy("shard")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
+    docs.withColumnRenamed(shard_col, "shard").write.mode("overwrite").partitionBy(
+        "shard"
+    ).parquet(staging)
+    counts = shard_counts(staging)
     manifest = {
         "index": index_name,
         "num_shards": num_shards,
@@ -79,6 +75,17 @@ def write_bundle(
     with open(os.path.join(staging, "_MANIFEST.json"), "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
     return manifest
+
+
+def shard_counts(staging: str) -> dict[int, int]:
+    """Documents per shard of a staged bundle, summed from the row counts
+    in the part files' parquet footers (no Spark job, no data pages read).
+    Shards with no rows are absent, as in a ``groupBy("shard").count()``."""
+    counts: dict[int, int] = {}
+    for f in glob.glob(os.path.join(staging, "shard=*", "part-*.parquet")):
+        shard = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
+        counts[shard] = counts.get(shard, 0) + pq.read_metadata(f).num_rows
+    return {s: n for s, n in sorted(counts.items()) if n}
 
 
 def publish_bundle(
@@ -97,6 +104,13 @@ def publish_bundle(
     if manifest["doc_count"] < min_docs:
         raise ValueError(
             f"bundle {index_name} failed validation: {manifest['doc_count']} docs < {min_docs}"
+        )
+    on_disk = {str(s): n for s, n in shard_counts(staging).items()}
+    if on_disk != manifest["shard_counts"]:
+        raise ValueError(
+            f"bundle {index_name} failed validation: staged files hold "
+            f"{sum(on_disk.values())} docs per shard {on_disk}, manifest says "
+            f"{manifest['doc_count']} per shard {manifest['shard_counts']}"
         )
     manifest["state"] = "completed"
     manifest["published_ms"] = int(time.time() * 1000)

@@ -2,9 +2,11 @@
 source table to a published, alias-addressable bundle."""
 
 import json
+import re
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from hive2es_offline_spark.jobs import Hive2ESConfig, build_documents, run_job
 from hive2es_offline_spark.sinks import bundle
@@ -434,3 +436,72 @@ def test_esql_cli(spark, capsys, tmp_path):
 
     with _pytest.raises(ValueError, match="name=path"):
         ejob.main(["--index", "orders", "--query", "FROM orders"])
+
+
+def _pre_fusion_documents(df):
+    """The Column-built document rules as they were before the fused SQL
+    projection — kept here only as the reference the generated ids must
+    keep matching: normalize (decimal -> double, date/timestamp ->
+    yyyyMMdd), scrub ''/'null' strings, then md5(to_json(struct(cols)))."""
+    cols = []
+    for f in df.schema.fields:
+        c = F.col(f.name)
+        if isinstance(f.dataType, T.DecimalType):
+            c = c.cast("double")
+        elif isinstance(f.dataType, (T.DateType, T.TimestampType, T.TimestampNTZType)):
+            c = F.date_format(c, "yyyyMMdd")
+        if isinstance(f.dataType, (T.StringType, T.DateType, T.TimestampType, T.TimestampNTZType)):
+            t = F.trim(c)
+            c = F.when((t == "") | (F.lower(t) == "null"), F.lit(None)).otherwise(c)
+        cols.append(c.alias(f.name))
+    n = df.select(*cols)
+    body = F.to_json(F.struct(*n.columns))
+    return n.select(F.md5(body).alias("_id"), body.alias("doc"))
+
+
+@pytest.mark.parametrize("flatten_maps", [True, False])
+def test_generated_ids_match_pre_fusion_formula(spark, tmp_path, flatten_maps):
+    import datetime as dt
+    import decimal
+
+    strings = ["", "null", " NULL ", "x", None, "ok'q\\\"", "Null"]
+    rows = [
+        (
+            i,
+            decimal.Decimal(f"{i}.25"),
+            dt.date(2020, 1, 1 + i % 28),
+            dt.datetime(2021, 2, 3, 4, 5, i % 60),
+            {"a": strings[i % 7], "b": "null"} if i % 3 else {"c": ""},
+            strings[i % 7],
+        )
+        for i in range(42)
+    ]
+    src = spark.createDataFrame(
+        rows, "k int, d decimal(10,2), day date, ts timestamp, m map<string,string>, s string"
+    )
+    src.write.parquet(str(tmp_path / "mixed.parquet"))
+    cfg = Hive2ESConfig(
+        table="mixed", index_name="mx_v1", sf_dir=str(tmp_path), flatten_maps=flatten_maps
+    )
+    docs, _ = build_documents(spark, cfg)
+    got = sorted((r["_id"], r["doc"]) for r in docs.select("_id", "doc").collect())
+
+    from hive2es_offline_spark.operators import document
+    from hive2es_offline_spark.sources import read_table
+
+    ref = read_table(spark, "mixed", str(tmp_path))
+    if flatten_maps:
+        ref = document.flatten_map_column(ref, "m")
+    want = sorted((r["_id"], r["doc"]) for r in _pre_fusion_documents(ref).collect())
+    assert got == want
+    assert len({i for i, _ in got}) == len(rows)  # every row its own id
+
+
+def test_document_json_is_serialized_once(spark):
+    # the fused projection builds the body once and hashes it: one to_json
+    # in the physical plan, not one for doc and another inside md5
+    cfg = Hive2ESConfig(table="lineitem", index_name="li_v1", sf_dir=SF_SMOKE)
+    docs, _ = build_documents(spark, cfg)
+    plan = docs._jdf.queryExecution().executedPlan().toString()
+    # Spark 4 prints to_json in a physical plan as its evaluator
+    assert len(re.findall(r"to_json\(|StructsToJsonEvaluator\(", plan)) == 1, plan

@@ -1,0 +1,117 @@
+"""Spark-job counters for the index job and the table read: a warm
+``run_job`` is one Spark job (the bundle write), a repeat read of an
+unchanged table launches none, and a rewritten table is inferred again.
+Jobs are counted with ``statusTracker`` job ids under a job group."""
+
+import uuid
+from contextlib import contextmanager
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from hive2es_offline_spark.jobs import Hive2ESConfig, run_job
+from hive2es_offline_spark.sources import read_table
+
+from conftest import SF_SMOKE
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Collect the ids of the Spark jobs launched inside the block."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    ids: list[int] = []
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store fills from the listener bus, asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_run_job_launches_one_spark_job(spark, tmp_path):
+    read_table(spark, "lineitem", SF_SMOKE)  # the session has seen the table
+    cfg = Hive2ESConfig(
+        table="lineitem",
+        index_name="lineitem_20240101",
+        sf_dir=SF_SMOKE,
+        where="l_quantity < 30",
+        routing_col="l_orderkey",
+        num_shards=3,
+        output_root=str(tmp_path),
+    )
+    with spark_jobs(spark) as jobs:
+        manifest = run_job(spark, cfg)
+    assert manifest["state"] == "completed" and manifest["doc_count"] > 0
+    assert len(jobs) == 1, f"run_job launched jobs {jobs}"
+
+
+def test_repeat_read_of_unchanged_table_launches_no_job(spark):
+    first = read_table(spark, "lineitem", SF_SMOKE)
+    with spark_jobs(spark) as jobs:
+        again = read_table(spark, "lineitem", SF_SMOKE, where="l_quantity < 30")
+    assert jobs == []
+    assert again.schema == first.schema
+
+
+def _write_file(path, table):
+    pq.write_table(table, str(path))
+
+
+def _write_dir(path, table, spark):
+    spark.createDataFrame(table.to_pandas()).coalesce(1).write.mode("overwrite").parquet(str(path))
+
+
+@pytest.mark.parametrize("layout", ["file", "directory"])
+def test_rewritten_table_is_inferred_again(spark, tmp_path, layout):
+    path = tmp_path / "t.parquet"
+    write = _write_file if layout == "file" else (lambda p, t: _write_dir(p, t, spark))
+    write(path, pa.table({"a": [1, 2]}))
+    assert read_table(spark, "t", str(tmp_path)).columns == ["a"]
+    write(path, pa.table({"a": [1, 2], "b": ["x", "y"]}))
+    df = read_table(spark, "t", str(tmp_path))
+    assert df.columns == ["a", "b"]
+    assert [r["a"] for r in df.where("b = 'y'").collect()] == [2]
+
+
+def test_schema_cache_shared_between_threads():
+    # more threads than cores on a tiny cache, with a short switch
+    # interval: no lost or torn entry, the bound holds, sessions stay apart
+    import sys
+    import threading
+
+    from hive2es_offline_spark.sources.tables import SchemaCache
+
+    class Session:  # weakref-able stand-in for a SparkSession
+        pass
+
+    cache, sessions = SchemaCache(size=4), [Session(), Session()]
+    errors: list[BaseException] = []
+
+    def hammer(t):
+        try:
+            for i in range(2000):
+                s, key = sessions[i % 2], (t, i % 6)
+                cache.put(s, key, (id(s), key))
+                got = cache.get(s, key)
+                assert got in (None, (id(s), key)), got
+        except BaseException as e:  # reported below, on the main thread
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hammer, args=(t,)) for t in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    for s in sessions:
+        assert 0 < len(cache._by_session[s]) <= 4

@@ -1,9 +1,11 @@
 """Bundle sink: staging -> validate -> atomic publish -> alias swap; bulk
 batching thresholds; multimodal plumbing."""
 
+import glob
 import json
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -41,6 +43,53 @@ def test_publish_validation_rejects_empty(spark, docs, tmp_path):
     bundle.write_bundle(docs.limit(0), root, "empty_v1", 3)
     with pytest.raises(ValueError, match="failed validation"):
         bundle.publish_bundle(root, "empty_v1")
+
+
+def _shard_docs(spark, sizes):
+    """Documents with ``sizes[shard]`` rows on each shard, spread over
+    several tasks so a shard spans several part files."""
+    rows = [(f"{s}-{i}", f"{s}-{i}", "{}", s) for s, n in sizes.items() for i in range(n)]
+    df = spark.createDataFrame(rows, "_id string, _routing string, doc string, _shard int")
+    return df.repartition(4)
+
+
+@pytest.mark.parametrize(
+    "sizes, limit0",
+    [
+        ({0: 900, 1: 3, 2: 1}, False),  # skewed; shard 3 empty
+        ({1: 40, 3: 25}, False),  # shards 0 and 2 empty
+        ({0: 10, 1: 10}, True),  # docs.limit(0): nothing written
+    ],
+)
+def test_footer_counts_equal_spark_count(spark, tmp_path, sizes, limit0):
+    docs = _shard_docs(spark, sizes)
+    if limit0:
+        docs = docs.limit(0)
+    root = str(tmp_path)
+    m = bundle.write_bundle(docs, root, "idx_v1", 4)
+    staged = (
+        spark.read.schema("_id string, _routing string, doc string, shard int")
+        .parquet(os.path.join(root, "idx_v1_tmp"))
+        .groupBy("shard")
+        .count()
+        .collect()
+    )
+    assert m["shard_counts"] == {r["shard"]: r["count"] for r in staged}
+    assert m["doc_count"] == (0 if limit0 else sum(sizes.values()))
+
+
+def test_deleted_part_file_lowers_count_and_fails_publish(spark, docs, tmp_path):
+    root = str(tmp_path)
+    m = bundle.write_bundle(docs.repartition(4), root, "idx_v1", 3)
+    staging = os.path.join(root, "idx_v1_tmp")
+    victim = sorted(glob.glob(os.path.join(staging, "shard=*", "part-*.parquet")))[0]
+    lost = pq.read_metadata(victim).num_rows
+    os.remove(victim)
+    assert sum(bundle.shard_counts(staging).values()) == m["doc_count"] - lost
+    with pytest.raises(ValueError, match="staged files hold"):
+        bundle.publish_bundle(root, "idx_v1", alias="idx")
+    assert not os.path.exists(os.path.join(root, "idx_v1"))  # nothing published
+    assert not os.path.exists(os.path.join(root, "idx.alias.json"))
 
 
 def test_alias_swap_is_atomic_repoint(spark, docs, tmp_path):
