@@ -4164,7 +4164,7 @@ def q_es_hex_grid(spark, sf_dir):
     engine REJECTS geohex_grid loudly rather than emit wrong H3 ids and
     offers z/q/r axial hex binning instead (pointy-top hexes on the
     equirectangular plane, cube rounding — plans/query_dsl.py::
-    hex_cell; all codegen, no UDF).  Same synthetic deterministic
+    hex_cell_sql; all codegen, no UDF).  Same synthetic deterministic
     customer coordinates as es_geo_grid; one groupBy +
     TakeOrderedAndProject (doc_count desc, key asc, size cap).  The
     oracle replays the identical axial/cube-round arithmetic in SQL."""
@@ -4298,7 +4298,7 @@ def q_es_esql_ip(spark, sf_dir):
     range compares and SORT are numeric ("9.*" < "10.*"), composed
     with CIDR_MATCH over the same synthetic access log as
     es_ip_prefix/es_ip_range.  Malformed non-NULL values raise at
-    runtime (_to_ip docstring); this frame is valid by construction.
+    runtime (_to_ip_sql docstring); this frame is valid by construction.
     EVAL-once shape: the guarded parse runs once and the WHERE/EVAL
     read the column (probed 2.04x vs spelling TO_IP(ip) at every use —
     tools/probe_round15.py #3).  The oracle replays
@@ -4470,8 +4470,9 @@ def q_es_esql_rerank(spark, sf_dir):
 def q_es_esql_grid(spark, sf_dir):
     """ES|QL spatial grid functions (round 15, ES 8.16):
     ``ST_GEOTILE``/``ST_GEOHASH``/``ST_GEOHEX`` expose the grid aggs'
-    cell builders (query_dsl.geotile_cell/geohash_cell/hex_cell — one
-    construction per grid, so agg and scalar cannot drift) as scalar
+    cell renderers (query_dsl.geotile_cell_sql/geohash_cell_sql/
+    hex_cell_sql — one construction per grid, so agg and scalar cannot
+    drift) as scalar
     key functions, here grouping a STATS BY geotile with
     geohash/hex-cell diversity sub-metrics per tile — all codegen bit
     math, ONE aggregation exchange.  ST_GEOHEX is the engine's
@@ -4532,7 +4533,7 @@ def q_es_esql_stats(spark, sf_dir):
 def q_es_esql_fn(spark, sf_dir):
     """ES|QL scalar-function batch (round 15 second wave): IP_PREFIX
     (mask + render through the shared guarded uint32 parse and the
-    functions/ip.ip_from_long render twin), DATE_PARSE (literal
+    functions/ip.ip_from_long_spark render), DATE_PARSE (literal
     pattern, ANSI-loud on malformed) round-tripping a DATE_FORMAT
     rendering, and the MD5 digest feeding a COUNT_DISTINCT — one
     pushdown-eligible filter + one aggregation exchange.  The oracle
@@ -4773,7 +4774,8 @@ def q_es_esql_version(spark, sf_dir):
     compare numerically (9.x before 10.x), a prerelease sorts before
     its release, prerelease identifiers follow SemVer precedence.
     TO_VERSION compiles to a pure-codegen ordering KEY (zero-padded
-    segments + release/prerelease markers, plans/esql.py _to_version),
+    segments + release/prerelease markers, plans/esql.py
+    _to_version_sql),
     so the SORT is one TakeOrderedAndProject over the scan — no UDF,
     no extra exchange beyond the top-k.  The oracle replays the SAME
     total order directly on the numeric components (core segments,
@@ -5315,7 +5317,8 @@ def q_es_geo_grid(spark, sf_dir):
     """geohash_grid / geotile_grid bucket aggregations over the same
     synthetic-but-deterministic customer coordinates as es_geo: the cell
     keys are pure codegen bit math (base-32 interleave / Web-Mercator
-    slippy tiles — ``geohash_cell`` / ``geotile_cell``), the buckets one
+    slippy tiles — ``geohash_cell_sql`` / ``geotile_cell_sql``), the
+    buckets one
     groupBy + TakeOrderedAndProject (doc_count desc, key asc, size cap).
     The DuckDB twin re-implements both key functions in SQL bit
     arithmetic."""

@@ -21,13 +21,10 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 __all__ = [
-    "is_ip_literal", "is_cidr_literal", "cidr_bounds", "ip_to_long",
-    "ip_to_long_sql", "ip_literal_value", "ip_from_long",
-    "ip_from_long_sql", "ip_to_long_spark", "ip_from_long_spark",
+    "is_ip_literal", "is_cidr_literal", "cidr_bounds", "ip_to_long_sql",
+    "ip_literal_value", "ip_from_long_sql", "ip_to_long_spark",
+    "ip_from_long_spark",
 ]
 
 _IP_RE = re.compile(r"^\d{1,3}(?:\.\d{1,3}){3}$")
@@ -78,56 +75,17 @@ def cidr_bounds(block: str) -> tuple[int, int]:
     return lo, lo | host
 
 
-def ip_to_long(c: Column) -> Column:
-    """Dotted-quad COLUMN → uint32 as BIGINT — pure codegen (split +
-    integer arithmetic); malformed or short values yield NULL.  The
-    casts are try_cast: under ANSI mode (Spark 4's default) a plain cast
-    of a garbage octet like "0/8" THROWS mid-query instead of nulling
-    (code-review r11 follow-up — the CIDR-vs-keyword hedge feeds such
-    values through this parser by design)."""
-    p = F.split(c, r"\.")
-    # a 5+-part value must NOT silently use only the first 4 octets
-    four = F.when(F.size(p) == 4, p)
-    return (
-        F.element_at(four, 1).try_cast("bigint") * F.lit(16777216)
-        + F.element_at(four, 2).try_cast("bigint") * F.lit(65536)
-        + F.element_at(four, 3).try_cast("bigint") * F.lit(256)
-        + F.element_at(four, 4).try_cast("bigint")
-    )
-
-
-def ip_from_long(c: Column) -> Column:
-    """uint32 BIGINT → dotted-quad string — the render twin of
-    :func:`ip_to_long` (pure codegen shifts; NULL propagates through
-    concat_ws' typed casts via the shiftrightunsigned/NULL arithmetic).
-    Callers guarantee the value is within [0, 2^32) — the ES|QL
-    IP_PREFIX masks before rendering."""
-    return F.concat_ws(
-        ".",
-        F.shiftrightunsigned(c, 24).bitwiseAND(F.lit(255)).cast("string"),
-        F.shiftrightunsigned(c, 16).bitwiseAND(F.lit(255)).cast("string"),
-        F.shiftrightunsigned(c, 8).bitwiseAND(F.lit(255)).cast("string"),
-        c.bitwiseAND(F.lit(255)).cast("string"),
-    )
-
-
-def ip_from_long_sql(expr: str) -> str:
-    """DuckDB twin of :func:`ip_from_long` for oracle SQL."""
-    return (
-        f"(CAST(({expr} >> 24) & 255 AS VARCHAR) || '.' || "
-        f"CAST(({expr} >> 16) & 255 AS VARCHAR) || '.' || "
-        f"CAST(({expr} >> 8) & 255 AS VARCHAR) || '.' || "
-        f"CAST({expr} & 255 AS VARCHAR))"
-    )
-
-
 def ip_to_long_spark(expr: str) -> str:
-    """Spark-SQL string twin of :func:`ip_to_long` — the SAME analyzed
-    expression, rendered as text so hot plan builders parse it in one
-    ``F.expr`` call instead of ~10 py4j round trips (the round-15/16
-    expression-string pattern).  Twin discipline: any change here must
-    change :func:`ip_to_long` identically (pinned by
-    tests/test_ip.py's twin equality)."""
+    """Dotted-quad SQL expression → uint32 as BIGINT, rendered as
+    Spark-SQL text so plan builders parse it in one ``F.expr`` call —
+    pure codegen (split + integer arithmetic); malformed or short values
+    yield NULL, and a 5+-part value must NOT silently use only its first
+    4 octets.  The casts are TRY_CAST: under ANSI mode (Spark 4's
+    default) a plain cast of a garbage octet like "0/8" THROWS
+    mid-query instead of nulling (code-review r11 follow-up — the
+    CIDR-vs-keyword hedge feeds such values through this parser by
+    design).  :func:`ip_to_long_sql` is its DuckDB counterpart, pinned
+    row for row by tests/test_ip.py::test_ip_to_long_sql_twin."""
     p = f"split({expr}, '\\\\.')"
     four = f"(CASE WHEN (size({p}) = 4) THEN {p} END)"
     return (
@@ -139,8 +97,10 @@ def ip_to_long_spark(expr: str) -> str:
 
 
 def ip_from_long_spark(expr: str) -> str:
-    """Spark-SQL string twin of :func:`ip_from_long` (see
-    :func:`ip_to_long_spark` for the twin discipline)."""
+    """uint32 BIGINT SQL expression → dotted-quad string, the inverse
+    of :func:`ip_to_long_spark` (pure codegen shifts; NULL propagates).
+    Callers guarantee the value is within [0, 2^32) — the ES|QL
+    IP_PREFIX masks before rendering."""
     return (
         "concat_ws('.', "
         f"CAST((shiftrightunsigned({expr}, 24) & 255) AS STRING), "
@@ -150,9 +110,20 @@ def ip_from_long_spark(expr: str) -> str:
     )
 
 
+def ip_from_long_sql(expr: str) -> str:
+    """DuckDB counterpart of :func:`ip_from_long_spark` for oracle SQL."""
+    return (
+        f"(CAST(({expr} >> 24) & 255 AS VARCHAR) || '.' || "
+        f"CAST(({expr} >> 16) & 255 AS VARCHAR) || '.' || "
+        f"CAST(({expr} >> 8) & 255 AS VARCHAR) || '.' || "
+        f"CAST({expr} & 255 AS VARCHAR))"
+    )
+
+
 def ip_to_long_sql(expr: str) -> str:
-    """DuckDB twin of :func:`ip_to_long` for oracle SQL (1-indexed list
-    access; TRY_CAST mirrors Spark's NULL-on-malformed cast)."""
+    """DuckDB counterpart of :func:`ip_to_long_spark` for oracle SQL
+    (1-indexed list access; TRY_CAST mirrors Spark's NULL-on-malformed
+    cast)."""
     p = f"string_split({expr}, '.')"
     four = f"(CASE WHEN len({p}) = 4 THEN {p} END)"
     return (

@@ -321,7 +321,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 20,
-    check_every: int = 1,
 ) -> DataFrame:
     """Resolve near-dup pairs into keep/drop decisions: every document gets
     the MINIMUM id of its connected component as ``component``; survivors
@@ -338,12 +337,8 @@ def connected_components(
 
     The convergence probe RIDES the round's own checkpoint job as an
     ``observe()`` metric (did any label change this round?), so checking
-    costs no extra driver round-trip — the loop exits at the earliest
-    fixpoint instead of paying a separate probe job every ``check_every``
-    rounds (r15: the probe job was itself a join of the two label frames;
-    at check_every=2 a converged graph also ran one propagation round past
-    the fixpoint).  ``check_every`` > 1 now only *delays* reacting to the
-    free metric — kept for API compatibility, default 1.  If the loop exits
+    costs no extra driver round-trip and the loop exits at the earliest
+    fixpoint.  If the loop exits
     via ``max_iterations`` with labels still changing (a chain longer than
     the cap), a warning is raised — silently returning split components
     would make downstream keep/drop retain both halves of one duplicate
@@ -368,7 +363,7 @@ def connected_components(
         .withColumn("component", F.col("id"))
     )
     converged = False
-    for it in range(max_iterations):
+    for _ in range(max_iterations):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.id)
             .groupBy("src")
@@ -410,11 +405,9 @@ def connected_components(
             .localCheckpoint(eager=True)
         )
         labels = new_labels
-        changed = obs.get["changed"]  # None on an empty label frame
-        if it % check_every == check_every - 1 or it == max_iterations - 1:
-            if not changed:
-                converged = True
-                break
+        if not obs.get["changed"]:  # None on an empty label frame
+            converged = True
+            break
     if not converged:
         import warnings
 

@@ -151,7 +151,7 @@ hex_grid agg); TO_GEOPOINT / TO_GEOSHAPE for literal WKT —
 point COLUMNS are struct{lat,lon}, the engine's geo_point
 representation), ``TO_IP`` (dotted-quad → uint32 ordering key, so
 ip compares/sorts are numeric; malformed non-NULL raises — see
-``_to_ip``), ``IP_PREFIX`` (mask + render through the same guarded
+``_to_ip_sql``), ``IP_PREFIX`` (mask + render through the same guarded
 parse), ``DATE_PARSE`` (literal pattern; malformed throws under ANSI),
 the hash digests (MD5 SHA1 SHA256 + generalized HASH(alg, v)), the
 math tail (LOG LOG10 EXP SIN COS TAN ASIN ACOS ATAN ATAN2 SINH COSH
@@ -378,29 +378,31 @@ def _parse_wkt(s: str) -> dict:
 
 # ---------------------------------------------------------- expression parse
 #
-# Round-16 SQL-string backend (guide §7.3, the round-15 pattern): a
-# py4j round trip costs ~0.5 ms on a PySpark driver, so building each
-# expression node through the Column API made one ES|QL compile cost
-# 0.3-1 s of pure driver latency (es_esql_ip measured ~1 830 calls).
-# The parser therefore carries expressions as a UNION type
-# ``str | Column``: pure grammar nodes (literals, column refs,
-# arithmetic, comparisons, the whitelisted scalars/aggregates) render
-# as Spark-SQL text in plain Python and are parsed ONCE per stage
-# (``df.where(str)`` / one ``F.expr``), while bridge nodes that reuse
-# other modules' Column builders (full-text predicates, geo shapes,
-# KNN, CATEGORIZE) stay Columns — ``_c`` promotes a string operand at
-# the first mixed combination.  Setting ``_COLUMN_BACKEND = True``
-# forces the legacy Column tier at the leaves, which cascades through
-# the whole tree: tests A/B the two backends for row-identical results
-# (tests/test_esql.py::TestSqlTierTwin), the same twin discipline as
-# plans/analysis.py's chain strings.
-
-_COLUMN_BACKEND = False  # test/measure hook — True = legacy Column tier
+# Every expression renders as Spark-SQL text in plain Python and is
+# parsed ONCE per stage (``df.where(str)`` / one ``F.expr``): a py4j
+# round trip costs ~0.5 ms on a PySpark driver, so building each node
+# through the Column API made one ES|QL compile cost 0.3-1 s of pure
+# driver latency (es_esql_ip measured ~1 830 calls).  Calls that reuse
+# another module's Column builder — the full-text predicates, the geo
+# relations and ST_DISTANCE, KNN, CATEGORIZE — are BRIDGES:
+# ``_P._bridge`` registers the Column under a hidden ``\x00b<n>`` name
+# and returns that name as SQL text.  The stage that parsed the
+# expression projects its bridges just before its own operator
+# (``_with_bridges``) and drops them after it (``_drop_bridges``), so a
+# bridge composes under any operator and no hidden column reaches the
+# output frame.
 
 
-def _c(e):
-    """Promote a SQL-string expression to a Column (bridge boundary)."""
-    return F.expr(e) if isinstance(e, str) else e
+def _with_bridges(df: DataFrame, bridges: list) -> DataFrame:
+    """Project each registered bridge Column under its hidden name, in
+    registration order (a bridge may read an earlier one)."""
+    for name, col in bridges:
+        df = df.withColumn(name, col)
+    return df
+
+
+def _drop_bridges(df: DataFrame, bridges: list) -> DataFrame:
+    return df.drop(*[name for name, _ in bridges]) if bridges else df
 
 
 def _bq_name(name: str) -> str:
@@ -438,16 +440,28 @@ def _py_sql(v) -> str:
 
 
 class _P:
-    """Recursive-descent parser over the token list of one stage slice."""
+    """Recursive-descent parser over the token list of one stage slice.
 
-    def __init__(self, toks: list[tuple[str, str]]):
+    Expression methods return Spark-SQL text.  ``bridges`` collects the
+    (hidden name, Column) pairs of bridge calls; the sub-parsers of one
+    stage share the stage parser's list so the names stay unique."""
+
+    def __init__(self, toks: list[tuple[str, str]],
+                 bridges: list | None = None):
         self.toks = toks
         self.i = 0
+        self.bridges = [] if bridges is None else bridges
 
     def peek(self) -> tuple[str, str] | None:
         return self.toks[self.i] if self.i < len(self.toks) else None
 
-    def _ft(self, pred: Column, dsl: dict) -> Column:
+    def _bridge(self, col: Column) -> str:
+        """Register a bridge Column; return its hidden name as SQL."""
+        name = f"\x00b{len(self.bridges)}"
+        self.bridges.append((name, col))
+        return _bq_name(name)
+
+    def _ft(self, pred: Column, dsl: dict) -> str:
         """Route one full-text WHERE function's predicate through the
         METADATA _score accumulator: when a scored compile is active,
         record the clause's gated score contribution (collected by
@@ -456,7 +470,7 @@ class _P:
             contribs = getattr(self, "score_contribs", None) or []
             contribs.append(_ft_score_contrib(dsl, pred))
             self.score_contribs = contribs
-        return pred
+        return self._bridge(pred)
 
     def peek_kw(self) -> str | None:
         t = self.peek()
@@ -478,56 +492,39 @@ class _P:
     def done(self) -> bool:
         return self.i >= len(self.toks)
 
-    # precedence climbing: OR < AND < NOT < cmp < add < mul < unary.
-    # Every method returns the union type ``str | Column`` (see the
-    # SQL-string backend note above class _P): both-string operands
-    # compose as parenthesized SQL text, a Column operand promotes the
-    # other side via _c.
-    def expr(self):
+    # precedence climbing: OR < AND < NOT < cmp < add < mul < unary;
+    # operands compose as parenthesized SQL text
+    def expr(self) -> str:
         return self._or()
 
-    def _or(self):
+    def _or(self) -> str:
         left = self._and()
         while self.peek_kw() == "OR":
             self.next()
-            right = self._and()
-            if isinstance(left, str) and isinstance(right, str):
-                left = f"({left} OR {right})"
-            else:
-                left = _c(left) | _c(right)
+            left = f"({left} OR {self._and()})"
         return left
 
-    def _and(self):
+    def _and(self) -> str:
         left = self._not()
         while self.peek_kw() == "AND":
             self.next()
-            right = self._not()
-            if isinstance(left, str) and isinstance(right, str):
-                left = f"({left} AND {right})"
-            else:
-                left = _c(left) & _c(right)
+            left = f"({left} AND {self._not()})"
         return left
 
-    def _not(self):
+    def _not(self) -> str:
         if self.peek_kw() == "NOT":
             self.next()
-            e = self._not()
-            return f"(NOT {e})" if isinstance(e, str) else ~e
+            return f"(NOT {self._not()})"
         return self._cmp()
 
-    def _cmp(self):
+    def _cmp(self) -> str:
         left = self._add()
         t = self.peek()
         if t and t[0] == "op" and t[1] in ("==", "!=", "<", "<=", ">", ">="):
             self.next()
             right = self._add()
-            if isinstance(left, str) and isinstance(right, str):
-                op = "=" if t[1] == "==" else t[1]
-                return f"({left} {op} {right})"
-            left, right = _c(left), _c(right)
-            return {"==": left == right, "!=": left != right,
-                    "<": left < right, "<=": left <= right,
-                    ">": left > right, ">=": left >= right}[t[1]]
+            op = "=" if t[1] == "==" else t[1]
+            return f"({left} {op} {right})"
         kw = self.peek_kw()
         if kw == "LIKE":
             self.next()
@@ -536,18 +533,13 @@ class _P:
                 raise ValueError("ES|QL: LIKE needs a string pattern")
             from .query_dsl import _wildcard_to_regex
 
-            pat = _wildcard_to_regex(t2[1])
-            if isinstance(left, str):
-                return f"({left} RLIKE {_sql_str(pat)})"
-            return left.rlike(pat)
+            return f"({left} RLIKE {_sql_str(_wildcard_to_regex(t2[1]))})"
         if kw == "RLIKE":
             self.next()
             t2 = self.next()
             if t2[0] != "str":
                 raise ValueError("ES|QL: RLIKE needs a string pattern")
-            if isinstance(left, str):
-                return f"({left} RLIKE {_sql_str(t2[1])})"
-            return left.rlike(t2[1])
+            return f"({left} RLIKE {_sql_str(t2[1])})"
         if kw == "IN":
             self.next()
             self.expect_op("(")
@@ -556,9 +548,7 @@ class _P:
                 self.next()
                 vals.append(self._literal_value())
             self.expect_op(")")
-            if isinstance(left, str):
-                return f"({left} IN ({', '.join(map(_py_sql, vals))}))"
-            return left.isin(vals)
+            return f"({left} IN ({', '.join(map(_py_sql, vals))}))"
         if kw == "IS":
             self.next()
             neg = False
@@ -568,48 +558,31 @@ class _P:
             t2 = self.next()
             if not (t2[0] == "id" and t2[1].upper() == "NULL"):
                 raise ValueError("ES|QL: IS must be followed by [NOT] NULL")
-            if isinstance(left, str):
-                return f"({left} IS {'NOT ' if neg else ''}NULL)"
-            return left.isNotNull() if neg else left.isNull()
+            return f"({left} IS {'NOT ' if neg else ''}NULL)"
         return left
 
-    def _add(self):
+    def _add(self) -> str:
         left = self._mul()
         while True:
             t = self.peek()
-            if t and t[0] == "op" and t[1] in ("+", "-"):
-                self.next()
-                right = self._mul()
-                if isinstance(left, str) and isinstance(right, str):
-                    left = f"({left} {t[1]} {right})"
-                else:
-                    left, right = _c(left), _c(right)
-                    left = left + right if t[1] == "+" else left - right
-            else:
+            if not (t and t[0] == "op" and t[1] in ("+", "-")):
                 return left
+            self.next()
+            left = f"({left} {t[1]} {self._mul()})"
 
-    def _mul(self):
+    def _mul(self) -> str:
         left = self._unary()
         while True:
             t = self.peek()
-            if t and t[0] == "op" and t[1] in ("*", "/", "%"):
-                self.next()
-                right = self._unary()
-                if isinstance(left, str) and isinstance(right, str):
-                    left = f"({left} {t[1]} {right})"
-                else:
-                    left, right = _c(left), _c(right)
-                    left = {"*": left * right, "/": left / right,
-                            "%": left % right}[t[1]]
-            else:
+            if not (t and t[0] == "op" and t[1] in ("*", "/", "%")):
                 return left
-
-    def _unary(self):
-        t = self.peek()
-        if t == ("op", "-"):
             self.next()
-            e = self._unary()
-            return f"(- {e})" if isinstance(e, str) else -e
+            left = f"({left} {t[1]} {self._unary()})"
+
+    def _unary(self) -> str:
+        if self.peek() == ("op", "-"):
+            self.next()
+            return f"(- {self._unary()})"
         return self._primary()
 
     def _literal_value(self):
@@ -625,17 +598,11 @@ class _P:
             return -(float(t2[1]) if "." in t2[1] else int(t2[1]))
         raise ValueError(f"ES|QL: expected a literal, got {t[1]!r}")
 
-    def _primary(self):
-        # the ONE backend switch: _COLUMN_BACKEND turns every leaf into
-        # a Column, which cascades the whole tree onto the legacy tier
+    def _primary(self) -> str:
         t = self.next()
         if t[0] == "str":
-            if _COLUMN_BACKEND:
-                return F.lit(t[1])
             return _sql_str(t[1])
         if t[0] == "num":
-            if _COLUMN_BACKEND:
-                return F.lit(float(t[1]) if "." in t[1] else int(t[1]))
             return _num_sql(t[1])
         if t == ("op", "("):
             inner = self.expr()
@@ -644,28 +611,22 @@ class _P:
         if t[0] != "id":
             raise ValueError(f"ES|QL: unexpected token {t[1]!r}{_at(t)}")
         name, up = t[1], t[1].upper()
-        if up in ("TRUE", "FALSE"):
-            if _COLUMN_BACKEND:
-                return F.lit(up == "TRUE")
+        if up in ("TRUE", "FALSE", "NULL"):
             return up
-        if up == "NULL":
-            return F.lit(None) if _COLUMN_BACKEND else "NULL"
         if self.peek() == ("op", "("):
             self.next()
             return self._call(up)
-        return F.col(name) if _COLUMN_BACKEND else _bq_name(name)
+        return _bq_name(name)
 
-    def _call(self, fn: str):
+    def _call(self, fn: str) -> str:
         if fn == "COUNT" and self.peek() == ("op", "*"):
             # COUNT(*) parses here so '*' never reaches the expr grammar
             self.next()
             self.expect_op(")")
             gate = getattr(self, "agg_where", None)
             if gate is not None:  # per-aggregate WHERE (ES 8.16)
-                if isinstance(gate, str):
-                    return f"count(CASE WHEN {gate} THEN TRUE END)"
-                return F.count(F.when(gate, True))
-            return F.count(F.lit(1)) if _COLUMN_BACKEND else "count(1)"
+                return f"count(CASE WHEN {gate} THEN TRUE END)"
+            return "count(1)"
         if fn == "TOP":
             # ES|QL TOP(field, limit, "asc"|"desc") aggregate — the
             # top-N values as a multivalue; limit/order are literals
@@ -686,19 +647,11 @@ class _P:
                     f"{_at(ot)}")
             self.expect_op(")")
             gate = getattr(self, "agg_where", None)
-            asc = ot[1].lower() == "asc"
-            if isinstance(arg, str) and (gate is None
-                                         or isinstance(gate, str)):
-                if gate is not None:
-                    arg = f"CASE WHEN {gate} THEN {arg} END"
-                return (f"slice(sort_array(collect_list({arg}), "
-                        f"{'true' if asc else 'false'}), 1, {int(nt[1])})")
-            arg = _c(arg)
             if gate is not None:
-                arg = F.when(_c(gate), arg)
-            return F.slice(
-                F.sort_array(F.collect_list(arg), asc=asc),
-                1, int(nt[1]))
+                arg = f"CASE WHEN {gate} THEN {arg} END"
+            asc = "true" if ot[1].lower() == "asc" else "false"
+            return (f"slice(sort_array(collect_list({arg}), {asc}), "
+                    f"1, {int(nt[1])})")
         if fn == "SAMPLE":
             # ES|QL SAMPLE(field, limit) aggregate (8.16): a subset of
             # the group's values as a multivalue.  Live ES samples
@@ -719,25 +672,14 @@ class _P:
                     f"literal{_at(nt)}")
             self.expect_op(")")
             gate = getattr(self, "agg_where", None)
-            if isinstance(arg, str) and (gate is None
-                                         or isinstance(gate, str)):
-                if gate is not None:
-                    arg = f"CASE WHEN {gate} THEN {arg} END"
-                keyed = (f"CASE WHEN ({arg} IS NOT NULL) THEN "
-                         f"named_struct('h', md5(CAST({arg} AS STRING)), "
-                         f"'v', {arg}) END")
-                return (f"transform(slice(array_sort("
-                        f"collect_list({keyed})), 1, {int(nt[1])}), "
-                        f"x -> x.v)")
-            arg = _c(arg)
             if gate is not None:
-                arg = F.when(_c(gate), arg)
-            keyed = F.when(arg.isNotNull(), F.struct(
-                F.md5(arg.cast("string")).alias("h"), arg.alias("v")))
-            return F.transform(
-                F.slice(F.array_sort(F.collect_list(keyed)),
-                        1, int(nt[1])),
-                lambda x: x.getField("v"))
+                arg = f"CASE WHEN {gate} THEN {arg} END"
+            keyed = (f"CASE WHEN ({arg} IS NOT NULL) THEN "
+                     f"named_struct('h', md5(CAST({arg} AS STRING)), "
+                     f"'v', {arg}) END")
+            return (f"transform(slice(array_sort("
+                    f"collect_list({keyed})), 1, {int(nt[1])}), "
+                    f"x -> x.v)")
         if fn == "DATE_TRUNC":
             # ES|QL time-span first argument: DATE_TRUNC(1 day, ts)
             n = self.next()
@@ -756,9 +698,7 @@ class _P:
             self.expect_op(",")
             arg = self.expr()
             self.expect_op(")")
-            if isinstance(arg, str):
-                return f"date_trunc({_sql_str(unit)}, {arg})"
-            return F.date_trunc(unit, arg)
+            return f"date_trunc({_sql_str(unit)}, {arg})"
         if fn == "BUCKET":
             # ES|QL BUCKET(field, span): the date-histogram idiom of
             # STATS … BY.  Two span forms (the 4-arg auto-range form
@@ -788,27 +728,18 @@ class _P:
                         raise ValueError(
                             f"ES|QL: BUCKET calendar span must be "
                             f"1 {unit} (got {t[1]}{_at(t)})")
-                    if isinstance(arg, str):
-                        return f"date_trunc({_sql_str(unit)}, {arg})"
-                    return F.date_trunc(unit, arg)
+                    return f"date_trunc({_sql_str(unit)}, {arg})"
                 if unit not in fixed or count < 1:
                     raise ValueError(
                         f"ES|QL: unsupported BUCKET span {t[1]} "
                         f"{unit_t[1]}{_at(t)} (N minute|hour|day or "
                         "1 week|month|quarter|year)")
                 if count == 1:
-                    if isinstance(arg, str):
-                        return f"date_trunc({_sql_str(unit)}, {arg})"
-                    return F.date_trunc(unit, arg)
+                    return f"date_trunc({_sql_str(unit)}, {arg})"
                 secs = count * fixed[unit]
-                if isinstance(arg, str):
-                    return (
-                        "timestamp_seconds((FLOOR((CAST(CAST("
+                return ("timestamp_seconds((FLOOR((CAST(CAST("
                         f"{arg} AS TIMESTAMP) AS DOUBLE) / {secs})) "
                         f"* {secs}))")
-                return F.timestamp_seconds(
-                    F.floor(arg.cast("timestamp").cast("double") / secs)
-                    * secs)
             span = self.expr()
             if self.peek() == ("op", ","):
                 raise ValueError(
@@ -816,13 +747,10 @@ class _P:
                     "supported — pass the span explicitly, e.g. "
                     "BUCKET(v, 50) or BUCKET(ts, 1 hour)")
             self.expect_op(")")
-            if isinstance(arg, str) and isinstance(span, str):
-                return f"(FLOOR(({arg} / {span})) * {span})"
-            return F.floor(_c(arg) / _c(span)) * _c(span)
+            return f"(FLOOR(({arg} / {span})) * {span})"
         if fn == "DATE_FORMAT":
             # ES|QL: DATE_FORMAT("yyyy-MM-dd", date) — format FIRST,
-            # and it must be a literal (Spark's date_format takes a
-            # Python string, not a Column)
+            # and it must be a literal
             t = self.next()
             if t[0] != "str":
                 raise ValueError(
@@ -831,9 +759,7 @@ class _P:
             self.expect_op(",")
             arg = self.expr()
             self.expect_op(")")
-            if isinstance(arg, str):
-                return f"date_format({arg}, {_sql_str(t[1])})"
-            return F.date_format(arg, t[1])
+            return f"date_format({arg}, {_sql_str(t[1])})"
         if fn == "DATE_DIFF":
             # DATE_DIFF("hour", start, end): signed count of WHOLE
             # fixed-width units from start to end, truncated toward
@@ -857,14 +783,9 @@ class _P:
             self.expect_op(",")
             end = self.expr()
             self.expect_op(")")
-            if isinstance(start, str) and isinstance(end, str):
-                d = (f"(CAST(CAST({end} AS TIMESTAMP) AS DOUBLE) - "
-                     f"CAST(CAST({start} AS TIMESTAMP) AS DOUBLE))")
-                return f"CAST(({d} / {_py_sql(float(secs))}) AS BIGINT)"
-            start, end = _c(start), _c(end)
-            d = (end.cast("timestamp").cast("double")
-                 - start.cast("timestamp").cast("double"))
-            return (d / F.lit(float(secs))).cast("long")
+            d = (f"(CAST(CAST({end} AS TIMESTAMP) AS DOUBLE) - "
+                 f"CAST(CAST({start} AS TIMESTAMP) AS DOUBLE))")
+            return f"CAST(({d} / {_py_sql(float(secs))}) AS BIGINT)"
         if fn == "DATE_EXTRACT":
             # DATE_EXTRACT("year", date) — java.time ChronoField names,
             # case-insensitive, mapped to codegen date functions.
@@ -876,13 +797,6 @@ class _P:
                     f"ES|QL: DATE_EXTRACT needs a literal ChronoField "
                     f"name first{_at(t)}")
             field = t[1].lower()
-            builders = {
-                "year": F.year, "month_of_year": F.month,
-                "day_of_month": F.dayofmonth, "day_of_year": F.dayofyear,
-                "hour_of_day": F.hour, "minute_of_hour": F.minute,
-                "second_of_minute": F.second,
-                "day_of_week": lambda c: F.weekday(c) + F.lit(1),
-            }
             sql_fns = {
                 "year": "year({0})", "month_of_year": "month({0})",
                 "day_of_month": "dayofmonth({0})",
@@ -892,17 +806,15 @@ class _P:
                 "second_of_minute": "second({0})",
                 "day_of_week": "(weekday({0}) + 1)",
             }
-            if field not in builders:
+            if field not in sql_fns:
                 raise ValueError(
                     f"ES|QL: unsupported DATE_EXTRACT field "
                     f"{t[1]!r}{_at(t)} (supported: "
-                    f"{' '.join(sorted(builders))})")
+                    f"{' '.join(sorted(sql_fns))})")
             self.expect_op(",")
             arg = self.expr()
             self.expect_op(")")
-            if isinstance(arg, str):
-                return f"CAST({sql_fns[field].format(arg)} AS BIGINT)"
-            return builders[field](arg).cast("long")
+            return f"CAST({sql_fns[field].format(arg)} AS BIGINT)"
         if fn == "MV_SORT":
             # MV_SORT(field[, "ASC"|"DESC"]) — the order is a literal
             # (round-14 review: the 1-arg lambda silently dropped it)
@@ -917,9 +829,7 @@ class _P:
                         f'"ASC" or "DESC"{_at(t)}')
                 asc = t[1].upper() == "ASC"
             self.expect_op(")")
-            if isinstance(arg, str):
-                return f"sort_array({arg}, {'true' if asc else 'false'})"
-            return F.sort_array(arg, asc)
+            return f"sort_array({arg}, {'true' if asc else 'false'})"
         if fn == "DATE_PARSE":
             # ES|QL DATE_PARSE(pattern, string) — the pattern is a
             # literal (Spark's to_timestamp takes a Python format
@@ -934,18 +844,16 @@ class _P:
             self.expect_op(",")
             arg = self.expr()
             self.expect_op(")")
-            if isinstance(arg, str):
-                return f"to_timestamp({arg}, {_sql_str(t[1])})"
-            return F.to_timestamp(arg, t[1])
+            return f"to_timestamp({arg}, {_sql_str(t[1])})"
         if fn == "IP_PREFIX":
             # ES|QL IP_PREFIX(ip, v4_len, v6_len): mask to the network
             # prefix and render — uint32 math through the SAME guarded
-            # parse as TO_IP, rendered back by functions/ip.ip_from_long
-            # (the render twin).  v6_len is accepted for signature
-            # parity and validated, but IPv6 DATA rejects loudly like
-            # everywhere else in the engine (functions/ip.py module
-            # contract).
-            from ..functions.ip import ip_from_long
+            # parse as TO_IP, rendered back by
+            # functions/ip.ip_from_long_spark.  v6_len is accepted for
+            # signature parity and validated, but IPv6 DATA rejects
+            # loudly like everywhere else in the engine (functions/ip.py
+            # module contract).
+            from ..functions.ip import ip_from_long_spark
 
             arg = self.expr()
             self.expect_op(",")
@@ -964,15 +872,9 @@ class _P:
                     f"literal in [0, 128]{_at(v6t)}")
             self.expect_op(")")
             mask = 0xFFFFFFFF ^ ((1 << (32 - int(v4t[1]))) - 1)
-            if isinstance(arg, str):
-                from ..functions.ip import ip_from_long_spark
-
-                return ip_from_long_spark(
-                    f"({_to_ip_sql(arg)} & {mask})")
-            return ip_from_long(_to_ip(arg).bitwiseAND(F.lit(mask)))
+            return ip_from_long_spark(f"({_to_ip_sql(arg)} & {mask})")
         if fn == "MV_CONCAT":
             # MV_CONCAT(string_mv, delim) — the delimiter is a literal
-            # (F.array_join takes a Python string)
             arg = self.expr()
             self.expect_op(",")
             t = self.next()
@@ -981,9 +883,7 @@ class _P:
                     f"ES|QL: MV_CONCAT delimiter must be a literal "
                     f"string{_at(t)}")
             self.expect_op(")")
-            if isinstance(arg, str):
-                return f"array_join({arg}, {_sql_str(t[1])})"
-            return F.array_join(arg, t[1])
+            return f"array_join({arg}, {_sql_str(t[1])})"
         if fn == "SPLIT":
             # ES|QL SPLIT(str, delim) splits on the LITERAL delimiter
             # (not a regex) — the literal requirement lets the compiler
@@ -996,13 +896,10 @@ class _P:
                     "ES|QL: SPLIT needs a non-empty literal delimiter "
                     f"string{_at(t)}")
             self.expect_op(")")
-            if isinstance(arg, str):
-                return f"split({arg}, {_sql_str(re.escape(t[1]))})"
-            return F.split(arg, re.escape(t[1]))
+            return f"split({arg}, {_sql_str(re.escape(t[1]))})"
         if fn == "LOCATE":
             # ES|QL LOCATE(string, substring[, start]) — 1-based, 0 when
-            # absent; the substring must be a literal (Spark's locate
-            # takes a Python string)
+            # absent; the substring must be a literal
             arg = self.expr()
             self.expect_op(",")
             t = self.next()
@@ -1019,9 +916,7 @@ class _P:
                         f"literal{_at(st)}")
                 start = int(st[1])
             self.expect_op(")")
-            if isinstance(arg, str):
-                return f"locate({_sql_str(t[1])}, {arg}, {start})"
-            return F.locate(t[1], arg, start)
+            return f"locate({_sql_str(t[1])}, {arg}, {start})"
         if fn in ("MATCH", "QSTR", "MATCH_PHRASE", "TERM",
                   "MULTI_MATCH", "KQL", "KNN"):
             # ES|QL full-text WHERE functions (ES 8.14→8.18): the
@@ -1121,7 +1016,7 @@ class _P:
                     contribs.append(
                         F.when(pred, sim).otherwise(F.lit(0.0)))
                     self.score_contribs = contribs
-                return pred
+                return self._bridge(pred)
             if fn in ("MATCH", "MATCH_PHRASE"):
                 fld = self.next()
                 if fld[0] != "id":
@@ -1212,7 +1107,7 @@ class _P:
                         "ES|QL: KQL() is filter-only and cannot "
                         "contribute to METADATA _score — score with "
                         "MATCH/MATCH_PHRASE/TERM/MULTI_MATCH")
-                return compile_query(parse_kql(qt[1]))
+                return self._bridge(compile_query(parse_kql(qt[1])))
             qt = self.next()
             if qt[0] != "str":
                 raise ValueError(
@@ -1232,7 +1127,8 @@ class _P:
                     "ES|QL: QSTR() is filter-only and cannot "
                     "contribute to METADATA _score — score with "
                     "MATCH/MATCH_PHRASE/TERM/MULTI_MATCH")
-            return compile_query({"query_string": {"query": qt[1]}})
+            return self._bridge(
+                compile_query({"query_string": {"query": qt[1]}}))
         if fn in ("TO_GEOPOINT", "TO_GEOSHAPE"):
             # literal WKT only: a geo column in a flat frame IS a
             # struct{lat,lon} column already (the DSL geo clauses'
@@ -1252,11 +1148,8 @@ class _P:
                         f"ES|QL: TO_GEOPOINT needs a WKT POINT, got "
                         f"{t[1]!r}")
                 lon, lat = shape["coordinates"]
-                if not _COLUMN_BACKEND:
-                    return (f"named_struct('lat', {_py_sql(lat)}, "
-                            f"'lon', {_py_sql(lon)})")
-                return F.struct(F.lit(lat).alias("lat"),
-                                F.lit(lon).alias("lon"))
+                return (f"named_struct('lat', {_py_sql(lat)}, "
+                        f"'lon', {_py_sql(lon)})")
             # TO_GEOSHAPE outside an ST_* argument has no column
             # meaning (shapes are plan-time literals, not row values)
             raise ValueError(
@@ -1288,17 +1181,10 @@ class _P:
             if not bounds:
                 raise ValueError(
                     "ES|QL: CIDR_MATCH needs at least one CIDR block")
-            if isinstance(arg, str):
-                ipl = _ip.ip_to_long_spark(arg)
-                out = "FALSE"
-                for lo, hi in bounds:
-                    out = (f"({out} OR (({ipl} >= {lo}) "
-                           f"AND ({ipl} <= {hi})))")
-                return out
-            ipl = _ip.ip_to_long(arg)
-            out = F.lit(False)
+            ipl = _ip.ip_to_long_spark(arg)
+            out = "FALSE"
             for lo, hi in bounds:
-                out = out | ((ipl >= F.lit(lo)) & (ipl <= F.lit(hi)))
+                out = f"({out} OR (({ipl} >= {lo}) AND ({ipl} <= {hi})))"
             return out
         if fn == "CATEGORIZE":
             # ES|QL CATEGORIZE(field) — the STATS-BY log-categorization
@@ -1314,7 +1200,7 @@ class _P:
 
             arg = self.expr()
             self.expect_op(")")
-            return categorize_key(_c(arg))
+            return self._bridge(categorize_key(F.expr(arg)))
         args: list = []
         if self.peek() != ("op", ")"):
             args.append(self.expr())
@@ -1325,11 +1211,11 @@ class _P:
         return _compile_fn(fn, args,
                            agg_where=getattr(self, "agg_where", None))
 
-    def _geo_arg(self):
+    def _geo_arg(self) -> tuple:
         """One ST_* argument: ('shape', geojson-dict) for a plan-time
         literal (WKT string or TO_GEOSHAPE/TO_GEOPOINT of one), else
         ('point', lat Column, lon Column) for a struct{lat,lon} point
-        expression."""
+        expression (the geo builders take Columns)."""
         t = self.peek()
         nxt = self.toks[self.i + 1] if self.i + 1 < len(self.toks) else None
         if (t is not None and t[0] == "id"
@@ -1352,10 +1238,10 @@ class _P:
         if t is not None and t[0] == "str":
             self.next()
             return ("shape", _parse_wkt(t[1]))
-        e = _c(self.expr())  # geo bridges take Columns
+        e = F.expr(self.expr())
         return ("point", e.getField("lat"), e.getField("lon"))
 
-    def _st_call(self, fn: str) -> Column:
+    def _st_call(self, fn: str) -> str:
         """ES|QL spatial functions (round 15, VERDICT r14 #3) — the
         grammar bridge onto the DSL geo machinery: ST_DISTANCE is the
         shared haversine (query_dsl.haversine_cols, Lucene earth
@@ -1366,29 +1252,32 @@ class _P:
         subset: geometry COLUMNS are points (struct{lat,lon} — the
         engine's geo_point representation); shape literals are WKT.
         Point-contains-polygon and within-point-of-shape reject loudly
-        (constant-false is a user error, not a result)."""
+        (constant-false is a user error, not a result).  ST_X/ST_Y and
+        the grid keys render as SQL; the distance and relation Columns
+        return as bridges."""
         from .query_dsl import _shape_intersects, haversine_cols
 
         if fn in ("ST_X", "ST_Y"):
             e = self.expr()
             self.expect_op(")")
-            fld = "lon" if fn == "ST_X" else "lat"
-            if isinstance(e, str):
-                return f"{e}.{fld}"
-            return e.getField(fld)
+            return f"{e}.{'lon' if fn == 'ST_X' else 'lat'}"
         if fn in ("ST_GEOHASH", "ST_GEOTILE", "ST_GEOHEX"):
-            # ES 8.16 spatial grid functions — the ES|QL bridge onto
-            # the SAME cell builders as the geohash_grid / geotile_grid
-            # / hex_grid bucket aggs (query_dsl.geohash_cell /
-            # geotile_cell / hex_cell — pure codegen bit math, one
-            # construction per grid so agg and function cannot drift).
+            # ES 8.16 spatial grid functions — the SAME cell renderers
+            # as the geohash_grid / geotile_grid / hex_grid bucket aggs
+            # (query_dsl.geohash_cell_sql / geotile_cell_sql /
+            # hex_cell_sql — pure codegen bit math, one construction
+            # per grid so agg and function cannot drift).
             # The key is the agg's STRING key (live ES returns a packed
             # long plus *_TO_STRING converters — the string IS that
             # rendering; documented divergence).  ST_GEOHEX is the
             # engine's documented non-H3 axial hex extension, exactly
             # like the hex_grid agg (live geohex is H3).  Precision is
             # a literal (plan-time), range-checked by the builders.
-            from .query_dsl import geohash_cell, geotile_cell, hex_cell
+            from .query_dsl import (
+                geohash_cell_sql,
+                geotile_cell_sql,
+                hex_cell_sql,
+            )
 
             e = self.expr()
             self.expect_op(",")
@@ -1398,22 +1287,10 @@ class _P:
                     f"ES|QL: {fn} precision must be an integer "
                     f"literal{_at(pt)}")
             self.expect_op(")")
-            if isinstance(e, str):
-                from .query_dsl import (
-                    geohash_cell_sql,
-                    geotile_cell_sql,
-                    hex_cell_sql,
-                )
-
-                build_sql = {"ST_GEOHASH": geohash_cell_sql,
-                             "ST_GEOTILE": geotile_cell_sql,
-                             "ST_GEOHEX": hex_cell_sql}[fn]
-                return build_sql(f"{e}.lat", f"{e}.lon", int(pt[1]))
-            lat, lon = e.getField("lat"), e.getField("lon")
-            build = {"ST_GEOHASH": geohash_cell,
-                     "ST_GEOTILE": geotile_cell,
-                     "ST_GEOHEX": hex_cell}[fn]
-            return build(lat, lon, int(pt[1]))
+            build = {"ST_GEOHASH": geohash_cell_sql,
+                     "ST_GEOTILE": geotile_cell_sql,
+                     "ST_GEOHEX": hex_cell_sql}[fn]
+            return build(f"{e}.lat", f"{e}.lon", int(pt[1]))
         a = self._geo_arg()
         self.expect_op(",")
         b = self._geo_arg()
@@ -1433,267 +1310,51 @@ class _P:
                 raise ValueError(
                     "ES|QL: ST_DISTANCE needs two points (shape-to-"
                     "shape distance is not supported)")
-            return haversine_cols(pa[0], pa[1], pb[0], pb[1])
+            return self._bridge(haversine_cols(pa[0], pa[1], pb[0], pb[1]))
 
-        def point_in_shape(pt, shape):
-            return _shape_intersects(shape, pt[0], pt[1])
-
-        pa, pb = pt_cols(a), pt_cols(b)
-        if fn == "ST_INTERSECTS":
-            # point/point, point/shape, shape/point — symmetric
-            if pa is not None and pb is not None:
+        def relation(pa, pb) -> Column:
+            if pa is not None and pb is not None:  # point/point
                 return (pa[0] == pb[0]) & (pa[1] == pb[1])
-            if pa is not None:
-                return point_in_shape(pa, b[1])
-            if pb is not None:
-                return point_in_shape(pb, a[1])
+            if fn == "ST_INTERSECTS":
+                # point/shape, shape/point — symmetric
+                if pa is not None:
+                    return _shape_intersects(b[1], pa[0], pa[1])
+                if pb is not None:
+                    return _shape_intersects(a[1], pb[0], pb[1])
+                raise ValueError(
+                    "ES|QL: ST_INTERSECTS of two non-point shapes is not "
+                    "supported (point fields are struct{lat,lon} columns)")
+            if fn == "ST_CONTAINS":
+                # A contains B: A must be the shape
+                if a[0] == "shape" and pb is not None:
+                    return _shape_intersects(a[1], pb[0], pb[1])
+                raise ValueError(
+                    "ES|QL: ST_CONTAINS needs (shape, point) — a point "
+                    "cannot contain a non-point shape (constant false; "
+                    "use ST_WITHIN(point, shape))")
+            # ST_WITHIN — A within B: A must be the point
+            if pa is not None and b[0] == "shape":
+                return _shape_intersects(b[1], pa[0], pa[1])
             raise ValueError(
-                "ES|QL: ST_INTERSECTS of two non-point shapes is not "
-                "supported (point fields are struct{lat,lon} columns)")
-        if fn == "ST_CONTAINS":
-            # A contains B: A must be the shape (or both points)
-            if pa is not None and pb is not None:
-                return (pa[0] == pb[0]) & (pa[1] == pb[1])
-            if a[0] == "shape" and pb is not None:
-                return point_in_shape(pb, a[1])
-            raise ValueError(
-                "ES|QL: ST_CONTAINS needs (shape, point) — a point "
-                "cannot contain a non-point shape (constant false; "
-                "use ST_WITHIN(point, shape))")
-        # ST_WITHIN — A within B: A must be the point (or both points)
-        if pa is not None and pb is not None:
-            return (pa[0] == pb[0]) & (pa[1] == pb[1])
-        if pa is not None and b[0] == "shape":
-            return point_in_shape(pa, b[1])
-        raise ValueError(
-            "ES|QL: ST_WITHIN needs (point, shape) — a non-point "
-            "shape cannot be within a point (constant false; use "
-            "ST_CONTAINS(shape, point))")
+                "ES|QL: ST_WITHIN needs (point, shape) — a non-point "
+                "shape cannot be within a point (constant false; use "
+                "ST_CONTAINS(shape, point))")
+
+        return self._bridge(relation(pt_cols(a), pt_cols(b)))
 
 
-def _decimal_sum(c: Column) -> Column:
-    return F.sum(c.cast("decimal(28,6)")).cast("double")
-
-
-def _mv_slice(v: Column, start: Column, end: Column) -> Column:
-    """ES|QL MV_SLICE semantics on F.slice's 1-based (start, length)
-    API: normalize negative indices against the size, clamp into
-    range, and an inverted window yields the empty array."""
-    n = F.array_size(v)
-    lo = F.when(start >= 0, start).otherwise(n + start)
-    hi = F.when(end >= 0, end).otherwise(n + end)
-    lo = F.greatest(lo, F.lit(0))
-    hi = F.least(hi, n - 1)
-    return F.when(
-        v.isNotNull(),
-        F.slice(v, (lo + 1).cast("int"),
-                F.greatest(hi - lo + 1, F.lit(0)).cast("int")))
-
-
-def _mv_median(v: Column) -> Column:
-    """Median of a multivalue: sorted array, middle element, or the
-    average of the two middles on even cardinality (double)."""
-    s = F.sort_array(v)
-    n = F.array_size(v)
-    mid = (n / 2).cast("int")
-    return F.when(
-        n > 0,
-        F.when(n % 2 == 1, F.get(s, mid).cast("double"))
-        .otherwise((F.get(s, mid - 1).cast("double")
-                    + F.get(s, mid).cast("double")) / 2))
-
-
-def _mv_percentile(v: Column, p: Column) -> Column:
-    """ES|QL MV_PERCENTILE (8.14): value at percentile ``p`` of the
-    multivalue, linear interpolation between closest ranks (the same
-    method as the PERCENTILE aggregate: pos = p/100·(n−1)).  Empty →
-    NULL (the MV family's convention); an out-of-range percentile
-    raises (live ES nulls with a warning header — no warning channel
-    in a flat frame, the anti-silent policy)."""
-    s = F.sort_array(v)
-    n = F.array_size(v)
-    pos = p.cast("double") / F.lit(100.0) * (n - 1).cast("double")
-    lo = F.floor(pos).cast("int")
-    frac = pos - F.floor(pos)
-    # lo + frac·(hi−lo), the canonical quantile_cont form (same FP
-    # rounding as the DuckDB oracle twin, not just the same math)
-    lov = F.get(s, lo).cast("double")
-    hiv = F.get(s, F.least(lo + 1, n - 1)).cast("double")
-    val = lov + frac * (hiv - lov)
-    # out-of-range reject is an ANSI-cast poison, not raise_error —
-    # raise_error is non-deterministic and blocks pushdown through the
-    # EVAL projection (the TO_IP/FUSE lesson, SCALE.md round 15)
-    return F.when(
-        n > 0,
-        F.when((p >= 0) & (p <= 100), val).otherwise(F.concat(
-            F.lit("ES|QL: MV_PERCENTILE percentile must be in "
-                  "0..100, got "), p.cast("string")).cast("double")))
-
-
-def _mv_mad(v: Column) -> Column:
-    """ES|QL MV_MEDIAN_ABSOLUTE_DEVIATION (8.16): median of the
-    absolute deviations from the multivalue's median (both medians via
-    the shared even-cardinality-averaging rule, _mv_median).
-
-    The median is materialized ONCE per row via array_repeat and bound
-    into the deviation lambda through zip_with's argument — a lambda
-    that referenced ``med`` directly would re-evaluate the whole
-    median subtree (including its sort_array) PER ELEMENT, turning an
-    O(n log n) row into O(n² log n).  Measured on the aggregate form
-    (30 k-value groups at sf0.1): 100.8 s → sub-second."""
-    med = _mv_median(v)
-    devs = F.zip_with(
-        v, F.array_repeat(med, F.array_size(v)),
-        lambda x, m: F.abs(x.cast("double") - m))
-    return _mv_median(devs)
-
-
-def _mv_pseries(v: Column, p: Column) -> Column:
-    """ES|QL MV_PSERIES_WEIGHTED_SUM (8.14): Σ v[i] / (i+1)^p over the
-    multivalue in stored order (i 0-based) — the p-series weighting
-    used to fold ranked score lists.  Left-to-right double sum,
-    deterministic (one stored order in, one fold order out)."""
-    terms = F.transform(
-        v, lambda x, i: x.cast("double")
-        / F.pow((i + 1).cast("double"), p.cast("double")))
-    return F.when(
-        F.array_size(v) > 0,
-        F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x))
-
-
-def _to_version(c: Column) -> Column:
-    """ES|QL ``TO_VERSION`` (round 15): string → the engine's
-    version ORDERING KEY, so ==/</>/SORT compare semver-aware:
-    ``1.0.0-alpha`` < ``1.0.0-alpha.1`` < ``1.0.0`` < ``1.0.10`` <
-    ``2.0.0`` and ``9.0.0`` < ``10.0.0``.  Same contract shape as
-    TO_IP (the value is the KEY, not a version-rendered string —
-    documented divergence; keep the original column for display).
-
-    Key layout, all codegen string math:
-    - valid ``major[.minor[.patch[.build]]][-prerelease]``: ``'0'`` +
-      four 10-digit zero-padded segments (missing segments pad as 0,
-      with the segment COUNT appended so ``1.0`` and ``1.0.0`` stay
-      distinct, shorter first) + either ``'~'`` (release — sorts
-      after any prerelease, ASCII 126) or ``'-'`` + the prerelease
-      identifiers, each keyed ``'0'``+zero-padded when numeric else
-      ``'1'``+identifier (SemVer: numeric identifiers compare
-      numerically and before alphanumerics; a prefix prerelease sorts
-      first via plain string prefix order).
-    - invalid: ``'1'`` + the original string — live ES's version type
-      accepts any string and sorts invalid AFTER valid, alphabetically
-      (so this is the documented contract, not a silent fallback).
-    - NULL passes through."""
-    s = c.cast("string")
-    valid = s.rlike(
-        r"^\d+(\.\d+){0,3}(-[0-9A-Za-z-]+(\.[0-9A-Za-z-]+)*)?$")
-    parts = F.split(s, "-", 2)
-    core = F.get(parts, 0)
-    segs = F.split(core, r"\.")
-    core_key = F.concat_ws(".", *[
-        F.lpad(F.coalesce(F.get(segs, i), F.lit("0")), 10, "0")
-        for i in range(4)])
-    nseg = F.array_size(segs).cast("string")
-    pre = F.get(parts, 1)
-    # ',' (44) separator: BELOW every identifier char ('-' is 45), so
-    # a prefix prerelease list sorts first even against identifiers
-    # that themselves contain '-' (alpha.1 < alpha-1 because alpha <
-    # alpha-1 — '.'(46) as separator would invert it)
-    pre_key = F.array_join(
-        F.transform(
-            F.split(pre, r"\."),
-            lambda t: F.when(t.rlike(r"^\d+$"),
-                             F.concat(F.lit("0"), F.lpad(t, 10, "0")))
-            .otherwise(F.concat(F.lit("1"), t))), ",")
-    tail = F.when(F.array_size(parts) == 2,
-                  F.concat(F.lit("-"), pre_key)).otherwise(F.lit("~"))
-    return (
-        F.when(s.isNull(), F.lit(None).cast("string"))
-        .when(valid, F.concat(F.lit("0"), core_key, F.lit("."),
-                              nseg, tail))
-        .otherwise(F.concat(F.lit("1"), s)))
-
-
-def _hash_fn(alg: Column, v: Column) -> Column:
-    """ES|QL ``HASH(alg, input)`` (8.16): hex digest of ``input`` under
-    the named algorithm — the generalized form of the MD5/SHA1/SHA256
-    shortcuts, dispatching over the same JVM digests Spark exposes
-    (``md5``/``sha1``/``sha2``).  Algorithm names are matched
-    case-insensitively; an unsupported algorithm poisons via ANSI cast
-    (CAST_INVALID_INPUT carrying the message — deterministic, so
-    pushdown through the EVAL projection survives, unlike
-    raise_error).  NULL input → NULL, like the shortcut forms."""
-    b = v.cast("binary")
-    a = F.lower(alg)
-    poison = F.concat(
-        F.lit("ES|QL: HASH algorithm must be one of md5 sha1 sha224 "
-              "sha256 sha384 sha512, got "), alg).cast("int")
-    return (
-        F.when(a == "md5", F.md5(b))
-        .when(a == "sha1", F.sha1(b))
-        .when(a == "sha224", F.sha2(b, 224))
-        .when(a == "sha256", F.sha2(b, 256))
-        .when(a == "sha384", F.sha2(b, 384))
-        .when(a == "sha512", F.sha2(b, 512))
-        .otherwise(poison.cast("string")))
-
-
-def _nonneg_count(n: Column, fn: str) -> Column:
-    """Guard for SPACE/REPEAT counts: live ES|QL errors on a negative
-    count (Spark's ``repeat`` silently returns "" — a silent-divergence
-    trap).  ANSI-cast poison on the negative branch, same rationale as
-    _hash_fn."""
-    return F.when(n >= 0, n).otherwise(F.concat(
-        F.lit(f"ES|QL: {fn} count must be non-negative, got "),
-        n.cast("string")).cast("int"))
-
-
-def _to_ip(c: Column) -> Column:
-    """ES|QL ``TO_IP`` (round 15, VERDICT r14 #4): dotted-quad string →
-    uint32 long, the engine's ip ordering key (functions/ip.py — the
-    same codegen parse the DSL's term/range-on-ip auto-detection uses),
-    so ==/</>/SORT compare numerically: "9.0.0.0" orders BEFORE
-    "10.0.0.0".  NULL passes through; a non-NULL value that does not
-    parse as IPv4 raises at runtime (live ES nulls it with a warning
-    header — a flat frame has no warning channel, so silent NULL would
-    hide data corruption; IPv6 rejects like everywhere else in the
-    engine).  Documented divergence: the value is the NUMERIC key, not
-    an ip-rendered string — feed CIDR_MATCH the original string column."""
-    from ..functions.ip import ip_to_long
-
-    s = c.cast("string")
-    valid = (
-        s.rlike(r"^\d{1,3}(\.\d{1,3}){3}$")
-        & F.forall(F.split(s, r"\."), lambda o: o.cast("int") <= 255)
-    )
-    # the reject is an ANSI-cast poison, not raise_error — raise_error
-    # is non-deterministic, which blocks filter pushdown through the
-    # EVAL projection and stops CollapseProject (the FUSE guard lesson,
-    # SCALE.md round 15); the deterministic cast throws
-    # CAST_INVALID_INPUT carrying the message under ANSI, the engine's
-    # documented execution contract
-    return (
-        F.when(s.isNull(), F.lit(None).cast("long"))
-        .when(valid, ip_to_long(s))
-        .otherwise(F.concat(
-            F.lit("ES|QL: TO_IP cannot parse "), s,
-            F.lit(" as an IPv4 address")).cast("long"))
-    )
-
-
-# ---- SQL-string twins of the Column helpers above (round 16).  Twin
-# discipline: each *_sql function must render the EXACT analyzed
-# expression its Column sibling builds — literal types (D-suffixed
-# doubles), CAST placement, CASE structure, lambda shapes.  Repeated
-# interpolation of a sub-expression is equivalent to the Column path's
-# object reuse (an expression tree repeats the subtree either way).
-# Equality is pinned by tests/test_esql.py::TestSqlTierTwin running
-# every query twice with _COLUMN_BACKEND toggled.
+# ---- ES|QL renderers with more structure than one SQL function call.
+# A sub-expression interpolated twice is one repeated subtree in the
+# analyzed expression, exactly as a reused Column object would be.
 
 def _decimal_sum_sql(a: str) -> str:
     return f"CAST(sum(CAST({a} AS DECIMAL(28,6))) AS DOUBLE)"
 
 
 def _mv_slice_sql(v: str, start: str, end: str) -> str:
+    """ES|QL MV_SLICE semantics on slice()'s 1-based (start, length)
+    API: normalize negative indices against the size, clamp into
+    range, and an inverted window yields the empty array."""
     n = f"array_size({v})"
     lo = f"CASE WHEN ({start} >= 0) THEN {start} ELSE ({n} + {start}) END"
     hi = f"CASE WHEN ({end} >= 0) THEN {end} ELSE ({n} + {end}) END"
@@ -1705,6 +1366,8 @@ def _mv_slice_sql(v: str, start: str, end: str) -> str:
 
 
 def _mv_median_sql(v: str) -> str:
+    """Median of a multivalue: sorted array, middle element, or the
+    average of the two middles on even cardinality (double)."""
     s = f"sort_array({v})"
     n = f"array_size({v})"
     mid = f"CAST(({n} / 2) AS INT)"
@@ -1716,6 +1379,16 @@ def _mv_median_sql(v: str) -> str:
 
 
 def _mv_percentile_sql(v: str, p: str) -> str:
+    """ES|QL MV_PERCENTILE (8.14): value at percentile ``p`` of the
+    multivalue, linear interpolation between closest ranks (the same
+    method as the PERCENTILE aggregate: pos = p/100·(n−1)), rendered as
+    lo + frac·(hi−lo), the canonical quantile_cont form (same FP
+    rounding as the DuckDB oracle, not just the same math).  Empty →
+    NULL (the MV family's convention); an out-of-range percentile
+    raises through an ANSI-cast poison, not raise_error — raise_error is
+    non-deterministic and blocks pushdown through the EVAL projection
+    (the TO_IP/FUSE lesson, SCALE.md round 15).  Live ES nulls with a
+    warning header; a flat frame has no warning channel."""
     s = f"sort_array({v})"
     n = f"array_size({v})"
     pos = f"((CAST({p} AS DOUBLE) / 100.0D) * CAST(({n} - 1) AS DOUBLE))"
@@ -1734,6 +1407,16 @@ def _mv_percentile_sql(v: str, p: str) -> str:
 
 
 def _mv_mad_sql(v: str) -> str:
+    """ES|QL MV_MEDIAN_ABSOLUTE_DEVIATION (8.16): median of the
+    absolute deviations from the multivalue's median (both medians via
+    the shared even-cardinality-averaging rule, _mv_median_sql).
+
+    The median is materialized ONCE per row via array_repeat and bound
+    into the deviation lambda through zip_with's argument — a lambda
+    that referenced the median directly would re-evaluate the whole
+    median subtree (including its sort_array) PER ELEMENT, turning an
+    O(n log n) row into O(n² log n).  Measured on the aggregate form
+    (30 k-value groups at sf0.1): 100.8 s → sub-second."""
     med = _mv_median_sql(v)
     devs = (f"zip_with({v}, array_repeat({med}, array_size({v})), "
             f"(x, m) -> abs((CAST(x AS DOUBLE) - m)))")
@@ -1741,6 +1424,10 @@ def _mv_mad_sql(v: str) -> str:
 
 
 def _mv_pseries_sql(v: str, p: str) -> str:
+    """ES|QL MV_PSERIES_WEIGHTED_SUM (8.14): Σ v[i] / (i+1)^p over the
+    multivalue in stored order (i 0-based) — the p-series weighting
+    used to fold ranked score lists.  Left-to-right double sum,
+    deterministic (one stored order in, one fold order out)."""
     terms = (f"transform({v}, (x, i) -> (CAST(x AS DOUBLE) / "
              f"pow(CAST((i + 1) AS DOUBLE), CAST({p} AS DOUBLE))))")
     return (f"CASE WHEN (array_size({v}) > 0) THEN "
@@ -1748,6 +1435,31 @@ def _mv_pseries_sql(v: str, p: str) -> str:
 
 
 def _to_version_sql(c: str) -> str:
+    """ES|QL ``TO_VERSION`` (round 15): string → the engine's
+    version ORDERING KEY, so ==/</>/SORT compare semver-aware:
+    ``1.0.0-alpha`` < ``1.0.0-alpha.1`` < ``1.0.0`` < ``1.0.10`` <
+    ``2.0.0`` and ``9.0.0`` < ``10.0.0``.  Same contract shape as
+    TO_IP (the value is the KEY, not a version-rendered string —
+    documented divergence; keep the original column for display).
+
+    Key layout, all codegen string math:
+    - valid ``major[.minor[.patch[.build]]][-prerelease]``: ``'0'`` +
+      four 10-digit zero-padded segments (missing segments pad as 0,
+      with the segment COUNT appended so ``1.0`` and ``1.0.0`` stay
+      distinct, shorter first) + either ``'~'`` (release — sorts
+      after any prerelease, ASCII 126) or ``'-'`` + the prerelease
+      identifiers, each keyed ``'0'``+zero-padded when numeric else
+      ``'1'``+identifier (SemVer: numeric identifiers compare
+      numerically and before alphanumerics; a prefix prerelease sorts
+      first via plain string prefix order).  The identifiers join on
+      ``','`` (44): BELOW every identifier char (``'-'`` is 45), so a
+      prefix prerelease list sorts first even against identifiers that
+      themselves contain ``'-'`` (alpha.1 < alpha-1 because alpha <
+      alpha-1 — ``'.'`` (46) as separator would invert it).
+    - invalid: ``'1'`` + the original string — live ES's version type
+      accepts any string and sorts invalid AFTER valid, alphabetically
+      (so this is the documented contract, not a silent fallback).
+    - NULL passes through."""
     dot = _sql_str(r"\.")
     digits = _sql_str(r"^\d+$")
     s = f"CAST({c} AS STRING)"
@@ -1774,6 +1486,14 @@ def _to_version_sql(c: str) -> str:
 
 
 def _hash_fn_sql(alg: str, v: str) -> str:
+    """ES|QL ``HASH(alg, input)`` (8.16): hex digest of ``input`` under
+    the named algorithm — the generalized form of the MD5/SHA1/SHA256
+    shortcuts, dispatching over the same JVM digests Spark exposes
+    (``md5``/``sha1``/``sha2``).  Algorithm names are matched
+    case-insensitively; an unsupported algorithm poisons via ANSI cast
+    (CAST_INVALID_INPUT carrying the message — deterministic, so
+    pushdown through the EVAL projection survives, unlike
+    raise_error).  NULL input → NULL, like the shortcut forms."""
     b = f"CAST({v} AS BINARY)"
     a = f"lower({alg})"
     msg = _sql_str("ES|QL: HASH algorithm must be one of md5 sha1 "
@@ -1790,12 +1510,33 @@ def _hash_fn_sql(alg: str, v: str) -> str:
 
 
 def _nonneg_count_sql(n: str, fn: str) -> str:
+    """Guard for SPACE/REPEAT counts: live ES|QL errors on a negative
+    count (Spark's ``repeat`` silently returns "" — a silent-divergence
+    trap).  ANSI-cast poison on the negative branch, same rationale as
+    _hash_fn_sql."""
     msg = _sql_str(f"ES|QL: {fn} count must be non-negative, got ")
     return (f"CASE WHEN ({n} >= 0) THEN {n} ELSE "
             f"CAST(concat({msg}, CAST({n} AS STRING)) AS INT) END")
 
 
 def _to_ip_sql(c: str) -> str:
+    """ES|QL ``TO_IP`` (round 15, VERDICT r14 #4): dotted-quad string →
+    uint32 long, the engine's ip ordering key (functions/ip.py — the
+    same codegen parse the DSL's term/range-on-ip auto-detection uses),
+    so ==/</>/SORT compare numerically: "9.0.0.0" orders BEFORE
+    "10.0.0.0".  NULL passes through; a non-NULL value that does not
+    parse as IPv4 raises at runtime (live ES nulls it with a warning
+    header — a flat frame has no warning channel, so silent NULL would
+    hide data corruption; IPv6 rejects like everywhere else in the
+    engine).  Documented divergence: the value is the NUMERIC key, not
+    an ip-rendered string — feed CIDR_MATCH the original string column.
+
+    The reject is an ANSI-cast poison, not raise_error — raise_error is
+    non-deterministic, which blocks filter pushdown through the EVAL
+    projection and stops CollapseProject (the FUSE guard lesson,
+    SCALE.md round 15); the deterministic cast throws
+    CAST_INVALID_INPUT carrying the message under ANSI, the engine's
+    documented execution contract."""
     from ..functions.ip import ip_to_long_spark
 
     dot = _sql_str(r"\.")
@@ -1811,156 +1552,6 @@ def _to_ip_sql(c: str) -> str:
             f"WHEN {valid} THEN {ip_to_long_spark(s)} "
             f"ELSE CAST(concat({msg_a}, {s}, {msg_b}) AS BIGINT) END")
 
-
-#: scalar whitelist: name → (arity check, builder)
-_FNS: dict[str, Callable[[list[Column]], Column]] = {
-    "ABS": lambda a: F.abs(a[0]),
-    "CEIL": lambda a: F.ceil(a[0]),
-    "FLOOR": lambda a: F.floor(a[0]),
-    "SQRT": lambda a: F.sqrt(a[0]),
-    "POW": lambda a: F.pow(a[0], a[1]),
-    "ROUND": lambda a: F.round(a[0], 0) if len(a) == 1 else F.round(*a),
-    "CONCAT": lambda a: F.concat(*a),
-    "LENGTH": lambda a: F.length(a[0]),
-    "TO_UPPER": lambda a: F.upper(a[0]),
-    "TO_LOWER": lambda a: F.lower(a[0]),
-    "TRIM": lambda a: F.trim(a[0]),
-    "LTRIM": lambda a: F.ltrim(a[0]),
-    "RTRIM": lambda a: F.rtrim(a[0]),
-    "STARTS_WITH": lambda a: a[0].startswith(a[1]),
-    "ENDS_WITH": lambda a: a[0].endswith(a[1]),
-    "COALESCE": lambda a: F.coalesce(*a),
-    "GREATEST": lambda a: F.greatest(*a),
-    "LEAST": lambda a: F.least(*a),
-    "TO_STRING": lambda a: a[0].cast("string"),
-    "TO_LONG": lambda a: a[0].cast("long"),
-    "TO_INT": lambda a: a[0].cast("int"),
-    "TO_DOUBLE": lambda a: a[0].cast("double"),
-    # SUBSTRING is 1-based in ES|QL, like F.substring
-    "SUBSTRING": lambda a: F.substring(a[0], a[1], a[2])
-    if len(a) == 3 else F.substring(a[0], a[1], 2_147_483_647),
-    # string round-out (round 14 second batch) — REPLACE is the ES|QL
-    # REGEX form (regexp_replace, like live ES|QL); LEFT/RIGHT clamp
-    # like their ES|QL namesakes via substring arithmetic
-    "REPLACE": lambda a: F.regexp_replace(a[0], a[1], a[2]),
-    "REVERSE": lambda a: F.reverse(a[0]),
-    "LEFT": lambda a: F.substring(a[0], F.lit(1), a[1]),
-    # n <= 0 → "" only for a NON-NULL string (round-14 review: the
-    # short-circuit must not turn NULL into "" — every string function
-    # here propagates NULL)
-    "RIGHT": lambda a: F.when(
-        a[0].isNotNull() & (a[1] <= 0), F.lit("")).otherwise(
-        F.substring(a[0], -a[1].cast("int"), a[1])),
-    "TO_BOOLEAN": lambda a: a[0].cast("boolean"),
-    "TO_IP": lambda a: _to_ip(a[0]),
-    # hash functions (ES|QL 8.12+): hex-string digests, pure codegen
-    "MD5": lambda a: F.md5(a[0]),
-    "SHA1": lambda a: F.sha1(a[0]),
-    "SHA256": lambda a: F.sha2(a[0], 256),
-    # ES|QL TO_DATETIME reads numerics as MILLISECONDS since epoch
-    # (round-14 review: Spark's timestamp cast reads seconds — a
-    # silent 1000x); digit-only operands route through
-    # timestamp_millis, everything else (ISO strings, dates) through
-    # the plain cast
-    "TO_DATETIME": lambda a: F.when(
-        a[0].cast("string").rlike("^-?[0-9]+$"),
-        F.timestamp_millis(a[0].cast("long"))).otherwise(
-        a[0].cast("timestamp")),
-    # MV_* multivalue functions: ES|QL multivalue fields are array
-    # columns here; null input → null (array_size/aggregate propagate),
-    # and MV_SUM/MV_AVG guard empties to null like a no-value field.
-    # All codegen higher-order functions — no UDF, no explode.
-    "MV_COUNT": lambda a: F.array_size(a[0]),
-    "MV_MIN": lambda a: F.array_min(a[0]),
-    "MV_MAX": lambda a: F.array_max(a[0]),
-    "MV_SUM": lambda a: F.when(
-        F.array_size(a[0]) > 0,
-        F.aggregate(a[0], F.lit(0.0),
-                    lambda acc, x: acc + x.cast("double"))),
-    "MV_AVG": lambda a: F.when(
-        F.array_size(a[0]) > 0,
-        F.aggregate(a[0], F.lit(0.0),
-                    lambda acc, x: acc + x.cast("double"))
-        / F.array_size(a[0])),
-    # multivalue round-out (round 14 second batch): F.get is 0-based
-    # and NULL on out-of-bounds (an empty multivalue field has no
-    # first/last — ES|QL returns null there too, never an error).
-    # MV_SORT lives in _call (its optional order is a literal).
-    "MV_DEDUPE": lambda a: F.array_distinct(a[0]),
-    "MV_FIRST": lambda a: F.get(a[0], 0),
-    "MV_LAST": lambda a: F.get(a[0], F.array_size(a[0]) - 1),
-    # multivalue round-out (round 15) — still all codegen higher-order
-    # functions.  MV_SLICE is ES|QL's 0-based INCLUSIVE [start, end]
-    # with negatives counting from the end; out-of-range clamps to an
-    # empty/short result like live ES, never an error.  MV_APPEND
-    # concatenates; MV_MEDIAN averages the two middle values on even
-    # cardinality (double result, like ES on non-integer fields).
-    # MV_ZIP pairs elements with the delimiter (default ","), keeping
-    # the longer side's tail verbatim — live ES's behavior.
-    "MV_APPEND": lambda a: F.concat(a[0], a[1]),
-    "MV_SLICE": lambda a: _mv_slice(a[0], a[1],
-                                    a[2] if len(a) == 3 else a[1]),
-    "MV_MEDIAN": lambda a: _mv_median(a[0]),
-    "MV_PERCENTILE": lambda a: _mv_percentile(a[0], a[1]),
-    "MV_MEDIAN_ABSOLUTE_DEVIATION": lambda a: _mv_mad(a[0]),
-    "MV_PSERIES_WEIGHTED_SUM": lambda a: _mv_pseries(a[0], a[1]),
-    # string tail (round 15, second batch) — all codegen
-    "SPACE": lambda a: F.repeat(F.lit(" "), _nonneg_count(a[0], "SPACE")),
-    "REPEAT": lambda a: F.repeat(a[0], _nonneg_count(a[1], "REPEAT")),
-    "BIT_LENGTH": lambda a: F.bit_length(a[0]),
-    "BYTE_LENGTH": lambda a: F.octet_length(a[0]),
-    "TO_BASE64": lambda a: F.base64(a[0].cast("binary")),
-    "FROM_BASE64": lambda a: F.unbase64(a[0]).cast("string"),
-    "HASH": lambda a: _hash_fn(a[0], a[1]),
-    "TO_VERSION": lambda a: _to_version(a[0]),
-    # math/date stragglers (round 15, third batch) — all codegen.
-    # ROUND_TO (8.19): round DOWN to the nearest of the fixed points;
-    # below the smallest point, the smallest point (live ES contract).
-    # COPY_SIGN (9.2): magnitude with the second argument's sign (a
-    # non-negative sign arg keeps the magnitude positive, like Java's
-    # copySign for +0).  DAY_NAME/MONTH_NAME (9.1): English names —
-    # date_format's root-locale rendering, same strings DuckDB's
-    # dayname/monthname emit.
-    "ROUND_TO": lambda a: F.coalesce(
-        F.array_max(F.filter(F.array(*a[1:]), lambda p: p <= a[0])),
-        F.array_min(F.array(*a[1:]))),
-    "SCALB": lambda a: a[0].cast("double")
-    * F.pow(F.lit(2.0), a[1].cast("double")),
-    "COPY_SIGN": lambda a: F.abs(a[0])
-    * F.when(a[1] < 0, F.lit(-1.0)).otherwise(F.lit(1.0)),
-    "DAY_NAME": lambda a: F.date_format(a[0], "EEEE"),
-    "MONTH_NAME": lambda a: F.date_format(a[0], "MMMM"),
-    "MV_ZIP": lambda a: F.zip_with(
-        a[0], a[1],
-        lambda x, y: F.when(x.isNull(), y).when(y.isNull(), x)
-        .otherwise(F.concat(x, a[2] if len(a) == 3 else F.lit(","), y))),
-    # math tail (round 15): straight whole-stage-codegen trig/log —
-    # LOG follows ES|QL's argument order (LOG(base, value); one-arg =
-    # natural log), the zero-arg constants fold at plan time
-    # two-arg LOG(base, value) = ln(value)/ln(base) — F.log's two-arg
-    # form only takes a PYTHON float base, not a column expression
-    "LOG": lambda a: F.log(a[0]) if len(a) == 1 else F.log(a[1]) / F.log(a[0]),
-    "LOG10": lambda a: F.log10(a[0]),
-    "EXP": lambda a: F.exp(a[0]),
-    "SIN": lambda a: F.sin(a[0]),
-    "COS": lambda a: F.cos(a[0]),
-    "TAN": lambda a: F.tan(a[0]),
-    "ASIN": lambda a: F.asin(a[0]),
-    "ACOS": lambda a: F.acos(a[0]),
-    "ATAN": lambda a: F.atan(a[0]),
-    "ATAN2": lambda a: F.atan2(a[0], a[1]),
-    "SINH": lambda a: F.sinh(a[0]),
-    "COSH": lambda a: F.cosh(a[0]),
-    "TANH": lambda a: F.tanh(a[0]),
-    "SIGNUM": lambda a: F.signum(a[0]),
-    "CBRT": lambda a: F.cbrt(a[0]),
-    "HYPOT": lambda a: F.hypot(a[0], a[1]),
-    "TO_DEGREES": lambda a: F.degrees(a[0]),
-    "TO_RADIANS": lambda a: F.radians(a[0]),
-    "PI": lambda a: F.lit(3.141592653589793),
-    "E": lambda a: F.lit(2.718281828459045),
-    "TAU": lambda a: F.lit(6.283185307179586),
-}
 
 #: arity bounds for the whitelisted scalars (round-14 review: the bare
 #: lambdas silently DROPPED extra arguments — MV_SORT(v, "DESC") came
@@ -1997,10 +1588,8 @@ _FN_ARITY: dict[str, tuple[int, int | None]] = {
     "DAY_NAME": (1, 1), "MONTH_NAME": (1, 1),
 }
 
-#: SQL-string twins of _FNS (round 16): same name set (asserted at
-#: import), each rendering the exact expression its Column sibling
-#: builds — see the twin-discipline note above _decimal_sum_sql.
-_FNS_SQL: dict[str, Callable[[list[str]], str]] = {
+#: scalar whitelist: name → renderer of the call's Spark-SQL text
+_FNS: dict[str, Callable[[list[str]], str]] = {
     "ABS": lambda a: f"abs({a[0]})",
     "CEIL": lambda a: f"ceil({a[0]})",
     "FLOOR": lambda a: f"floor({a[0]})",
@@ -2024,24 +1613,41 @@ _FNS_SQL: dict[str, Callable[[list[str]], str]] = {
     "TO_LONG": lambda a: f"CAST({a[0]} AS BIGINT)",
     "TO_INT": lambda a: f"CAST({a[0]} AS INT)",
     "TO_DOUBLE": lambda a: f"CAST({a[0]} AS DOUBLE)",
+    # SUBSTRING is 1-based in ES|QL, like Spark's substring
     "SUBSTRING": lambda a: (
         f"substring({a[0]}, {a[1]}, {a[2]})" if len(a) == 3
         else f"substring({a[0]}, {a[1]}, 2147483647)"),
+    # string round-out (round 14 second batch) — REPLACE is the ES|QL
+    # REGEX form (regexp_replace, like live ES|QL); LEFT/RIGHT clamp
+    # like their ES|QL namesakes via substring arithmetic
     "REPLACE": lambda a: f"regexp_replace({a[0]}, {a[1]}, {a[2]})",
     "REVERSE": lambda a: f"reverse({a[0]})",
     "LEFT": lambda a: f"substring({a[0]}, 1, {a[1]})",
+    # n <= 0 → "" only for a NON-NULL string (round-14 review: the
+    # short-circuit must not turn NULL into "" — every string function
+    # here propagates NULL)
     "RIGHT": lambda a: (
         f"CASE WHEN (({a[0]} IS NOT NULL) AND ({a[1]} <= 0)) THEN '' "
         f"ELSE substring({a[0]}, (- CAST({a[1]} AS INT)), {a[1]}) END"),
     "TO_BOOLEAN": lambda a: f"CAST({a[0]} AS BOOLEAN)",
     "TO_IP": lambda a: _to_ip_sql(a[0]),
+    # hash functions (ES|QL 8.12+): hex-string digests, pure codegen
     "MD5": lambda a: f"md5({a[0]})",
     "SHA1": lambda a: f"sha1({a[0]})",
     "SHA256": lambda a: f"sha2({a[0]}, 256)",
+    # ES|QL TO_DATETIME reads numerics as MILLISECONDS since epoch
+    # (round-14 review: Spark's timestamp cast reads seconds — a
+    # silent 1000x); digit-only operands route through
+    # timestamp_millis, everything else (ISO strings, dates) through
+    # the plain cast
     "TO_DATETIME": lambda a: (
         f"CASE WHEN (CAST({a[0]} AS STRING) RLIKE '^-?[0-9]+$') "
         f"THEN timestamp_millis(CAST({a[0]} AS BIGINT)) "
         f"ELSE CAST({a[0]} AS TIMESTAMP) END"),
+    # MV_* multivalue functions: ES|QL multivalue fields are array
+    # columns here; null input → null (array_size/aggregate propagate),
+    # and MV_SUM/MV_AVG guard empties to null like a no-value field.
+    # All codegen higher-order functions — no UDF, no explode.
     "MV_COUNT": lambda a: f"array_size({a[0]})",
     "MV_MIN": lambda a: f"array_min({a[0]})",
     "MV_MAX": lambda a: f"array_max({a[0]})",
@@ -2052,9 +1658,21 @@ _FNS_SQL: dict[str, Callable[[list[str]], str]] = {
         f"CASE WHEN (array_size({a[0]}) > 0) THEN (aggregate({a[0]}, "
         f"0.0D, (acc, x) -> (acc + CAST(x AS DOUBLE))) "
         f"/ array_size({a[0]})) END"),
+    # multivalue round-out (round 14 second batch): get() is 0-based
+    # and NULL on out-of-bounds (an empty multivalue field has no
+    # first/last — ES|QL returns null there too, never an error).
+    # MV_SORT lives in _call (its optional order is a literal).
     "MV_DEDUPE": lambda a: f"array_distinct({a[0]})",
     "MV_FIRST": lambda a: f"get({a[0]}, 0)",
     "MV_LAST": lambda a: f"get({a[0]}, (array_size({a[0]}) - 1))",
+    # multivalue round-out (round 15) — still all codegen higher-order
+    # functions.  MV_SLICE is ES|QL's 0-based INCLUSIVE [start, end]
+    # with negatives counting from the end; out-of-range clamps to an
+    # empty/short result like live ES, never an error.  MV_APPEND
+    # concatenates; MV_MEDIAN averages the two middle values on even
+    # cardinality (double result, like ES on non-integer fields).
+    # MV_ZIP pairs elements with the delimiter (default ","), keeping
+    # the longer side's tail verbatim — live ES's behavior.
     "MV_APPEND": lambda a: f"concat({a[0]}, {a[1]})",
     "MV_SLICE": lambda a: _mv_slice_sql(a[0], a[1],
                                         a[2] if len(a) == 3 else a[1]),
@@ -2062,6 +1680,7 @@ _FNS_SQL: dict[str, Callable[[list[str]], str]] = {
     "MV_PERCENTILE": lambda a: _mv_percentile_sql(a[0], a[1]),
     "MV_MEDIAN_ABSOLUTE_DEVIATION": lambda a: _mv_mad_sql(a[0]),
     "MV_PSERIES_WEIGHTED_SUM": lambda a: _mv_pseries_sql(a[0], a[1]),
+    # string tail (round 15, second batch) — all codegen
     "SPACE": lambda a: f"repeat(' ', {_nonneg_count_sql(a[0], 'SPACE')})",
     "REPEAT": lambda a: (
         f"repeat({a[0]}, {_nonneg_count_sql(a[1], 'REPEAT')})"),
@@ -2071,6 +1690,14 @@ _FNS_SQL: dict[str, Callable[[list[str]], str]] = {
     "FROM_BASE64": lambda a: f"CAST(unbase64({a[0]}) AS STRING)",
     "HASH": lambda a: _hash_fn_sql(a[0], a[1]),
     "TO_VERSION": lambda a: _to_version_sql(a[0]),
+    # math/date stragglers (round 15, third batch) — all codegen.
+    # ROUND_TO (8.19): round DOWN to the nearest of the fixed points;
+    # below the smallest point, the smallest point (live ES contract).
+    # COPY_SIGN (9.2): magnitude with the second argument's sign (a
+    # non-negative sign arg keeps the magnitude positive, like Java's
+    # copySign for +0).  DAY_NAME/MONTH_NAME (9.1): English names —
+    # date_format's root-locale rendering, same strings DuckDB's
+    # dayname/monthname emit.
     "ROUND_TO": lambda a: (
         f"coalesce(array_max(filter(array({', '.join(a[1:])}), "
         f"p -> (p <= {a[0]}))), array_min(array({', '.join(a[1:])})))"),
@@ -2085,6 +1712,10 @@ _FNS_SQL: dict[str, Callable[[list[str]], str]] = {
         f"zip_with({a[0]}, {a[1]}, (x, y) -> "
         f"CASE WHEN (x IS NULL) THEN y WHEN (y IS NULL) THEN x "
         f"ELSE concat(x, {a[2] if len(a) == 3 else chr(39) + ',' + chr(39)}, y) END)"),
+    # math tail (round 15): straight whole-stage-codegen trig/log —
+    # LOG follows ES|QL's argument order (LOG(base, value); one-arg =
+    # natural log, two-arg = ln(value)/ln(base)); the zero-arg
+    # constants fold at plan time
     "LOG": lambda a: (f"ln({a[0]})" if len(a) == 1
                       else f"(ln({a[1]}) / ln({a[0]}))"),
     "LOG10": lambda a: f"log10({a[0]})",
@@ -2109,91 +1740,6 @@ _FNS_SQL: dict[str, Callable[[list[str]], str]] = {
     "TAU": lambda a: "6.283185307179586D",
 }
 
-
-#: aggregates (STATS context only)
-_AGGS: dict[str, Callable[[list[Column]], Column]] = {
-    "COUNT": lambda a: F.count(a[0]),
-    "SUM": lambda a: _decimal_sum(a[0]),
-    "AVG": lambda a: F.round((F.sum(a[0].cast("decimal(28,6)"))
-                              / F.count(a[0])).cast("double"), 6),
-    "MIN": lambda a: F.min(a[0]),
-    "MAX": lambda a: F.max(a[0]),
-    # COUNT_DISTINCT's optional second arg is ES's HLL precision
-    # threshold — meaningless for an exact count (the documented
-    # oracle-favoring divergence), accepted and unused; passing it to
-    # count_distinct would silently count (field, precision) TUPLES
-    "COUNT_DISTINCT": lambda a: F.count_distinct(a[0]),
-    "MEDIAN": lambda a: F.percentile(a[0], F.lit(0.5)),
-    # round-15 aggregate tail.  VALUES returns the distinct set SORTED
-    # (live ES|QL leaves the order unspecified — sorting is the
-    # deterministic choice, documented divergence).  WEIGHTED_AVG and
-    # STD_DEV are decimal-routed so the result is order-independent:
-    # exact decimal sums, double math only at the very end (STD_DEV is
-    # the population form, like ES|QL, via the sum-of-squares identity
-    # on per-row 6dp-quantized decimals — replayable in ANSI SQL).
-    "VALUES": lambda a: F.sort_array(F.collect_set(a[0])),
-    # the denominator gates the weight on the VALUE being non-null —
-    # a NULL-value row must not count its weight (ES skips the row)
-    # exact decimal sums, then ONE double division (the AVG oracle
-    # form — engine-neutral IEEE, no decimal-division scale rules)
-    "WEIGHTED_AVG": lambda a: F.round(
-        F.sum((a[0] * a[1]).cast("decimal(28,6)")).cast("double")
-        / F.sum(F.when(a[0].isNotNull(), a[1])
-                .cast("decimal(28,6)")).cast("double"), 6),
-    "STD_DEV": lambda a: F.round(F.sqrt(F.greatest(F.lit(0.0), (
-        F.sum((a[0] * a[0]).cast("decimal(28,6)")).cast("double")
-        / F.count(a[0])
-        - F.pow(F.sum(a[0].cast("decimal(28,6)")).cast("double")
-                / F.count(a[0]), 2)))), 6),
-    # round-15 third batch.  MEDIAN_ABSOLUTE_DEVIATION is EXACT per
-    # group (collect the group's values, then the same sorted-array
-    # median-of-deviations as MV_MEDIAN_ABSOLUTE_DEVIATION) — live ES
-    # is TDigest-approximate; exact is the documented oracle-favoring
-    # divergence, same as MEDIAN/PERCENTILE above.  Memory is
-    # O(group values), the SAME profile as Spark's exact percentile
-    # buffer that MEDIAN/PERCENTILE already carry — acceptable where
-    # they are.  ST_CENTROID_AGG returns the geo_point struct{lat,lon}
-    # (composable with ST_X/ST_Y/ST_DISTANCE), decimal-routed averages
-    # so the result is partition-order-independent.  ST_EXTENT_AGG
-    # returns the ES display rendering "BBOX (minLon, maxLon, maxLat,
-    # minLat)" as a string — a terminal result, 6dp decimal-formatted
-    # so both engines render identically (live ES returns a geoshape
-    # object; the string IS its canonical rendering — documented
-    # divergence).
-    "MEDIAN_ABSOLUTE_DEVIATION": lambda a: F.round(
-        _mv_mad(F.collect_list(a[0].cast("double"))), 6),
-    "ST_CENTROID_AGG": lambda a: F.struct(
-        F.round((F.sum(a[0].getField("lat").cast("decimal(28,6)"))
-                 / F.count(a[0].getField("lat"))).cast("double"), 6)
-        .alias("lat"),
-        F.round((F.sum(a[0].getField("lon").cast("decimal(28,6)"))
-                 / F.count(a[0].getField("lon"))).cast("double"), 6)
-        .alias("lon")),
-    # FIRST/LAST (ES|QL 9.2): the value at the min/max sort key.  Rows
-    # with a NULL value OR a NULL sort key are skipped (ES ignores
-    # rows missing the sort field); sort-key ties break by VALUE via
-    # the struct's lexicographic order — live ES leaves ties
-    # unspecified, the deterministic choice is the documented
-    # divergence (the VALUES-sorting precedent).
-    "FIRST": lambda a: F.min(
-        F.when(a[0].isNotNull() & a[1].isNotNull(),
-               F.struct(a[1].alias("s"), a[0].alias("v"))))
-        .getField("v"),
-    "LAST": lambda a: F.max(
-        F.when(a[0].isNotNull() & a[1].isNotNull(),
-               F.struct(a[1].alias("s"), a[0].alias("v"))))
-        .getField("v"),
-    "ST_EXTENT_AGG": lambda a: F.concat(
-        F.lit("BBOX ("),
-        F.min(a[0].getField("lon")).cast("decimal(18,6)").cast("string"),
-        F.lit(", "),
-        F.max(a[0].getField("lon")).cast("decimal(18,6)").cast("string"),
-        F.lit(", "),
-        F.max(a[0].getField("lat")).cast("decimal(18,6)").cast("string"),
-        F.lit(", "),
-        F.min(a[0].getField("lat")).cast("decimal(18,6)").cast("string"),
-        F.lit(")")),
-}
 
 #: (min, max) arities for the STATS aggregates
 _AGG_ARITY: dict[str, tuple[int, int | None]] = {
@@ -2221,9 +1767,8 @@ def _extent_bound_sql(a: str, agg: str, axis: str) -> str:
     return f"CAST(CAST({agg}({a}.{axis}) AS DECIMAL(18,6)) AS STRING)"
 
 
-#: SQL-string twins of _AGGS (round 16, same twin discipline as
-#: _FNS_SQL — name sets asserted equal at import)
-_AGGS_SQL: dict[str, Callable[[list[str]], str]] = {
+#: aggregates (STATS context only): name → renderer of the Spark-SQL text
+_AGGS: dict[str, Callable[[list[str]], str]] = {
     "COUNT": lambda a: f"count({a[0]})",
     "SUM": lambda a: _decimal_sum_sql(a[0]),
     "AVG": lambda a: (
@@ -2231,9 +1776,24 @@ _AGGS_SQL: dict[str, Callable[[list[str]], str]] = {
         f"/ count({a[0]})) AS DOUBLE), 6)"),
     "MIN": lambda a: f"min({a[0]})",
     "MAX": lambda a: f"max({a[0]})",
+    # COUNT_DISTINCT's optional second arg is ES's HLL precision
+    # threshold — meaningless for an exact count (the documented
+    # oracle-favoring divergence), accepted and unused; passing it to
+    # count(DISTINCT …) would silently count (field, precision) TUPLES
     "COUNT_DISTINCT": lambda a: f"count(DISTINCT {a[0]})",
     "MEDIAN": lambda a: f"percentile({a[0]}, 0.5D)",
+    # round-15 aggregate tail.  VALUES returns the distinct set SORTED
+    # (live ES|QL leaves the order unspecified — sorting is the
+    # deterministic choice, documented divergence).  WEIGHTED_AVG and
+    # STD_DEV are decimal-routed so the result is order-independent:
+    # exact decimal sums, double math only at the very end (STD_DEV is
+    # the population form, like ES|QL, via the sum-of-squares identity
+    # on per-row 6dp-quantized decimals — replayable in ANSI SQL).
     "VALUES": lambda a: f"sort_array(collect_set({a[0]}))",
+    # the denominator gates the weight on the VALUE being non-null —
+    # a NULL-value row must not count its weight (ES skips the row);
+    # exact decimal sums, then ONE double division (the AVG oracle
+    # form — engine-neutral IEEE, no decimal-division scale rules)
     "WEIGHTED_AVG": lambda a: (
         f"round((CAST(sum(CAST(({a[0]} * {a[1]}) AS DECIMAL(28,6))) "
         f"AS DOUBLE) / CAST(sum(CAST(CASE WHEN ({a[0]} IS NOT NULL) "
@@ -2243,6 +1803,21 @@ _AGGS_SQL: dict[str, Callable[[list[str]], str]] = {
         f"AS DECIMAL(28,6))) AS DOUBLE) / count({a[0]})) "
         f"- pow((CAST(sum(CAST({a[0]} AS DECIMAL(28,6))) AS DOUBLE) "
         f"/ count({a[0]})), 2)))), 6)"),
+    # round-15 third batch.  MEDIAN_ABSOLUTE_DEVIATION is EXACT per
+    # group (collect the group's values, then the same sorted-array
+    # median-of-deviations as MV_MEDIAN_ABSOLUTE_DEVIATION) — live ES
+    # is TDigest-approximate; exact is the documented oracle-favoring
+    # divergence, same as MEDIAN/PERCENTILE above.  Memory is
+    # O(group values), the SAME profile as Spark's exact percentile
+    # buffer that MEDIAN/PERCENTILE already carry — acceptable where
+    # they are.  ST_CENTROID_AGG returns the geo_point struct{lat,lon}
+    # (composable with ST_X/ST_Y/ST_DISTANCE), decimal-routed averages
+    # so the result is partition-order-independent.  ST_EXTENT_AGG
+    # returns the ES display rendering "BBOX (minLon, maxLon, maxLat,
+    # minLat)" as a string — a terminal result, 6dp decimal-formatted
+    # so both engines render identically (live ES returns a geoshape
+    # object; the string IS its canonical rendering — documented
+    # divergence).
     "MEDIAN_ABSOLUTE_DEVIATION": lambda a: (
         "round("
         + _mv_mad_sql(f"collect_list(CAST({a[0]} AS DOUBLE))")
@@ -2250,6 +1825,12 @@ _AGGS_SQL: dict[str, Callable[[list[str]], str]] = {
     "ST_CENTROID_AGG": lambda a: (
         f"named_struct('lat', {_centroid_axis_sql(a[0], 'lat')}, "
         f"'lon', {_centroid_axis_sql(a[0], 'lon')})"),
+    # FIRST/LAST (ES|QL 9.2): the value at the min/max sort key.  Rows
+    # with a NULL value OR a NULL sort key are skipped (ES ignores
+    # rows missing the sort field); sort-key ties break by VALUE via
+    # the struct's lexicographic order — live ES leaves ties
+    # unspecified, the deterministic choice is the documented
+    # divergence (the VALUES-sorting precedent).
     "FIRST": lambda a: _first_last_sql(a, "min"),
     "LAST": lambda a: _first_last_sql(a, "max"),
     "ST_EXTENT_AGG": lambda a: (
@@ -2260,23 +1841,8 @@ _AGGS_SQL: dict[str, Callable[[list[str]], str]] = {
         + _extent_bound_sql(a[0], "min", "lat") + ", ')')"),
 }
 
-# twin-completeness guard: a function added to one tier without its
-# twin must fail at import, not silently fall back
-assert set(_FNS_SQL) == set(_FNS), \
-    set(_FNS_SQL) ^ set(_FNS)
-assert set(_AGGS_SQL) == set(_AGGS), \
-    set(_AGGS_SQL) ^ set(_AGGS)
-
-
-def _compile_fn(fn: str, args: list,
-                agg_where=None):
-    # str tier: every operand (and the gate) rendered as SQL text and
-    # the function has a string twin — compose in pure Python; any
-    # Column operand (a bridge node upstream) or _COLUMN_BACKEND drops
-    # the whole call onto the legacy Column tier via _c promotion.
-    str_tier = (not _COLUMN_BACKEND
-                and all(isinstance(a, str) for a in args)
-                and (agg_where is None or isinstance(agg_where, str)))
+def _compile_fn(fn: str, args: list[str],
+                agg_where: str | None = None) -> str:
     if agg_where is not None and (fn in _AGGS or fn == "PERCENTILE"):
         # per-aggregate WHERE (ES 8.16): gate the VALUE argument —
         # every aggregate here skips NULLs, so when(cond, arg) is
@@ -2284,11 +1850,7 @@ def _compile_fn(fn: str, args: list,
         # COUNT_DISTINCT's accepted-unused precision, the weight) stay
         # ungated — WEIGHTED_AVG's denominator already gates the
         # weight on the (now-gated) value being non-null
-        if str_tier:
-            args = [f"CASE WHEN {agg_where} THEN {args[0]} END",
-                    *args[1:]]
-        else:
-            args = [F.when(_c(agg_where), _c(args[0])), *args[1:]]
+        args = [f"CASE WHEN {agg_where} THEN {args[0]} END", *args[1:]]
     if fn == "CASE":
         # CASE(cond1, val1[, cond2, val2…][, default])
         if len(args) < 2:
@@ -2296,23 +1858,16 @@ def _compile_fn(fn: str, args: list,
         pairs, default = args, None
         if len(args) % 2 == 1:
             pairs, default = args[:-1], args[-1]
-        if str_tier:
-            out = "CASE"
-            for i in range(0, len(pairs), 2):
-                out += f" WHEN {pairs[i]} THEN {pairs[i + 1]}"
-            if default is not None:
-                out += f" ELSE {default}"
-            return out + " END"
-        out = F.when(_c(pairs[0]), _c(pairs[1]))
-        for i in range(2, len(pairs), 2):
-            out = out.when(_c(pairs[i]), _c(pairs[i + 1]))
-        return out if default is None else out.otherwise(_c(default))
+        out = "CASE"
+        for i in range(0, len(pairs), 2):
+            out += f" WHEN {pairs[i]} THEN {pairs[i + 1]}"
+        if default is not None:
+            out += f" ELSE {default}"
+        return out + " END"
     if fn == "PERCENTILE":
         if len(args) != 2:
             raise ValueError("ES|QL: PERCENTILE(field, p)")
-        if str_tier:
-            return f"percentile({args[0]}, ({args[1]} / 100.0D))"
-        return F.percentile(_c(args[0]), _c(args[1]) / F.lit(100.0))
+        return f"percentile({args[0]}, ({args[1]} / 100.0D))"
     if fn in _AGGS:
         lo, hi = _AGG_ARITY.get(fn, (1, 1))
         if not lo <= len(args) <= (hi if hi is not None else len(args)):
@@ -2320,9 +1875,7 @@ def _compile_fn(fn: str, args: list,
                 f"ES|QL: {fn} takes "
                 f"{lo if lo == hi else f'{lo}..{hi}'} argument(s), "
                 f"got {len(args)}")
-        if str_tier:
-            return _AGGS_SQL[fn](args)
-        return _AGGS[fn]([_c(a) for a in args])
+        return _AGGS[fn](args)
     if fn in _FNS:
         lo, hi = _FN_ARITY[fn]
         if not lo <= len(args) <= (hi if hi is not None else len(args)):
@@ -2330,9 +1883,7 @@ def _compile_fn(fn: str, args: list,
                 f"ES|QL: {fn} takes "
                 f"{lo if lo == hi else f'{lo}..{hi}'} argument(s), "
                 f"got {len(args)}")
-        if str_tier:
-            return _FNS_SQL[fn](args)
-        return _FNS[fn]([_c(a) for a in args])
+        return _FNS[fn](args)
     if fn == "NOW":
         raise ValueError(
             "ES|QL: NOW() is not supported (a lazily re-evaluated clock "
@@ -2524,7 +2075,7 @@ def _stage_where(df: DataFrame, p: _P) -> DataFrame:
         raise ValueError(
             f"ES|QL: trailing tokens after WHERE: "
             f"{p.peek()[1]!r}{_at(p.peek())}")
-    out = df.where(cond)
+    out = _drop_bridges(_with_bridges(df, p.bridges).where(cond), p.bridges)
     contribs = getattr(p, "score_contribs", None)
     if contribs:
         # METADATA _score: this WHERE's full-text contributions add to
@@ -2539,14 +2090,18 @@ def _stage_where(df: DataFrame, p: _P) -> DataFrame:
     return out
 
 
-def _assignments(p: _P) -> list[tuple]:
-    out: list[tuple] = []
+def _assignments(p: _P) -> list[tuple[str, str, list]]:
+    """``name = <expr>, …`` → (name, SQL text, the bridges that
+    expression registered) triples."""
+    out: list[tuple[str, str, list]] = []
     while not p.done():
         t = p.next()
         if t[0] != "id":
             raise ValueError(f"ES|QL: expected a name, got {t[1]!r}")
         p.expect_op("=")
-        out.append((t[1], p.expr()))
+        first = len(p.bridges)
+        e = p.expr()
+        out.append((t[1], e, p.bridges[first:]))
         if p.peek() == ("op", ","):
             p.next()
         elif not p.done():
@@ -2558,11 +2113,13 @@ def _assignments(p: _P) -> list[tuple]:
 
 def _stage_eval(df: DataFrame, p: _P) -> DataFrame:
     # sequential: each assignment sees the previous ones (ES|QL allows
-    # EVAL a = 1, b = a + 1) — but the expr above was parsed eagerly
-    # against F.col, which resolves lazily at plan time, so ordering
-    # works by applying withColumn in declaration order
-    for name, expr in _assignments(p):
-        df = df.withColumn(name, _c(expr))
+    # EVAL a = 1, b = a + 1) — the SQL text resolves lazily at plan
+    # time, so ordering works by applying withColumn in declaration
+    # order; an assignment's bridges are projected just before it, so
+    # they may read the earlier assignments too
+    for name, expr, bridges in _assignments(p):
+        df = _with_bridges(df, bridges).withColumn(name, F.expr(expr))
+        df = _drop_bridges(df, bridges)
     return df
 
 
@@ -2580,7 +2137,7 @@ def _stage_stats(df: DataFrame, p: _P) -> DataFrame:
             by_i = i
             break
     agg_toks = p.toks[p.i:by_i if by_i is not None else len(p.toks)]
-    ap = _P(agg_toks)
+    ap = _P(agg_toks, p.bridges)
     aggs = []
     while not ap.done():
         t = ap.next()
@@ -2611,16 +2168,16 @@ def _stage_stats(df: DataFrame, p: _P) -> DataFrame:
                     if st[0] == "id" and st[1].upper() == "WHERE"
                     and _depth_at(span, i) == 0), None)
         if w_i is not None:
-            cp = _P(span[w_i + 1:])
+            cp = _P(span[w_i + 1:], p.bridges)
             cond = cp.expr()
             if not cp.done():
                 raise ValueError(
                     "ES|QL: trailing tokens after the aggregate's "
                     f"WHERE: {cp.peek()[1]!r}{_at(cp.peek())}")
-            sub = _P(span[:w_i])
+            sub = _P(span[:w_i], p.bridges)
             sub.agg_where = cond
         else:
-            sub = _P(span)
+            sub = _P(span, p.bridges)
         e = sub.expr()
         if not sub.done():
             raise ValueError(
@@ -2631,9 +2188,11 @@ def _stage_stats(df: DataFrame, p: _P) -> DataFrame:
             ap.next()
     if not aggs:
         raise ValueError("ES|QL: STATS needs at least one aggregate")
-    keys = [(_c(e).alias(n) if e is not None else F.col(n))
+    keys = [(F.expr(e).alias(n) if e is not None else F.col(n))
             for n, e in _parse_by_keys(p, by_i)]
-    exprs = [_c(e).alias(n) for n, e in aggs]
+    exprs = [F.expr(e).alias(n) for n, e in aggs]
+    # the aggregate consumes the bridge columns: nothing to drop after
+    df = _with_bridges(df, p.bridges)
     if keys:
         return df.groupBy(*keys).agg(*exprs)
     return df.agg(*exprs)
@@ -2651,13 +2210,13 @@ def _depth_at(toks: list, i: int) -> int:
 
 
 def _parse_by_keys(p: _P, by_i: int | None) -> list[tuple]:
-    """Parse a STATS/INLINESTATS BY key list into (name, expr) pairs —
-    expr (``str | Column``) is None for a bare column key (the name IS
-    the column)."""
+    """Parse a STATS/INLINESTATS BY key list into (name, SQL text)
+    pairs — the text is None for a bare column key (the name IS the
+    column).  Key bridges register on ``p``."""
     keys: list[tuple] = []
     if by_i is None:
         return keys
-    kp = _P(p.toks[by_i + 1:])
+    kp = _P(p.toks[by_i + 1:], p.bridges)
     while not kp.done():
         t = kp.peek()
         nxt = kp.toks[kp.i + 1] if kp.i + 1 < len(kp.toks) else None
@@ -2688,7 +2247,7 @@ def _parse_by_keys(p: _P, by_i: int | None) -> list[tuple]:
 
 #: TS-mode STATS (ES|QL time-series, 9.x): outer aggregates allowed
 #: around an over-time inner function, and the inner functions
-#: themselves.  The outer set reuses _AGGS so SUM/AVG stay
+#: themselves.  Both stages render through _AGGS so SUM/AVG stay
 #: decimal-routed (order-independent, ANSI-replayable).
 _TS_OUTER = ("SUM", "AVG", "MIN", "MAX", "COUNT")
 _TS_INNER = ("RATE", "AVG_OVER_TIME", "SUM_OVER_TIME", "MIN_OVER_TIME",
@@ -2808,15 +2367,15 @@ def _stage_stats_ts(df: DataFrame, p: _P,
             if n not in dims:
                 gb.append(F.col(n))
         else:
-            gb.append(_c(e).alias(n))
+            gb.append(F.expr(e).alias(n))
 
     rate_cols = sorted({c for _, _, inner, c in aggs if inner == "RATE"})
-    work = df
+    work = _with_bridges(df, p.bridges)  # consumed by the stage-1 groupBy
     if rate_cols:
         from pyspark.sql import Window
 
         part = [F.col(d) for d in dims] + \
-            [(_c(e) if e is not None else F.col(n)) for n, e in keys]
+            [(F.expr(e) if e is not None else F.col(n)) for n, e in keys]
         for rc in rate_cols:
             w = Window.partitionBy(*part).orderBy(
                 F.col(ts_col).asc(), F.col(rc).asc())
@@ -2836,10 +2395,11 @@ def _stage_stats_ts(df: DataFrame, p: _P,
             s1.append(F.sum(F.col(f"\x00incr_{c}").cast("decimal(28,6)"))
                       .cast("double").alias(f"\x00rsum{i}"))
         elif inner in ("AVG_OVER_TIME", "SUM_OVER_TIME"):
-            s1.append(_AGGS[inner[:3]]([F.col(c)]).alias(v))
+            s1.append(F.expr(_AGGS[inner[:3]]([_bq_name(c)])).alias(v))
         elif inner in ("MIN_OVER_TIME", "MAX_OVER_TIME",
                        "COUNT_OVER_TIME"):
-            s1.append(_AGGS[inner.split("_")[0]]([F.col(c)]).alias(v))
+            s1.append(F.expr(_AGGS[inner.split("_")[0]]([_bq_name(c)]))
+                      .alias(v))
         elif inner == "LAST_OVER_TIME":
             s1.append(F.max_by(F.col(c), F.struct(
                 F.col(ts_col), F.col(c))).alias(v))
@@ -2861,7 +2421,7 @@ def _stage_stats_ts(df: DataFrame, p: _P,
                     F.when((F.col("\x00n_rows") >= 2) & (span_s > 0),
                            F.col(f"\x00rsum{i}") / span_s))
 
-    s2 = [_AGGS[outer]([F.col(f"\x00v{i}")]).alias(name)
+    s2 = [F.expr(_AGGS[outer]([_bq_name(f"\x00v{i}")])).alias(name)
           for i, (name, outer, _, _) in enumerate(aggs)]
     if key_names:
         return g1.groupBy(*[F.col(n) for n in key_names]).agg(*s2)
@@ -2872,7 +2432,7 @@ def _stage_stats_ts(df: DataFrame, p: _P,
 #: ungrouped scalar path, window builder for the BY path).  The window
 #: builders apply .over() to the RAW window function and decimal-route
 #: outside it — a cast wrapped around sum() is not itself window-able.
-def _inline_agg(kind: str, args: list[Column]):
+def _inline_agg(kind: str, args: list[str]):
     if kind == "COUNT_STAR":
         return (F.count(F.lit(1)),
                 lambda w: F.count(F.lit(1)).over(w))
@@ -2881,17 +2441,16 @@ def _inline_agg(kind: str, args: list[Column]):
         raise ValueError(
             f"ES|QL: INLINESTATS {kind} takes {need} argument(s), "
             f"got {len(args)}")
-    args = [_c(a) for a in args]  # window builders are Column bridges
-    a0 = args[0]
+    a0 = F.expr(args[0])
     if kind == "COUNT":
         return F.count(a0), lambda w: F.count(a0).over(w)
     if kind == "SUM":
         dec = a0.cast("decimal(28,6)")
-        return (_decimal_sum(a0),
+        return (F.expr(_AGGS["SUM"](args)),
                 lambda w: F.sum(dec).over(w).cast("double"))
     if kind == "AVG":
         dec = a0.cast("decimal(28,6)")
-        return (_AGGS["AVG"](args),
+        return (F.expr(_AGGS["AVG"](args)),
                 lambda w: F.round((F.sum(dec).over(w)
                                    / F.count(a0).over(w)).cast("double"), 6))
     if kind == "MIN":
@@ -2902,7 +2461,7 @@ def _inline_agg(kind: str, args: list[Column]):
         return (F.percentile(a0, F.lit(0.5)),
                 lambda w: F.percentile(a0, F.lit(0.5)).over(w))
     if kind == "PERCENTILE":
-        p = args[1] / F.lit(100.0)
+        p = F.expr(args[1]) / F.lit(100.0)
         return (F.percentile(a0, p),
                 lambda w: F.percentile(a0, p).over(w))
     if kind == "COUNT_DISTINCT":
@@ -2940,8 +2499,9 @@ def _stage_inlinestats(df: DataFrame, p: _P) -> DataFrame:
         elif depth == 0 and t[0] == "id" and t[1].upper() == "BY":
             by_i = i
             break
-    ap = _P(p.toks[p.i:by_i if by_i is not None else len(p.toks)])
-    aggs: list[tuple[str, str, list[Column]]] = []
+    ap = _P(p.toks[p.i:by_i if by_i is not None else len(p.toks)],
+            p.bridges)
+    aggs: list[tuple[str, str, list[str]]] = []
     while not ap.done():
         t = ap.next()
         if t[0] != "id" or ap.peek() != ("op", "="):
@@ -2956,7 +2516,7 @@ def _stage_inlinestats(df: DataFrame, p: _P) -> DataFrame:
                 f"(name = AGG(...)), got {fn_t[1]!r}{_at(fn_t)}")
         ap.next()
         kind = fn_t[1].upper()
-        args: list[Column] = []
+        args: list[str] = []
         if kind == "COUNT" and ap.peek() == ("op", "*"):
             ap.next()
             kind = "COUNT_STAR"
@@ -2983,16 +2543,16 @@ def _stage_inlinestats(df: DataFrame, p: _P) -> DataFrame:
                 elif depth == 0 and st == ("op", ","):
                     break
                 span.append(ap.next())
-            cp = _P(span)
+            cp = _P(span, p.bridges)
             cond = cp.expr()
             if not cp.done():
                 raise ValueError(
                     "ES|QL: trailing tokens after the aggregate's "
                     f"WHERE: {cp.peek()[1]!r}{_at(cp.peek())}")
             if kind == "COUNT_STAR":
-                kind, args = "COUNT", [F.when(_c(cond), F.lit(True))]
+                kind, args = "COUNT", [f"CASE WHEN {cond} THEN TRUE END"]
             elif args:
-                args = [F.when(_c(cond), _c(args[0])), *args[1:]]
+                args = [f"CASE WHEN {cond} THEN {args[0]} END", *args[1:]]
         aggs.append((t[1], kind, args))
         if ap.peek() == ("op", ","):
             ap.next()
@@ -3004,16 +2564,17 @@ def _stage_inlinestats(df: DataFrame, p: _P) -> DataFrame:
         raise ValueError("ES|QL: INLINESTATS needs at least one aggregate")
     keys = _parse_by_keys(p, by_i)
     compiled = [(n, _inline_agg(kind, args)) for n, kind, args in aggs]
+    df = _with_bridges(df, p.bridges)
     if keys:
         # computed keys materialize as columns first (ES|QL keeps them
         # in the output frame), bare keys partition directly
         for name, expr in keys:
             if expr is not None:
-                df = df.withColumn(name, _c(expr))
+                df = df.withColumn(name, F.expr(expr))
         w = Window.partitionBy(*[name for name, _ in keys])
         for name, (_, win_builder) in compiled:
             df = df.withColumn(name, win_builder(w))
-        return df
+        return _drop_bridges(df, p.bridges)
     # like EVAL (and the window path's withColumn), an INLINESTATS name
     # that already exists REPLACES the column — ES|QL semantics; the
     # aggregates are computed from the pre-drop frame
@@ -3021,13 +2582,13 @@ def _stage_inlinestats(df: DataFrame, p: _P) -> DataFrame:
     clash = [n for n, _ in compiled if n in df.columns]
     if clash:
         df = df.drop(*clash)
-    return df.crossJoin(F.broadcast(scalars))
+    return _drop_bridges(df.crossJoin(F.broadcast(scalars)), p.bridges)
 
 
 def _stage_sort(df: DataFrame, p: _P) -> DataFrame:
     cols: list[Column] = []
     while not p.done():
-        e = _c(p.expr())
+        e = F.expr(p.expr())
         desc = False
         if p.peek_kw() in ("ASC", "DESC"):
             desc = p.next()[1].upper() == "DESC"
@@ -3054,7 +2615,8 @@ def _stage_sort(df: DataFrame, p: _P) -> DataFrame:
             raise ValueError(
                 f"ES|QL: expected ',' between SORT keys, got "
                 f"{p.peek()[1]!r}")
-    return df.orderBy(*cols)
+    return _drop_bridges(_with_bridges(df, p.bridges).orderBy(*cols),
+                         p.bridges)
 
 
 #: GROK built-in patterns (the high-frequency core of the public grok
@@ -3351,8 +2913,9 @@ def esql(tables: Mapping[str, DataFrame], query: str, *,
         # assignments — `ROW x = id + 1` would silently resolve id=0
         # instead of failing at analysis (ADVICE r13 #2); rename it to
         # a name the identifier grammar cannot produce
-        df = spark.range(1).toDF("\x00esql_row").select(
-            *[_c(e).alias(n) for n, e in assigns])
+        df = _with_bridges(spark.range(1).toDF("\x00esql_row"),
+                           head.bridges).select(
+            *[F.expr(e).alias(n) for n, e, _ in assigns])
     elif cmd[0] == "id" and cmd[1].upper() == "FROM":
         # index names until an optional METADATA keyword (round 14):
         # `FROM a, b METADATA _index` — _index is the source table

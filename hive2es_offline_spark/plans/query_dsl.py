@@ -142,6 +142,20 @@ def _ref(field: str, col) -> "Column | str":
     return field if col is F.col else col(field)
 
 
+def _ip_long(field: str, col) -> Column:
+    """uint32 ip ordering key of ``field`` under resolver ``col``
+    (functions/ip.ip_to_long_spark): one parsed expression over the
+    quoted name for the plain ``F.col`` resolver.  A custom resolver's
+    Column (a nested element's field — a lambda variable, which has no
+    name SQL text could reference) binds as the argument of a SQL
+    lambda, so the same renderer applies."""
+    if col is F.col:
+        return F.expr(_ip.ip_to_long_spark(_bq_field(field)))
+    return F.element_at(F.call_function(
+        "transform", F.array(col(field)),
+        F.expr(f"ip -> {_ip.ip_to_long_spark('ip')}")), 1)
+
+
 def _pre_stream(field: str, *, positions: bool = False):
     """Materialized shared-analysis stream for ``field`` if a
     ``preanalyzed`` scope is active (plans/analysis.py) — None means
@@ -1344,7 +1358,7 @@ def compile_query(
             # (code-review r11 — block-only compile returned zero rows
             # for such data)
             lo, hi = _ip.cidr_bounds(value)
-            ipl = _ip.ip_to_long(col(field))
+            ipl = _ip_long(field, col)
             return ((ipl >= F.lit(lo)) & (ipl <= F.lit(hi))) | \
                 (col(field) == F.lit(value))
         return col(field) == F.lit(value)
@@ -1367,7 +1381,7 @@ def compile_query(
             # (exact equality still matches keyword fields storing
             # literal CIDR strings — the same mapping-blind hedge as the
             # term clause), OR of block range compares (ip parsed once)
-            ipl = _ip.ip_to_long(col(field))
+            ipl = _ip_long(field, col)
             pred = None
             for v in cidrs:
                 lo, hi = _ip.cidr_bounds(v)
@@ -1404,7 +1418,7 @@ def compile_query(
                     "(pass 'ip': false in the range body for "
                     "lexicographic keyword semantics)",
                     stacklevel=2)
-            ipl = _ip.ip_to_long(col(field))
+            ipl = _ip_long(field, col)
             out = None
             for op, v in spec.items():
                 if op not in ops:
@@ -2989,7 +3003,7 @@ def compile_aggs(df: DataFrame, aggs: dict, id_field: str = "_id") -> DataFrame:
         # an "approximate" H3 id would be a WRONG id — worse than no id.
         # The engine offers `hex_grid` instead: the same hexagonal
         # binning capability under a self-describing z/q/r key that never
-        # claims to be H3 (see hex_cell).
+        # claims to be H3 (see hex_cell_sql).
         raise NotImplementedError(
             "geohex_grid (H3 cell ids) is not implemented — use the "
             "hex_grid extension (z/q/r axial hex binning) instead")
@@ -3147,160 +3161,14 @@ def _strict_after(specs: list[tuple[str, bool]], values: list) -> Column:
 _GEOHASH32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
 
-def geohash_cell(lat: Column, lon: Column, precision: int) -> Column:
-    """Base-32 geohash of a point at ``precision`` chars (1..12) — pure
-    codegen bit math: quantize lon/lat to ceil/floor(5p/2) bits (indices
-    clamped into range so the +180/+90 edges land in the last cell),
-    interleave lon-first, then map each 5-bit group through the base-32
-    alphabet.  NULL coordinates yield a NULL key (the bit sum and concat
-    both propagate NULL)."""
-    if not 1 <= precision <= 12:
-        raise ValueError(f"geohash precision must be 1..12, got {precision}")
-    nbits = 5 * precision
-    lonbits = (nbits + 1) // 2
-    latbits = nbits // 2
-    loni = F.least(
-        F.greatest(
-            F.floor((lon + F.lit(180.0)) / F.lit(360.0)
-                    * F.lit(float(2 ** lonbits))).cast("long"),
-            F.lit(0),
-        ),
-        F.lit(2 ** lonbits - 1),
-    )
-    lati = F.least(
-        F.greatest(
-            F.floor((lat + F.lit(90.0)) / F.lit(180.0)
-                    * F.lit(float(2 ** latbits))).cast("long"),
-            F.lit(0),
-        ),
-        F.lit(2 ** latbits - 1),
-    )
-    h: Column = F.lit(0).cast("long")
-    for k in range(nbits):
-        if k % 2 == 0:
-            src, b = loni, lonbits - 1 - k // 2
-        else:
-            src, b = lati, latbits - 1 - (k - 1) // 2
-        bit = F.shiftright(src, b).bitwiseAND(F.lit(1))
-        h = h + F.shiftleft(bit, nbits - 1 - k)
-    chars = [
-        F.element_at(
-            F.lit(list(_GEOHASH32)),
-            (F.shiftright(h, 5 * (precision - 1 - i)).bitwiseAND(F.lit(31))
-             + F.lit(1)).cast("int"),
-        )
-        for i in range(precision)
-    ]
-    out = F.concat(*chars) if len(chars) > 1 else chars[0]
-    # explicit NULL gate: greatest()/least() SKIP a NULL operand, so the
-    # clamp would silently turn a missing coordinate into index 0 (cell
-    # "000…") instead of propagating NULL
-    return F.when(lat.isNotNull() & lon.isNotNull(), out)
-
-
-def geotile_cell(lat: Column, lon: Column, zoom: int) -> Column:
-    """Slippy-map ``z/x/y`` tile key (OSM Web-Mercator, the ES
-    geotile_grid key format): x from plain longitude, y from the
-    Mercator projection, both clamped into [0, 2^z - 1] (poleward points
-    land in the edge tiles, like ES).  NULL coordinates yield a NULL key
-    (F.concat propagates NULL — concat_ws would silently skip the NULL
-    part and emit a malformed key)."""
-    import math as _math
-
-    if not 0 <= zoom <= 29:
-        raise ValueError(f"geotile precision must be 0..29, got {zoom}")
-    n = float(2 ** zoom)
-    lim = F.lit(int(2 ** zoom - 1))
-    x = F.least(
-        F.greatest(
-            F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n))
-            .cast("long"),
-            F.lit(0)),
-        lim,
-    )
-    # Clamp latitude into Web-Mercator bounds FIRST (ES GeoTileUtils'
-    # MAX/MIN_LAT = ±85.05112878): at lat=-90 exactly, tan+sec underflows
-    # to 0.0 in doubles, F.log(0) yields NULL, and the greatest(NULL, 0)
-    # clamp would silently map the south pole to the NORTH edge tile
-    # (y=0).  Clamping poleward latitudes to the Mercator bound sends
-    # them to the correct edge tile (south pole -> y = 2^z - 1), like
-    # ES.  (ADVICE r10)
-    merc = F.least(F.greatest(lat, F.lit(-85.05112878)),
-                   F.lit(85.05112878))
-    latr = F.radians(merc)
-    y = F.least(
-        F.greatest(
-            F.floor(
-                (F.lit(1.0)
-                 - F.log(F.tan(latr) + F.lit(1.0) / F.cos(latr))
-                 / F.lit(_math.pi))
-                / F.lit(2.0) * F.lit(n)
-            ).cast("long"),
-            F.lit(0)),
-        lim,
-    )
-    # same explicit NULL gate as geohash_cell: the clamp's greatest()
-    # skips NULL and would place a missing coordinate in an edge tile
-    return F.when(
-        lat.isNotNull() & lon.isNotNull(),
-        F.concat(F.lit(f"{zoom}/"), x.cast("string"),
-                 F.lit("/"), y.cast("string")),
-    )
-
-
-def hex_cell(lat: Column, lon: Column, precision: int) -> Column:
-    """``z/q/r`` axial hexagon key — the engine's honest hex-binning
-    EXTENSION behind the ``hex_grid`` bucket agg.  This is **NOT H3**
-    (ES ``geohex_grid`` rejects loudly, see ``compile_aggs``): pointy-top
-    hexagons tile the plain equirectangular lon/lat plane with
-    circumradius ``R = 45 / 2^precision`` degrees; a point maps to
-    fractional axial coordinates (the classic pointy-top basis
-    ``q = (√3/3·x − 1/3·y)/R``, ``r = (2/3·y)/R``) and snaps to its cell
-    by cube rounding (round each of q, −q−r, r; re-derive the coordinate
-    whose rounding moved farthest).  Near the poles / antimeridian the
-    cells are equirectangular-distorted, exactly like the plate-carrée
-    plane they tile — documented, not hidden.  All codegen arithmetic
-    (no UDF, no shuffle beyond the agg's own); deterministic and
-    expressible in ANSI SQL, so DuckDB replays the same keys.  NULL
-    coordinates yield a NULL key."""
-    if not 0 <= precision <= 15:
-        raise ValueError(f"hex_grid precision must be 0..15, got {precision}")
-    size = 45.0 / (2.0 ** precision)
-    x, y = lon.cast("double"), lat.cast("double")
-    q = (F.lit(3.0 ** 0.5 / 3.0) * x - F.lit(1.0 / 3.0) * y) / F.lit(size)
-    r = (F.lit(2.0 / 3.0) * y) / F.lit(size)
-
-    def _snap(binds: list) -> Column:
-        # q/r are LET-BOUND (each reference below is a struct-field
-        # read): the cube-round tree references them ~20×, and unbound
-        # that re-expansion measured ×4.3 the geotile floor at 1M rows
-        # (tools/probe_round13b.py) — bound it is within noise of it
-        q, r = binds
-        s = -q - r
-        rq, rr, rs = F.round(q, 0), F.round(r, 0), F.round(s, 0)
-        dq, dr, ds = F.abs(rq - q), F.abs(rr - r), F.abs(rs - s)
-        # cube-round repair: exactly one coordinate (the one that
-        # rounded farthest) is re-derived from the other two so
-        # q + r + s == 0 holds
-        q_fix = (dq > dr) & (dq > ds)
-        r_fix = ~q_fix & (dr > ds)
-        fq = F.when(q_fix, -rr - rs).otherwise(rq).cast("long")
-        fr = F.when(r_fix, -rq - rs).otherwise(rr).cast("long")
-        return F.concat(F.lit(f"{precision}/"), fq.cast("string"),
-                        F.lit("/"), fr.cast("string"))
-
-    return F.when(
-        lat.isNotNull() & lon.isNotNull(), _let_cols([q, r], _snap))
-
-
-# ---- Spark-SQL string twins of the grid cell builders (round 16,
-# guide §7.3): the Column builders above cost ~100-600 py4j round
-# trips per use (geohash's bit loop alone is 5·precision nodes); the
-# twins render the IDENTICAL analyzed expression as text so hot plan
-# builders (ES|QL ST_* scalars, the grid bucket aggs) parse it in one
-# call.  Twin discipline: any change to a builder must change its twin
-# identically — pinned by tests/test_geo_grid.py's twin-equality sweep
-# (fixture points incl. NULLs, poles, antimeridian edges).
+# ---- grid cell renderers (geohash_grid / geotile_grid / hex_grid bucket
+# keys and the ES|QL ST_GEOHASH / ST_GEOTILE / ST_GEOHEX scalars): each
+# renders its key as Spark-SQL text over lat/lon SQL expressions, so a
+# plan builder parses it in one ``F.expr`` call — a Column build costs
+# ~100-600 py4j round trips (geohash's bit loop alone is 5·precision
+# nodes).  tests/test_geo_grid.py and tests/test_agg_tail.py pin golden
+# keys (NULLs, poles, antimeridian edges); the DuckDB oracles in
+# __spark_entry__.py replay the same arithmetic.
 
 def _fd(v: float) -> str:
     """Python float → SQL DOUBLE literal (repr round-trips IEEE)."""
@@ -3314,7 +3182,14 @@ def _bq_field(name: str) -> str:
 
 
 def geohash_cell_sql(lat: str, lon: str, precision: int) -> str:
-    """String twin of :func:`geohash_cell` (lat/lon are SQL exprs)."""
+    """Base-32 geohash of a point at ``precision`` chars (1..12) — pure
+    codegen bit math: quantize lon/lat to ceil/floor(5p/2) bits (indices
+    clamped into range so the +180/+90 edges land in the last cell),
+    interleave lon-first, then map each 5-bit group through the base-32
+    alphabet.  NULL coordinates yield a NULL key through an explicit
+    gate: greatest()/least() SKIP a NULL operand, so the clamp alone
+    would silently turn a missing coordinate into index 0 (cell
+    "000…") instead of propagating NULL."""
     if not 1 <= precision <= 12:
         raise ValueError(f"geohash precision must be 1..12, got {precision}")
     nbits = 5 * precision
@@ -3345,7 +3220,21 @@ def geohash_cell_sql(lat: str, lon: str, precision: int) -> str:
 
 
 def geotile_cell_sql(lat: str, lon: str, zoom: int) -> str:
-    """String twin of :func:`geotile_cell`."""
+    """Slippy-map ``z/x/y`` tile key (OSM Web-Mercator, the ES
+    geotile_grid key format): x from plain longitude, y from the
+    Mercator projection, both clamped into [0, 2^z - 1] (poleward points
+    land in the edge tiles, like ES).
+
+    Latitude clamps into Web-Mercator bounds FIRST (ES GeoTileUtils'
+    MAX/MIN_LAT = ±85.05112878): at lat=-90 exactly, tan+sec underflows
+    to 0.0 in doubles, ln(0) yields NULL, and the greatest(NULL, 0)
+    clamp would silently map the south pole to the NORTH edge tile
+    (y=0).  Clamping sends it to the correct edge tile (y = 2^z - 1),
+    like ES (ADVICE r10).  NULL coordinates yield a NULL key through
+    the same explicit gate as :func:`geohash_cell_sql` (the clamp's
+    greatest() skips NULL and would place a missing coordinate in an
+    edge tile); concat propagates NULL where concat_ws would silently
+    skip the NULL part and emit a malformed key."""
     import math as _math
 
     if not 0 <= zoom <= 29:
@@ -3365,8 +3254,26 @@ def geotile_cell_sql(lat: str, lon: str, zoom: int) -> str:
 
 
 def hex_cell_sql(lat: str, lon: str, precision: int) -> str:
-    """String twin of :func:`hex_cell` (the let-binding renders as the
-    same array-of-struct transform shape as analysis.let_cols)."""
+    """``z/q/r`` axial hexagon key — the engine's honest hex-binning
+    EXTENSION behind the ``hex_grid`` bucket agg.  This is **NOT H3**
+    (ES ``geohex_grid`` rejects loudly, see ``compile_aggs``): pointy-top
+    hexagons tile the plain equirectangular lon/lat plane with
+    circumradius ``R = 45 / 2^precision`` degrees; a point maps to
+    fractional axial coordinates (the classic pointy-top basis
+    ``q = (√3/3·x − 1/3·y)/R``, ``r = (2/3·y)/R``) and snaps to its cell
+    by cube rounding (round each of q, −q−r, r; re-derive the coordinate
+    whose rounding moved farthest, so q + r + s == 0 holds).  Near the
+    poles / antimeridian the cells are equirectangular-distorted,
+    exactly like the plate-carrée plane they tile — documented, not
+    hidden.  All codegen arithmetic (no UDF, no shuffle beyond the agg's
+    own); deterministic and expressible in ANSI SQL, so DuckDB replays
+    the same keys.  NULL coordinates yield a NULL key.
+
+    q/r are LET-BOUND (one array-of-struct transform, the shape of
+    analysis.let_cols; each reference is a struct-field read): the
+    cube-round tree references them ~20×, and unbound that re-expansion
+    measured ×4.3 the geotile floor at 1M rows (tools/probe_round13b.py)
+    — bound it is within noise of it."""
     if not 0 <= precision <= 15:
         raise ValueError(f"hex_grid precision must be 0..15, got {precision}")
     size = 45.0 / (2.0 ** precision)
@@ -3417,9 +3324,8 @@ def _bucket_key_col(kind: str, bspec: dict) -> Column:
             raise ValueError(
                 f"ip_prefix prefix_length out of range: {plen}")
         host = 32 - plen
-        # rendered via the functions/ip string twins and parsed once
-        # (round 16, guide §7.3) — same analyzed expression as the old
-        # Column build, pinned by tests/test_ip.py's twin equality
+        # rendered via the functions/ip SQL renderers and parsed once
+        # (round 16, guide §7.3)
         net = _ip.ip_to_long_spark(_bq_field(field))
         if host:
             net = f"shiftleft(shiftrightunsigned({net}, {host}), {host})"
@@ -5040,7 +4946,7 @@ def _compile_cond_bucket(df: DataFrame, spec: dict, id_field: str) -> DataFrame:
         # uint32 bucket bounds (VERDICT r10 #5): from inclusive / to
         # EXCLUSIVE like ES's ip_range; a `mask` entry is the inclusive
         # CIDR block.  Same one-ungrouped-aggregate shape as `range`.
-        ipl = _ip.ip_to_long(F.col(bspec["field"]))
+        ipl = F.expr(_ip.ip_to_long_spark(_bq_field(bspec["field"])))
         for r in bspec["ranges"]:
             if "mask" in r:
                 lo, hi = _ip.cidr_bounds(r["mask"])

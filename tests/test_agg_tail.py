@@ -9,7 +9,7 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from hive2es_offline_spark.plans.query_dsl import compile_aggs, hex_cell
+from hive2es_offline_spark.plans.query_dsl import compile_aggs, hex_cell_sql
 
 
 # ---------------------------------------------------------------- helpers
@@ -262,7 +262,7 @@ class TestHexGrid:
             ],
             "id long, lat double, lon double")
         rows = {r["id"]: r["h"] for r in pts.select(
-            "id", hex_cell(F.col("lat"), F.col("lon"), 0).alias("h")
+            "id", F.expr(hex_cell_sql("lat", "lon", 0)).alias("h")
         ).collect()}
         assert rows[1] == "0/0/0"
         assert rows[2] == "0/1/0"
@@ -282,7 +282,7 @@ class TestHexGrid:
 
     def test_precision_domain_rejects(self, spark):
         with pytest.raises(ValueError, match="precision"):
-            hex_cell(F.lit(0.0), F.lit(0.0), 16)
+            hex_cell_sql("0.0D", "0.0D", 16)
 
     def test_geohex_grid_rejects_loudly(self, spark):
         pts = spark.createDataFrame([(1,)], "id long")

@@ -1502,13 +1502,11 @@ class TestSpatial:
         assert "pythonUDF" not in plan  # pure codegen trig/ray-cast
 
     def test_grid_functions_match_agg_builders(self, spark):
-        """ST_GEOHASH/ST_GEOTILE/ST_GEOHEX compile the SAME cell
-        builders as the grid aggs — keys must be identical."""
-        from hive2es_offline_spark.plans.query_dsl import (
-            geohash_cell,
-            geotile_cell,
-            hex_cell,
-        )
+        """ST_GEOHASH/ST_GEOTILE/ST_GEOHEX key rows the same way as the
+        geohash_grid / geotile_grid / hex_grid bucket aggs."""
+        from collections import Counter
+
+        from hive2es_offline_spark.plans.query_dsl import compile_aggs
 
         pts = self._pts(spark)
         rows = esql({"t": pts}, '''
@@ -1516,13 +1514,13 @@ class TestSpatial:
                           hx = ST_GEOHEX(loc, 2)
             | KEEP id, gh, gt, hx | SORT id ASC
         ''').collect()
-        want = pts.select(
-            "id",
-            geohash_cell(F.col("loc.lat"), F.col("loc.lon"), 2).alias("gh"),
-            geotile_cell(F.col("loc.lat"), F.col("loc.lon"), 4).alias("gt"),
-            hex_cell(F.col("loc.lat"), F.col("loc.lon"), 2).alias("hx"),
-        ).orderBy("id").collect()
-        assert [r.asDict() for r in rows] == [r.asDict() for r in want]
+        for col, agg, prec in (("gh", "geohash_grid", 2),
+                               ("gt", "geotile_grid", 4),
+                               ("hx", "hex_grid", 2)):
+            buckets = compile_aggs(pts, {"g": {agg: {
+                "field": "loc", "precision": prec}}}).collect()
+            assert Counter(r[col] for r in rows) == {
+                b["key"]: b["doc_count"] for b in buckets}
         # sane key shapes
         assert rows[0]["gt"].startswith("4/")
         assert len(rows[0]["gh"]) == 2
@@ -2299,3 +2297,64 @@ class TestTimeSeries:
             run("TS metrics | LIMIT 1",
                 ts_specs={"metrics": {"dimensions": ["host"],
                                       "timestamp": "ts", "x": 1}})
+
+
+class TestBridgeNesting:
+    """Full-text, geo-relation, KNN and CATEGORIZE calls compile through
+    other modules' Column builders ("bridges"); nested under another
+    operator they must still resolve in every stage, and no hidden
+    helper column may leak into the result frame."""
+
+    POLY = "POLYGON((-1 -1, 11 -1, 11 11, -1 11, -1 -1))"
+
+    @pytest.fixture(scope="class")
+    def frame(self, spark):
+        return spark.createDataFrame(
+            [(1, 0.0, 0.0, "Connected to 10.1.0.1", "quick brown fox",
+              [1.0, 0.0]),
+             (2, 10.0, 10.0, "Connected to 10.1.0.2", "lazy dog",
+              [0.0, 1.0]),
+             (3, 50.0, 50.0, "Connection error at 10.1.0.3", "quick silver",
+              [1.0, 1.0]),
+             (4, -20.0, 30.0, "Connection error at 10.1.0.9", "nothing here",
+              [2.0, 0.1]),
+             (5, 1.0, 1.0, "12345", "quick", [0.5, 0.5])],
+            "id long, lat double, lon double, msg string, txt string, "
+            "emb array<double>").select(
+            "id", F.struct("lat", "lon").alias("loc"), "msg", "txt", "emb")
+
+    DIST = [(1, 0.0), (2, 1568522.7), (3, 7293897.1), (4, 3950911.0),
+            (5, 157249.6)]
+
+    @pytest.mark.parametrize("query, want", [
+        ('FROM t | EVAL d = ROUND(ST_DISTANCE(loc, '
+         'TO_GEOPOINT("POINT(0 0)")), 1) | KEEP id, d | SORT id ASC',
+         DIST),
+        (f'FROM t | EVAL w = CASE(ST_WITHIN(loc, TO_GEOSHAPE("{POLY}")), '
+         '1, 0) | KEEP id, w | SORT id ASC',
+         [(1, 1), (2, 1), (3, 0), (4, 0), (5, 1)]),
+        ('FROM t | STATS a = AVG(ST_DISTANCE(loc, TO_GEOPOINT("POINT(0 0)")))'
+         ' BY c = CATEGORIZE(msg) | SORT c ASC',
+         [("connected to", 784261.358147),
+          ("connection error at", 5622404.098156),
+          (None, 157249.597769)]),
+        ('FROM t | SORT ST_DISTANCE(loc, TO_GEOPOINT("POINT(10 10)")) ASC, '
+         'id ASC | KEEP id',
+         [(2,), (5,), (1,), (4,), (3,)]),
+        ('FROM t | WHERE NOT MATCH(txt, "quick") OR id > 4 | KEEP id '
+         '| SORT id ASC',
+         [(2,), (4,), (5,)]),
+        ('FROM t METADATA _score | WHERE KNN(emb, [1.0, 0.0], 3) '
+         'AND id <= 3 | KEEP id, _score | SORT _score DESC, id ASC',
+         [(1, 1.0), (3, 0.707107)]),
+        ('FROM t | EVAL p = loc, d = ROUND(ST_DISTANCE(p, '
+         'TO_GEOPOINT("POINT(0 0)")), 1) | KEEP id, d | SORT id ASC',
+         DIST),
+    ], ids=["eval-round-distance", "eval-case-within",
+            "stats-avg-distance-by-categorize", "sort-distance",
+            "where-not-match-or", "where-knn-and-score",
+            "eval-earlier-assignment"])
+    def test_nested_bridge_rows(self, frame, query, want):
+        df = esql({"t": frame}, query)
+        assert not any("\x00" in c for c in df.columns)
+        assert [tuple(r) for r in df.collect()] == want

@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hive2es_offline_spark.plans.query_dsl import (
-    compile_aggs, geohash_cell, geotile_cell,
+    compile_aggs, geohash_cell_sql, geotile_cell_sql,
 )
 
 
@@ -27,7 +27,7 @@ def pts(spark):
 
 def test_geohash_golden_vectors(pts):
     rows = {r["id"]: r["gh"] for r in pts.select(
-        "id", geohash_cell(F.col("lat"), F.col("lon"), 11).alias("gh")
+        "id", F.expr(geohash_cell_sql("lat", "lon", 11)).alias("gh")
     ).collect()}
     assert rows[1] == "u4pruydqqvj"
     assert rows[4] == "6gkzwgjzn82"
@@ -38,7 +38,7 @@ def test_geohash_golden_vectors(pts):
 
 def test_geotile_golden_vectors(pts):
     rows = {r["id"]: r["gt"] for r in pts.select(
-        "id", geotile_cell(F.col("lat"), F.col("lon"), 8).alias("gt")
+        "id", F.expr(geotile_cell_sql("lat", "lon", 8)).alias("gt")
     ).collect()}
     assert rows[2] == "8/131/84"
     # poleward latitudes clamp into Web-Mercator bounds (±85.05112878,

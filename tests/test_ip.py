@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from hive2es_offline_spark.functions.ip import (
     cidr_bounds,
     ip_literal_value,
-    ip_to_long,
+    ip_to_long_spark,
     ip_to_long_sql,
     is_cidr_literal,
     is_ip_literal,
@@ -55,7 +55,7 @@ def ids(df, q):
 
 def test_ip_to_long_column(logs):
     vals = {r["id"]: r["v"] for r in logs.select(
-        "id", ip_to_long(F.col("ip")).alias("v")).collect()}
+        "id", F.expr(ip_to_long_spark("ip")).alias("v")).collect()}
     assert vals[1] == ip_literal_value("10.0.0.5")
     assert vals[7] is None and vals[8] is None
     # a 5-part value must not silently parse its first 4 octets
@@ -72,7 +72,7 @@ def test_ip_to_long_sql_twin(logs):
     duck = dict(con.sql(
         f"SELECT id, {ip_to_long_sql('ip')} FROM t").fetchall())
     spark_vals = {r["id"]: r["v"] for r in logs.select(
-        "id", ip_to_long(F.col("ip")).alias("v")).collect()}
+        "id", F.expr(ip_to_long_spark("ip")).alias("v")).collect()}
     assert duck == spark_vals
 
 
@@ -85,6 +85,23 @@ def test_term_cidr_and_terms_mixed(logs):
     # terms: blocks OR plain values
     assert ids(logs, {"terms": {"ip": [
         "192.168.0.0/16", "9.255.255.255"]}}) == [3, 4, 5]
+
+
+def test_ip_semantics_inside_nested_scope(spark):
+    # a nested clause resolves its fields onto the exists() lambda
+    # element, which SQL text cannot name — the ip parse still applies
+    df = spark.createDataFrame(
+        [(1, [("10.0.0.5",), ("192.168.1.1",)]), (2, [("9.255.255.255",)]),
+         (3, [("not an ip",)]), (4, None)],
+        "id long, hits array<struct<ip:string>>")
+
+    def nested(q):
+        return ids(df, {"nested": {"path": "hits", "query": q}})
+
+    assert nested({"term": {"hits.ip": "10.0.0.0/8"}}) == [1]
+    assert nested({"terms": {"hits.ip": ["192.168.0.0/16", "x"]}}) == [1]
+    assert nested({"range": {"hits.ip": {
+        "gte": "9.0.0.0", "lt": "10.0.0.0", "ip": True}}}) == [2]
 
 
 def test_range_ip_is_numeric_not_lexicographic(logs):

@@ -11,7 +11,7 @@ Probes:
      at 1M points vs the DSL geo_polygon + geo_distance bool (same
      relation/trig machinery — ~1.0x)
   3. ES|QL TO_IP guarded parse at 1M rows: the malformed-raise guard
-     (rlike + forall) vs the bare ip_to_long parse, and the 4x
+     (rlike + forall) vs the bare ip_to_long_spark parse, and the 4x
      evaluation shape of the benched golden vs an EVAL-once pipeline
   4. text_similarity_reranker at 1M docs: the rerank adds a broadcast
      semi-join + codegen sigmoid over a 100-row window on top of its
@@ -104,7 +104,7 @@ def main():
           f"geo bool {dsl_sp:.2f}s  ratio {esql_sp / dsl_sp:.2f}x")
 
     # 3. TO_IP guard cost and evaluation-count shape
-    from hive2es_offline_spark.functions.ip import ip_to_long
+    from hive2es_offline_spark.functions.ip import ip_to_long_spark
 
     ips = (spark.range(n).select(
         F.col("id").alias("doc_id"),
@@ -114,7 +114,7 @@ def main():
                     ((F.col("id") * 13) % 256).cast("string"),
                     (F.col("id") % 256).cast("string")).alias("ip"))
         .localCheckpoint())
-    bare = t(lambda: ips.select(ip_to_long(F.col("ip")).alias("v"))
+    bare = t(lambda: ips.select(F.expr(ip_to_long_spark("ip")).alias("v"))
              .agg(F.sum("v")).collect())
     guarded = t(lambda: esql({"l": ips}, '''
         FROM l | EVAL v = TO_IP(ip) | STATS s = SUM(v)
