@@ -19,7 +19,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .util import fan_out
+from .util import fan_out, sql_bind
 from .util import sql_ident as _bq
 
 # ---------------------------------------------------------------------------
@@ -70,35 +70,25 @@ def dedup_exact(
 # ---------------------------------------------------------------------------
 
 
-def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
-    """k-token shingles from an ALREADY-MATERIALIZED token array column.
-
-    Always shingle from a materialized array: passing ``split(text)`` inline
-    makes Catalyst re-inline the split into every ``element_at`` of every
-    shingle lambda — O(tokens^2) work per document (observed in the physical
-    plan before this split)."""
-    n = F.size(toks)
-    return F.when(n < k, F.array(F.concat_ws(" ", toks))).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), n - k),
-            lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(k)]),
-        )
-    )
-
-
 def shingles(text: Column | str, k: int = 3) -> Column:
-    """k-token shingles of a whitespace-tokenized document (array<string>).
-    Prefer ``shingles_from_tokens`` over a materialized token column inside
-    larger plans (see its docstring)."""
+    """k-token shingles of a whitespace-tokenized document (array<string>),
+    rendered by :func:`_shingle_sql` over the ``split`` result bound as a
+    SQL lambda argument (``sql_bind``)."""
     c = F.col(text) if isinstance(text, str) else text
-    return shingles_from_tokens(F.split(c, " "), k)
+    return sql_bind(F.split(c, " "), lambda toks: _shingle_sql(toks, k))
 
 
 def _shingle_sql(toks_sql: str, k: int) -> str:
-    """SQL-string twin of :func:`shingles_from_tokens` — byte-identical
-    semantics, built in ONE parser call instead of ~20 py4j round trips
-    (r15: each JVM call costs ~0.5 ms on the driver, so hot plan builders
-    are assembled as expression strings; guide §7.3 — driver latency)."""
+    """k-token shingles of the token array ``toks_sql`` as Spark-SQL text,
+    built in ONE parser call instead of ~20 py4j round trips (r15: each
+    JVM call costs ~0.5 ms on the driver, so hot plan builders are
+    assembled as expression strings; guide §7.3 — driver latency).
+
+    ``toks_sql`` must name an ALREADY-MATERIALIZED token array (a column
+    or a bound lambda variable): passing ``split(text)`` inline makes
+    Catalyst re-inline the split into every ``element_at`` of every
+    shingle lambda — O(tokens^2) work per document (observed in the
+    physical plan)."""
     parts = ", ".join(f"element_at({toks_sql}, i + {j + 1})" for j in range(k))
     return (
         f"CASE WHEN size({toks_sql}) < {k} "

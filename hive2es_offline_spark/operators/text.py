@@ -259,12 +259,12 @@ def contamination_check(
     hashes BROADCAST and the corpus is scanned once with a broadcast
     semi-ish join — no corpus shuffle for the probe; the per-doc hit count
     aggregates on the already-exploded corpus shingles."""
-    from .dedup import shingles_from_tokens
+    from .dedup import _shingle_sql
 
     def doc_shingles(df: DataFrame) -> DataFrame:
         return (
             df.select(F.col(id_col).alias("_did"), F.split(F.col(text_col), " ").alias("_t"))
-            .select("_did", F.explode(shingles_from_tokens(F.col("_t"), shingle_k)).alias("_sh"))
+            .selectExpr("_did", f"explode({_shingle_sql('_t', shingle_k)}) AS _sh")
         )
 
     bench_sh = doc_shingles(benchmark).select("_sh").distinct()

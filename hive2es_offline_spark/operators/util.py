@@ -2,9 +2,9 @@
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -54,3 +54,21 @@ def sql_string(s: str) -> str:
     """Spark-SQL single-quoted string literal (escapedStringLiterals=false
     default: backslash escapes are processed, so double them)."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_bind(col: Column | str, render: Callable[[str], str]) -> Column:
+    """``render(ref)`` — Spark-SQL text over the reference ``ref`` —
+    applied to ``col``, parsed in one ``F.expr`` call.
+
+    A column NAME is quoted into the text with ``F.col``'s dotted-path
+    semantics (``a.b`` = nested field).  A Column binds as the argument
+    of a SQL lambda, ``element_at(transform(array(col), _a -> render('_a')), 1)``:
+    a lambda variable of an enclosing Column-API lambda (a nested
+    resolver's element) has no name SQL text could reference, and the
+    binding still works for it.  ``col`` evaluates once per row and
+    ``_a`` is a leaf, so a ``render`` that reads its argument several
+    times re-reads a value instead of re-evaluating ``col``."""
+    if isinstance(col, str):
+        return F.expr(render(".".join(sql_ident(s) for s in col.split("."))))
+    return F.element_at(F.call_function(
+        "transform", F.array(col), F.expr(f"_a -> {render('_a')}")), 1)

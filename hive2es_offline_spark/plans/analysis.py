@@ -11,9 +11,11 @@ lowercase + whitespace split everywhere, so ``match: "world"`` missed
 ``"world!"``; this module makes the chain punctuation-aware and keeps one
 definition of "token" across all three execution contexts:
 
-- **Spark column side** (``analyze_col``): ``regexp_extract_all`` with a
-  UAX#29-flavored token pattern — plain codegen, no UDF, so match/BM25
-  tokenization stays inside WholeStageCodegen at any scale.
+- **Spark side** (``analyze_sql``, applied by ``analyze_col``): the
+  chain rendered as Spark-SQL text and parsed once —
+  ``regexp_extract_all`` with a UAX#29-flavored token pattern, plain
+  codegen, no UDF, so match/BM25 tokenization stays inside
+  WholeStageCodegen at any scale.
 - **Driver/Python side** (``analyze_text``): the same pattern via ``re``
   for query strings, highlight term lists, and suggester inputs.
 - **Oracle side** (``DUCKDB_TOKEN_RE`` / ``duckdb_tokens``): the same
@@ -38,10 +40,12 @@ The built-in ``english`` analyzer enables possessive + Lucene's 33-word
 English stop set + the light stemmer; ``register_analyzer`` declares
 custom named chains (the ES ``settings.analysis.analyzer`` surface), e.g.
 a synonym analyzer.  Every filter stays expressible in ALL THREE contexts
-— Spark stays pure codegen (``transform``/``filter`` + regex, no UDF), and
-the DuckDB fragment is machine-generated from the same rule table, so the
-one-grammar rule extends to the whole chain and is property-tested
-three-way.
+— the Spark-SQL renderer stays pure codegen (``transform``/``filter`` +
+regex, no UDF), and its stemmer steps and the DuckDB oracle's come from
+one renderer over the same rule tables, so the one-grammar rule extends
+to the whole chain.  ``tests/test_analysis.py::TestSqlChainTwin`` pins
+the Spark renderer, the Python chain and the DuckDB oracle against each
+other for every registered analyzer.
 
 The stemmer is a LIGHT ENGLISH STEMMER (Porter-class): Porter's step 1a
 (plurals), 1b (eed/ed/ing with the longest-suffix-blocks rule and the
@@ -69,11 +73,12 @@ import contextvars
 import re
 from dataclasses import dataclass, field
 from contextlib import contextmanager
+from functools import partial
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..operators.util import sql_ident as _bq_ident
+from ..operators.util import sql_bind
 from ..operators.util import sql_string as _sq
 
 __all__ = [
@@ -113,7 +118,7 @@ _CJK_RANGES = ("぀-ヿ" "㐀-䶿" "一-鿿"
 #: renders the split's word-minus-CJK with class intersection, Python
 #: with \w double negation, RE2 with a \P{L}-negated class +
 #: digit/underscore alternation — three dialects, one semantics
-#: (property-tested three-way).
+#: (pinned three-way by tests/test_analysis.py::TestSqlChainTwin).
 _JAVA_CJK_SPLIT = (f"[{_CJK_RANGES}]+"
                    f"|[\\p{{L}}\\p{{N}}_&&[^{_CJK_RANGES}]]+")
 _PY_CJK_SPLIT = re.compile(
@@ -550,7 +555,7 @@ PORTUGUESE_STOPWORDS = (
 
 def fold_text(t: str) -> str:
     """Python rendering of the asciifolding filter (driver/oracle twin of
-    the column rendering; property-tested three-way)."""
+    the Spark-SQL and DuckDB renderings)."""
     t = t.translate(_PY_FOLD)
     for a, b in _FOLD_MULTI:
         t = t.replace(a, b)
@@ -559,8 +564,8 @@ def fold_text(t: str) -> str:
 
 def stem_text(w: str, lang: str = "english") -> str:
     """Python rendering of the light stemmers (driver-side twin of the
-    column/SQL renderings below; the three are property-tested for
-    parity in ``tests/test_analysis.py``)."""
+    Spark-SQL/DuckDB rendering ``_stem_steps`` below; pinned against it
+    in ``tests/test_analysis.py``)."""
     if lang == "french":
         for cond, suf, rep in _FR_STEP_X:
             if re.match(cond, w):
@@ -638,117 +643,39 @@ def stem_text(w: str, lang: str = "english") -> str:
     return w
 
 
-def _col_drop1(c: Column) -> Column:
-    return F.regexp_replace(c, ".{1}$", "")
+def _stem_steps(lang: str, match, q) -> list[str]:
+    """The stemmer for ``lang`` as SQL CASE bodies over the lambda
+    variable ``t``, one per step, in order — rendered from the rule
+    tables above for both engines, so the DuckDB oracle cannot drift
+    from the Spark chain by transcription.  The dialects differ only in
+    the regex test, ``match(expr, pattern_literal)`` (Spark
+    ``expr RLIKE p``, DuckDB ``regexp_matches(expr, p)``), and the
+    string-literal quoter ``q``; both accept ``||`` and
+    ``regexp_replace``.
 
-
-def _col_step_table(rows):
-    """One first-match-wins replacement table as a lambda for
-    ``F.transform`` — the lambda variable is a LEAF, so each step's
-    expression tree stays constant-size.  (Chaining all steps inside one
-    lambda re-embeds the previous step's tree at every reference and the
-    node count multiplies into the tens of thousands.)"""
-    def step(t: Column) -> Column:
-        out = None
-        for cond, suf, rep in rows:
-            branch = F.regexp_replace(t, suf, rep)
-            out = (F.when(t.rlike(cond), branch) if out is None
-                   else out.when(t.rlike(cond), branch))
-        return out.otherwise(t)
-    return step
-
-
-def _col_step_1b(t: Column) -> Column:
-    def cleanup(c: Column) -> Column:
-        return (
-            F.when(c.rlike(_P_ATBLIZ), F.concat(c, F.lit("e")))
-            .when(c.rlike(_P_DOUBLE), _col_drop1(c))
-            .otherwise(c)
-        )
-
-    return (
-        F.when(t.rlike(_P_EED_ANY),
-               F.when(t.rlike(_P_EED_OK), _col_drop1(t)).otherwise(t))
-        .when(t.rlike(_P_ED), cleanup(F.regexp_replace(t, "ed$", "")))
-        .when(t.rlike(_P_ING), cleanup(F.regexp_replace(t, "ing$", "")))
-        .otherwise(t)
-    )
-
-
-def _drop_rule(cond: str):
-    """Closure factory (NOT a default-arg lambda — a two-param lambda
-    would look binary to F.transform and receive the element INDEX)."""
-    def step(t: Column) -> Column:
-        return F.when(t.rlike(cond), _col_drop1(t)).otherwise(t)
-    return step
-
-
-def _stem_steps_list(lang: str = "english"):
-    """The stemmer steps as per-token Column functions, in order."""
-    if lang == "french":
-        return ([_col_step_table(_FR_STEP_X)]
-                + [_drop_rule(c) for c in _FR_DROPS]
-                + [_drop_rule(_FR_DOUBLE)])
-    if lang == "german":
-        return [_col_step_table(_DE_STEP_1), _col_step_table(_DE_STEP_2)]
-    if lang == "spanish":
-        return [_col_step_table(_ES_STEP)]
-    if lang == "italian":
-        return [_col_step_table(_IT_STEP)]
-    if lang == "portuguese":
-        return [_col_step_table(_PT_STEP_1), _col_step_table(_PT_STEP_2)]
-    if lang == "russian":
-        return [_col_step_table(_RU_STEP_1), _col_step_table(_RU_STEP_2)]
-    if lang == "dutch":
-        return [_col_step_table(_NL_STEP_1), _col_step_table(_NL_STEP_2),
-                _col_step_table(_NL_STEP_3)]
-    return [
-        _col_step_table(_STEP_1A),
-        _col_step_1b,
-        _col_step_table(_STEP_2),
-        lambda t: F.when(
-            t.rlike(_P_Y), F.regexp_replace(t, "y$", "i")).otherwise(t),
-        lambda t: F.when(t.rlike(_P_E), _col_drop1(t)).otherwise(t),
-        lambda t: F.when(t.rlike(_P_LL), _col_drop1(t)).otherwise(t),
-    ]
-
-
-def _stem_col_steps(toks: Column, lang: str = "english") -> Column:
-    """Spark rendering of the stemmer over a token ARRAY — one chained
-    ``transform`` pass per step, all plain expressions, no UDF."""
-    for step in _stem_steps_list(lang):
-        toks = F.transform(toks, step)
-    return toks
-
-
-def _duckdb_stem_steps(lang: str = "english") -> list[str]:
-    """RE2/SQL rendering — per-step CASE bodies over the lambda variable
-    ``t``, machine-generated from the same rule table (so the oracle
-    cannot drift from the engine by transcription).  The caller wraps
-    each body in its own ``list_transform`` — one pass per step, exactly
-    mirroring the Spark rendering (embedding all steps in one expression
-    would multiply the tree the same way it does in Catalyst)."""
-    def q(pat):
-        return "'" + pat.replace("'", "''") + "'"
-
-    def drop1(expr):
+    The caller wraps each body in its OWN transform over the token
+    array, so the lambda variable stays a leaf and each step's
+    expression tree stays constant-size.  Chaining all steps inside one
+    lambda re-embeds the previous step's tree at every reference and
+    the node count multiplies into the tens of thousands."""
+    def drop1(expr: str) -> str:
         return f"regexp_replace({expr}, '.{{1}}$', '')"
 
-    def step_case(rows):
+    def step_case(rows) -> str:
         whens = "".join(
-            f" WHEN regexp_matches(t, {q(cond)}) "
-            f"THEN regexp_replace(t, {q(suf)}, '{rep}')"
+            f" WHEN {match('t', q(cond))} "
+            f"THEN regexp_replace(t, {q(suf)}, {q(rep)})"
             for cond, suf, rep in rows)
         return f"(CASE{whens} ELSE t END)"
 
-    def cleanup(expr):
-        return (f"(CASE WHEN regexp_matches({expr}, {q(_P_ATBLIZ)}) "
+    def cleanup(expr: str) -> str:
+        return (f"(CASE WHEN {match(expr, q(_P_ATBLIZ))} "
                 f"THEN {expr} || 'e' "
-                f"WHEN regexp_matches({expr}, {q(_P_DOUBLE)}) "
+                f"WHEN {match(expr, q(_P_DOUBLE))} "
                 f"THEN {drop1(expr)} ELSE {expr} END)")
 
-    def drop_case(cond):
-        return (f"(CASE WHEN regexp_matches(t, {q(cond)}) "
+    def drop_case(cond: str) -> str:
+        return (f"(CASE WHEN {match('t', q(cond))} "
                 f"THEN {drop1('t')} ELSE t END)")
 
     if lang == "french":
@@ -772,23 +699,34 @@ def _duckdb_stem_steps(lang: str = "english") -> list[str]:
     ed = "regexp_replace(t, 'ed$', '')"
     ing = "regexp_replace(t, 'ing$', '')"
     step_1b = (
-        f"(CASE WHEN regexp_matches(t, {q(_P_EED_ANY)}) THEN "
-        f"(CASE WHEN regexp_matches(t, {q(_P_EED_OK)}) "
+        f"(CASE WHEN {match('t', q(_P_EED_ANY))} THEN "
+        f"(CASE WHEN {match('t', q(_P_EED_OK))} "
         f"THEN {drop1('t')} ELSE t END) "
-        f"WHEN regexp_matches(t, {q(_P_ED)}) THEN {cleanup(ed)} "
-        f"WHEN regexp_matches(t, {q(_P_ING)}) THEN {cleanup(ing)} "
+        f"WHEN {match('t', q(_P_ED))} THEN {cleanup(ed)} "
+        f"WHEN {match('t', q(_P_ING))} THEN {cleanup(ing)} "
         f"ELSE t END)")
     return [
         step_case(_STEP_1A),
         step_1b,
         step_case(_STEP_2),
-        (f"(CASE WHEN regexp_matches(t, {q(_P_Y)}) "
+        (f"(CASE WHEN {match('t', q(_P_Y))} "
          f"THEN regexp_replace(t, 'y$', 'i') ELSE t END)"),
-        (f"(CASE WHEN regexp_matches(t, {q(_P_E)}) "
-         f"THEN {drop1('t')} ELSE t END)"),
-        (f"(CASE WHEN regexp_matches(t, {q(_P_LL)}) "
-         f"THEN {drop1('t')} ELSE t END)"),
+        drop_case(_P_E),
+        drop_case(_P_LL),
     ]
+
+
+def _spark_match(expr: str, pat: str) -> str:
+    return f"{expr} RLIKE {pat}"
+
+
+def _duck_match(expr: str, pat: str) -> str:
+    return f"regexp_matches({expr}, {pat})"
+
+
+def _duck_q(s: str) -> str:
+    """DuckDB string literal (no backslash escapes; quotes double)."""
+    return "'" + s.replace("'", "''") + "'"
 
 
 # ---------------------------------------------------------------------------
@@ -804,7 +742,7 @@ class _AnalyzerSpec:
     asciifolding: bool = False                 # fold accents to ASCII
     cjk_bigrams: bool = False        # CJK runs → overlapping 2-grams
     stopwords: tuple[str, ...] = ()
-    stemmer: str | None = None       # english | french | german | spanish
+    stemmer: str | None = None       # a register_analyzer stemmer name
     #: normalized token → canonical token, applied LAST (entries are
     #: normalized through the chain's own stop/stem filters at
     #: registration, so surface-form synonym groups keep working when the
@@ -897,7 +835,7 @@ def register_analyzer(
     *,
     tokenizer: str = "standard",
     possessive: bool = False,
-    elision: bool = False,
+    elision: bool | str = False,
     asciifolding: bool = False,
     cjk_bigrams: bool = False,
     stopwords: tuple[str, ...] | list[str] | str = (),
@@ -905,11 +843,14 @@ def register_analyzer(
     synonyms: dict[str, list[str]] | list[list[str]] | None = None,
 ) -> None:
     """Declare a named custom analyzer (the ES
-    ``settings.analysis.analyzer`` surface).  ``stopwords`` accepts a
-    word list or the ES shorthands ``"_english_"`` / ``"_french_"`` /
-    ``"_german_"`` / ``"_spanish_"``; ``stemmer`` accepts a language name
+    ``settings.analysis.analyzer`` surface).  ``elision`` is ``True``
+    for the French article set or a regex string of its own (the
+    italian built-in passes one).  ``stopwords`` accepts a word list or
+    the ES shorthands ``"_english_"`` / ``"_french_"`` / ``"_german_"``
+    / ``"_spanish_"`` / ``"_italian_"`` / ``"_portuguese_"`` /
+    ``"_russian_"`` / ``"_dutch_"``; ``stemmer`` accepts a language name
     (``"english"`` / ``"french"`` / ``"german"`` / ``"spanish"`` /
-    ``"italian"`` / ``"portuguese"``) or
+    ``"italian"`` / ``"portuguese"`` / ``"russian"`` / ``"dutch"``) or
     ``True`` as a legacy alias for english; ``synonyms`` accepts either
     ES-style equivalence groups (``[["car","auto","automobile"], …]`` —
     every member rewrites to the FIRST) or an explicit mapping
@@ -1108,211 +1049,27 @@ def preanalyzed_stream(
     return F.col(name)
 
 
-def _tokenize_col(col: Column, tokenizer: str) -> Column:
-    if tokenizer == "standard":
-        return F.regexp_extract_all(F.lower(col), F.lit(_JAVA_TOKEN), 0)
-    if tokenizer == "cjk":
-        # two-pass (see the pattern comment above): standard grammar,
-        # then split only the tokens that contain a CJK character —
-        # ASCII-dominant corpora price at the standard tokenizer
-        std = F.regexp_extract_all(F.lower(col), F.lit(_JAVA_TOKEN), 0)
-        return F.flatten(F.transform(
-            std,
-            lambda t: F.when(
-                t.rlike(_CJK_ANY),
-                F.regexp_extract_all(t, F.lit(_JAVA_CJK_SPLIT), 0))
-            .otherwise(F.array(t))))
-    return F.filter(F.split(F.lower(col), " +"), lambda t: t != "")
-
-
-def _pre_stem_col(col: Column, spec: _AnalyzerSpec) -> Column:
-    """The chain up to (excluding) the stemmer: tokenize + possessive +
-    stopwords."""
-    return _chain_filters(_tokenize_col(col, spec.tokenizer), spec)
-
-
-def _fold_tok(t: Column) -> Column:
-    """Spark rendering of the asciifolding filter — one translate() plus
-    the digraph replaces, all linear scans, no regex."""
-    t = F.translate(t, _FOLD_FROM, _FOLD_TO)
-    for a, b in _FOLD_MULTI:
-        t = F.replace(t, F.lit(a), F.lit(b))
-    return t
-
-
-def _char_filters(toks: Column, spec: _AnalyzerSpec) -> Column:
-    """The token-TEXT rewriting filters (possessive, elision,
-    asciifolding) that run before the stop filter.
-
-    Hot-path guarded (measured at 1M docs, probe_round11): the
-    possessive/elision regexps only run on tokens containing an
-    apostrophe (contains() is a substring scan, +2 s vs +8.6 s for
-    regexp-always); the fold is translate()+replace(), linear scans
-    cheaper than any regex."""
-    rewrote = False
-    if spec.possessive:
-        toks = F.transform(
-            toks,
-            lambda t: F.when(
-                t.contains("'"), F.regexp_replace(t, _P_POSS, "")
-            ).otherwise(t))
-        rewrote = True
-    if spec.elision:
-        pat = _elision_pat(spec.elision)
-        toks = F.transform(
-            toks,
-            lambda t: F.when(
-                t.contains("'"), F.regexp_replace(t, pat, "")
-            ).otherwise(t))
-        rewrote = True
-    if rewrote:
-        # a whitespace tokenizer can emit a bare "'s" / "l'" token;
-        # stripping it must not leave an empty term occupying a phrase
-        # position (code-review r11)
-        toks = F.filter(toks, lambda t: t != "")
-    if spec.asciifolding:
-        toks = F.transform(toks, _fold_tok)
-    return toks
-
-
-def _chain_filters(toks: Column, spec: _AnalyzerSpec,
-                   *, chars_done: bool = False) -> Column:
-    """Char filters + stopword filter over an already-tokenized array
-    (``chars_done=True`` when the caller already ran ``_char_filters`` —
-    elision is NOT idempotent on contrived doubled-article tokens, so
-    re-running is forbidden, not just wasteful).
-
-    The stop filter uses isin() — Catalyst's OptimizeIn turns the
-    literal In into an InSet hash probe (+0.2 s vs +16 s for a per-token
-    array_contains scan over a literal array at 1M docs)."""
-    if not chars_done:
-        toks = _char_filters(toks, spec)
-    if spec.cjk_bigrams:
-        # each CJK run → overlapping 2-grams (a lone char stays a
-        # unigram, Lucene CJKBigramFilter's unpaired-char behavior);
-        # non-CJK tokens pass through.  The lambda variable is a leaf,
-        # so the per-token re-reads are O(1) — no let-binding needed
-        toks = F.flatten(F.transform(toks, _cjk_bigram_tok))
-    if spec.stopwords:
-        toks = F.filter(toks, lambda t: ~t.isin(*spec.stopwords))
-    return toks
-
-
-def _cjk_bigram_tok(t: Column) -> Column:
-    return (F.when(
-        t.rlike(_CJK_FULL) & (F.length(t) >= 2),
-        F.transform(F.sequence(F.lit(1), F.length(t) - 1),
-                    lambda i: t.substr(i, F.lit(2))))
-        .otherwise(F.array(t)))
-
-
-def _post_stem_col(toks: Column, spec: _AnalyzerSpec) -> Column:
-    """The chain from the stemmer on: stem + synonym rewrite."""
-    if spec.stemmer:
-        toks = _stem_col_steps(toks, spec.stemmer)
-    if spec.synonyms:
-        syn = dict(spec.synonyms)
-
-        def rewrite(t: Column) -> Column:
-            out = t
-            for frm, to in syn.items():
-                out = F.when(t == frm, F.lit(to)).otherwise(out)
-            return out
-
-        toks = F.transform(toks, rewrite)
-    return toks
-
-
 def analyze_col(col: "Column | str", analyzer: str | None = None) -> Column:
-    """Token array for a text column — codegen only (regexp_extract_all /
-    split + transform/filter for the language chain; no UDF).  NULL input
-    stays NULL (callers that aggregate coalesce to the empty array
-    themselves).
+    """Token array for a text column: the chain rendered as Spark-SQL
+    text (``analyze_sql``) and parsed in ONE ``F.expr`` call — codegen
+    expressions only (regexp_extract_all / split + transform/filter for
+    the language chain; no UDF).  NULL input stays NULL (callers that
+    aggregate coalesce to the empty array themselves).
 
-    Pass the column NAME (str) where known: the chain then assembles as
-    ONE parsed SQL expression (``analyze_sql``) instead of hundreds of
-    Column-API py4j round trips — the language chains cost 0.3-1.4 s of
-    pure driver latency per build through the Column API (measured r15;
-    ~0.5 ms per JVM call in this environment), ~10 ms as a parsed string.
-    Both paths produce the same analyzed semantics, pinned by
-    tests/test_analysis.py::test_sql_chain_matches_column_chain."""
-    if isinstance(col, str):
-        # mirror F.col's dotted-path semantics (a.b = nested access)
-        ref = ".".join(_bq_ident(seg) for seg in col.split("."))
-        return F.expr(analyze_sql(ref, analyzer))
-    spec = _spec(analyzer or current_analyzer())
-    return _post_stem_col(_pre_stem_col(col, spec), spec)
+    ``col`` is a column NAME (dotted = nested field, like ``F.col``) or
+    a Column; a Column binds as the argument of a SQL lambda
+    (``operators.util.sql_bind``), which also covers a nested
+    resolver's lambda variable.  Either way the build costs a few dozen
+    py4j calls at most: assembled node by node through the Column API a
+    language chain cost hundreds, 0.3-1.4 s of pure driver latency per
+    build (measured r15; ~0.5 ms per JVM call in this environment)."""
+    return sql_bind(col, lambda ref: analyze_sql(ref, analyzer))
 
 
 # ---------------------------------------------------------------------------
-# SQL-string rendering of the chain (py4j round-trip economy, r15)
+# Spark-SQL rendering of the chain — the engine's one Spark renderer:
+# assembled in pure Python, parsed once (py4j round-trip economy, r15)
 # ---------------------------------------------------------------------------
-
-
-def _spark_stem_steps(lang: str = "english") -> list[str]:
-    """Spark-SQL rendering of the stemmer steps — per-step CASE bodies
-    over the lambda variable ``t``, machine-generated from the SAME rule
-    tables as the Column rendering (``_stem_steps_list``) and the DuckDB
-    oracle rendering (``_duckdb_stem_steps``), so none of the three can
-    drift by transcription."""
-    def drop1(expr: str) -> str:
-        return f"regexp_replace({expr}, '.{{1}}$', '')"
-
-    def step_case(rows) -> str:
-        whens = "".join(
-            f" WHEN t RLIKE {_sq(cond)} "
-            f"THEN regexp_replace(t, {_sq(suf)}, {_sq(rep)})"
-            for cond, suf, rep in rows)
-        return f"(CASE{whens} ELSE t END)"
-
-    def cleanup(expr: str) -> str:
-        return (f"(CASE WHEN {expr} RLIKE {_sq(_P_ATBLIZ)} "
-                f"THEN concat({expr}, 'e') "
-                f"WHEN {expr} RLIKE {_sq(_P_DOUBLE)} "
-                f"THEN {drop1(expr)} ELSE {expr} END)")
-
-    def drop_case(cond: str) -> str:
-        return (f"(CASE WHEN t RLIKE {_sq(cond)} "
-                f"THEN {drop1('t')} ELSE t END)")
-
-    if lang == "french":
-        return ([step_case(_FR_STEP_X)]
-                + [drop_case(c) for c in _FR_DROPS]
-                + [drop_case(_FR_DOUBLE)])
-    if lang == "german":
-        return [step_case(_DE_STEP_1), step_case(_DE_STEP_2)]
-    if lang == "spanish":
-        return [step_case(_ES_STEP)]
-    if lang == "italian":
-        return [step_case(_IT_STEP)]
-    if lang == "portuguese":
-        return [step_case(_PT_STEP_1), step_case(_PT_STEP_2)]
-    if lang == "russian":
-        return [step_case(_RU_STEP_1), step_case(_RU_STEP_2)]
-    if lang == "dutch":
-        return [step_case(_NL_STEP_1), step_case(_NL_STEP_2),
-                step_case(_NL_STEP_3)]
-
-    ed = "regexp_replace(t, 'ed$', '')"
-    ing = "regexp_replace(t, 'ing$', '')"
-    step_1b = (
-        f"(CASE WHEN t RLIKE {_sq(_P_EED_ANY)} THEN "
-        f"(CASE WHEN t RLIKE {_sq(_P_EED_OK)} "
-        f"THEN {drop1('t')} ELSE t END) "
-        f"WHEN t RLIKE {_sq(_P_ED)} THEN {cleanup(ed)} "
-        f"WHEN t RLIKE {_sq(_P_ING)} THEN {cleanup(ing)} "
-        f"ELSE t END)")
-    return [
-        step_case(_STEP_1A),
-        step_1b,
-        step_case(_STEP_2),
-        (f"(CASE WHEN t RLIKE {_sq(_P_Y)} "
-         f"THEN regexp_replace(t, 'y$', 'i') ELSE t END)"),
-        (f"(CASE WHEN t RLIKE {_sq(_P_E)} "
-         f"THEN {drop1('t')} ELSE t END)"),
-        (f"(CASE WHEN t RLIKE {_sq(_P_LL)} "
-         f"THEN {drop1('t')} ELSE t END)"),
-    ]
 
 
 def _tokenize_sql(col_sql: str, tokenizer: str) -> str:
@@ -1320,6 +1077,9 @@ def _tokenize_sql(col_sql: str, tokenizer: str) -> str:
         return (f"regexp_extract_all(lower({col_sql}), "
                 f"{_sq(_JAVA_TOKEN)}, 0)")
     if tokenizer == "cjk":
+        # two-pass (see the pattern comment above): standard grammar,
+        # then split only the tokens that contain a CJK character —
+        # ASCII-dominant corpora price at the standard tokenizer
         return (
             f"flatten(transform("
             f"regexp_extract_all(lower({col_sql}), {_sq(_JAVA_TOKEN)}, 0), "
@@ -1331,6 +1091,8 @@ def _tokenize_sql(col_sql: str, tokenizer: str) -> str:
 
 
 def _fold_tok_sql(expr: str) -> str:
+    """The asciifolding filter — one translate() plus the digraph
+    replaces, all linear scans, no regex."""
     out = f"translate({expr}, {_sq(_FOLD_FROM)}, {_sq(_FOLD_TO)})"
     for a, b in _FOLD_MULTI:
         out = f"replace({out}, {_sq(a)}, {_sq(b)})"
@@ -1338,7 +1100,14 @@ def _fold_tok_sql(expr: str) -> str:
 
 
 def _char_filters_sql(toks: str, spec: _AnalyzerSpec) -> str:
-    """SQL twin of ``_char_filters``."""
+    """The token-TEXT rewriting filters (possessive, elision,
+    asciifolding) that run before the stop filter.
+
+    Hot-path guarded (measured at 1M docs, probe_round11): the
+    possessive/elision regexps only run on tokens containing an
+    apostrophe (contains() is a substring scan, +2 s vs +8.6 s for
+    regexp-always); the fold is translate()+replace(), linear scans
+    cheaper than any regex."""
     rewrote = False
     if spec.possessive:
         toks = (f"transform({toks}, t -> CASE WHEN contains(t, '\\'') "
@@ -1350,6 +1119,9 @@ def _char_filters_sql(toks: str, spec: _AnalyzerSpec) -> str:
                 f"THEN regexp_replace(t, {_sq(pat)}, '') ELSE t END)")
         rewrote = True
     if rewrote:
+        # a whitespace tokenizer can emit a bare "'s" / "l'" token;
+        # stripping it must not leave an empty term occupying a phrase
+        # position (code-review r11)
         toks = f"filter({toks}, t -> t != '')"
     if spec.asciifolding:
         toks = f"transform({toks}, t -> {_fold_tok_sql('t')})"
@@ -1358,10 +1130,22 @@ def _char_filters_sql(toks: str, spec: _AnalyzerSpec) -> str:
 
 def _chain_filters_sql(toks: str, spec: _AnalyzerSpec,
                        *, chars_done: bool = False) -> str:
-    """SQL twin of ``_chain_filters``."""
+    """Char filters + CJK bigrams + stopword filter over an
+    already-tokenized array (``chars_done=True`` when the caller already
+    ran ``_char_filters_sql`` — elision is NOT idempotent on contrived
+    doubled-article tokens, so re-running is forbidden, not just
+    wasteful).
+
+    The stop filter is a literal ``IN`` list: Catalyst's OptimizeIn
+    turns it into an InSet hash probe (+0.2 s vs +16 s for a per-token
+    array_contains scan over a literal array at 1M docs)."""
     if not chars_done:
         toks = _char_filters_sql(toks, spec)
     if spec.cjk_bigrams:
+        # each CJK run → overlapping 2-grams (a lone char stays a
+        # unigram, Lucene CJKBigramFilter's unpaired-char behavior);
+        # non-CJK tokens pass through.  The lambda variable is a leaf,
+        # so the per-token re-reads are O(1) — no let-binding needed
         toks = (
             f"flatten(transform({toks}, t -> "
             f"CASE WHEN (t RLIKE {_sq(_CJK_FULL)}) AND (length(t) >= 2) "
@@ -1374,13 +1158,20 @@ def _chain_filters_sql(toks: str, spec: _AnalyzerSpec,
     return toks
 
 
+def _pre_stem_sql(col_sql: str, spec: _AnalyzerSpec) -> str:
+    """The chain up to (excluding) the stemmer: tokenize + char filters
+    + CJK bigrams + stopwords — the stream phrase positions index."""
+    return _chain_filters_sql(_tokenize_sql(col_sql, spec.tokenizer), spec)
+
+
 def _post_stem_sql(toks: str, spec: _AnalyzerSpec) -> str:
-    """SQL twin of ``_post_stem_col``."""
+    """The chain from the stemmer on: stem + synonym rewrite.  Each
+    stemmer step is its own ``transform`` (see ``_stem_steps``)."""
     if spec.stemmer:
-        for body in _spark_stem_steps(spec.stemmer):
+        for body in _stem_steps(spec.stemmer, _spark_match, _sq):
             toks = f"transform({toks}, t -> {body})"
     if spec.synonyms:
-        # reversed: the Column rendering nests later entries OUTERMOST
+        # reversed: a later entry wins, as in the Python twin's dict()
         whens = "".join(
             f" WHEN t = {_sq(frm)} THEN {_sq(to)}"
             for frm, to in reversed(spec.synonyms))
@@ -1389,26 +1180,34 @@ def _post_stem_sql(toks: str, spec: _AnalyzerSpec) -> str:
 
 
 def analyze_sql(col_sql: str, analyzer: str | None = None) -> str:
-    """SQL-string twin of the Column-API chain (``_pre_stem_col`` +
-    ``_post_stem_col``): same tokenizer, char filters, stop filter,
-    stemmer steps and synonym rewrite, assembled in pure Python and
-    parsed in ONE ``F.expr`` call.  ``col_sql`` must already be a valid
-    SQL reference/expression (quote identifiers with ``_bq_ident``)."""
+    """The whole chain — tokenizer, char filters, stop filter, stemmer
+    steps and synonym rewrite — as Spark-SQL text over ``col_sql``, a
+    valid SQL reference or expression (``analyze_col`` quotes a name or
+    binds a Column)."""
     spec = _spec(analyzer or current_analyzer())
-    return _post_stem_sql(
-        _chain_filters_sql(_tokenize_sql(col_sql, spec.tokenizer), spec),
-        spec)
+    return _post_stem_sql(_pre_stem_sql(col_sql, spec), spec)
+
+
+def _prefix_keep_sql(prefixes) -> str:
+    """``t`` starts with one of ``prefixes`` (the stem-prefix guard)."""
+    return " OR ".join(f"startswith(t, {_sq(p)})" for p in sorted(prefixes))
 
 
 def candidate_tokens_sql(
     col_sql: str, terms, analyzer: str | None = None
 ) -> str:
-    """SQL-string twin of :func:`candidate_tokens_col` — identical
-    branch structure and guard placement, one parser call (see
-    ``analyze_col`` on why: ~0.5 ms/py4j call makes Column-API chain
-    builds cost 0.3-1.4 s of driver latency each)."""
+    """Spark-SQL text of :func:`candidate_tokens_col` over ``col_sql``."""
     spec = _spec(analyzer or current_analyzer())
     if spec.cjk_bigrams and not (spec.stemmer or spec.synonyms):
+        # bigram-chain contains-guard (r14): a chain output token — a
+        # CJK bigram or a pass-through Latin token — can only derive
+        # from a surface token that CONTAINS it as a substring (a
+        # bigram is two ADJACENT characters of its run; Latin tokens
+        # pass through unchanged).  Filtering on cheap contains() FIRST
+        # means the bigram expansion runs over a near-empty array on
+        # non-matching rows; the stop filter still applies after, so
+        # membership semantics equal analyze_col restricted to the
+        # matching tokens.
         toks = _char_filters_sql(
             _tokenize_sql(col_sql, spec.tokenizer), spec)
         terms_l = [str(s) for s in terms]
@@ -1429,11 +1228,17 @@ def candidate_tokens_sql(
     toks = _tokenize_sql(col_sql, spec.tokenizer)
     chars_done = spec.elision or spec.asciifolding
     if chars_done:
+        # elision edits the PREFIX and folding rewrites arbitrary chars,
+        # so the raw-token prefix guard is invalid for these chains —
+        # run the char filters first (their cost is inherent to the
+        # chain) and prune the rewritten tokens instead
         toks = _char_filters_sql(toks, spec)
     if "" not in prefixes:
-        keep = " OR ".join(
-            f"startswith(t, {_sq(p)})" for p in sorted(prefixes))
-        toks = f"filter({toks}, t -> {keep})"
+        # prune FIRST where valid: the possessive strip is suffix-only,
+        # so the invariant holds against the raw token and the
+        # possessive/stopword passes then run over the pruned
+        # (near-empty on non-matching rows) array instead of every token
+        toks = f"filter({toks}, t -> {_prefix_keep_sql(prefixes)})"
     return _post_stem_sql(
         _chain_filters_sql(toks, spec, chars_done=bool(chars_done)), spec)
 
@@ -1442,11 +1247,9 @@ def candidate_tokens_col(
     col: "Column | str", terms, analyzer: str | None = None
 ) -> Column:
     """``analyze_col`` restricted to tokens that can possibly map to one
-    of ``terms`` — the membership fast path for filter chains.
-
-    Pass the column NAME (str) where known — the chain then assembles as
-    ONE parsed SQL expression (``candidate_tokens_sql``), like
-    ``analyze_col``'s string path.
+    of ``terms`` — the membership fast path for filter chains.  Rendered
+    by ``candidate_tokens_sql``; ``col`` is a name or a Column, as for
+    ``analyze_col``.
 
     Every stemmer rule edits only the SUFFIX, so ``stem(t)[:-1]`` is
     always a prefix of ``t`` (property-fuzzed over 256k words in
@@ -1462,56 +1265,7 @@ def candidate_tokens_col(
     valid for per-token FUZZY matching (an edit-1 neighbor need not
     share the prefix) or anything needing the full stream (positions,
     BM25 tf/dl)."""
-    if isinstance(col, str):
-        ref = ".".join(_bq_ident(seg) for seg in col.split("."))
-        return F.expr(candidate_tokens_sql(ref, terms, analyzer))
-    spec = _spec(analyzer or current_analyzer())
-    if spec.cjk_bigrams and not (spec.stemmer or spec.synonyms):
-        # bigram-chain contains-guard (r14): a chain output token — a
-        # CJK bigram or a pass-through Latin token — can only derive
-        # from a surface token that CONTAINS it as a substring (a
-        # bigram is two ADJACENT characters of its run; Latin tokens
-        # pass through unchanged).  Filtering on cheap contains() FIRST
-        # means the bigram expansion runs over a near-empty array on
-        # non-matching rows; the stop filter still applies after, so
-        # membership semantics equal analyze_col restricted to the
-        # matching tokens.
-        toks = _char_filters(_tokenize_col(col, spec.tokenizer), spec)
-        terms_l = [str(s) for s in terms]
-        if terms_l:
-            def _keep_contains(t: Column) -> Column:
-                out = t.contains(terms_l[0])
-                for s in terms_l[1:]:
-                    out = out | t.contains(s)
-                return out
-
-            toks = F.filter(toks, _keep_contains)
-        return _chain_filters(toks, spec, chars_done=True)
-    if not (spec.stemmer or spec.synonyms):
-        return analyze_col(col, analyzer)
-    prefixes = set()
-    for s in terms:
-        s = str(s)
-        prefixes.add(s[:-1])
-        for src, dst in spec.synonyms:
-            if dst == s:
-                prefixes.add(src[:-1])
-    toks = _tokenize_col(col, spec.tokenizer)
-    chars_done = spec.elision or spec.asciifolding
-    if chars_done:
-        # elision edits the PREFIX and folding rewrites arbitrary chars,
-        # so the raw-token prefix guard is invalid for these chains —
-        # run the char filters first (their cost is inherent to the
-        # chain) and prune the rewritten tokens instead
-        toks = _char_filters(toks, spec)
-    if "" not in prefixes:
-        # prune FIRST where valid: the possessive strip is suffix-only,
-        # so the invariant holds against the raw token and the
-        # possessive/stopword passes then run over the pruned
-        # (near-empty on non-matching rows) array instead of every token
-        toks = F.filter(toks, _prefix_keep(sorted(prefixes)))
-    return _post_stem_col(
-        _chain_filters(toks, spec, chars_done=chars_done), spec)
+    return sql_bind(col, lambda ref: candidate_tokens_sql(ref, terms, analyzer))
 
 
 def let_cols(cols, fn) -> Column:
@@ -1537,89 +1291,58 @@ def let_cols(cols, fn) -> Column:
         1)
 
 
-def _prefix_keep(plist: list[str]):
-    def keep(t: Column) -> Column:
-        out = t.startswith(plist[0])
-        for p in plist[1:]:
-            out = out | t.startswith(p)
-        return out
-    return keep
-
-
-def candidate_positions_col(
-    col: Column, term: str, analyzer: str | None = None,
-    *, prefix: bool = False
-) -> Column:
-    """0-based positions IN THE POST-STOP TOKEN STREAM of tokens whose
-    chain output equals ``term`` (or starts with it, ``prefix=True``) —
-    the phrase-engine fast path for filter chains.
+def _positions_sql(ts: str, term: str, spec: _AnalyzerSpec,
+                   *, prefix: bool) -> str:
+    """0-based positions IN THE POST-STOP TOKEN STREAM ``ts`` (a bound
+    lambda variable — cheap to re-read) of tokens whose chain output
+    equals ``term`` (or starts with it, ``prefix=True``) — the phrase
+    engine's fast path for filter chains.
 
     Positions must index the full post-stop stream, so tokens cannot be
-    pruned away like ``candidate_tokens_col`` does; instead the guard
+    pruned away like ``candidate_tokens_sql`` does.  Instead the guard
     filter keeps TWO ALIGNED ARRAYS — the candidate positions (ints into
-    the full stream) and the candidate tokens — runs the stemmer passes
-    over just the (near-empty on non-matching rows) candidate token
-    array, and zips the surviving indices back (see
-    ``_positions_from_stream``; measured 65× → ~2× on a 1M-doc english
-    phrase, tools/probe_round11.py).  The guard is the suffix-only
-    invariant: chain(t) can equal/extend ``term`` only if
+    the full stream) and the candidate tokens (an int array + a string
+    array beat an array of structs by ~30% at 1M docs) — runs the
+    stemmer passes over just the (near-empty on non-matching rows)
+    candidate token array, and zips the surviving indices back
+    (measured 65× → ~2× on a 1M-doc english phrase,
+    tools/probe_round11.py).  The guard is the suffix-only invariant:
+    chain(t) can equal/extend ``term`` only if
     ``t.startswith(term[:-1])`` (synonym sources included; for
     ``prefix`` mode every canonical starting with ``term`` contributes
     its sources)."""
-    spec = _spec(analyzer or current_analyzer())
-    return with_chain_positions(
-        col, [(term, prefix)], lambda pos: pos[0], analyzer)
-
-
-def _positions_from_stream(ts: Column, term: str, spec: _AnalyzerSpec,
-                           *, prefix: bool) -> Column:
-    """Positions of ``term`` given the ALREADY-BOUND post-stop token
-    array ``ts`` (a lambda variable — cheap to re-read).  Guard-filter
-    to the (near-empty on non-matching rows) candidate set FIRST,
-    carried as two ALIGNED arrays — candidate positions and candidate
-    tokens (an int array + a string array beat an array of structs by
-    ~30% at 1M docs) — then run the six stemmer passes over just the
-    tiny token array and zip the indices back."""
-    pred = ((lambda x: x.startswith(term)) if prefix
-            else (lambda x: x == term))
+    hit = f"startswith(x, {_sq(term)})" if prefix else f"x = {_sq(term)}"
     if not (spec.stemmer or spec.synonyms):
-        hit = F.transform(
-            ts, lambda x, i: F.when(pred(x), i).otherwise(F.lit(-1)))
-        return F.filter(hit, lambda p: p >= 0)
+        return (f"filter(transform({ts}, (x, i) -> "
+                f"CASE WHEN {hit} THEN i ELSE -1 END), p -> p >= 0)")
     prefixes = {term[:-1]}
     for src, dst in spec.synonyms:
         if dst == term or (prefix and dst.startswith(term)):
             prefixes.add(src[:-1])
-    if "" not in prefixes:
-        keep = _prefix_keep(sorted(prefixes))
-    else:
-        keep = lambda t: F.lit(True)  # noqa: E731
-    cand_pos = F.filter(
-        F.transform(
-            ts, lambda t, i: F.when(keep(t), i).otherwise(F.lit(-1))),
-        lambda p: p >= 0)
-    cand_toks = _post_stem_col(F.filter(ts, keep), spec)
-    return F.filter(
-        F.zip_with(cand_toks, cand_pos,
-                   lambda t, p: F.when(pred(t), p).otherwise(F.lit(-1))),
-        lambda p: p >= 0)
+    keep = "true" if "" in prefixes else _prefix_keep_sql(prefixes)
+    cand_pos = (f"filter(transform({ts}, (t, i) -> "
+                f"CASE WHEN {keep} THEN i ELSE -1 END), p -> p >= 0)")
+    cand_toks = _post_stem_sql(f"filter({ts}, t -> {keep})", spec)
+    return (f"filter(zip_with({cand_toks}, {cand_pos}, (x, p) -> "
+            f"CASE WHEN {hit} THEN p ELSE -1 END), p -> p >= 0)")
 
 
-def with_chain_positions(col: Column, term_specs, fn,
+def with_chain_positions(col: "Column | str", term_specs, fn,
                          analyzer: str | None = None) -> Column:
     """Compute per-term position arrays for ``term_specs`` (a list of
     ``(term, is_prefix)``) over ONE let-bound post-stop token stream and
     hand them to ``fn`` — the tokenize+possessive+stop chain evaluates
     once per row no matter how many terms the phrase has (see
-    ``let_cols``; a per-term ``candidate_positions_col`` would tokenize
-    once PER TERM)."""
+    ``let_cols``).  The stream (``_pre_stem_sql``) and each term's
+    position pass (``_positions_sql``) are SQL text applied through
+    ``sql_bind``; ``col`` is a name or a Column, as for ``analyze_col``."""
     spec = _spec(analyzer or current_analyzer())
-    toks = _pre_stem_col(col, spec)
+    toks = sql_bind(col, lambda ref: _pre_stem_sql(ref, spec))
 
     def body(bound):
         ts, = bound
         return fn([
-            _positions_from_stream(ts, t, spec, prefix=p)
+            sql_bind(ts, partial(_positions_sql, term=t, spec=spec, prefix=p))
             for t, p in term_specs])
 
     return let_cols([toks], body)
@@ -1818,21 +1541,20 @@ def duckdb_shingles(expr: str, n: int, analyzer: str = "standard") -> str:
 
 def duckdb_tokens(expr: str, analyzer: str = "standard") -> str:
     """SQL fragment producing the token LIST for ``expr`` in DuckDB —
-    oracle-side twin of ``analyze_col`` (single-quote in the pattern is
-    doubled for SQL literal quoting).  The language-chain filters are
-    machine-generated from the same rule table as the Spark/Python
-    renderings."""
+    oracle-side twin of ``analyze_col`` (literals quoted by ``_duck_q``).
+    The language-chain filters are machine-generated from the same rule
+    tables as the Spark/Python renderings; the stemmer steps come from
+    the same renderer as Spark's (``_stem_steps``)."""
     spec = _spec(analyzer)
     if spec.tokenizer == "standard":
-        pat = DUCKDB_TOKEN_RE.replace("'", "''")
-        sql = f"regexp_extract_all(lower({expr}), '{pat}')"
+        sql = f"regexp_extract_all(lower({expr}), {_duck_q(DUCKDB_TOKEN_RE)})"
     elif spec.tokenizer == "cjk":
-        std = DUCKDB_TOKEN_RE.replace("'", "''")
-        split = _DUCK_CJK_SPLIT.replace("'", "''")
         sql = (f"flatten(list_transform("
-               f"regexp_extract_all(lower({expr}), '{std}'), t -> "
-               f"CASE WHEN regexp_matches(t, '{_CJK_ANY}') THEN "
-               f"regexp_extract_all(t, '{split}') ELSE [t] END))")
+               f"regexp_extract_all(lower({expr}), "
+               f"{_duck_q(DUCKDB_TOKEN_RE)}), t -> "
+               f"CASE WHEN regexp_matches(t, {_duck_q(_CJK_ANY)}) THEN "
+               f"regexp_extract_all(t, {_duck_q(_DUCK_CJK_SPLIT)}) "
+               f"ELSE [t] END))")
     else:
         sql = (f"list_filter(string_split_regex(lower({expr}), ' +'), "
                "t -> t != '')")
@@ -1840,9 +1562,9 @@ def duckdb_tokens(expr: str, analyzer: str = "standard") -> str:
         sql = (f"list_filter(list_transform({sql}, "
                "t -> regexp_replace(t, '''s$', '')), t -> t != '')")
     if spec.elision:
-        pat = _elision_pat(spec.elision).replace("'", "''")
+        pat = _duck_q(_elision_pat(spec.elision))
         sql = (f"list_filter(list_transform({sql}, "
-               f"t -> regexp_replace(t, '{pat}', '')), t -> t != '')")
+               f"t -> regexp_replace(t, {pat}, '')), t -> t != '')")
     if spec.asciifolding:
         body = f"translate(t, '{_FOLD_FROM}', '{_FOLD_TO}')"
         for a, b in _FOLD_MULTI:
@@ -1855,14 +1577,14 @@ def duckdb_tokens(expr: str, analyzer: str = "standard") -> str:
                f"list_transform(generate_series(1, length(t) - 1), "
                f"i -> substring(t, i, 2)) ELSE [t] END))")
     if spec.stopwords:
-        inlist = ", ".join("'" + s.replace("'", "''") + "'"
-                           for s in spec.stopwords)
+        inlist = ", ".join(_duck_q(s) for s in spec.stopwords)
         sql = f"list_filter({sql}, t -> t NOT IN ({inlist}))"
     if spec.stemmer:
-        for body in _duckdb_stem_steps(spec.stemmer):
+        for body in _stem_steps(spec.stemmer, _duck_match, _duck_q):
             sql = f"list_transform({sql}, t -> {body})"
     if spec.synonyms:
         whens = "".join(
-            f" WHEN t = '{a}' THEN '{b}'" for a, b in spec.synonyms)
+            f" WHEN t = {_duck_q(a)} THEN {_duck_q(b)}"
+            for a, b in spec.synonyms)
         sql = f"list_transform({sql}, t -> (CASE{whens} ELSE t END))"
     return sql

@@ -1972,7 +1972,7 @@ def _ft_corpus_stats(field: str, terms: tuple[str, ...]):
         return ctx["cache"][key]
     from .query_dsl import _analyze as _an_col
 
-    toks = _an_col(F.col(field))
+    toks = _an_col(field)
     row = ctx["src"].agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         F.avg(F.size(toks).cast("double")).alias("avgdl"),
@@ -1999,13 +1999,13 @@ def _ft_bm25_sum(field: str, terms: list[str]) -> Column:
 
     k1, b = 1.2, 0.75
     n, avgdl, dfs = _ft_corpus_stats(field, tuple(sorted(set(terms))))
-    toks = _an_col(F.col(field))
+    toks = _an_col(field)
     dl = F.size(toks).cast("double")
 
     def _eq(term: str):
         # closure factory, NOT a default-arg lambda — a two-param
         # callable looks BINARY to F.filter and receives the element
-        # INDEX as its second argument (the analysis.py _drop_rule)
+        # INDEX as its second argument
         def f(x):
             return x == F.lit(term)
         return f

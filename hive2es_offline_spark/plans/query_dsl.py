@@ -106,6 +106,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import ip as _ip
+from ..operators.util import sql_bind
 
 __all__ = ["compile_query", "compile_aggs", "es_search", "es_count",
            "es_mget", "es_field_caps", "es_analyze", "significant_terms",
@@ -126,8 +127,7 @@ def _analyze(col: "Column | str") -> Column:
     """The session's analysis chain (``plans/analysis.py`` — ``standard``
     punctuation-aware tokenization by default, ``whitespace`` fallback via
     ``analysis.using()`` / the entry points' ``analyzer=`` option).
-    Accepts a column NAME for the one-parse SQL chain path (r15, see
-    ``analysis.analyze_col``)."""
+    Takes a column NAME or a Column (see ``analysis.analyze_col``)."""
     from .analysis import analyze_col
 
     return analyze_col(col)
@@ -135,25 +135,20 @@ def _analyze(col: "Column | str") -> Column:
 
 def _ref(field: str, col) -> "Column | str":
     """Chain-builder input for ``field`` under resolver ``col``: the bare
-    NAME when the resolver is the plain ``F.col`` (letting analyze_col /
-    candidate_tokens_col assemble the chain as ONE parsed SQL expression
-    — r15 driver-latency fix), else the resolved Column (custom
-    resolvers, e.g. nested/inner-hit scopes, keep full generality)."""
+    NAME when the resolver is the plain ``F.col`` (the chain's SQL text
+    then reads the quoted name — r15 driver-latency fix), else the
+    resolved Column (custom resolvers, e.g. nested/inner-hit scopes),
+    which ``operators.util.sql_bind`` binds as a SQL lambda argument."""
     return field if col is F.col else col(field)
 
 
 def _ip_long(field: str, col) -> Column:
     """uint32 ip ordering key of ``field`` under resolver ``col``
     (functions/ip.ip_to_long_spark): one parsed expression over the
-    quoted name for the plain ``F.col`` resolver.  A custom resolver's
-    Column (a nested element's field — a lambda variable, which has no
-    name SQL text could reference) binds as the argument of a SQL
-    lambda, so the same renderer applies."""
-    if col is F.col:
-        return F.expr(_ip.ip_to_long_spark(_bq_field(field)))
-    return F.element_at(F.call_function(
-        "transform", F.array(col(field)),
-        F.expr(f"ip -> {_ip.ip_to_long_spark('ip')}")), 1)
+    quoted name for the plain ``F.col`` resolver; a custom resolver's
+    Column (a nested element's field) binds as a SQL lambda argument
+    (``operators.util.sql_bind``), so the same renderer applies."""
+    return sql_bind(_ref(field, col), _ip.ip_to_long_spark)
 
 
 def _pre_stream(field: str, *, positions: bool = False):
@@ -639,7 +634,7 @@ def _span_near_combinator(pos: list, slop: int, in_order: bool) -> Column:
     return F.exists(pos[0], lambda p1: nest_u(1, [p1]))
 
 
-def _chain_phrase_predicate(colx: Column, terms: list[str], slop: int,
+def _chain_phrase_predicate(colx: "Column | str", terms: list[str], slop: int,
                             *, last_is_prefix: bool = False) -> Column:
     """Phrase matching under a FILTER-CHAIN analyzer: per-term position
     arrays come from guarded stemming over ONE let-bound token stream
@@ -1668,7 +1663,7 @@ def compile_query(
                 F.lower(col(field)), F.lit(_phrase_regex_pattern(terms)))
         # sloppy or filter-chain matching needs positions
         if not _plain_chain():
-            return _chain_phrase_predicate(col(field), terms, slop)
+            return _chain_phrase_predicate(_ref(field, col), terms, slop)
         pre = _pre_stream(field, positions=True)
         return _phrase_predicate(
             pre if pre is not None else _analyze(_ref(field, col)), terms, slop)
@@ -1691,7 +1686,7 @@ def compile_query(
         # (ES honors slop here — MultiPhrasePrefixQuery; ADVICE r10:
         # multi_match phrase_prefix used to silently drop it)
         if not _plain_chain():
-            return _chain_phrase_predicate(col(field), terms, slop,
+            return _chain_phrase_predicate(_ref(field, col), terms, slop,
                                            last_is_prefix=True)
         pre = _pre_stream(field, positions=True)
         return _phrase_predicate(

@@ -606,7 +606,6 @@ class _ScoreCompiler:
                 # closure factory, NOT a default-arg lambda — a
                 # two-param callable looks BINARY to F.transform and
                 # receives the element INDEX as its second argument
-                # (the analysis.py _drop_rule rule)
                 def dot(d):
                     return F.aggregate(
                         F.zip_with(d, lit_q,

@@ -609,7 +609,7 @@ class TestStemPrefixInvariant:
     def test_chain_positions_equal_full_chain_positions(self, spark):
         from hive2es_offline_spark.plans.analysis import (
             analyze_col,
-            candidate_positions_col,
+            with_chain_positions,
         )
 
         texts = ["the ponies were running to the running track",
@@ -626,8 +626,9 @@ class TestStemPrefixInvariant:
         for term in ["run", "poni", "track", "absent"]:
             ref = [r["x"] for r in
                    df.select(ref_positions(term).alias("x")).collect()]
-            fast = [r["x"] for r in df.select(candidate_positions_col(
-                F.col("t"), term, "english").alias("x")).collect()]
+            fast = [r["x"] for r in df.select(with_chain_positions(
+                F.col("t"), [(term, False)], lambda pos: pos[0],
+                "english").alias("x")).collect()]
             assert ref == fast, (term, ref, fast)
 
     def test_let_cols_binds_and_returns(self, spark):
@@ -1416,12 +1417,13 @@ class TestDutchChain:
 
 
 class TestSqlChainTwin:
-    """r15: analyze_col / candidate_tokens_col accept the column NAME and
-    assemble the chain as ONE parsed SQL expression (analyze_sql /
-    candidate_tokens_sql) instead of hundreds of Column-API py4j round
-    trips.  The two renderings must stay token-for-token identical for
-    every registered analyzer on a fixture exercising apostrophes,
-    accents/ligatures, Cyrillic, CJK, empties and NULLs."""
+    """analyze_col / candidate_tokens_col render the chain as ONE parsed
+    SQL expression (analyze_sql / candidate_tokens_sql).  A column NAME
+    is quoted into the text; a Column binds as a SQL lambda argument.
+    Both input paths, the Python chain (analyze_text) and the DuckDB
+    oracle (duckdb_tokens) must stay token-for-token identical for every
+    registered analyzer on a fixture exercising apostrophes,
+    accents/ligatures, Cyrillic, CJK, tabs, empties and NULLs."""
 
     ROWS = [
         (0, "The cats' owners' l'article jusqu'au qu'il O'Brien's merging"),
@@ -1446,6 +1448,34 @@ class TestSqlChainTwin:
             new = {r["id"]: r["t"] for r in df.select(
                 "id", A.analyze_col("text", an).alias("t")).collect()}
             assert old == new, f"analyzer {an} drifted between renderings"
+
+    def test_every_rendering_agrees(self, spark):
+        import duckdb
+        from pyspark.sql import functions as F
+
+        from hive2es_offline_spark.plans import analysis as A
+
+        df = spark.createDataFrame(self.ROWS, "id long, text string")
+        con = duckdb.connect()
+        con.execute("CREATE TABLE docs (id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO docs VALUES (?, ?)", self.ROWS)
+        for an in A.analyzer_names():
+            rows = df.select(
+                "id",
+                A.analyze_col("text", an).alias("name"),
+                A.analyze_col(F.col("text"), an).alias("column"),
+                F.transform(F.array("text"), lambda x: A.analyze_col(x, an))
+                .getItem(0).alias("lambda"),
+            ).collect()
+            duck = dict(con.execute(
+                f"SELECT id, {A.duckdb_tokens('text', an)} FROM docs"
+            ).fetchall())
+            for r in rows:
+                text = dict(self.ROWS)[r["id"]]
+                want = None if text is None else A.analyze_text(text, an)
+                got = {k: r[k] for k in ("name", "column", "lambda")}
+                got["duckdb"] = duck[r["id"]]
+                assert all(v == want for v in got.values()), (an, r["id"], want, got)
 
     def test_candidate_sql_matches_column(self, spark):
         from pyspark.sql import functions as F

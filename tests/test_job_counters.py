@@ -1,7 +1,13 @@
-"""Spark-job counters for the index job and the table read: a warm
-``run_job`` is one Spark job (the bundle write), a repeat read of an
-unchanged table launches none, and a rewritten table is inferred again.
-Jobs are counted with ``statusTracker`` job ids under a job group."""
+"""Deterministic counters, immune to host noise.
+
+Spark jobs for the index job and the table read: a warm ``run_job`` is
+one Spark job (the bundle write), a repeat read of an unchanged table
+launches none, and a rewritten table is inferred again.  Jobs are
+counted with ``statusTracker`` job ids under a job group.
+
+py4j round trips for the analysis-chain builds: the chain is Spark-SQL
+text parsed once, so building it over a Column costs a few dozen
+gateway calls, not one per expression node."""
 
 import uuid
 from contextlib import contextmanager
@@ -9,8 +15,11 @@ from contextlib import contextmanager
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from py4j.protocol import MEMORY_COMMAND_NAME
+from pyspark.sql import functions as F
 
 from hive2es_offline_spark.jobs import Hive2ESConfig, run_job
+from hive2es_offline_spark.plans import analysis as A
 from hive2es_offline_spark.sources import read_table
 
 from conftest import SF_SMOKE
@@ -115,3 +124,45 @@ def test_schema_cache_shared_between_threads():
     assert errors == []
     for s in sessions:
         assert 0 < len(cache._by_session[s]) <= 4
+
+
+@contextmanager
+def py4j_calls(spark):
+    """Count the gateway commands sent inside the block.  Release
+    commands, which py4j sends whenever Python's GC frees a proxy, are
+    left out: their number depends on GC timing, not on the code."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counted(command, *args, **kwargs):
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        yield calls
+    finally:
+        client.send_command = send
+
+
+CHAIN_BUILDS = {
+    "analyze_col": (lambda c: A.analyze_col(c, "english"), 40),
+    "candidate_tokens_col": (
+        lambda c: A.candidate_tokens_col(c, ["run"], "english"), 40),
+    "with_chain_positions": (
+        lambda c: A.with_chain_positions(
+            c, [("run", False), ("fast", True)],
+            lambda p: F.array(p[0], p[1]), "english"), 600),
+}
+
+
+@pytest.mark.parametrize("build", sorted(CHAIN_BUILDS))
+def test_chain_build_py4j_calls(spark, build):
+    fn, bound = CHAIN_BUILDS[build]
+    col = F.col("text")
+    fn(col)  # warm: first-use lookups are not the build's cost
+    with py4j_calls(spark) as calls:
+        fn(col)
+    assert 0 < calls[0] <= bound, f"{build}: {calls[0]} py4j calls"
