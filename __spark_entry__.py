@@ -5350,11 +5350,11 @@ def q_es_geo_grid(spark, sf_dir):
 
 
 def q_es_intervals(spark, sf_dir):
-    """ES ``intervals`` query — the modern position-aware API over the
-    r9 span engine (query_dsl._intervals_predicate): ordered ``match``
-    with ``max_gaps``, and ``all_of`` combining a term source with a
-    ``prefix`` source.  All nested-exists codegen over per-term position
-    arrays; property-tested against the phrase engine
+    """ES ``intervals`` query — the modern position-aware API, rendered
+    as one Spark-SQL expression (query_dsl._intervals_sql): ordered
+    ``match`` with ``max_gaps``, and ``all_of`` combining a term source
+    with a ``prefix`` source.  All nested-exists codegen over per-term
+    position arrays; property-tested against the phrase renderer
     (tests/test_intervals.py)."""
     from hive2es_offline_spark.plans.query_dsl import es_search
 

@@ -11,10 +11,8 @@ resolve (``_is_cidr`` in term values, all-dotted-quad bounds in range)
 AFTER "10.0.0.0" and silently return wrong rows.
 
 IPv6 rejects loudly (no uint128 arithmetic worth faking in doubles);
-malformed values in DATA become NULL through the cast chain = no match,
-the same NULL discipline as every other clause.  Octets > 255 in data
-are not validated (ES validates at index time; the engine's tables are
-assumed ES-loadable).
+a value in DATA that is not a dotted quad of octets <= 255 parses to
+NULL = no match, the same NULL discipline as every other clause.
 """
 
 from __future__ import annotations
@@ -27,8 +25,15 @@ __all__ = [
     "ip_from_long_spark",
 ]
 
-_IP_RE = re.compile(r"^\d{1,3}(?:\.\d{1,3}){3}$")
-_CIDR_RE = re.compile(r"^\d{1,3}(?:\.\d{1,3}){3}/\d{1,2}$")
+_IP_RE = re.compile(r"[0-9]{1,3}(?:\.[0-9]{1,3}){3}")
+_CIDR_RE = re.compile(r"[0-9]{1,3}(?:\.[0-9]{1,3}){3}/[0-9]{1,2}")
+#: the same test as a Java / RE2 pattern: four dot-separated octets of
+#: 1-3 ASCII digits, each <= 255 (``\z``: Java's ``$`` also matches
+#: before a trailing newline)
+_OCTET = "(?:25[0-5]|2[0-4][0-9]|[01]?[0-9]?[0-9])"
+_IP_PATTERN = f"^{_OCTET}(?:\\.{_OCTET}){{3}}\\z"
+#: ... as a Spark-SQL literal (backslash escapes are processed there)
+_IP_SPARK = "'" + _IP_PATTERN.replace("\\", "\\\\") + "'"
 
 
 def _check_v6(s: str) -> None:
@@ -41,12 +46,12 @@ def is_ip_literal(s) -> bool:
     """STRICT: shape AND octet range.  The DSL's auto-detection keys off
     this, so a value like "300.1.1.1" must fall back to plain string
     semantics rather than detect-then-crash (code-review r11)."""
-    return (isinstance(s, str) and bool(_IP_RE.match(s))
+    return (isinstance(s, str) and bool(_IP_RE.fullmatch(s))
             and all(int(p) <= 255 for p in s.split(".")))
 
 
 def is_cidr_literal(s) -> bool:
-    if not (isinstance(s, str) and bool(_CIDR_RE.match(s))):
+    if not (isinstance(s, str) and bool(_CIDR_RE.fullmatch(s))):
         return False
     base, _, bits = s.partition("/")
     return is_ip_literal(base) and int(bits) <= 32
@@ -78,34 +83,35 @@ def cidr_bounds(block: str) -> tuple[int, int]:
 def ip_to_long_spark(expr: str) -> str:
     """Dotted-quad SQL expression → uint32 as BIGINT, rendered as
     Spark-SQL text so plan builders parse it in one ``F.expr`` call —
-    pure codegen (split + integer arithmetic); malformed or short values
-    yield NULL, and a 5+-part value must NOT silently use only its first
-    4 octets.  The casts are TRY_CAST: under ANSI mode (Spark 4's
-    default) a plain cast of a garbage octet like "0/8" THROWS
-    mid-query instead of nulling (code-review r11 follow-up — the
-    CIDR-vs-keyword hedge feeds such values through this parser by
-    design).  :func:`ip_to_long_sql` is its DuckDB counterpart, pinned
-    row for row by tests/test_ip.py::test_ip_to_long_sql_twin."""
+    pure codegen (one RLIKE + split + integer arithmetic).  Anything
+    :func:`is_ip_literal` rejects yields NULL: a short or 5+-part value,
+    an octet above 255, a sign, an exponent or a hex suffix.  The casts
+    stay TRY_CAST, so no value can make the parse throw under ANSI mode
+    (Spark 4's default) — the CIDR-vs-keyword hedge feeds arbitrary
+    strings through it by design.  :func:`ip_to_long_sql` is its DuckDB
+    counterpart, pinned row for row by
+    tests/test_ip.py::test_ip_to_long_sql_twin."""
     p = f"split({expr}, '\\\\.')"
-    four = f"(CASE WHEN (size({p}) = 4) THEN {p} END)"
     return (
-        f"((((TRY_CAST(element_at({four}, 1) AS BIGINT) * 16777216)"
-        f" + (TRY_CAST(element_at({four}, 2) AS BIGINT) * 65536))"
-        f" + (TRY_CAST(element_at({four}, 3) AS BIGINT) * 256))"
-        f" + TRY_CAST(element_at({four}, 4) AS BIGINT))"
+        f"CASE WHEN {expr} RLIKE {_IP_SPARK} THEN"
+        f" TRY_CAST(element_at({p}, 1) AS BIGINT) * 16777216"
+        f" + TRY_CAST(element_at({p}, 2) AS BIGINT) * 65536"
+        f" + TRY_CAST(element_at({p}, 3) AS BIGINT) * 256"
+        f" + TRY_CAST(element_at({p}, 4) AS BIGINT) END"
     )
 
 
 def ip_from_long_spark(expr: str) -> str:
     """uint32 BIGINT SQL expression → dotted-quad string, the inverse
-    of :func:`ip_to_long_spark` (pure codegen shifts; NULL propagates).
+    of :func:`ip_to_long_spark` (pure codegen shifts; NULL propagates:
+    ``concat``, not ``concat_ws``, which would skip the NULL parts).
     Callers guarantee the value is within [0, 2^32) — the ES|QL
     IP_PREFIX masks before rendering."""
     return (
-        "concat_ws('.', "
-        f"CAST((shiftrightunsigned({expr}, 24) & 255) AS STRING), "
-        f"CAST((shiftrightunsigned({expr}, 16) & 255) AS STRING), "
-        f"CAST((shiftrightunsigned({expr}, 8) & 255) AS STRING), "
+        "concat("
+        f"CAST((shiftrightunsigned({expr}, 24) & 255) AS STRING), '.', "
+        f"CAST((shiftrightunsigned({expr}, 16) & 255) AS STRING), '.', "
+        f"CAST((shiftrightunsigned({expr}, 8) & 255) AS STRING), '.', "
         f"CAST(({expr} & 255) AS STRING))"
     )
 
@@ -122,13 +128,12 @@ def ip_from_long_sql(expr: str) -> str:
 
 def ip_to_long_sql(expr: str) -> str:
     """DuckDB counterpart of :func:`ip_to_long_spark` for oracle SQL
-    (1-indexed list access; TRY_CAST mirrors Spark's NULL-on-malformed
-    cast)."""
+    (the same pattern under RE2; 1-indexed list access)."""
     p = f"string_split({expr}, '.')"
-    four = f"(CASE WHEN len({p}) = 4 THEN {p} END)"
     return (
-        f"(TRY_CAST({four}[1] AS BIGINT) * 16777216"
-        f" + TRY_CAST({four}[2] AS BIGINT) * 65536"
-        f" + TRY_CAST({four}[3] AS BIGINT) * 256"
-        f" + TRY_CAST({four}[4] AS BIGINT))"
+        f"CASE WHEN regexp_matches({expr}, '{_IP_PATTERN}') THEN"
+        f" TRY_CAST({p}[1] AS BIGINT) * 16777216"
+        f" + TRY_CAST({p}[2] AS BIGINT) * 65536"
+        f" + TRY_CAST({p}[3] AS BIGINT) * 256"
+        f" + TRY_CAST({p}[4] AS BIGINT) END"
     )

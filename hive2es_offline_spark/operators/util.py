@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -72,3 +73,29 @@ def sql_bind(col: Column | str, render: Callable[[str], str]) -> Column:
         return F.expr(render(".".join(sql_ident(s) for s in col.split("."))))
     return F.element_at(F.call_function(
         "transform", F.array(col), F.expr(f"_a -> {render('_a')}")), 1)
+
+
+def sql_let(values: Sequence[str], body: Callable[[list[str]], str]) -> str:
+    """LET-BINDING in Spark-SQL text: evaluate each of ``values`` (SQL
+    expressions) exactly ONCE per row and render ``body`` over field
+    reads of a lambda variable, ``body(['_l0.c0', '_l0.c1', ...])``.
+
+    Why: a nested ``exists(A, λ → exists(B, …))`` re-evaluates the whole
+    B EXPRESSION for every element of A (higher-order functions
+    re-evaluate their argument per lambda invocation — there is no
+    subexpression cache in interpreted eval).  With per-term position
+    arrays that derive from tokenize+filter chains, that turns a phrase
+    predicate into O(|A|) full re-tokenizations per row (measured 10×
+    on a 1M-doc sloppy phrase, tools/probe_round11.py).  Binding trick:
+    wrap the values in a single-element array of struct and
+    ``transform`` over it — inside the lambda each value is a
+    GetStructField on the lambda variable, O(1) to re-read.
+
+    The variable is ``_l<k>`` with ``k`` one past the highest ``_l<k>``
+    the values mention, so a let over values that read an enclosing
+    let's variable never shadows it."""
+    k = 1 + max((int(d) for d in re.findall(r"_l(\d+)", "".join(values))),
+                default=-1)
+    fields = ", ".join(f"'c{i}', {v}" for i, v in enumerate(values))
+    return (f"element_at(transform(array(named_struct({fields})), _l{k} -> "
+            f"{body([f'_l{k}.c{i}' for i in range(len(values))])}), 1)")

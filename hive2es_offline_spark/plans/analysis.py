@@ -73,12 +73,11 @@ import contextvars
 import re
 from dataclasses import dataclass, field
 from contextlib import contextmanager
-from functools import partial
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..operators.util import sql_bind
+from ..operators.util import sql_bind, sql_let
 from ..operators.util import sql_string as _sq
 
 __all__ = [
@@ -1031,9 +1030,10 @@ def preanalyzed(mapping: dict[str, str], analyzer: str | None = None):
 
 def preanalyzed_stream(
     field: str, *, positions: bool = False, analyzer: str | None = None
-) -> Column | None:
-    """The materialized full-chain token column for ``field`` under the
-    active :func:`preanalyzed` scope, or None (caller tokenizes inline).
+) -> str | None:
+    """The NAME of the materialized full-chain token column for
+    ``field`` under the active :func:`preanalyzed` scope, or None
+    (caller tokenizes inline).
     ``positions=True`` additionally requires a PLAIN chain: the
     positions engines consume the pre-stem stream, which equals the
     full-chain output only when no token filters apply."""
@@ -1046,7 +1046,7 @@ def preanalyzed_stream(
         return None
     if positions and not plain_chain(a):
         return None
-    return F.col(name)
+    return name
 
 
 def analyze_col(col: "Column | str", analyzer: str | None = None) -> Column:
@@ -1188,9 +1188,10 @@ def analyze_sql(col_sql: str, analyzer: str | None = None) -> str:
     return _post_stem_sql(_pre_stem_sql(col_sql, spec), spec)
 
 
-def _prefix_keep_sql(prefixes) -> str:
-    """``t`` starts with one of ``prefixes`` (the stem-prefix guard)."""
-    return " OR ".join(f"startswith(t, {_sq(p)})" for p in sorted(prefixes))
+def _prefix_keep_sql(prefixes, v: str = "t") -> str:
+    """Token ``v`` starts with one of ``prefixes`` (the stem-prefix
+    guard)."""
+    return " OR ".join(f"startswith({v}, {_sq(p)})" for p in sorted(prefixes))
 
 
 def candidate_tokens_sql(
@@ -1269,26 +1270,31 @@ def candidate_tokens_col(
 
 
 def let_cols(cols, fn) -> Column:
-    """LET-BINDING for expensive array expressions: evaluate each of
-    ``cols`` exactly ONCE per row and hand the results to ``fn`` as
-    lambda-variable field reads.
-
-    Why: a nested ``exists(A, λ → exists(B, …))`` re-evaluates the whole
-    B EXPRESSION for every element of A (higher-order functions
-    re-evaluate their argument per lambda invocation — there is no
-    subexpression cache in interpreted eval).  With per-term position
-    arrays that derive from tokenize+filter chains, that turns a phrase
-    predicate into O(|A|) full re-tokenizations per row (measured 10×
-    on a 1M-doc sloppy phrase, tools/probe_round11.py).  Binding trick:
-    wrap the columns in a single-element array of struct and
-    ``transform`` over it — inside the lambda each column is a
-    GetStructField on the lambda variable, O(1) to re-read."""
+    """LET-BINDING of Columns: evaluate each of ``cols`` exactly ONCE
+    per row and hand the results to ``fn`` as lambda-variable field
+    reads — the Column-API form of ``operators.util.sql_let`` (see
+    there for why), for builders that still assemble Columns."""
     bound = F.array(F.struct(*[c.alias(f"c{i}") for i, c in enumerate(cols)]))
     return F.element_at(
         F.transform(
             bound,
             lambda s: fn([s[f"c{i}"] for i in range(len(cols))])),
         1)
+
+
+def term_hit_sql(term: str, prefix: bool = False) -> str:
+    """SQL predicate over the token ``x``: it equals ``term`` (or starts
+    with it, ``prefix=True``)."""
+    return f"startswith(x, {_sq(term)})" if prefix else f"x = {_sq(term)}"
+
+
+def hit_positions_sql(ts: str, hit: str) -> str:
+    """0-based positions, ascending, of the tokens of the array ``ts``
+    (cheap to re-read) on which ``hit`` — a SQL predicate over the token
+    ``x`` — holds: the one position extraction of the phrase, span and
+    intervals renderers."""
+    return (f"filter(transform({ts}, (x, i) -> "
+            f"CASE WHEN {hit} THEN i ELSE -1 END), p -> p >= 0)")
 
 
 def _positions_sql(ts: str, term: str, spec: _AnalyzerSpec,
@@ -1311,41 +1317,32 @@ def _positions_sql(ts: str, term: str, spec: _AnalyzerSpec,
     ``t.startswith(term[:-1])`` (synonym sources included; for
     ``prefix`` mode every canonical starting with ``term`` contributes
     its sources)."""
-    hit = f"startswith(x, {_sq(term)})" if prefix else f"x = {_sq(term)}"
+    hit = term_hit_sql(term, prefix)
     if not (spec.stemmer or spec.synonyms):
-        return (f"filter(transform({ts}, (x, i) -> "
-                f"CASE WHEN {hit} THEN i ELSE -1 END), p -> p >= 0)")
+        return hit_positions_sql(ts, hit)
     prefixes = {term[:-1]}
     for src, dst in spec.synonyms:
         if dst == term or (prefix and dst.startswith(term)):
             prefixes.add(src[:-1])
-    keep = "true" if "" in prefixes else _prefix_keep_sql(prefixes)
-    cand_pos = (f"filter(transform({ts}, (t, i) -> "
-                f"CASE WHEN {keep} THEN i ELSE -1 END), p -> p >= 0)")
-    cand_toks = _post_stem_sql(f"filter({ts}, t -> {keep})", spec)
+    keep = "true" if "" in prefixes else _prefix_keep_sql(prefixes, "x")
+    cand_pos = hit_positions_sql(ts, keep)
+    cand_toks = _post_stem_sql(f"filter({ts}, x -> {keep})", spec)
     return (f"filter(zip_with({cand_toks}, {cand_pos}, (x, p) -> "
             f"CASE WHEN {hit} THEN p ELSE -1 END), p -> p >= 0)")
 
 
 def with_chain_positions(col: "Column | str", term_specs, fn,
                          analyzer: str | None = None) -> Column:
-    """Compute per-term position arrays for ``term_specs`` (a list of
-    ``(term, is_prefix)``) over ONE let-bound post-stop token stream and
-    hand them to ``fn`` — the tokenize+possessive+stop chain evaluates
-    once per row no matter how many terms the phrase has (see
-    ``let_cols``).  The stream (``_pre_stem_sql``) and each term's
-    position pass (``_positions_sql``) are SQL text applied through
-    ``sql_bind``; ``col`` is a name or a Column, as for ``analyze_col``."""
+    """``fn`` — SQL text over the per-term position arrays (SQL text) of
+    ``term_specs``, a list of ``(term, is_prefix)`` — over ONE let-bound
+    post-stop token stream (``_pre_stem_sql``), so the chain evaluates
+    once per row however many terms there are (``sql_let``); each
+    term's positions are ``_positions_sql``.  ``col`` is a name or a
+    Column, as for ``analyze_col``; the whole text parses in one call."""
     spec = _spec(analyzer or current_analyzer())
-    toks = sql_bind(col, lambda ref: _pre_stem_sql(ref, spec))
-
-    def body(bound):
-        ts, = bound
-        return fn([
-            sql_bind(ts, partial(_positions_sql, term=t, spec=spec, prefix=p))
-            for t, p in term_specs])
-
-    return let_cols([toks], body)
+    return sql_bind(col, lambda ref: sql_let(
+        [_pre_stem_sql(ref, spec)], lambda ts: fn([
+            _positions_sql(ts[0], t, spec, prefix=p) for t, p in term_specs])))
 
 
 def _analyze_tokens(text: str, spec: _AnalyzerSpec) -> list[str]:

@@ -1539,18 +1539,12 @@ def _to_ip_sql(c: str) -> str:
     documented execution contract."""
     from ..functions.ip import ip_to_long_spark
 
-    dot = _sql_str(r"\.")
     s = f"CAST({c} AS STRING)"
-    valid = (
-        f"(({s} RLIKE "
-        + _sql_str(r"^\d{1,3}(\.\d{1,3}){3}$")
-        + f") AND forall(split({s}, {dot}), "
-        f"o -> (CAST(o AS INT) <= 255)))")
     msg_a = _sql_str("ES|QL: TO_IP cannot parse ")
     msg_b = _sql_str(" as an IPv4 address")
     return (f"CASE WHEN ({s} IS NULL) THEN CAST(NULL AS BIGINT) "
-            f"WHEN {valid} THEN {ip_to_long_spark(s)} "
-            f"ELSE CAST(concat({msg_a}, {s}, {msg_b}) AS BIGINT) END")
+            f"ELSE coalesce({ip_to_long_spark(s)}, "
+            f"CAST(concat({msg_a}, {s}, {msg_b}) AS BIGINT)) END")
 
 
 #: arity bounds for the whitelisted scalars (round-14 review: the bare

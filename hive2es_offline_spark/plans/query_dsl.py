@@ -106,7 +106,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import ip as _ip
-from ..operators.util import sql_bind
+from ..operators.util import sql_bind, sql_let, sql_string
+from .analysis import (
+    analyze_sql, hit_positions_sql, let_cols, term_hit_sql,
+    with_chain_positions,
+)
 
 __all__ = ["compile_query", "compile_aggs", "es_search", "es_count",
            "es_mget", "es_field_caps", "es_analyze", "significant_terms",
@@ -152,8 +156,8 @@ def _ip_long(field: str, col) -> Column:
 
 
 def _pre_stream(field: str, *, positions: bool = False):
-    """Materialized shared-analysis stream for ``field`` if a
-    ``preanalyzed`` scope is active (plans/analysis.py) — None means
+    """Column name of the materialized shared-analysis stream for
+    ``field`` if a ``preanalyzed`` scope is active (plans/analysis.py) — None means
     tokenize inline as usual."""
     from .analysis import preanalyzed_stream
 
@@ -212,156 +216,168 @@ def _msm_threshold(msm, n: int, floor: int = 1) -> int:
     return simple(best_spec)
 
 
-def _token_positions(toks: Column, term: str) -> Column:
-    """0-based positions of ``term`` in the analyzed token array —
-    the building block of the phrase slop engine and the span queries."""
-    hit = F.transform(
-        toks, lambda x, i: F.when(x == F.lit(term), i).otherwise(F.lit(-1))
-    )
-    return F.filter(hit, lambda p: p >= 0)
-
-
 #: multi-term kinds a span_multi wrapper may carry (each becomes a
 #: per-token predicate over the analyzed stream)
 _SPAN_MULTI_KINDS = ("prefix", "wildcard", "regexp")
 
 
-def _span_terms(q: dict) -> tuple[str, list[str]]:
-    """Flatten a span clause into (field, candidate terms) — span_term
-    yields one term, span_or the union of its span_term children; a
-    span_multi contributes NO literal terms (its positions come from a
-    per-token predicate) but still names the field.  Used by
-    span_near/span_first/span_not, which need per-term positions."""
+def _span_unit(q: dict) -> tuple[str, str]:
+    """(field, hit) of a unit-width span clause, ``hit`` being the SQL
+    predicate over the analyzed token ``x`` (``hit_positions_sql``):
+    span_term one term, span_multi a prefix / wildcard / regexp test
+    (ES's SpanMultiTermQueryWrapper), span_or the disjunction of its
+    children, which must share one field."""
     (kind, body), = q.items()
     if kind == "span_term":
         field, spec = _field_spec(body)
         value = spec["value"] if isinstance(spec, dict) else spec
-        return field, [str(value).lower()]
+        return field, term_hit_sql(str(value).lower())
     if kind == "span_multi":
         (mk, mb), = body["match"].items()
         if mk not in _SPAN_MULTI_KINDS:
             raise ValueError(
                 f"span_multi supports {' | '.join(_SPAN_MULTI_KINDS)}, "
                 f"got {mk!r}")
-        field, _ = _field_spec(mb)
-        return field, []
+        field, spec = _field_spec(mb)
+        value = spec["value"] if isinstance(spec, dict) else spec
+        if mk == "prefix":
+            return field, term_hit_sql(str(value).lower(), prefix=True)
+        # ES regexp is whole-token anchored
+        pat = (_wildcard_to_regex(str(value).lower()) if mk == "wildcard"
+               else f"^(?:{value})$")
+        return field, f"x RLIKE {sql_string(pat)}"
     if kind == "span_or":
-        fields_terms = [_span_terms(c) for c in body["clauses"]]
-        fields = {f for f, _ in fields_terms}
-        if len(fields) != 1:
-            raise ValueError(
-                f"span_or clauses must target one field, got {sorted(fields)}"
-            )
-        return fields_terms[0][0], sorted(
-            {t for _, ts in fields_terms for t in ts})
+        field, hits = _span_units(body["clauses"], kind)
+        return field, " OR ".join(f"({h})" for h in hits)
     raise ValueError(
         f"span sub-clause must be span_term, span_multi, or span_or of "
         f"those, got {kind!r}"
     )
 
 
-def _span_multi_positions(toks: Column, match: dict) -> Column:
-    """Positions of tokens matching a span_multi's inner multi-term query
-    (prefix / wildcard / regexp — ES's SpanMultiTermQueryWrapper), via
-    the same index-transform pattern as prefix phrases."""
-    (mk, mb), = match.items()
-    _, spec = _field_spec(mb)
-    value = spec["value"] if isinstance(spec, dict) else spec
-    if mk == "prefix":
-        return _prefix_positions(toks, str(value).lower())
-    if mk == "wildcard":
-        pat = _wildcard_to_regex(str(value).lower())
-        pred = lambda x: x.rlike(pat)  # noqa: E731
-    else:  # regexp — ES regexp is whole-token anchored
-        pat = f"^(?:{value})$"
-        pred = lambda x: x.rlike(pat)  # noqa: E731
-    hit = F.transform(
-        toks, lambda x, i: F.when(pred(x), i).otherwise(F.lit(-1)))
-    return F.filter(hit, lambda p: p >= 0)
-
-
-def _span_positions(toks: Column, q: dict) -> Column:
-    """Positions (0-based, sorted) where the span clause matches."""
-    (kind, body), = q.items()
-    if kind == "span_multi":
-        return _span_multi_positions(toks, body["match"])
-    if kind == "span_or":
-        subs = [_span_positions(toks, c) for c in body["clauses"]]
-        out = subs[0]
-        for s in subs[1:]:
-            out = F.array_union(out, s)
-        return F.array_sort(out)
-    _, terms = _span_terms(q)
-    if len(terms) == 1:
-        return _token_positions(toks, terms[0])
-    out = _token_positions(toks, terms[0])
-    for t in terms[1:]:
-        out = F.array_union(out, _token_positions(toks, t))
-    return F.array_sort(out)
-
-
-def _span_intervals(toks: Column, q: dict) -> Column:
-    """Span OCCURRENCES as ``array<struct<s,e>>`` (0-based, inclusive) —
-    the interval view span_within / span_containing need.  Unit spans
-    (span_term / span_or / span_multi) occupy one position; a span_near
-    of 2-3 unit clauses (``in_order: true``) enumerates every ordered
-    choice within slop via nested transform/filter — all array codegen,
-    no explode."""
-    (kind, body), = q.items()
-    if kind in ("span_term", "span_or", "span_multi"):
-        return F.transform(
-            _span_positions(toks, q),
-            lambda p: F.struct(p.alias("s"), p.alias("e")))
-    if kind != "span_near":
+def _span_units(clauses: list, kind: str) -> tuple[str, list[str]]:
+    """(field, per-clause hits) of a span_or / span_near's clauses,
+    which must share one field."""
+    units = [_span_unit(c) for c in clauses]
+    fields = {f for f, _ in units}
+    if len(fields) != 1:
+        # without this, a later clause naming another field would be
+        # silently evaluated against the FIRST clause's token stream
+        # (code-review r11)
         raise ValueError(
-            "span_within/span_containing spans must be span_term / "
-            f"span_or / span_multi / span_near, got {kind!r}")
+            f"{kind} clauses must target one field, got {sorted(fields)}")
+    return units[0][0], [h for _, h in units]
+
+
+def _span_occurrence(q: dict) -> tuple[str, list[str], int]:
+    """(field, hits, slop) of a span_within / span_containing operand,
+    read by ``_ordered_chain_sql``: a unit span is one source, a
+    span_near of 2-3 ``in_order`` unit clauses one source per clause
+    within ``slop``."""
+    (kind, body), = q.items()
+    if kind != "span_near":
+        field, hit = _span_unit(q)
+        return field, [hit], -1
     if not bool(body.get("in_order", True)):
         raise ValueError(
             "span_near inside span_within/span_containing requires "
             "in_order: true (unordered interval enumeration is not "
             "supported)")
-    clauses = body["clauses"]
-    if not 2 <= len(clauses) <= 3:
+    if not 2 <= len(body["clauses"]) <= 3:
         raise ValueError(
             "span_near inside span_within/span_containing supports "
             "2..3 clauses")
-    cfields = {_span_terms(c)[0] for c in clauses}
-    if len(cfields) != 1:
-        # without this, a later clause naming another field would be
-        # silently evaluated against the FIRST clause's token stream
-        # (code-review r11)
-        raise ValueError(
-            f"span_near clauses must target one field, got {sorted(cfields)}")
-    slop = int(body.get("slop", 0))
-    pos = [_span_positions(toks, c) for c in clauses]
-    if len(pos) == 2:
-        # position arrays let-bind (inner transforms re-evaluate their
-        # argument per outer element otherwise — analysis.let_cols)
-        return _let_cols(pos, lambda ps: F.flatten(F.transform(
-            ps[0],
-            lambda p0: F.transform(
-                F.filter(ps[1],
-                         lambda p1: (p1 > p0)
-                         & (p1 - p0 - 1 <= F.lit(slop))),
-                lambda p1: F.struct(p0.alias("s"), p1.alias("e"))))))
-    return _let_cols(pos, lambda ps: F.flatten(F.flatten(F.transform(
-        ps[0],
-        lambda p0: F.transform(
-            F.filter(ps[1],
-                     lambda p1: (p1 > p0) & (p1 - p0 - 1 <= F.lit(slop))),
-            lambda p1: F.transform(
-                F.filter(ps[2],
-                         lambda p2: (p2 > p1)
-                         & (p2 - p0 - 2 <= F.lit(slop))),
-                lambda p2: F.struct(p0.alias("s"), p2.alias("e"))))))))
+    return (*_span_units(body["clauses"], kind), _slop(body))
 
 
-def _interval_unit_positions(toks: Column, rule: dict) -> Column:
-    """Sorted positions of a UNIT-width intervals source: a single-term
-    ``match``, a ``prefix``, or an ``any_of`` of those.  all_of children
-    must be unit sources (a multi-term match inside all_of would need
-    materialized (start, end) interval pairs — rejected loudly)."""
+def _slop(spec) -> int:
+    """A phrase or span_near ``slop`` (default 0); negative rejects, as
+    in Lucene's PhraseQuery."""
+    slop = int(spec.get("slop", 0)) if isinstance(spec, dict) else 0
+    if slop < 0:
+        raise ValueError(f"slop must be >= 0, got {slop}")
+    return slop
+
+
+def _ordered_chain_sql(ps: list[str], max_gaps: int, at_end=None,
+                       v: str = "p") -> str:
+    """Some strictly increasing choice of one position per array of
+    ``ps`` (SQL, cheap to re-read: let-bound) with total interior gap
+    ``(last - first + 1) - n <= max_gaps`` (``max_gaps < 0``:
+    unbounded), as nested ``exists`` — the in-order match of phrases,
+    span_near and intervals.  ``at_end(first, last)`` adds a test on the
+    chosen span; the lambda variables are ``v0``, ``v1``, …"""
+    n = len(ps)
+    out = ("true" if max_gaps < 0 or n == 1
+           else f"{v}{n - 1} - {v}0 - {n - 1} <= {max_gaps}")
+    if at_end is not None:
+        out = f"{out} AND {at_end(f'{v}0', f'{v}{n - 1}')}"
+    for j in range(n - 1, 0, -1):
+        out = f"exists({ps[j]}, {v}{j} -> {v}{j} > {v}{j - 1} AND {out})"
+    return f"exists({ps[0]}, {v}0 -> {out})"
+
+
+def _unordered_sql(ps: list[str], max_gaps: int) -> str:
+    """Some choice of one position per array of ``ps`` in any order, no
+    position serving two sources, with total interior gap
+    ``(max - min + 1) - n <= max_gaps`` (``max_gaps < 0``: unbounded) —
+    unordered span_near and intervals."""
+    n = len(ps)
+    vs = ", ".join(f"p{j}" for j in range(n))
+    out = ("true" if max_gaps < 0
+           else f"greatest({vs}) - least({vs}) - {n - 1} <= {max_gaps}")
+    for j in range(n - 1, 0, -1):
+        taken = " OR ".join(f"p{j} = p{k}" for k in range(j))
+        out = f"exists({ps[j]}, p{j} -> NOT ({taken}) AND {out})"
+    return f"exists({ps[0]}, p0 -> {out})"
+
+
+def _phrase_sql(pos: list[str], slop: int) -> str:
+    """The phrase match over per-term position arrays (SQL, let-bound
+    here so each evaluates once per row): the query's tokens appear
+    within ``slop`` total position moves (``slop=0`` = exact adjacency).
+
+    Sloppy semantics follow Lucene's SloppyPhraseMatcher where SQL can
+    express it: for two terms both orders match with Lucene's exact move
+    cost (in-order gap ``p1-p0-1``, transposed ``p0-p1+1`` — so the ES
+    docs' "transposed terms need slop 2" holds); for three or more terms
+    the in-order minimal cost ``p_n - p_1 - (n-1)`` is used and
+    out-of-order occurrences do not match (documented approximation).
+    Nested ``exists`` over the position arrays — no UDF, bounded by
+    phrase length (capped at 8 terms)."""
+    if len(pos) > 8:
+        raise ValueError("match_phrase supports at most 8 analyzed terms")
+    if len(pos) != 2:
+        return sql_let(pos, lambda ps: _ordered_chain_sql(ps, slop))
+    return sql_let(pos, lambda ps: (
+        f"exists({ps[0]}, p0 -> exists({ps[1]}, p1 -> CASE "
+        f"WHEN p1 > p0 THEN p1 - p0 - 1 <= {slop} "
+        f"WHEN p1 < p0 THEN p0 - p1 + 1 <= {slop} ELSE false END))"))
+
+
+def _phrase_predicate(toks: "Column | str", terms: list[str], slop: int = 0,
+                      *, last_is_prefix: bool = False) -> Column:
+    """``match_phrase`` over the token array ``toks`` (a Column or a
+    column name) through ``_phrase_sql``; with ``last_is_prefix`` the
+    last term matches every token it starts (Lucene
+    MultiPhrasePrefixQuery).  The ``slop=0`` hot path in the
+    match_phrase compiler uses ``_phrase_regex_pattern`` instead (one
+    codegen ``regexp_like``, ~15× faster on long text); this is its
+    property-test reference (``tests/test_analysis.py``)."""
+    if not terms:
+        return F.lit(True)
+    last = len(terms) - 1
+    return sql_bind(toks, lambda ts: _phrase_sql([
+        hit_positions_sql(ts, term_hit_sql(t, last_is_prefix and i == last))
+        for i, t in enumerate(terms)], slop))
+
+
+def _interval_unit_hit(rule: dict) -> str:
+    """The SQL token hit (``hit_positions_sql``) of a UNIT-width
+    intervals source: a single-term ``match``, a ``prefix``, or an
+    ``any_of`` of those.  all_of children must be unit sources (a
+    multi-term match inside all_of would need materialized (start, end)
+    interval pairs — rejected loudly)."""
     (rk, rb), = rule.items()
     if rk == "match":
         unknown = set(rb) - {"query"}
@@ -374,60 +390,30 @@ def _interval_unit_positions(toks: Column, rule: dict) -> Column:
             raise ValueError(
                 "intervals all_of/any_of children must be single-term "
                 f"match or prefix sources, got {len(terms)} terms")
-        return _token_positions(toks, terms[0])
+        return term_hit_sql(terms[0])
     if rk == "prefix":
-        p = str(rb["prefix"]).lower()
-        hit = F.transform(
-            toks, lambda x, i: F.when(x.startswith(p), i).otherwise(F.lit(-1))
-        )
-        return F.filter(hit, lambda q: q >= 0)
+        return term_hit_sql(str(rb["prefix"]).lower(), prefix=True)
     if rk == "any_of":
-        subs = [_interval_unit_positions(toks, c) for c in rb["intervals"]]
-        out = subs[0]
-        for s in subs[1:]:
-            out = F.array_union(out, s)
-        return F.array_sort(out)
+        return " OR ".join(f"({_interval_unit_hit(c)})"
+                           for c in rb["intervals"])
     raise ValueError(
         f"unsupported intervals source inside all_of/any_of: {rk!r} "
         "(match | prefix | any_of)")
 
 
-def _ordered_chain(positions: list[Column], max_gaps: int) -> Column:
-    """One strictly-increasing position per source with total interior
-    gap ``(p_n - p_1 + 1) - n <= max_gaps`` (max_gaps < 0 = unbounded) —
-    nested exists over the per-source position arrays, same engine as
-    the phrase slop predicate.  Position arrays LET-BIND first (nested
-    exists re-evaluates its argument per outer element otherwise — see
-    ``analysis.let_cols``)."""
-    from .analysis import let_cols
-
-    return let_cols(
-        positions, lambda pos: _ordered_chain_bound(pos, max_gaps))
+def _intervals_predicate(toks: "Column | str", rule: dict) -> Column:
+    """ES ``intervals`` query over the token array ``toks`` (a Column or
+    a column name), rendered by ``_intervals_sql``."""
+    return sql_bind(toks, lambda ts: _intervals_sql(ts, rule))
 
 
-def _ordered_chain_bound(positions: list, max_gaps: int) -> Column:
-    n = len(positions)
-
-    def nest(j: int, first, prev) -> Column:
-        if j == n:
-            return (F.lit(True) if max_gaps < 0
-                    else (prev - first + 1 - F.lit(n)) <= F.lit(max_gaps))
-        return F.exists(
-            positions[j],
-            lambda p: F.when(p > prev, nest(j + 1, first, p))
-            .otherwise(F.lit(False)),
-        )
-
-    return F.exists(positions[0], lambda p1: nest(1, p1, p1))
-
-
-def _intervals_predicate(toks: Column, rule: dict) -> Column:
-    """ES ``intervals`` query, filter context (does ANY interval exist):
-    ``match`` (multi-term with ``ordered``/``max_gaps``), ``prefix``,
-    ``any_of``, and ``all_of`` over unit-width sources.  Everything
-    compiles to the span position engine (nested exists over per-term
-    position arrays) — no UDF.  Unordered multi-source matching is
-    supported for two sources (both orders); three-plus unordered
+def _intervals_sql(ts: str, rule: dict) -> str:
+    """ES ``intervals`` query, filter context (does ANY interval exist),
+    over the token array ``ts`` (SQL, cheap to re-read): ``match``
+    (multi-term with ``ordered``/``max_gaps``), ``prefix``, ``any_of``,
+    and ``all_of`` over unit-width sources — nested ``exists`` over
+    per-source position arrays, no UDF.  Unordered multi-source matching
+    is supported for two sources (both orders); three-plus unordered
     sources reject loudly (the re-ordering search space needs
     materialized intervals).  ``filter`` / ``fuzzy`` / ``wildcard`` /
     ``regexp`` rules are not supported."""
@@ -439,16 +425,15 @@ def _intervals_predicate(toks: Column, rule: dict) -> Column:
                 f"unsupported intervals match option(s): {sorted(unknown)}")
         terms = _analyze_terms(str(rb["query"]))
         max_gaps = int(rb.get("max_gaps", -1))
-        ordered = bool(rb.get("ordered", False))
         if not terms:
-            return F.lit(False)  # no terms -> no intervals -> no match
+            return "false"  # no terms -> no intervals -> no match
         if len(terms) == 1:
-            return F.array_contains(toks, terms[0])
-        pos = [_token_positions(toks, t) for t in terms]
-        if len(pos) > 8:
+            return f"array_contains({ts}, {sql_string(terms[0])})"
+        if len(terms) > 8:
             raise ValueError("intervals match supports at most 8 terms")
-        if ordered:
-            return _ordered_chain(pos, max_gaps)
+        pos = [hit_positions_sql(ts, term_hit_sql(t)) for t in terms]
+        if bool(rb.get("ordered", False)):
+            return sql_let(pos, lambda ps: _ordered_chain_sql(ps, max_gaps))
         if max_gaps < 0:
             # unordered + unbounded gaps = one interval per SOURCE, so a
             # duplicated query term needs that many distinct positions
@@ -457,50 +442,34 @@ def _intervals_predicate(toks: Column, rule: dict) -> Column:
             # ordered path and the bounded 2-term path)
             from collections import Counter
 
-            out: Column | None = None
-            for t, need in sorted(Counter(terms).items()):
-                p = (F.array_contains(toks, t) if need == 1
-                     else F.size(_token_positions(toks, t)) >= need)
-                out = p if out is None else out & p
-            return out
+            return " AND ".join(
+                f"array_contains({ts}, {sql_string(t)})" if need == 1
+                else f"size({pos[terms.index(t)]}) >= {need}"
+                for t, need in sorted(Counter(terms).items()))
         if len(pos) == 2:
-            return _let_cols(pos, lambda ps: F.exists(ps[0], lambda p1: F.exists(
-                ps[1],
-                lambda p2: (p1 != p2)
-                & (F.greatest(p1, p2) - F.least(p1, p2) - 1
-                   <= F.lit(max_gaps)),
-            )))
+            return sql_let(pos, lambda ps: _unordered_sql(ps, max_gaps))
         raise ValueError(
             "unordered intervals match with max_gaps supports at most "
             "2 terms")
     if rk == "prefix":
-        p = str(rb["prefix"]).lower()
-        return F.exists(toks, lambda x: x.startswith(p))
+        return f"exists({ts}, x -> {_interval_unit_hit(rule)})"
     if rk == "any_of":
-        subs = [_intervals_predicate(toks, c) for c in rb["intervals"]]
-        out = subs[0]
-        for s in subs[1:]:
-            out = out | s
-        return out
+        return " OR ".join(f"({_intervals_sql(ts, c)})"
+                           for c in rb["intervals"])
     if rk == "all_of":
         unknown = set(rb) - {"intervals", "max_gaps", "ordered"}
         if unknown:
             raise ValueError(
                 f"unsupported intervals all_of option(s): {sorted(unknown)}")
-        pos = [_interval_unit_positions(toks, c) for c in rb["intervals"]]
+        pos = [hit_positions_sql(ts, _interval_unit_hit(c))
+               for c in rb["intervals"]]
         if not 2 <= len(pos) <= 8:
             raise ValueError("intervals all_of supports 2..8 sources")
         max_gaps = int(rb.get("max_gaps", -1))
         if bool(rb.get("ordered", False)):
-            return _ordered_chain(pos, max_gaps)
+            return sql_let(pos, lambda ps: _ordered_chain_sql(ps, max_gaps))
         if len(pos) == 2:
-            gap_ok = (
-                (lambda p1, p2: F.lit(True)) if max_gaps < 0
-                else (lambda p1, p2: F.greatest(p1, p2) - F.least(p1, p2) - 1
-                      <= F.lit(max_gaps))
-            )
-            return _let_cols(pos, lambda ps: F.exists(ps[0], lambda p1: F.exists(
-                ps[1], lambda p2: (p1 != p2) & gap_ok(p1, p2))))
+            return sql_let(pos, lambda ps: _unordered_sql(ps, max_gaps))
         raise ValueError(
             "unordered intervals all_of supports exactly 2 sources "
             "(use ordered: true for more)")
@@ -509,156 +478,12 @@ def _intervals_predicate(toks: Column, rule: dict) -> Column:
         "(match | prefix | all_of | any_of)")
 
 
-def _prefix_positions(toks: Column, prefix: str) -> Column:
-    """0-based positions of tokens STARTING WITH ``prefix`` — the last
-    position set of a sloppy ``match_phrase_prefix`` (Lucene
-    MultiPhrasePrefixQuery expands the trailing term to every matching
-    token; positionally that is the union of their positions)."""
-    hit = F.transform(
-        toks,
-        lambda x, i: F.when(x.startswith(prefix), i).otherwise(F.lit(-1)),
-    )
-    return F.filter(hit, lambda p: p >= 0)
-
-
-def _phrase_predicate(toks: Column, terms: list[str], slop: int = 0,
-                      *, last_is_prefix: bool = False) -> Column:
-    """``match_phrase`` over the ANALYZED token stream via per-term
-    position arrays: the query's tokens appear within ``slop`` total
-    position moves (``slop=0`` = exact adjacency).  This is the positions
-    ENGINE — the ``slop=0`` hot path in the match_phrase compiler uses
-    ``_phrase_regex_pattern`` instead (one codegen ``regexp_like``, ~15×
-    faster on long text; this implementation is its property-test
-    reference, ``tests/test_analysis.py``).
-
-    Sloppy semantics follow Lucene's SloppyPhraseMatcher where SQL can
-    express it: for two terms both orders match with Lucene's exact move
-    cost (in-order gap ``p2-p1-1``, transposed ``p1-p2+1`` — so the ES
-    docs' "transposed terms need slop 2" holds); for three or more terms
-    the in-order minimal cost ``p_n - p_1 - (n-1)`` is used and
-    out-of-order occurrences do not match (documented approximation).
-    Everything compiles to nested ``exists`` over per-term position
-    arrays — no UDF, bounded by phrase length (capped at 8 terms)."""
-    n = len(terms)
-    if n == 0:
-        return F.lit(True)
-    if n == 1:
-        return (F.exists(toks, lambda x: x.startswith(terms[0]))
-                if last_is_prefix else F.array_contains(toks, terms[0]))
-    if n > 8:
-        raise ValueError("match_phrase supports at most 8 analyzed terms")
-
-    def body(bound):
-        ts, = bound
-        pos = [_token_positions(ts, t) for t in terms[:-1]]
-        pos.append(_prefix_positions(ts, terms[-1]) if last_is_prefix
-                   else _token_positions(ts, terms[-1]))
-        return _phrase_from_positions(pos, slop)
-
-    # let-bind the token array: the analyzed stream evaluates once per
-    # row instead of once per term (see analysis.let_cols)
-    return _let_cols([toks], body)
-
-
-def _let_cols(cols: list[Column], fn) -> Column:
-    """See ``analysis.let_cols`` — re-exported for the phrase engine."""
-    from .analysis import let_cols
-
-    return let_cols(cols, fn)
-
-
-def _phrase_from_positions(pos: list[Column], slop: int) -> Column:
-    """The phrase combinator over precomputed per-term position arrays
-    (shared by the token-stream path and the filter-chain guarded-stem
-    path).  Position arrays are LET-BOUND (see ``_let_cols``) so each
-    evaluates once per row regardless of nesting depth."""
-    return _let_cols(pos, lambda ps: _phrase_combinator(ps, slop))
-
-
-def _phrase_combinator(pos: list, slop: int) -> Column:
-    n = len(pos)
-    if n == 2:
-        return F.exists(pos[0], lambda p1: F.exists(
-            pos[1],
-            lambda p2: F.when(p2 > p1, (p2 - p1 - 1) <= F.lit(slop))
-            .when(p2 < p1, (p1 - p2 + 1) <= F.lit(slop))
-            .otherwise(F.lit(False)),
-        ))
-
-    def nest(j: int, first, prev) -> Column:
-        if j == n:
-            return (prev - first - F.lit(n - 1)) <= F.lit(slop)
-        return F.exists(pos[j], lambda p: F.when(p > prev, nest(j + 1, first, p))
-                        .otherwise(F.lit(False)))
-
-    return F.exists(pos[0], lambda p1: nest(1, p1, p1))
-
-
-def _span_near_combinator(pos: list, slop: int, in_order: bool) -> Column:
-    """SpanNear occurrence search over LET-BOUND per-clause position
-    arrays: pick one position per clause with total gap
-    ``(max - min + 1) - n <= slop``; ``in_order`` additionally requires
-    strictly increasing positions, unordered forbids reusing a token
-    position for two clauses."""
-    n = len(pos)
-    if in_order:
-        def nest_o(j: int, first, prev) -> Column:
-            if j == n:
-                return (prev - first - F.lit(n - 1)) <= F.lit(slop)
-            return F.exists(
-                pos[j],
-                lambda p: F.when(p > prev, nest_o(j + 1, first, p))
-                .otherwise(F.lit(False)),
-            )
-
-        return F.exists(pos[0], lambda p1: nest_o(1, p1, p1))
-
-    def taken(chosen: list, p) -> Column:
-        # the same token position cannot serve two clauses
-        out = F.lit(False)
-        for c in chosen:
-            out = out | (c == p)
-        return out
-
-    def nest_u(j: int, chosen: list) -> Column:
-        if j == n:
-            mx = F.greatest(*chosen) if len(chosen) > 1 else chosen[0]
-            mn = F.least(*chosen) if len(chosen) > 1 else chosen[0]
-            return (mx - mn - F.lit(n - 1)) <= F.lit(slop)
-        return F.exists(
-            pos[j],
-            lambda p: F.when(~taken(chosen, p), nest_u(j + 1, chosen + [p])
-                             ).otherwise(F.lit(False)),
-        )
-
-    return F.exists(pos[0], lambda p1: nest_u(1, [p1]))
-
-
-def _chain_phrase_predicate(colx: "Column | str", terms: list[str], slop: int,
-                            *, last_is_prefix: bool = False) -> Column:
-    """Phrase matching under a FILTER-CHAIN analyzer: per-term position
-    arrays come from guarded stemming over ONE let-bound token stream
-    (only prefix-candidate tokens pay the stemmer regexes; the chain
-    tokenizes once per row regardless of phrase length), then the shared
-    phrase combinator.  Positions index the post-stop stream (the
-    documented gapless-position model)."""
-    from .analysis import with_chain_positions
-
-    n = len(terms)
-    if n == 0:
-        return F.lit(True)
-    if n > 8:
-        raise ValueError("match_phrase supports at most 8 analyzed terms")
-    term_specs = [(t, False) for t in terms[:-1]]
-    term_specs.append((terms[-1], last_is_prefix))
-    if n == 1:
-        return with_chain_positions(
-            colx, term_specs, lambda pos: F.size(pos[0]) > 0)
-    # inner let binds the DERIVED position arrays too, so the nested
-    # exists combinator re-reads materialized arrays, not re-filtered
-    # candidate chains
-    return with_chain_positions(
-        colx, term_specs, lambda pos: _phrase_from_positions(pos, slop))
+def _analyzed_sql(field: str, col, render) -> Column:
+    """``render(ts)`` over ``field``'s analyzed token array ``ts``,
+    let-bound so the chain evaluates once per row — the span and
+    intervals clauses, parsed in one call."""
+    return sql_bind(_ref(field, col), lambda ref: sql_let(
+        [analyze_sql(ref)], lambda ts: render(ts[0])))
 
 
 def _regex_escape(text: str) -> str:
@@ -1141,6 +966,26 @@ def _split_field_boosts(fields, min_boost: float | None = None
     return flds, boosts
 
 
+def _count_fold(preds: list[Column], operator: str, msm) -> Column:
+    """ES match-family fold of per-term predicates: ``and`` needs all,
+    ``minimum_should_match`` at least ``_msm_threshold`` of them, else
+    any one."""
+    if str(operator).lower() == "and":
+        out = preds[0]
+        for p in preds[1:]:
+            out = out & p
+        return out
+    if msm is not None:
+        hits: Column = preds[0].cast("int")
+        for p in preds[1:]:
+            hits = hits + p.cast("int")
+        return hits >= F.lit(_msm_threshold(msm, len(preds)))
+    out = preds[0]
+    for p in preds[1:]:
+        out = out | p
+    return out
+
+
 def _term_centric_predicate(
     terms: list[str], flds: list[str], operator: str, msm,
     col=F.col, zero_terms: Column | None = None,
@@ -1160,25 +1005,11 @@ def _term_centric_predicate(
             for b in bound[1:]:
                 anyf = anyf | F.array_contains(b, t)
             per_term.append(anyf)
-        if str(operator).lower() == "and":
-            out = per_term[0]
-            for p in per_term[1:]:
-                out = out & p
-            return out
-        if msm is not None:
-            need = _msm_threshold(msm, len(per_term))
-            hits: Column = per_term[0].cast("int")
-            for p in per_term[1:]:
-                hits = hits + p.cast("int")
-            return hits >= F.lit(need)
-        out = per_term[0]
-        for p in per_term[1:]:
-            out = out | p
-        return out
+        return _count_fold(per_term, operator, msm)
 
     # each field's token array binds once per row (T terms x F fields
     # used to re-tokenize TxF times — analysis.let_cols)
-    return _let_cols([_analyze(_ref(f, col)) for f in flds], grouped)
+    return let_cols([_analyze(_ref(f, col)) for f in flds], grouped)
 
 
 def compile_query(
@@ -1615,21 +1446,7 @@ def compile_query(
                         "fuzzy clause for whole-value matching)"
                     )
                 preds.append(F.exists(toks, tok_pred(t, budget)))
-            if operator == "and":
-                out = preds[0]
-                for p in preds[1:]:
-                    out = out & p
-                return out
-            if msm is not None:
-                need = _msm_threshold(msm, len(preds))
-                hits: Column = preds[0].cast("int")
-                for p in preds[1:]:
-                    hits = hits + p.cast("int")
-                return hits >= F.lit(need)
-            out = preds[0]
-            for p in preds[1:]:
-                out = out | p
-            return out
+            return _count_fold(preds, operator, msm)
         # true array Literal, not a per-row CreateArray (2-3× on scans)
         qarr = F.lit(list(dict.fromkeys(terms)))
         if operator == "and":
@@ -1643,10 +1460,14 @@ def compile_query(
                 F.array_intersect(F.array_distinct(toks), qarr)
             ) >= F.lit(need)
         return F.arrays_overlap(toks, qarr)
-    if kind == "match_phrase":
+    if kind in ("match_phrase", "match_phrase_prefix"):
+        # match_phrase_prefix is a phrase whose LAST term is a prefix
+        # (search-as-you-type): the first n-1 analyzed tokens match
+        # exactly and the window's nth token STARTS WITH the final term
         field, spec = _field_spec(body)
         query = spec["query"] if isinstance(spec, dict) else spec
-        slop = int(spec.get("slop", 0)) if isinstance(spec, dict) else 0
+        slop = _slop(spec)
+        last_is_prefix = kind == "match_phrase_prefix"
         terms = _analyze_terms(query)
         if not terms:
             return _zero_terms_result(spec)
@@ -1654,44 +1475,29 @@ def compile_query(
             # exact analyzed-token adjacency as ONE codegen regexp_like
             # (the boundary/separator classes reproduce the TOKENIZER —
             # _phrase_regex_pattern; ~15× the slice-compare's speed on
-            # long text, property-tested against _phrase_predicate).
+            # long text, property-tested against _phrase_predicate; the
+            # prefix form drops the trailing token-end anchor).
             # Only valid for filter-less analyzers: a stemmed/stop-
             # filtered chain rewrites tokens, so the surface regex would
-            # never hit (code-review r11) — those route to the positions
-            # engine over the analyzed stream.
-            return F.regexp_like(
-                F.lower(col(field)), F.lit(_phrase_regex_pattern(terms)))
-        # sloppy or filter-chain matching needs positions
-        if not _plain_chain():
-            return _chain_phrase_predicate(_ref(field, col), terms, slop)
+            # never hit (code-review r11) — those route to positions.
+            pat = sql_string(_phrase_regex_pattern(
+                terms, last_is_prefix=last_is_prefix))
+            return sql_bind(_ref(field, col),
+                            lambda ref: f"regexp_like(lower({ref}), {pat})")
+        # sloppy (ES honors slop on the prefix form too —
+        # MultiPhrasePrefixQuery; ADVICE r10: multi_match phrase_prefix
+        # used to silently drop it) or filter-chain phrases need
+        # positions: over the materialized stream under a preanalyzed
+        # scope (plain chains only), else over the pre-stem stream with
+        # each term's positions from analysis._positions_sql
         pre = _pre_stream(field, positions=True)
-        return _phrase_predicate(
-            pre if pre is not None else _analyze(_ref(field, col)), terms, slop)
-    if kind == "match_phrase_prefix":
-        # phrase whose LAST term is a prefix (search-as-you-type): the
-        # first n-1 analyzed tokens match exactly and the window's nth
-        # token STARTS WITH the final term — same regex fast path, with
-        # the trailing token-end anchor dropped
-        field, spec = _field_spec(body)
-        query = spec["query"] if isinstance(spec, dict) else spec
-        slop = int(spec.get("slop", 0)) if isinstance(spec, dict) else 0
-        terms = _analyze_terms(query)
-        if not terms:
-            return _zero_terms_result(spec)
-        if slop == 0 and _plain_chain():
-            return F.regexp_like(
-                F.lower(col(field)),
-                F.lit(_phrase_regex_pattern(terms, last_is_prefix=True)))
-        # sloppy prefix phrase or filter-chain analyzer needs positions
-        # (ES honors slop here — MultiPhrasePrefixQuery; ADVICE r10:
-        # multi_match phrase_prefix used to silently drop it)
-        if not _plain_chain():
-            return _chain_phrase_predicate(_ref(field, col), terms, slop,
-                                           last_is_prefix=True)
-        pre = _pre_stream(field, positions=True)
-        return _phrase_predicate(
-            pre if pre is not None else _analyze(_ref(field, col)), terms, slop,
-            last_is_prefix=True)
+        if pre is not None:
+            return _phrase_predicate(pre, terms, slop,
+                                     last_is_prefix=last_is_prefix)
+        specs = [(t, False) for t in terms[:-1]]
+        specs.append((terms[-1], last_is_prefix))
+        return with_chain_positions(
+            _ref(field, col), specs, lambda pos: _phrase_sql(pos, slop))
     if kind == "match_bool_prefix":
         # search-as-you-type: every analyzed term except the last is an
         # exact token match; the LAST is a prefix over the analyzed
@@ -1723,36 +1529,20 @@ def compile_query(
             toks, = bound
             preds = [F.array_contains(toks, t) for t in dict.fromkeys(full)]
             preds.append(F.exists(toks, lambda x: x.startswith(last)))
-            if operator == "and":
-                out = preds[0]
-                for p in preds[1:]:
-                    out = out & p
-                return out
-            if msm is not None:
-                need = _msm_threshold(msm, len(preds))
-                hits: Column = preds[0].cast("int")
-                for p in preds[1:]:
-                    hits = hits + p.cast("int")
-                return hits >= F.lit(need)
-            out = preds[0]
-            for p in preds[1:]:
-                out = out | p
-            return out
+            return _count_fold(preds, operator, msm)
 
         # the analyzed stream evaluates once per row, not once per term
         pre = _pre_stream(field)
-        stream = pre if pre is not None else _analyze(_ref(field, col))
+        stream = F.col(pre) if pre is not None else _analyze(_ref(field, col))
         if sub is not None:
             stream = shingle_col(stream, gram_n)
-        return _let_cols([stream], bool_prefix)
+        return let_cols([stream], bool_prefix)
     if kind == "intervals":
-        # the modern position-aware API over the span engine: match /
+        # the modern position-aware API over the span renderers: match /
         # prefix / all_of / any_of with ordered + max_gaps (see
-        # _intervals_predicate for the supported algebra)
+        # _intervals_sql for the supported algebra)
         field, rule = next(iter(body.items()))
-        return _let_cols(
-            [_analyze(_ref(field, col))],
-            lambda b: _intervals_predicate(b[0], rule))
+        return _analyzed_sql(field, col, lambda ts: _intervals_sql(ts, rule))
     if kind == "combined_fields":
         # ES combined_fields (the modern replacement for cross_fields):
         # term-centric like cross_fields in filter context; the BM25F
@@ -1909,9 +1699,8 @@ def compile_query(
             out = out | m.getItem(str(t)).isNotNull()
         return out
     if kind == "span_term":
-        field, spec = _field_spec(body)
-        value = spec["value"] if isinstance(spec, dict) else spec
-        return F.array_contains(_analyze(_ref(field, col)), str(value).lower())
+        field, hit = _span_unit({kind: body})
+        return _analyzed_sql(field, col, lambda ts: f"exists({ts}, x -> {hit})")
     if kind == "span_or":
         subs = [compile_query(c, id_field, fields) for c in body["clauses"]]
         out = F.coalesce(subs[0], F.lit(False))
@@ -1921,77 +1710,69 @@ def compile_query(
     if kind == "span_multi":
         # a multi-term query lifted into span context; standalone it is
         # "some token matches" — its real value is as a span_near /
-        # span_within child (positions via _span_multi_positions)
-        sfield, _ = _span_terms({kind: body})
-        return F.size(
-            _span_multi_positions(_analyze(_ref(sfield, col)), body["match"])
-        ) > 0
+        # span_within child (its token hit via _span_unit)
+        field, hit = _span_unit({kind: body})
+        return _analyzed_sql(field, col, lambda ts: (
+            f"size({hit_positions_sql(ts, hit)}) > 0"))
     if kind in ("span_within", "span_containing"):
         # little span enclosed by big span (Lucene SpanWithin /
         # SpanContaining).  The two differ only in WHICH span they emit
         # for further nesting/scoring; as a document filter both reduce
-        # to "some big occurrence encloses some little occurrence", so
-        # they share one predicate over the interval views.
-        little, big = body["little"], body["big"]
-        lfield = _span_terms(little)[0] if next(iter(little)) != "span_near" \
-            else _span_terms(little["span_near"]["clauses"][0])[0]
-        bfield = _span_terms(big)[0] if next(iter(big)) != "span_near" \
-            else _span_terms(big["span_near"]["clauses"][0])[0]
+        # to "some big occurrence encloses some little occurrence": an
+        # ordered chain over the big's sources whose [first, last] holds
+        # an ordered chain over the little's positions clipped to it
+        lfield, lhits, lslop = _span_occurrence(body["little"])
+        bfield, bhits, bslop = _span_occurrence(body["big"])
         if lfield != bfield:
             raise ValueError(
                 f"{kind} little/big must share a field, got "
                 f"{lfield!r} vs {bfield!r}")
-        def contained(bound):
-            li = _span_intervals(bound[0], little)
-            bi = _span_intervals(bound[0], big)
-            return _let_cols([bi, li], lambda iv: F.exists(
-                iv[0],
-                lambda b: F.exists(
-                    iv[1],
-                    lambda l: (l["s"] >= b["s"]) & (l["e"] <= b["e"]))))
+        nb = len(bhits)
 
-        return _let_cols([_analyze(_ref(lfield, col))], contained)
+        def contained(ps):
+            def inside(first, last):
+                return _ordered_chain_sql(
+                    [f"filter({p}, w -> w >= {first} AND w <= {last})"
+                     for p in ps[nb:]], lslop, v="q")
+
+            return _ordered_chain_sql(ps[:nb], bslop, at_end=inside)
+
+        return _analyzed_sql(lfield, col, lambda ts: sql_let(
+            [hit_positions_sql(ts, h) for h in bhits + lhits], contained))
     if kind == "span_first":
         # the inner span must END at position <= end (Lucene end is
         # exclusive; unit spans at 0-based p end at p+1)
         end = int(body["end"])
-        inner = body["match"]
-        sfield, _ = _span_terms(inner)
-        P = _span_positions(_analyze(_ref(sfield, col)), inner)
-        return F.exists(P, lambda p: (p + 1) <= F.lit(end))
+        field, hit = _span_unit(body["match"])
+        return _analyzed_sql(field, col, lambda ts: (
+            f"exists({hit_positions_sql(ts, hit)}, p -> p + 1 <= {end})"))
     if kind == "span_not":
         # an include span that does not overlap any exclude span (unit
         # spans: an include position absent from the exclude positions)
-        ifield, _ = _span_terms(body["include"])
-        efield, _ = _span_terms(body["exclude"])
+        ifield, ihit = _span_unit(body["include"])
+        efield, ehit = _span_unit(body["exclude"])
         if ifield != efield:
             raise ValueError("span_not include/exclude must share a field")
-        toks = _analyze(_ref(ifield, col))
-        Pi = _span_positions(toks, body["include"])
-        Pe = _span_positions(toks, body["exclude"])
-        return F.exists(Pi, lambda p: ~F.array_contains(Pe, p))
+        return _analyzed_sql(ifield, col, lambda ts: sql_let(
+            [hit_positions_sql(ts, ihit), hit_positions_sql(ts, ehit)],
+            lambda ps: f"exists({ps[0]}, p -> NOT array_contains({ps[1]}, p))"))
     if kind == "span_near":
-        # Lucene SpanNear over unit-length spans (span_term / span_or
-        # children, one field): an occurrence picking one position per
-        # clause with total gap (max - min + 1) - n <= slop; in_order
-        # additionally requires strictly increasing positions.  Same
-        # nested-exists position engine as match_phrase slop.
+        # Lucene SpanNear over unit-length spans (span_term / span_or /
+        # span_multi children, one field): an occurrence picking one
+        # position per clause with total gap (max - min + 1) - n <= slop;
+        # in_order additionally requires strictly increasing positions,
+        # unordered forbids reusing a token position for two clauses.
+        # Same nested-exists position engine as match_phrase slop.
         clauses = body["clauses"]
         if not (2 <= len(clauses) <= 8):
             raise ValueError("span_near supports 2..8 clauses")
-        slop = int(body.get("slop", 0))
-        in_order = bool(body.get("in_order", True))
-        cfields = {_span_terms(c)[0] for c in clauses}
-        if len(cfields) != 1:
-            raise ValueError(
-                f"span_near clauses must target one field, got {sorted(cfields)}"
-            )
-        def near(bound):
-            pos = [_span_positions(bound[0], c) for c in clauses]
-            return _let_cols(
-                pos, lambda ps: _span_near_combinator(ps, slop, in_order))
-
-        return _let_cols([_analyze(_ref(cfields.pop(), col))], near)
+        slop = _slop(body)
+        chain = (_ordered_chain_sql if bool(body.get("in_order", True))
+                 else _unordered_sql)
+        field, hits = _span_units(clauses, kind)
+        return _analyzed_sql(field, col, lambda ts: sql_let(
+            [hit_positions_sql(ts, h) for h in hits],
+            lambda ps: chain(ps, slop)))
     if kind == "terms_set":
         # at least minimum_should_match_script/field of the given terms
         # appear in the analyzed field.  The constant-script form
@@ -3324,10 +3105,8 @@ def _bucket_key_col(kind: str, bspec: dict) -> Column:
         net = _ip.ip_to_long_spark(_bq_field(field))
         if host:
             net = f"shiftleft(shiftrightunsigned({net}, {host}), {host})"
-        # concat_ws SKIPS null parts — an unparseable ip must yield a
-        # NULL key (dropped like the grid kinds), not a malformed one
-        return F.expr(f"CASE WHEN ({net} IS NOT NULL) THEN "
-                      f"{_ip.ip_from_long_spark(net)} END")
+        # an unparseable ip yields a NULL key (dropped like the grid kinds)
+        return F.expr(_ip.ip_from_long_spark(net))
     if kind in ("geohash_grid", "geotile_grid", "hex_grid"):
         unknown = set(bspec) - {"field", "precision", "size"}
         if unknown:

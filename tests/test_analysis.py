@@ -223,11 +223,17 @@ def test_phrase_regex_fast_path_equals_positions_engine(spark):
     """The slop=0 regexp_like fast path must agree with the positions
     engine (_phrase_predicate over analyze_col) on adversarial joiner /
     separator layouts — token bridges (don't, u.s.a), lone joiners,
-    multi-char separators, boundary joiners."""
+    multi-char separators, boundary joiners.  compile_query's own
+    match_phrase, which renders the pattern into SQL text, must agree
+    too (the ``\\p{L}`` classes survive the literal's escaping)."""
     from hive2es_offline_spark.plans.query_dsl import (
         _phrase_predicate,
         _phrase_regex_pattern,
+        compile_query,
     )
+
+    def compiled(terms):
+        return compile_query({"match_phrase": {"t": " ".join(terms)}}, "id")
 
     frags = ["don", "t", "u", "s", "2", "5", "quick", "fox"]
     seps = ["'", ".", " ", ", ", " '", "' ", "..", ". ", "-", " - ", ""]
@@ -252,8 +258,10 @@ def test_phrase_regex_fast_path_equals_positions_engine(spark):
             "id", "t",
             F.coalesce(fast, F.lit(False)).alias("fast"),
             F.coalesce(ref, F.lit(False)).alias("ref"),
-        ).where(F.col("fast") != F.col("ref")).collect()
-        assert not rows, (terms, [(r["t"], r["fast"], r["ref"])
+            F.coalesce(compiled(terms), F.lit(False)).alias("cq"),
+        ).where((F.col("fast") != F.col("ref"))
+                | (F.col("cq") != F.col("ref"))).collect()
+        assert not rows, (terms, [(r["t"], r["fast"], r["ref"], r["cq"])
                                   for r in rows[:10]])
     # whitespace analyzer parity too
     with using("whitespace"):
@@ -264,8 +272,10 @@ def test_phrase_regex_fast_path_equals_positions_engine(spark):
             rows = df.select(
                 "t", F.coalesce(fast, F.lit(False)).alias("fast"),
                 F.coalesce(ref, F.lit(False)).alias("ref"),
-            ).where(F.col("fast") != F.col("ref")).collect()
-            assert not rows, (terms, [(r["t"], r["fast"], r["ref"])
+                F.coalesce(compiled(terms), F.lit(False)).alias("cq"),
+            ).where((F.col("fast") != F.col("ref"))
+                    | (F.col("cq") != F.col("ref"))).collect()
+            assert not rows, (terms, [(r["t"], r["fast"], r["ref"], r["cq"])
                                       for r in rows[:10]])
 
 

@@ -6,6 +6,8 @@ from pyspark.sql import functions as F
 
 from hive2es_offline_spark.functions.ip import (
     cidr_bounds,
+    ip_from_long_spark,
+    ip_from_long_sql,
     ip_literal_value,
     ip_to_long_spark,
     ip_to_long_sql,
@@ -62,18 +64,83 @@ def test_ip_to_long_column(logs):
     assert vals[9] is None
 
 
-def test_ip_to_long_sql_twin(logs):
+#: values that are not dotted quads of octets <= 255: each must parse
+#: to NULL in both renderers
+NOT_IPS = ["10.0.0.300", "10.+1.0.5", "256.0.0.0", "1e1.0.0.5",
+           "10.0.0.0x1", "1.2.3.4\n", "-1.0.0.1", " 1.2.3.4"]
+
+
+def _duck_and_spark(spark, rows, schema, duck_sql, spark_sql):
+    """{id: value} of ``duck_sql`` in DuckDB and ``spark_sql`` in Spark,
+    both over the column ``v`` of ``rows``."""
     import duckdb
 
-    rows = [(r["id"], r["ip"]) for r in logs.collect()]
     con = duckdb.connect()
-    con.execute("CREATE TABLE t (id BIGINT, ip VARCHAR)")
+    con.execute(f"CREATE TABLE t (id BIGINT, v {schema[1]})")
     con.executemany("INSERT INTO t VALUES (?, ?)", rows)
-    duck = dict(con.sql(
-        f"SELECT id, {ip_to_long_sql('ip')} FROM t").fetchall())
-    spark_vals = {r["id"]: r["v"] for r in logs.select(
-        "id", F.expr(ip_to_long_spark("ip")).alias("v")).collect()}
+    duck = dict(con.sql(f"SELECT id, {duck_sql} FROM t").fetchall())
+    df = spark.createDataFrame(rows, f"id long, v {schema[0]}")
+    return duck, {r["id"]: r["x"] for r in df.select(
+        "id", F.expr(spark_sql).alias("x")).collect()}
+
+
+def test_ip_to_long_sql_twin(spark, logs):
+    rows = [(r["id"], r["ip"]) for r in logs.collect()]
+    rows += [(100 + i, v) for i, v in enumerate(NOT_IPS)]
+    duck, spark_vals = _duck_and_spark(
+        spark, rows, ("string", "VARCHAR"),
+        ip_to_long_sql("v"), ip_to_long_spark("v"))
     assert duck == spark_vals
+    assert all(spark_vals[100 + i] is None for i in range(len(NOT_IPS)))
+    assert not any(is_ip_literal(v) for v in NOT_IPS)
+
+
+def test_ip_from_long_sql_twin(spark):
+    rows = [(1, 0), (2, 1), (3, 2**32 - 1), (4, None)]
+    duck, spark_vals = _duck_and_spark(
+        spark, rows, ("long", "BIGINT"),
+        ip_from_long_sql("v"), ip_from_long_spark("v"))
+    assert duck == spark_vals == {
+        1: "0.0.0.0", 2: "0.0.0.1", 3: "255.255.255.255", 4: None}
+
+
+@pytest.fixture()
+def bad_octets(spark):
+    return spark.createDataFrame(
+        [(1, "10.0.0.5"), (2, "10.0.0.300"), (3, "10.+1.0.5"),
+         (4, "10.0.1.7"), (5, None)],
+        "id long, ip string")
+
+
+def test_term_cidr_skips_bad_octets(bad_octets):
+    assert ids(bad_octets, {"term": {"ip": "10.0.0.0/8"}}) == [1, 4]
+
+
+def test_cidr_match_skips_bad_octets(bad_octets):
+    from hive2es_offline_spark.plans.esql import esql
+
+    rows = esql({"t": bad_octets}, '''
+        FROM t | WHERE CIDR_MATCH(ip, "10.0.0.0/8") | KEEP id | SORT id
+    ''').collect()
+    assert [r["id"] for r in rows] == [1, 4]
+
+
+def test_ip_range_skips_bad_octets(bad_octets):
+    body = {"size": 0, "aggs": {"r": {"ip_range": {
+        "field": "ip", "ranges": [{"from": "10.0.0.0", "to": "10.0.2.0"}]}}}}
+    rows = es_search(bad_octets, body, id_field="id").collect()
+    assert [r["doc_count"] for r in rows] == [2]
+
+
+def test_ip_prefix_of_null_ip_is_null(spark):
+    from hive2es_offline_spark.plans.esql import esql
+
+    df = spark.createDataFrame([(1, "10.1.2.3"), (2, None)],
+                               "id long, ip string")
+    rows = esql({"t": df}, '''
+        FROM t | EVAL net = IP_PREFIX(ip, 24, 0) | KEEP id, net | SORT id
+    ''').collect()
+    assert [r["net"] for r in rows] == ["10.1.2.0", None]
 
 
 def test_term_cidr_and_terms_mixed(logs):

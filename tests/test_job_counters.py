@@ -5,9 +5,10 @@ one Spark job (the bundle write), a repeat read of an unchanged table
 launches none, and a rewritten table is inferred again.  Jobs are
 counted with ``statusTracker`` job ids under a job group.
 
-py4j round trips for the analysis-chain builds: the chain is Spark-SQL
-text parsed once, so building it over a Column costs a few dozen
-gateway calls, not one per expression node."""
+py4j round trips for the analysis-chain and positions-clause builds:
+the chain, and a whole phrase, span or intervals clause, is Spark-SQL
+text parsed once, so building it costs a few dozen gateway calls, not
+one per expression node."""
 
 import uuid
 from contextlib import contextmanager
@@ -20,6 +21,7 @@ from pyspark.sql import functions as F
 
 from hive2es_offline_spark.jobs import Hive2ESConfig, run_job
 from hive2es_offline_spark.plans import analysis as A
+from hive2es_offline_spark.plans.query_dsl import compile_query
 from hive2es_offline_spark.sources import read_table
 
 from conftest import SF_SMOKE
@@ -154,7 +156,7 @@ CHAIN_BUILDS = {
     "with_chain_positions": (
         lambda c: A.with_chain_positions(
             c, [("run", False), ("fast", True)],
-            lambda p: F.array(p[0], p[1]), "english"), 600),
+            lambda p: f"array({p[0]}, {p[1]})", "english"), 40),
 }
 
 
@@ -166,3 +168,45 @@ def test_chain_build_py4j_calls(spark, build):
     with py4j_calls(spark) as calls:
         fn(col)
     assert 0 < calls[0] <= bound, f"{build}: {calls[0]} py4j calls"
+
+
+def _span(term):
+    return {"span_term": {"text": term}}
+
+
+NEAR3 = [_span("quick"), _span("brown"), _span("fox")]
+
+#: (analyzer, clause) of one positions-clause build each
+POSITIONS_BUILDS = {
+    "match_phrase_sloppy": ("standard", {"match_phrase": {"text": {
+        "query": "quick brown fox", "slop": 2}}}),
+    "match_phrase_english": ("english", {"match_phrase": {"text": {
+        "query": "the running dogs"}}}),
+    "match_phrase_prefix_slop": ("standard", {"match_phrase_prefix": {
+        "text": {"query": "quick brown fo", "slop": 1}}}),
+    "span_near_in_order": ("standard", {"span_near": {
+        "clauses": NEAR3, "slop": 2, "in_order": True}}),
+    "span_near_unordered": ("standard", {"span_near": {
+        "clauses": NEAR3, "slop": 2, "in_order": False}}),
+    "span_within": ("standard", {"span_within": {
+        "little": _span("brown"),
+        "big": {"span_near": {"clauses": NEAR3[::2], "slop": 3}}}}),
+    "span_not": ("standard", {"span_not": {
+        "include": _span("fox"), "exclude": _span("quick")}}),
+    "intervals_ordered_match": ("standard", {"intervals": {"text": {
+        "match": {"query": "quick brown fox", "ordered": True,
+                  "max_gaps": 2}}}}),
+    "intervals_all_of": ("standard", {"intervals": {"text": {"all_of": {
+        "ordered": True, "intervals": [
+            {"match": {"query": "quick"}}, {"prefix": {"prefix": "fo"}}]}}}}),
+}
+
+
+@pytest.mark.parametrize("build", sorted(POSITIONS_BUILDS))
+def test_positions_build_py4j_calls(spark, build):
+    analyzer, clause = POSITIONS_BUILDS[build]
+    with A.using(analyzer):
+        compile_query(clause, "id")  # warm
+        with py4j_calls(spark) as calls:
+            compile_query(clause, "id")
+    assert 0 < calls[0] <= 40, f"{build}: {calls[0]} py4j calls"
