@@ -4684,10 +4684,10 @@ def q_es_esql_score(spark, sf_dir):
     third batch): full-text WHERE functions contribute their clause
     scores, here MATCH's BM25 over the documents corpus, composed with
     a scoreless scalar filter.  Corpus statistics (N, avgdl, per-term
-    df) are collected ONCE at plan-build into PLAN LITERALS (the
-    classifier-weights shape), so the per-row score is pure codegen —
-    tf/dl from the row's analyzed tokens, no id column, no join, no
-    shuffle — and the SORT + LIMIT tail plans as
+    df) are ONE 1-row aggregate read as a scalar subquery (the DSL
+    scorer's construction, no job at plan build), so the per-row score
+    is pure codegen — tf/dl from the row's analyzed tokens, no id
+    column, no join — and the SORT + LIMIT tail plans as
     TakeOrderedAndProject.  Construction parity is test-pinned against
     the DSL scorer (tests/test_esql.py::TestMetadataScore); the oracle
     replays the same BM25 CTE as the retriever goldens."""
@@ -5525,7 +5525,7 @@ def q_es_combined_fields(spark, sf_dir):
     boost-weighted and SUMMED into one synthetic field, df counts
     any-field containment, and operator/minimum_should_match count
     terms.  One tokenize pass over the group's fields together
-    (plans/scoring.py::_cf_term_score_map).  Two arms: operator and/or
+    (plans/scoring.py::CorpusStats.combined_map).  Two arms: operator and/or
     over text + source^2."""
     from hive2es_offline_spark.plans.scoring import es_scored_search
 
@@ -5778,7 +5778,7 @@ def q_ks_drift(spark, sf_dir):
 #: es_esql_stats, es_esql_fn, es_esql_fn2 (MV percentile family over
 #: array<float> + HASH/base64/byte-length tail), es_esql_fn3
 #: (ROUND_TO/DAY_NAME/MONTH_NAME banding), es_esql_score (METADATA
-#: _score scored search: plan-literal corpus stats, row-local BM25),
+#: _score scored search: 1-row corpus-stats subquery, row-local BM25),
 #: es_esql_knn (the 9.1 KNN function: rounded-before-rank cosine,
 #: tie-inclusive k-th boundary), es_esql_spatial_agg
 #: (ST_CENTROID_AGG / ST_EXTENT_AGG / exact per-group

@@ -286,7 +286,7 @@ BENCH_QUERIES = [
     # pinned root over a rescorer child: bounded window collect +
     # In-pushdown doc fetch + pin isin
     "es_retriever_pinned",
-    # METADATA _score: plan-literal corpus stats + row-local BM25
+    # METADATA _score: 1-row corpus-stats subquery + row-local BM25
     # riding the scan into a TakeOrderedAndProject
     "es_esql_score",
     # ES|QL KNN: one bounded boundary job + a scan-riding cosine

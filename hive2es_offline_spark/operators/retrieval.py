@@ -5,18 +5,14 @@ relevance-ranked ``match`` queries over them (the generated mapping at
 ``PAHive2ES.scala:126-159`` is what Lucene's BM25 similarity scores
 against).  This operator reproduces that capability engine-side: score a
 corpus against a query string with Lucene's BM25 formula and return the
-top-k — no index required, one bounded-width shuffle.
+top-k — no index required.
 
-Scale shape (100 TB corpus, q query terms):
-
-- the corpus is tokenized and exploded, but *filtered to the q query terms
-  inside the same stage* — the only full-width exchange carries
-  (doc, term, tf, dl) rows for matching terms only, a tiny fraction of the
-  token stream (predicate applied pre-shuffle, map-side).
-- corpus stats (N, avgdl) are a 1-row aggregate, broadcast back.
-- per-term document frequencies are a q-row aggregate, broadcast back.
-- final ranking is sum-per-doc + top-k (TakeOrderedAndProject heaps, no
-  global sort).
+Scale shape (100 TB corpus, q query terms): each document scores from
+its own token stream (tf, dl) against ONE 1-row corpus aggregate (N,
+avgdl, the q dfs) that reaches the rows as a scalar subquery — the
+``plans/scoring.py`` construction (``CorpusStats``), so no explode, no
+(doc, term) shuffle and no id join; the ranking is a top-k cut
+(TakeOrderedAndProject heaps, no global sort).
 
 Determinism: per-(doc,term) partial scores are rounded to 6 decimals and
 summed as DECIMAL(28,6) — decimal addition is associative, so partition
@@ -53,61 +49,21 @@ def bm25_topk(
     1-row aggregate as N.
     """
     # analysis chain shared with plans/query_dsl.py (standard analyzer
-    # by default — plans/analysis.py)
-    from ..plans.analysis import analyze_col, analyze_text
+    # by default — plans/analysis.py); a NULL text is an empty document
+    from ..plans.analysis import analyze_text
+    from ..plans.scoring import CorpusStats, bm25_sum_sql
 
     terms = sorted(set(analyze_text(query)))
     if not terms:
         raise ValueError("query has no terms after analysis")
 
-    toks = analyze_col(text_col)
-    base = docs.select(
-        F.col(id_col).alias("_did"),
-        toks.alias("_toks"),
-    ).select("_did", "_toks", F.size("_toks").cast("double").alias("_dl"))
-
-    # 1-row corpus stats, folded back in via broadcast nested-loop (1 row).
-    stats = base.agg(
-        F.count(F.lit(1)).cast("double").alias("_n_docs"),
-        F.avg("_dl").alias("_avgdl"),
-    )
-
-    # Explode → filter to query terms BEFORE any shuffle: the exchange for
-    # the (doc, term) tf aggregate only ever carries query-term hits.
-    hits = (
-        base.select("_did", "_dl", F.explode("_toks").alias("_term"))
-        .where(F.col("_term").isin(terms))
-    )
-    tf = hits.groupBy("_did", "_term").agg(
-        F.count(F.lit(1)).cast("double").alias("_tf"),
-        F.first("_dl").alias("_dl"),
-    )
-
-    # Document frequency per query term: ≤ q rows, broadcast back.
-    dfreq = tf.groupBy("_term").agg(F.count(F.lit(1)).cast("double").alias("_df"))
-
-    scored = (
-        tf.join(F.broadcast(dfreq), "_term")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "_did",
-            F.round(
-                F.log(
-                    F.lit(1.0)
-                    + (F.col("_n_docs") - F.col("_df") + 0.5) / (F.col("_df") + 0.5)
-                )
-                * (F.col("_tf") * (k1 + 1.0))
-                / (
-                    F.col("_tf")
-                    + k1 * (1.0 - b + b * F.col("_dl") / F.col("_avgdl"))
-                ),
-                6,
-            ).cast("decimal(28,6)").alias("_partial"),
-        )
-    )
+    st = CorpusStats(k1, b)
+    m = st.partial_map("_bm25_map", text_col, terms)
     ranked = (
-        scored.groupBy("_did")
-        .agg(F.sum("_partial").cast("double").alias("score"))
+        st.attach(docs, docs)
+        .where(F.col(m).isNotNull())  # docs holding a query term
+        .select(F.col(id_col).alias("_did"),
+                F.expr(bm25_sum_sql(m, terms)).alias("score"))
         .orderBy(F.col("score").desc(), F.col("_did").asc())
         .limit(top_k)
     )

@@ -17,9 +17,10 @@ anti-silent policy):
                                   at plan time); METADATA _score (9.1)
                                   starts _score at 0.0 and each
                                   WHERE's full-text functions ADD
-                                  their clause scores (plan-literal
-                                  corpus stats, row-local BM25 — see
-                                  _ft_score_contrib); _id/_version
+                                  their clause scores (row-local
+                                  BM25 over a 1-row corpus-stats
+                                  subquery — see _ft_score_contrib);
+                                  _id/_version
                                   reject — no flat-frame meaning
 - ``ROW name = <expr>, …``        one-row constant source (full scalar
                                   grammar over range(1); the session
@@ -468,7 +469,7 @@ class _P:
         _stage_where after the filter applies)."""
         if _SCORE_CTX is not None:
             contribs = getattr(self, "score_contribs", None) or []
-            contribs.append(_ft_score_contrib(dsl, pred))
+            contribs.append(_ft_score_contrib(self, dsl, pred))
             self.score_contribs = contribs
         return self._bridge(pred)
 
@@ -1946,107 +1947,53 @@ def _name_list(p: _P) -> list[str]:
 #: METADATA _score compile context (ES|QL 9.1 scored search): set by
 #: esql() for the span of ONE compilation when the query declares
 #: ``FROM … METADATA _score`` — {"src": the FROM-time frame (corpus
-#: statistics are INDEX-wide, the engine's stats_over convention),
-#: "cache": {(field, terms) -> stats}}.  Single-threaded per call,
-#: reset in a finally.
+#: statistics are INDEX-wide, the engine's stats_over convention)}.
+#: Single-threaded per call, reset in a finally.
 _SCORE_CTX: dict | None = None
 
 
-def _ft_corpus_stats(field: str, terms: tuple[str, ...]):
-    """Eager 1-row corpus-stats job for one (field, terms) pair: N,
-    avgdl, per-term document frequency — collected at plan-build time
-    so idf/avgdl become PLAN LITERALS (the classifier-weights shape:
-    the per-row score is pure codegen and a SQL oracle replays it from
-    the same statistics).  Bounded driver work, one job per distinct
-    pair per query (cached); the precedent is the rescore window's
-    eager collect."""
-    ctx = _SCORE_CTX
-    key = (field, terms)
-    if key in ctx["cache"]:
-        return ctx["cache"][key]
-    from .query_dsl import _analyze as _an_col
+def _ft_bm25_sum(stats, field: str, terms: list[str]) -> Column:
+    """Row-local BM25 sum for ``terms`` over ``field`` — the DSL
+    scorer's construction (plans/scoring.CorpusStats: tf/dl from THIS
+    row's analyzed tokens, N/avgdl/df from one 1-row corpus aggregate,
+    k1=1.2, b=0.75, per-partial round-6, DECIMAL(28,6) sum).  No id
+    column needed, so it serves ES|QL frames that have no document
+    identity."""
+    from .scoring import bm25_sum_sql
 
-    toks = _an_col(field)
-    row = ctx["src"].agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.avg(F.size(toks).cast("double")).alias("avgdl"),
-        *[F.sum(F.array_contains(toks, t).cast("int")).cast("double")
-          .alias(f"d{i}") for i, t in enumerate(terms)],
-    ).first()
-    stats = (float(row["n"]), float(row["avgdl"] or 0.0),
-             {t: float(row[f"d{i}"] or 0.0)
-              for i, t in enumerate(terms)})
-    ctx["cache"][key] = stats
-    return stats
+    terms = sorted(set(terms))
+    if not terms:
+        return F.lit(0.0)
+    m = stats.partial_map(f"_bm25_m{len(stats.outs)}", field, terms)
+    return F.expr(bm25_sum_sql(m, terms))
 
 
-def _ft_bm25_sum(field: str, terms: list[str]) -> Column:
-    """Row-local BM25 sum for ``terms`` over ``field`` — the SAME
-    partial formula and rounding as plans/scoring._term_score_map
-    (k1=1.2, b=0.75, per-partial round-6, DECIMAL(28,6) sum), but with
-    tf/dl computed from THIS row's analyzed tokens and idf/avgdl as
-    plan literals — no id column needed, so it serves ES|QL frames
-    that have no document identity."""
-    import math
-
-    from .query_dsl import _analyze as _an_col
-
-    k1, b = 1.2, 0.75
-    n, avgdl, dfs = _ft_corpus_stats(field, tuple(sorted(set(terms))))
-    toks = _an_col(field)
-    dl = F.size(toks).cast("double")
-
-    def _eq(term: str):
-        # closure factory, NOT a default-arg lambda — a two-param
-        # callable looks BINARY to F.filter and receives the element
-        # INDEX as its second argument
-        def f(x):
-            return x == F.lit(term)
-        return f
-
-    total: Column = F.lit(0).cast("decimal(28,6)")
-    for t in sorted(set(terms)):
-        dft = dfs[t]
-        if dft <= 0 or avgdl <= 0:
-            continue  # term absent from the corpus scores 0 everywhere
-        idf = math.log(1.0 + (n - dft + 0.5) / (dft + 0.5))
-        tf = F.size(F.filter(toks, _eq(t))).cast("double")
-        partial = F.round(
-            F.lit(idf) * (tf * (k1 + 1.0))
-            / (tf + k1 * (1.0 - b + b * dl / F.lit(avgdl))), 6)
-        total = total + partial.cast("decimal(28,6)")
-    return total.cast("double")
-
-
-def _ft_score_contrib(dsl: dict, pred: Column) -> Column:
+def _ft_score_contrib(p: "_P", dsl: dict, pred: Column) -> Column:
     """METADATA _score contribution of ONE full-text WHERE function:
     the clause's relevance when its predicate matches, else 0 (Lucene's
     sum-over-matching-clauses).  match/match_phrase = the BM25 term
     sum (phrase scored by its terms — the es_rescore phrase-replay
     convention); term = keyword idf (tf=1, dl=avgdl — the DSL term-leaf
-    convention); multi_match = best_fields max over per-field sums."""
-    import math
+    convention); multi_match = best_fields max over per-field sums.
+    The statistics the clause reads are declared on the stage's
+    ``CorpusStats`` (``p.score_stats``), which _stage_where attaches."""
+    from .scoring import CorpusStats
 
+    stats = getattr(p, "score_stats", None)
+    if stats is None:
+        stats = p.score_stats = CorpusStats(1.2, 0.75)
     (kind, spec), = dsl.items()
     if kind in ("match", "match_phrase"):
         (field, query), = spec.items()
-        terms = _es_analyze_text(str(query))
-        score = _ft_bm25_sum(field, terms)
+        score = _ft_bm25_sum(stats, field, _es_analyze_text(str(query)))
     elif kind == "term":
         (field, value), = spec.items()
-        n, _avgdl, _ = _ft_corpus_stats(field, ())
-        dft = float(_SCORE_CTX["src"].agg(
-            F.sum((F.col(field) == F.lit(value)).cast("int"))
-            .cast("double")).first()[0] or 0.0)
-        idf = round(math.log(1.0 + (n - dft + 0.5) / (dft + 0.5)), 6) \
-            if dft > 0 else 0.0
-        score = F.lit(idf)
+        score = F.col(stats.idf(f"_bm25_i{len(stats.outs)}",
+                                F.col(field) == F.lit(value)))
     elif kind == "multi_match":
         terms = _es_analyze_text(str(spec["query"]))
-        score = F.greatest(*[_ft_bm25_sum(f, terms)
-                             for f in spec["fields"]]) \
-            if len(spec["fields"]) > 1 \
-            else _ft_bm25_sum(spec["fields"][0], terms)
+        sums = [_ft_bm25_sum(stats, f, terms) for f in spec["fields"]]
+        score = F.greatest(*sums) if len(sums) > 1 else sums[0]
     else:
         raise ValueError(
             f"ES|QL: {kind.upper()} cannot contribute to METADATA "
@@ -2075,12 +2022,18 @@ def _stage_where(df: DataFrame, p: _P) -> DataFrame:
         # METADATA _score: this WHERE's full-text contributions add to
         # the running score — each is already a round-6 decimal-summed
         # clause score gated on its own predicate, so the addition is
-        # order-exact and oracle-replayable
+        # order-exact and oracle-replayable.  Their corpus statistics
+        # are one 1-row aggregate over the FROM-time frame
+        stats = getattr(p, "score_stats", None)
+        if stats is not None and stats.outs:
+            out = stats.attach(out, _SCORE_CTX["src"])
         total = contribs[0]
         for c in contribs[1:]:
             total = total + c
         out = out.withColumn(
             "_score", F.round(F.col("_score") + total, 6))
+        if stats is not None:
+            out = out.drop(*stats.helpers, *stats.outs)
     return out
 
 
@@ -3071,7 +3024,7 @@ def esql(tables: Mapping[str, DataFrame], query: str, *,
             "ES|QL: the source command must be FROM, ROW or TS")
     global _SCORE_CTX
     prev_ctx = _SCORE_CTX
-    _SCORE_CTX = {"src": df, "cache": {}} if score_requested else None
+    _SCORE_CTX = {"src": df} if score_requested else None
     try:
         for stage in stages[1:]:
             df = _apply_stage(df, stage, tables,

@@ -326,9 +326,8 @@ def _scored_has_child(
     )
     # score ONLY the matching children; corpus statistics (N, avgdl,
     # per-term df) come from the WHOLE frame via stats_over's 1-row
-    # broadcast aggregate — same values as scoring the full corpus, but
-    # the per-(doc, term) shuffle and the tsmap join carry child hits
-    # only (probed at 1M docs: 22 s -> ~3 s, tools/probe_round10.py)
+    # aggregate — same values as scoring the full corpus, while the
+    # per-row tf/dl work covers child hits only
     kids = score_frame(kids_base, spec["query"], id_field, stats_over=df)
     # decimal-routed sum: child scores are 6-dp rounded, so the per-
     # parent aggregate is order-independent (same convention as _bm25)

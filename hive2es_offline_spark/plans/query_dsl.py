@@ -372,12 +372,14 @@ def _phrase_predicate(toks: "Column | str", terms: list[str], slop: int = 0,
         for i, t in enumerate(terms)], slop))
 
 
-def _interval_unit_hit(rule: dict) -> str:
+def _interval_unit_hit(rule: dict) -> str | None:
     """The SQL token hit (``hit_positions_sql``) of a UNIT-width
     intervals source: a single-term ``match``, a ``prefix``, or an
-    ``any_of`` of those.  all_of children must be unit sources (a
-    multi-term match inside all_of would need materialized (start, end)
-    interval pairs — rejected loudly)."""
+    ``any_of`` of those; None when the source has no intervals (a
+    ``match`` that analyzes to no terms, e.g. a stopword, as in ES).
+    all_of children must be unit sources (a multi-term match inside
+    all_of would need materialized (start, end) interval pairs —
+    rejected loudly)."""
     (rk, rb), = rule.items()
     if rk == "match":
         unknown = set(rb) - {"query"}
@@ -386,16 +388,17 @@ def _interval_unit_hit(rule: dict) -> str:
                 "intervals match inside all_of/any_of supports only "
                 f"`query` (got {sorted(unknown)})")
         terms = _analyze_terms(str(rb["query"]))
-        if len(terms) != 1:
+        if len(terms) > 1:
             raise ValueError(
                 "intervals all_of/any_of children must be single-term "
                 f"match or prefix sources, got {len(terms)} terms")
-        return term_hit_sql(terms[0])
+        return term_hit_sql(terms[0]) if terms else None
     if rk == "prefix":
         return term_hit_sql(str(rb["prefix"]).lower(), prefix=True)
     if rk == "any_of":
-        return " OR ".join(f"({_interval_unit_hit(c)})"
-                           for c in rb["intervals"])
+        # a source without intervals adds none to the union
+        hits = [h for h in map(_interval_unit_hit, rb["intervals"]) if h]
+        return " OR ".join(f"({h})" for h in hits) or None
     raise ValueError(
         f"unsupported intervals source inside all_of/any_of: {rk!r} "
         "(match | prefix | any_of)")
@@ -461,18 +464,21 @@ def _intervals_sql(ts: str, rule: dict) -> str:
         if unknown:
             raise ValueError(
                 f"unsupported intervals all_of option(s): {sorted(unknown)}")
-        pos = [hit_positions_sql(ts, _interval_unit_hit(c))
-               for c in rb["intervals"]]
-        if not 2 <= len(pos) <= 8:
+        hits = [_interval_unit_hit(c) for c in rb["intervals"]]
+        if not 2 <= len(hits) <= 8:
             raise ValueError("intervals all_of supports 2..8 sources")
+        ordered = bool(rb.get("ordered", False))
+        if not ordered and len(hits) != 2:
+            raise ValueError(
+                "unordered intervals all_of supports exactly 2 sources "
+                "(use ordered: true for more)")
+        if None in hits:
+            return "false"  # a source without intervals: no match
+        pos = [hit_positions_sql(ts, h) for h in hits]
         max_gaps = int(rb.get("max_gaps", -1))
-        if bool(rb.get("ordered", False)):
+        if ordered:
             return sql_let(pos, lambda ps: _ordered_chain_sql(ps, max_gaps))
-        if len(pos) == 2:
-            return sql_let(pos, lambda ps: _unordered_sql(ps, max_gaps))
-        raise ValueError(
-            "unordered intervals all_of supports exactly 2 sources "
-            "(use ordered: true for more)")
+        return sql_let(pos, lambda ps: _unordered_sql(ps, max_gaps))
     raise ValueError(
         f"unsupported intervals rule: {rk!r} "
         "(match | prefix | all_of | any_of)")
@@ -5473,7 +5479,7 @@ def es_msearch(
     if scored and len(bodies) > 1:
         # shared analysis across the request's score trees (VERDICT r11
         # #7): N scored bodies each re-tokenize every scored field — the
-        # term-map builders read a materialized __analyzed__<field>
+        # term-score maps read a materialized __analyzed__<field>
         # column instead when the frame carries one, so the tokenize
         # runs ONCE per field for the whole request (checkpointed; see
         # with_shared_analysis).  Field discovery walks each body's
@@ -5506,14 +5512,6 @@ def es_msearch(
                 fields = set()
             if fields:
                 df = with_shared_analysis(df, fields)
-    from contextlib import nullcontext
-
-    if scored and len(bodies) > 1:
-        from .scoring import shared_tsmaps
-
-        tsmap_scope = shared_tsmaps()
-    else:
-        tsmap_scope = nullcontext()
 
     def build(i: int, b: dict) -> DataFrame:
         if scored:
@@ -5529,30 +5527,26 @@ def es_msearch(
                      if c.startswith("__analyzed__")])
         return r.select(F.lit(i).alias("request_index"), "*")
 
-    with tsmap_scope:
-        if len(bodies) == 1:
-            outs = [build(0, bodies[0])]
-        else:
-            # Compile the bodies on driver threads (r15, guide §2.6):
-            # each arm's build is dominated by py4j round-trips to the
-            # JVM analyzer, which release the GIL on the socket wait, so
-            # independent arms overlap almost fully (measured ×0.55 on
-            # the six-arm multi_match build).  Analyzer/preanalyzed
-            # scopes are ContextVars copied into each worker at spawn;
-            # the shared tsmap cache serializes same-key builds on
-            # per-key locks, so the compiled plan reuses frames exactly
-            # as the sequential build did.  Results are order-pinned by
-            # the indexed slots regardless of completion order.
-            import contextvars
-            from concurrent.futures import ThreadPoolExecutor
+    if len(bodies) == 1:
+        outs = [build(0, bodies[0])]
+    else:
+        # Compile the bodies on driver threads (r15, guide §2.6): each
+        # arm's build is dominated by py4j round-trips to the JVM
+        # analyzer, which release the GIL on the socket wait, so
+        # independent arms overlap almost fully (measured ×0.55 on the
+        # six-arm multi_match build).  Analyzer/preanalyzed scopes are
+        # ContextVars copied into each worker at spawn.  The arms share
+        # no plan objects: Spark merges their corpus-statistics scalar
+        # subqueries over the shared frame into one aggregate.  Results
+        # are order-pinned by the indexed slots regardless of
+        # completion order.
+        import contextvars
+        from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(
-                    max_workers=min(len(bodies), 8)) as pool:
-                futs = [
-                    pool.submit(contextvars.copy_context().run, build, i, b)
-                    for i, b in enumerate(bodies)
-                ]
-                outs = [f.result() for f in futs]
+        with ThreadPoolExecutor(max_workers=min(len(bodies), 8)) as pool:
+            futs = [pool.submit(contextvars.copy_context().run, build, i, b)
+                    for i, b in enumerate(bodies)]
+            outs = [f.result() for f in futs]
     res = outs[0]
     for o in outs[1:]:
         res = res.unionByName(o, allowMissingColumns=True)

@@ -41,23 +41,21 @@ compilers:
   exact-cosine top-k, summing BM25 and ``(1 + cos) / 2`` (ES 8 combined
   retrieval; knn-only bodies return exactly the top-k).
 
-Scale shape (100 TB corpus): ONE tokenize+explode pass per scored text
-field, filtered to the query's terms map-side before the only full-width
-shuffle (the per-(doc, term) tf aggregate — carries query-term hits only);
-corpus stats (N, avgdl, per-term df, per-keyword-leaf df) reduce to
-broadcast-size frames; per-doc term partials come back as ONE map column
-per field (one shuffle join on the id), and the whole score expression
-tree is then plain codegen over that map.  No per-clause scans, no Python.
+Scale shape (100 TB corpus): a document's BM25 partials need only its
+own tokens plus three index-wide numbers (N, avgdl, each query term's
+df), so every scored plan reduces its corpus statistics to ONE 1-row
+aggregate (``CorpusStats``) that reaches the rows as a scalar subquery,
+and each row computes its own tf and dl in codegen.  No explode, no
+(doc, term) shuffle, no join back on the id; the whole score
+expression tree is plain codegen over the row.  No per-clause scans,
+no Python.
 
 Determinism: per-(doc, term) partials are rounded to 6 decimals (same as
-``bm25_topk``), fixed-shape expression sums, final ``_score`` rounded to
-6 — an ANSI-SQL oracle reproduces the exact values.
+``bm25_topk``), DECIMAL(28,6) sums, final ``_score`` rounded to 6 — an
+ANSI-SQL oracle reproduces the exact values.
 """
 
 from __future__ import annotations
-
-import threading
-from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -67,7 +65,8 @@ from .analysis import analyze_text as _analyze_terms
 from .query_dsl import compile_query
 
 __all__ = ["es_scored_search", "es_retriever_search", "score_frame",
-           "with_shared_analysis", "sparse_tf_vector"]
+           "with_shared_analysis", "sparse_tf_vector", "CorpusStats",
+           "bm25_sum_sql"]
 
 
 def sparse_tf_vector(text, analyzer: str | None = None):
@@ -155,9 +154,10 @@ def _normalize(q: dict) -> dict:
 
 class _ScoreCompiler:
     """Two-pass walk of a normalized query tree: ``collect`` gathers the
-    BM25 text-field terms and keyword-idf leaves; after the caller joins
-    the per-field term-score maps and the idf stats row, ``build`` emits
-    the score Column."""
+    BM25 text-field terms and keyword-idf leaves; ``build`` emits the
+    score Column over the per-field term-score map columns and the idf
+    columns, and records in ``reads`` the map columns it reads, which
+    the caller then attaches."""
 
     def __init__(self, id_field: str):
         self.id_field = id_field
@@ -171,6 +171,8 @@ class _ScoreCompiler:
         self.cf_groups: list[
             tuple[tuple[str, ...], tuple[float, ...], tuple[str, ...]]
         ] = []
+        #: term-score map columns the built score reads
+        self.reads: set[str] = set()
 
     # -- pass 1 -------------------------------------------------------------
     def collect(self, q: dict) -> None:
@@ -332,6 +334,7 @@ class _ScoreCompiler:
                 if not terms:
                     return F.when(pred, F.lit(boost)).otherwise(F.lit(0.0))
                 gi = self.xf_groups.index((tuple(flds), tuple(terms)))
+                self.reads.update(f"_xfmap_{gi}_{f}" for f in flds)
                 total: Column = F.lit(0).cast("decimal(28,6)")
                 for t in terms:
                     per_f = [
@@ -476,14 +479,10 @@ class _ScoreCompiler:
                 return F.when(pred, F.lit(float(body.get("boost", 1.0)))
                               ).otherwise(F.lit(0.0))
             gi = self.cf_groups.index((tuple(flds), tuple(boosts), terms))
-            m = F.col(f"_cfmap_{gi}")
-            total: Column = F.lit(0).cast("decimal(28,6)")
-            for t in terms:
-                total = total + F.coalesce(
-                    m.getItem(t), F.lit(0.0)).cast("decimal(28,6)")
+            self.reads.add(f"_cfmap_{gi}")
+            total = F.expr(bm25_sum_sql(f"_cfmap_{gi}", terms))
             boost = float(body.get("boost", 1.0))
-            return F.when(pred, total.cast("double") * F.lit(boost)
-                          ).otherwise(F.lit(0.0))
+            return F.when(pred, total * F.lit(boost)).otherwise(F.lit(0.0))
         if kind == "rank_feature":
             # ES rank_feature: a monotonic function of a positive
             # numeric feature field — saturation x/(x+pivot) (pivot
@@ -716,18 +715,14 @@ class _ScoreCompiler:
 
     def _bm25(self, field: str, query: str) -> Column:
         """Sum of the per-term partials from this doc's term-score map for
-        ``field`` (joined in by es_scored_search as ``_tsmap_<field>``)."""
+        ``field`` (the ``_tsmap_<field>`` column score_frame attaches)."""
         return self._bm25_terms(field, sorted(set(_analyze_terms(query))))
 
     def _bm25_terms(self, field: str, terms: list[str]) -> Column:
-        m = F.col(_tsmap_name(field))
-        # partials are rounded to 6 decimals, so DECIMAL(28,6) addition is
-        # exact and order-independent — same convention as bm25_topk, and
-        # what lets an ANSI-SQL oracle reproduce the sum bit-for-bit
-        out: Column = F.lit(0).cast("decimal(28,6)")
-        for t in terms:
-            out = out + F.coalesce(m.getItem(t), F.lit(0.0)).cast("decimal(28,6)")
-        return out.cast("double")
+        if not terms:
+            return F.lit(0.0)
+        self.reads.add(_tsmap_name(field))
+        return F.expr(bm25_sum_sql(_tsmap_name(field), terms))
 
     # -- function_score ------------------------------------------------------
     def _function_score(self, body: dict) -> Column:
@@ -1059,7 +1054,7 @@ def _analyzed_col_name(field: str) -> str:
 
 
 def _tsmap_name(field: str) -> str:
-    """Join-column name for a field's term-score map.  Dots in
+    """Column name for a field's term-score map.  Dots in
     search_as_you_type subfield names (``text._2gram``) would parse as
     struct access inside ``F.col`` — mangle them out of the name."""
     return "_tsmap_" + field.replace(".", "__")
@@ -1097,7 +1092,7 @@ def with_shared_analysis(df: DataFrame, fields) -> DataFrame:
     and higher-order let-binding cannot share work across separate
     aggregates.  Checkpointing trades memory (token arrays ≈ corpus
     text size, spillable) for tokenizing each field exactly once no
-    matter how many score trees read it; the term-map builders pick the
+    matter how many score trees read it; ``CorpusStats`` picks the
     columns up via ``_toks_expr``.  Build it under the SAME analyzer
     scope as the queries that will consume it."""
     out = df
@@ -1106,363 +1101,181 @@ def with_shared_analysis(df: DataFrame, fields) -> DataFrame:
     return out.localCheckpoint(eager=False)
 
 
-#: cross-query term-map cache, active inside ``shared_tsmaps()`` —
-#: multiple bodies in one scored _msearch often score the SAME terms on
-#: the SAME field (best_fields vs most_fields differ only in how the
-#: partials combine), and without sharing each body rebuilds the
-#: identical aggregate+join frame
-_tsmap_cache: dict | None = None
-#: per-cache-key build locks + their registry guard (r15): es_msearch
-#: compiles its bodies on driver threads, and two arms wanting the SAME
-#: term map must end up sharing ONE frame (sequential-build plan shape)
-#: rather than racing to build duplicates.  The guard only protects the
-#: tiny dict operations; the expensive plan build runs under the per-key
-#: lock so distinct keys still build concurrently.
-_tsmap_guard = threading.Lock()
-_tsmap_locks: dict | None = None
-
-
-@contextmanager
-def shared_tsmaps():
-    """Scope a cache of ``_term_score_map`` frames across several scored
-    plan builds (es_msearch) — multiple bodies often score the SAME
-    terms on the SAME field, and without sharing each body rebuilds the
-    identical aggregate+join frame (the duplicate subtrees then also
-    defeat Catalyst exchange reuse heuristics and bloat the plan).
-    Thread-safe: builders of the same key serialize on a per-key lock,
-    so the multi-threaded es_msearch build reuses one frame exactly
-    like the sequential build did."""
-    global _tsmap_cache, _tsmap_locks
-    prev, prev_locks = _tsmap_cache, _tsmap_locks
-    _tsmap_cache, _tsmap_locks = {}, {}
-    try:
-        yield
-    finally:
-        _tsmap_cache, _tsmap_locks = prev, prev_locks
-
-
-def _term_score_map(df: DataFrame, id_field: str, field: str,
-                    terms: set[str], k1: float, b: float,
-                    stats_over: DataFrame | None = None) -> DataFrame:
-    """Per-doc BM25 term partials for one text field, as
-    ``(id, _tsmap_<field>: map<term, double>)`` — the single-pass,
-    filter-before-shuffle shape of ``retrieval.bm25_topk``.
-
-    ``stats_over`` (rescore, VERDICT r8 #4): compute the CORPUS statistics
-    (N, avgdl, per-term df) over that frame while tf/dl — and therefore
-    the tsmap rows the caller joins back — come from ``df`` only.  Lucene
-    rescores window docs against index-wide stats; with ``df`` = the
-    window frame, the corpus contributes ONE 1-row broadcast aggregate
-    (N, avgdl, and each query term's doc frequency as array_contains
-    sums) and the per-doc join is ≤ window rows."""
-    from .analysis import current_analyzer
-
-    if _tsmap_cache is not None and stats_over is None:
-        # id(df) anchors the key to the SOURCE FRAME (ADVICE r12): a
-        # shared_tsmaps() scope spanning scored searches over two
-        # different DataFrames must never serve frame A's term map for
-        # frame B.  The cache value pins df, so its id() cannot be
-        # recycled while the scope lives.
-        cache_key = (id(df), id_field, field, tuple(sorted(terms)), k1, b,
-                     current_analyzer())
-        with _tsmap_guard:
-            hit = _tsmap_cache.get(cache_key)
-            if hit is not None:
-                return hit[1]
-            klock = _tsmap_locks.setdefault(cache_key, threading.Lock())
-        with klock:
-            # double-checked: a concurrent arm may have built this key
-            # while we waited; reuse its frame so the plan shape matches
-            # the sequential build exactly
-            with _tsmap_guard:
-                hit = _tsmap_cache.get(cache_key)
-            if hit is not None:
-                return hit[1]
-            out = _term_score_map_build(df, id_field, field, terms, k1, b,
-                                        None)
-            with _tsmap_guard:
-                # the entry PINS df (value is (df, out)): the id(df) key
-                # component stays valid for the scope's lifetime —
-                # CPython cannot recycle the address of an object the
-                # cache itself keeps alive
-                _tsmap_cache[cache_key] = (df, out)
-            return out
-    return _term_score_map_build(df, id_field, field, terms, k1, b,
-                                 stats_over)
-
-
 def _sqs(s: str) -> str:
     """Spark-SQL single-quoted string literal (expression-string builders
     below — each py4j round trip costs ~0.5 ms, r15)."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _bm25_partial_sql(k1: float, b: float) -> str:
+def _bm25_partial_sql(k1: float, b: float, *, tf: str, dl: str, df: str,
+                      n: str, avgdl: str) -> str:
     """The BM25 per-(doc, term) partial as ONE SQL expression over the
-    ``_tf``/``_dl``/``_df``/``_n_docs``/``_avgdl`` columns — float
-    literals pre-folded in Python exactly like the Column rendering did
-    (``k1 + 1.0`` / ``1.0 - b`` were Python-side constants there too)."""
+    SQL operands ``tf``/``dl``/``df``/``n``/``avgdl`` — float literals
+    pre-folded in Python (``k1 + 1.0`` / ``1.0 - b``), rounded to 6."""
     return (
-        "round(ln(1.0D + (_n_docs - _df + 0.5D) / (_df + 0.5D))"
-        f" * (_tf * {k1 + 1.0!r}D)"
-        f" / (_tf + {k1!r}D * ({1.0 - b!r}D + {b!r}D * _dl / _avgdl)), 6)"
+        f"round(ln(1.0D + ({n} - {df} + 0.5D) / ({df} + 0.5D))"
+        f" * ({tf} * {k1 + 1.0!r}D)"
+        f" / ({tf} + {k1!r}D * ({1.0 - b!r}D + {b!r}D * {dl} / {avgdl})), 6)"
     )
 
 
-def _term_score_map_build(df: DataFrame, id_field: str, field: str,
-                          terms: set[str], k1: float, b: float,
-                          stats_over: DataFrame | None) -> DataFrame:
-    """Uncached plan build behind :func:`_term_score_map`."""
-    toks = _toks_expr(df, field)
-    base = df.select(
-        F.col(id_field).alias("_did"), toks.alias("_toks")
-    ).selectExpr("_did", "_toks", "CAST(size(_toks) AS DOUBLE) AS _dl")
-    in_list = ", ".join(_sqs(t) for t in sorted(terms))
-    hits = (
-        base.selectExpr("_did", "_dl", "explode(_toks) AS _term")
-        .where(F.expr(f"_term IN ({in_list})") if terms else F.lit(False))
-    )
-    tf = hits.groupBy("_did", "_term").agg(
-        F.expr("CAST(count(1) AS DOUBLE) AS _tf"),
-        F.expr("first(_dl) AS _dl"),
-    )
-    if stats_over is None:
-        stats = base.agg(
-            F.expr("CAST(count(1) AS DOUBLE) AS _n_docs"),
-            F.expr("avg(_dl) AS _avgdl"),
-        )
-        dfreq = tf.groupBy("_term").agg(
-            F.expr("CAST(count(1) AS DOUBLE) AS _df"))
-    else:
-        # corpus stats in ONE pass and ONE row: N, avgdl, and every
-        # query term's document frequency as array_contains sums — no
-        # second scan, no vocab shuffle; the row broadcasts
-        sterms = sorted(terms)
-        stats_base = stats_over.select(
-            _toks_expr(stats_over, field).alias("_toks")).selectExpr(
-            "_toks", "CAST(size(_toks) AS DOUBLE) AS _dl"
-        )
-        corpus = stats_base.agg(
-            F.expr("CAST(count(1) AS DOUBLE) AS _n_docs"),
-            F.expr("avg(_dl) AS _avgdl"),
-            *[
-                F.expr(
-                    "CAST(sum(CAST(array_contains(_toks, "
-                    f"{_sqs(t)}) AS INT)) AS DOUBLE) AS _df_{i}")
-                for i, t in enumerate(sterms)
-            ],
-        )
-        stats = corpus.select("_n_docs", "_avgdl")
-        dfreq = corpus.selectExpr(
-            "explode(map_from_arrays("
-            f"array({', '.join(_sqs(t) for t in sterms)}), "
-            f"array({', '.join(f'_df_{i}' for i in range(len(sterms)))})"
-            ")) AS (_term, _df)"
-        )
-    partial = (
-        tf.join(F.broadcast(dfreq), "_term")
-        .crossJoin(F.broadcast(stats))
-        .selectExpr("_did", "_term", f"{_bm25_partial_sql(k1, b)} AS _p")
-    )
-    # sort the entries: collect_list order follows shuffle arrival, and
-    # a nondeterministic key order would leak into the _explanation JSON
-    # (map lookups themselves are order-independent)
-    out = partial.groupBy("_did").agg(
-        F.expr(
-            "map_from_entries(array_sort(collect_list(struct(_term, _p))))"
-            f" AS `{_tsmap_name(field)}`")
-    ).withColumnRenamed("_did", id_field)
-    # cached WITHOUT checkpointing (when the shared_tsmaps wrapper stores
-    # this frame): the consumers union into ONE query, where the
-    # identical (same object = structurally equal) subplan reuses the
-    # first copy's shuffle via ReusedExchange — a checkpoint would
-    # materialize each map as its own serial job and cost more than it
-    # saves (measured)
-    return out
+def bm25_sum_sql(map_col: str, terms) -> str:
+    """Sum of ``terms``' partials read from the term-score map column
+    ``map_col`` (a term the row lacks adds 0).  Partials are rounded to
+    6 decimals, so DECIMAL(28,6) addition is exact and order-independent
+    — what lets an ANSI-SQL oracle reproduce the sum bit-for-bit."""
+    m = "`" + map_col.replace("`", "``") + "`"
+    parts = "".join(f" + CAST(coalesce({m}[{_sqs(t)}], 0.0D)"
+                    " AS DECIMAL(28,6))" for t in terms)
+    return f"CAST(CAST(0 AS DECIMAL(28,6)){parts} AS DOUBLE)"
 
 
-def _xf_term_score_maps(
-    df: DataFrame, id_field: str, fields: tuple[str, ...], terms: set[str],
-    k1: float, b: float, gi: int, stats_over: DataFrame | None = None,
-) -> list[DataFrame]:
-    """Blended-df BM25 partials for one multi_match ``cross_fields``
-    group: one ``(id, _xfmap_<gi>_<field>: map<term, double>)`` frame per
-    field.  Lucene's BlendedTermQuery makes per-field scores comparable
-    by rewriting each term's document frequency to the MAX across the
-    group's fields; tf, dl and avgdl stay per-field (N is the corpus
-    count, identical across fields of one index).
+class CorpusStats:
+    """The corpus statistics of one scored plan as ONE 1-row aggregate,
+    and the per-row BM25 term-score maps rendered over it.
 
-    Scale shape: per field, the same single tokenize+explode pass as
-    ``_term_score_map`` filtered to the query's terms before the
-    per-(doc, term) shuffle; the corpus statistics — N, avgdl, AND every
-    term's per-field df — reduce to ONE 1-row aggregate per field whose
-    union (|fields| × |terms| rows) is the blended-df broadcast.  No
-    extra corpus pass for the blend."""
-    sterms = sorted(terms)
-    in_list = ", ".join(_sqs(t) for t in sterms)
-    per_field: list[tuple[DataFrame, DataFrame]] = []
-    dfreqs: list[DataFrame] = []
-    for f in fields:
-        toks = _toks_expr(df, f)
-        base = df.select(
-            F.col(id_field).alias("_did"), toks.alias("_toks")
-        ).selectExpr("_did", "_toks", "CAST(size(_toks) AS DOUBLE) AS _dl")
-        hits = (
-            base.selectExpr("_did", "_dl", "explode(_toks) AS _term")
-            .where(F.expr(f"_term IN ({in_list})") if sterms else F.lit(False))
-        )
-        tf = hits.groupBy("_did", "_term").agg(
-            F.expr("CAST(count(1) AS DOUBLE) AS _tf"),
-            F.expr("first(_dl) AS _dl"),
-        )
-        src = stats_over if stats_over is not None else df
-        stats_base = src.select(_toks_expr(src, f).alias("_toks")).selectExpr(
-            "_toks", "CAST(size(_toks) AS DOUBLE) AS _dl")
-        corpus = stats_base.agg(
-            F.expr("CAST(count(1) AS DOUBLE) AS _n_docs"),
-            F.expr("avg(_dl) AS _avgdl"),
-            *[
-                F.expr(
-                    "CAST(sum(CAST(array_contains(_toks, "
-                    f"{_sqs(t)}) AS INT)) AS DOUBLE) AS _df_{i}")
-                for i, t in enumerate(sterms)
-            ],
-        )
-        per_field.append((tf, corpus.select("_n_docs", "_avgdl")))
-        dfreqs.append(corpus.selectExpr(
-            "explode(map_from_arrays("
-            f"array({', '.join(_sqs(t) for t in sterms)}), "
-            f"array({', '.join(f'_df_{i}' for i in range(len(sterms)))})"
-            ")) AS (_term, _df)"
-        ))
-    blended = dfreqs[0]
-    for d2 in dfreqs[1:]:
-        blended = blended.unionByName(d2)
-    blended = blended.groupBy("_term").agg(F.max("_df").alias("_df"))
-    maps: list[DataFrame] = []
-    for f, (tf, stats) in zip(fields, per_field):
-        partial = (
-            tf.join(F.broadcast(blended), "_term")
-            .crossJoin(F.broadcast(stats))
-            .selectExpr("_did", "_term",
-                        f"{_bm25_partial_sql(k1, b)} AS _p")
-        )
-        maps.append(
-            partial.groupBy("_did").agg(
-                F.expr(
-                    "map_from_entries(array_sort("
-                    "collect_list(struct(_term, _p))))"
-                    f" AS `_xfmap_{gi}_{f}`")
-            ).withColumnRenamed("_did", id_field)
-        )
-    return maps
+    Lucene scores a document from its own tf and length; the only
+    index-wide inputs are N, avgdl and each term's df.  Callers declare
+    the maps they need (``partial_map``, ``combined_map``) and keyword
+    idf leaves (``idf``); ``attach`` then adds, in three projections
+    over the scored frame:
 
+    - the analyzed token stream of each field, once per row, and the
+      statistics row as a scalar subquery over the corpus frame (Spark
+      merges the scalar subqueries of one query that read the same
+      relation into one aggregate);
+    - each (field, term)'s tf, ``size(toks) - size(array_remove(toks,
+      t))``, and each field's dl — codegen, no lambda;
+    - the declared outputs.  A map holds the row's query terms in sorted
+      order with their ``_bm25_partial_sql`` partials, and is NULL when
+      the row holds none of them.
 
-def _cf_term_score_map(
-    df: DataFrame, id_field: str, fields: tuple[str, ...],
-    boosts: tuple[float, ...], terms: tuple[str, ...],
-    k1: float, b: float, gi: int, stats_over: DataFrame | None = None,
-) -> DataFrame:
-    """BM25F partials for one ``combined_fields`` group, as ONE
-    ``(id, _cfmap_<gi>: map<term, double>)`` frame.  Lucene's
-    CombinedFieldQuery scores a synthetic field whose term frequency is
-    the boost-weighted SUM of the per-field tfs and whose length is the
-    boost-weighted sum of the per-field lengths; document frequency
-    counts docs carrying the term in ANY field.
+    Helper columns are named ``_bm25_*``; ``helpers`` lists them for the
+    caller to drop."""
 
-    Scale shape: ONE tokenize pass over all the group's fields together
-    (each row emits its weighted token stream, term-filtered before the
-    per-(doc, term) shuffle); corpus stats reduce to a 1-row broadcast
-    aggregate exactly like the plain and blended map builders."""
-    sterms = sorted(terms)
+    def __init__(self, k1: float, b: float):
+        self.k1, self.b = k1, b
+        self.fields: list[str] = []      # token streams, by index
+        self.stats: dict = {}            # key -> (struct field, SQL agg)
+        self.cols: dict = {}             # key -> (row column, SQL)
+        self.flags: list[Column] = []    # term-leaf match flags, corpus side
+        self.outs: dict[str, str] = {}   # output column -> SQL
 
-    def _frame_toks(frame):
-        return [_toks_expr(frame, f) for f in fields]
+    def _toks(self, field: str) -> str:
+        if field not in self.fields:
+            self.fields.append(field)
+        return f"_bm25_t{self.fields.index(field)}"
 
-    def _frame_dl(tcols):
-        dl: Column = F.lit(0.0)
-        for tc, w in zip(tcols, boosts):
-            dl = dl + F.size(tc).cast("double") * F.lit(float(w))
-        return dl
+    def _stat(self, key, sql: str) -> str:
+        if key not in self.stats:
+            self.stats[key] = (f"s{len(self.stats)}", sql)
+        return f"_bm25_stats.{self.stats[key][0]}"
 
-    toks_cols = _frame_toks(df)
-    dl_c = _frame_dl(toks_cols)
+    def _col(self, key, sql: str) -> str:
+        if key not in self.cols:
+            self.cols[key] = (f"_bm25_c{len(self.cols)}", sql)
+        return self.cols[key][0]
 
-    def _tag(w: float):
-        # closure factory: a default-arg lambda would look binary to
-        # F.transform and receive the element INDEX as the second arg
-        return lambda x: F.struct(x.alias("_t"), F.lit(float(w)).alias("_w"))
+    def _n(self) -> str:
+        return self._stat("n", "CAST(count(1) AS DOUBLE)")
 
-    weighted = F.flatten(F.array(*[
-        F.transform(tc, _tag(w)) for tc, w in zip(toks_cols, boosts)
-    ]))
-    base = df.select(
-        F.col(id_field).alias("_did"), dl_c.alias("_dl"),
-        weighted.alias("_tw"),
-    )
-    hits = (
-        base.select("_did", "_dl", F.explode("_tw").alias("_e"))
-        .where(F.col("_e._t").isin(sterms))
-    )
-    tf = hits.groupBy("_did", F.col("_e._t").alias("_term")).agg(
-        F.sum("_e._w").alias("_tf"),
-        F.first("_dl").alias("_dl"),
-    )
-    src = stats_over if stats_over is not None else df
-    src_toks = _frame_toks(src)
-    corpus = src.select(_frame_dl(src_toks).alias("_dl"), *[
-        tc.alias(f"_tk_{i}") for i, tc in enumerate(src_toks)
-    ]).agg(
-        F.count(F.lit(1)).cast("double").alias("_n_docs"),
-        F.avg("_dl").alias("_avgdl"),
-        *[
-            F.sum(
-                _any_tk_contains(len(fields), t)
-            ).cast("double").alias(f"_df_{i}")
-            for i, t in enumerate(sterms)
-        ],
-    )
-    stats = corpus.select("_n_docs", "_avgdl")
-    dfreq = corpus.select(
-        F.explode(
-            F.map_from_arrays(
-                F.lit(sterms),
-                F.array(*[F.col(f"_df_{i}") for i in range(len(sterms))]),
-            )
-        ).alias("_term", "_df")
-    )
-    partial = (
-        tf.join(F.broadcast(dfreq), "_term")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "_did", "_term",
-            F.round(
-                F.log(
-                    F.lit(1.0)
-                    + (F.col("_n_docs") - F.col("_df") + 0.5)
-                    / (F.col("_df") + 0.5)
-                )
-                * (F.col("_tf") * (k1 + 1.0))
-                / (F.col("_tf")
-                   + k1 * (1.0 - b + b * F.col("_dl") / F.col("_avgdl"))),
-                6,
-            ).alias("_p"),
-        )
-    )
-    return partial.groupBy("_did").agg(
-        F.map_from_entries(
-            F.array_sort(F.collect_list(F.struct("_term", "_p")))
-        ).alias(f"_cfmap_{gi}")
-    ).withColumnRenamed("_did", id_field)
+    def _tf_sql(self, field: str, term: str) -> str:
+        t = self._toks(field)
+        return (f"CAST(size({t}) - size(array_remove({t}, {_sqs(term)}))"
+                " AS DOUBLE)")
 
+    def _dl_sql(self, field: str) -> str:
+        return f"CAST(size({self._toks(field)}) AS DOUBLE)"
 
-def _any_tk_contains(n_fields: int, term: str) -> Column:
-    """OR of array_contains over the projected ``_tk_<i>`` token columns
-    (combined-field document frequency), as an int for summation."""
-    c = F.array_contains(F.col("_tk_0"), term)
-    for i in range(1, n_fields):
-        c = c | F.array_contains(F.col(f"_tk_{i}"), term)
-    return c.cast("int")
+    def _df(self, fields, term: str) -> str:
+        """Docs holding ``term`` in any of ``fields``."""
+        hit = " OR ".join(f"array_contains({self._toks(f)}, {_sqs(term)})"
+                          for f in fields)
+        return self._stat(("df", tuple(fields), term),
+                          f"CAST(sum(CAST({hit} AS INT)) AS DOUBLE)")
+
+    def _map(self, name: str, entries) -> str:
+        """``entries``: (term, tf column, partial SQL), terms sorted."""
+        items = ", ".join(f"IF({tf} > 0D, struct({_sqs(t)}, {p}), NULL)"
+                          for t, tf, p in entries)
+        hit = " OR ".join(f"{tf} > 0D" for _, tf, _ in entries)
+        self.outs[name] = (f"IF({hit}, map_from_entries(array_compact("
+                           f"array({items}))), NULL)")
+        return name
+
+    def partial_map(self, name: str, field: str, terms, df_fields=None) -> str:
+        """``name`` = map<term, partial> of ``field``.  ``df_fields``
+        blends the df as its MAX over those fields (Lucene's
+        BlendedTermQuery, multi_match ``cross_fields``); tf, dl and avgdl
+        stay ``field``'s own."""
+        dl = self._col(("dl", field), self._dl_sql(field))
+        avgdl = self._stat(("avgdl", field), f"avg({self._dl_sql(field)})")
+        entries = []
+        for t in sorted(terms):
+            dfs = [self._df((f,), t) for f in (df_fields or (field,))]
+            df = dfs[0] if len(dfs) == 1 else f"greatest({', '.join(dfs)})"
+            tf = self._col(("tf", field, t), self._tf_sql(field, t))
+            entries.append((t, tf, _bm25_partial_sql(
+                self.k1, self.b, tf=tf, dl=dl, df=df, n=self._n(),
+                avgdl=avgdl)))
+        return self._map(name, entries)
+
+    def combined_map(self, name: str, fields, boosts, terms) -> str:
+        """``name`` = BM25F map<term, partial> over ``fields`` (Lucene
+        CombinedFieldQuery): tf and dl are the boost-weighted sums of the
+        per-field values, df counts docs holding the term in ANY field."""
+        def wsum(render):
+            return "0.0D" + "".join(f" + {render(f)} * {float(w)!r}D"
+                                    for f, w in zip(fields, boosts))
+
+        key = (tuple(fields), tuple(boosts))
+        dl = self._col(("cfdl", key), wsum(self._dl_sql))
+        avgdl = self._stat(("cfavgdl", key), f"avg({wsum(self._dl_sql)})")
+        entries = []
+        for t in sorted(terms):
+            tf = self._col(("cftf", key, t), " + ".join(
+                f"{self._tf_sql(f, t)} * {float(w)!r}D"
+                for f, w in zip(fields, boosts)))
+            entries.append((t, tf, _bm25_partial_sql(
+                self.k1, self.b, tf=tf, dl=dl, df=self._df(fields, t),
+                n=self._n(), avgdl=avgdl)))
+        return self._map(name, entries)
+
+    def idf(self, name: str, match: Column) -> str:
+        """``name`` = keyword idf of the leaf whose row predicate is
+        ``match`` (tf=1 and dl=avgdl for a keyword, so score = idf)."""
+        i = len(self.flags)
+        self.flags.append(match.cast("int").alias(f"_bm25_f{i}"))
+        n, df = "CAST(count(1) AS DOUBLE)", f"CAST(sum(_bm25_f{i}) AS DOUBLE)"
+        self.outs[name] = self._stat(
+            ("idf", i),
+            f"round(ln(1.0D + ({n} - {df} + 0.5D) / ({df} + 0.5D)), 6)")
+        return name
+
+    @property
+    def helpers(self) -> list[str]:
+        return ["_bm25_stats",
+                *[f"_bm25_t{i}" for i in range(len(self.fields))],
+                *[c for c, _ in self.cols.values()]]
+
+    def attach(self, frame: DataFrame, corpus: DataFrame) -> DataFrame:
+        """``frame`` + the declared outputs (and the helper columns), with
+        the statistics aggregated over ``corpus``."""
+        body = ", ".join(f"{_sqs(k)}, {sql}" for k, sql in self.stats.values())
+        stats = corpus.select(
+            *[_toks_expr(corpus, f).alias(f"_bm25_t{i}")
+              for i, f in enumerate(self.fields)], *self.flags,
+        ).selectExpr(f"named_struct({body})").scalar()
+        out = frame.select(
+            "*", *[_toks_expr(frame, f).alias(f"_bm25_t{i}")
+                   for i, f in enumerate(self.fields)],
+            stats.alias("_bm25_stats"))
+        if self.cols:
+            out = out.selectExpr(
+                "*", *[f"{sql} AS {c}" for c, sql in self.cols.values()])
+        return out.selectExpr("*", *[
+            f"{sql} AS `{name.replace('`', '``')}`"
+            for name, sql in self.outs.items()])
 
 
 def _apply_query_rescore(
@@ -1523,43 +1336,37 @@ def score_frame(
     text field's per-term partial map, and each keyword term leaf's idf —
     the numbers a consumer needs to audit a score.  (Live ES renders a
     Lucene explanation TREE; this compact object form is the documented
-    equivalent for a flat frame.)"""
+    equivalent for a flat frame.)
+
+    Each row is scored from its own tokens against one 1-row statistics
+    aggregate over ``stats_over`` (default ``df``) — no join on
+    ``id_field``.  Ids are unique per frame, as in ES; rows sharing an
+    id are each scored from their own tokens."""
     q = _normalize(query)
     comp = _ScoreCompiler(id_field)
     comp.collect(q)
-    out = df
-    for field, terms in sorted(comp.field_terms.items()):
-        if not terms:
-            continue
-        out = out.join(
-            _term_score_map(df, id_field, field, terms, k1, b, stats_over),
-            id_field, "left",
-        )
-    for gi, (flds, terms) in enumerate(comp.xf_groups):
-        for m in _xf_term_score_maps(df, id_field, flds, set(terms),
-                                     k1, b, gi, stats_over):
-            out = out.join(m, id_field, "left")
-    for gi, (flds, boosts, terms) in enumerate(comp.cf_groups):
-        out = out.join(
-            _cf_term_score_map(df, id_field, flds, boosts, terms,
-                               k1, b, gi, stats_over),
-            id_field, "left",
-        )
-    if comp.term_leaves:
-        # exact-keyword idf per term leaf, all in ONE 1-row aggregate,
-        # broadcast back (score = idf: tf=1 and dl=avgdl for a keyword)
-        n = F.count(F.lit(1)).cast("double")
-        aggs = []
-        for i, (field, value) in enumerate(comp.term_leaves):
-            dfc = F.sum((F.col(field) == F.lit(value)).cast("int")).cast("double")
-            aggs.append(
-                F.round(
-                    F.log(F.lit(1.0) + (n - dfc + 0.5) / (dfc + 0.5)), 6
-                ).alias(f"_idf_{i}")
-            )
-        out = out.crossJoin(F.broadcast(
-            (stats_over if stats_over is not None else df).agg(*aggs)))
     score = F.round(comp.build(q), 6)
+    # attach only the maps the score or the explanation reads: a map
+    # nothing reads would still add the statistics subquery to the plan
+    want = set(comp.reads)
+    if explain:
+        want.update(_tsmap_name(f) for f, ts in comp.field_terms.items() if ts)
+    st = CorpusStats(k1, b)
+    for field, terms in sorted(comp.field_terms.items()):
+        if _tsmap_name(field) in want:
+            st.partial_map(_tsmap_name(field), field, terms)
+    for gi, (flds, terms) in enumerate(comp.xf_groups):
+        for f in flds:
+            if f"_xfmap_{gi}_{f}" in want:
+                st.partial_map(f"_xfmap_{gi}_{f}", f, terms, df_fields=flds)
+    for gi, (flds, boosts, terms) in enumerate(comp.cf_groups):
+        if f"_cfmap_{gi}" in want:
+            st.combined_map(f"_cfmap_{gi}", flds, boosts, terms)
+    for i, (field, value) in enumerate(comp.term_leaves):
+        st.idf(f"_idf_{i}", F.col(field) == F.lit(value))
+    out = df
+    if st.outs:
+        out = st.attach(df, stats_over if stats_over is not None else df)
     out = out.withColumn("_score", score)
     if explain:
         import json as _json
@@ -1578,9 +1385,7 @@ def score_frame(
               for i, (fld, val) in enumerate(comp.term_leaves)],
         ))
         out = out.withColumn("_explanation", expl)
-    drop = [c for c in out.columns
-            if c.startswith(("_tsmap_", "_idf_", "_xfmap_", "_cfmap_"))]
-    return out.drop(*drop)
+    return out.drop(*st.helpers, *st.outs)
 
 
 def es_retriever_search(
@@ -2136,9 +1941,11 @@ def _es_scored_search_impl(
     (WindowGroupLimit); ``highlight`` wraps the query's terms (the query
     is normalized first, so query_string bodies highlight too).
 
-    Top-k compiles to TakeOrderedAndProject over the scored frame — the
-    only data-scale shuffles are the term-partial aggregate (query-term
-    hits only) and one id join per scored text field."""
+    Top-k compiles to TakeOrderedAndProject over the scored frame.  Each
+    row scores from its own tokens; the corpus statistics are one 1-row
+    aggregate (``CorpusStats``), so the only exchange below the top-k is
+    that aggregate's single-row one — no id join, no (doc, term)
+    shuffle."""
     from .query_dsl import (
         _strip_names,
         apply_slice,
@@ -2246,7 +2053,7 @@ def _es_scored_search_impl(
     if rescore is not None:
         # the rescore query's own scoring is DEFERRED until after the
         # window cut (VERDICT r8 #4): only the corpus-wide statistics
-        # need a full pass — the per-doc tsmap join happens on the
+        # need a full pass — the per-row term maps are computed on the
         # ≤ window_size frame below
         rspec = dict(rescore["query"])
         rspec["rescore_query"] = expand_lookups(
@@ -2297,8 +2104,8 @@ def _es_scored_search_impl(
                 f"{offset0 + size0} (hits beyond the window keep their "
                 "original order and never reach this page)"
             )
-        # the window frame has TWO consumers below (the blend projection
-        # and the rescore tf/tsmap subtree) — materialize its ≤
+        # the window frame has TWO consumers below (the first-pass score
+        # and the rescore term maps) — materialize its ≤
         # window_size rows once into a LocalRelation so the first-pass
         # pipeline executes exactly once and nothing stays cached after
         # the call (code-review r9: persist() leaked one cached frame per
@@ -2311,11 +2118,10 @@ def _es_scored_search_impl(
         top = df.sparkSession.createDataFrame(
             top_plan.collect(), top_plan.schema)
         # Lucene rescores WINDOW docs against INDEX-wide stats: tf/dl and
-        # the tsmap join cover the ≤ window_size frame only, while
+        # the term maps cover the ≤ window_size frame only, while
         # stats_over=df contributes N/avgdl/per-term-df as ONE 1-row
-        # broadcast corpus aggregate — no full-corpus id shuffle
-        # (VERDICT r8 #4; plan-asserted in tests/test_scoring.py,
-        # measured in tools/probe_round9.py)
+        # corpus aggregate (VERDICT r8 #4; plan-asserted in
+        # tests/test_scoring.py)
         scored = _apply_query_rescore(
             top, rspec, id_field, k1=k1, b=b, stats_over=_pre_slice)
     if sort_spec:

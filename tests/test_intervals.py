@@ -80,6 +80,34 @@ def test_intervals_all_of(docs):
     assert ids(docs, q2) == [1, 2]
 
 
+def test_intervals_zero_term_match_source_has_no_intervals(docs):
+    # "les" is a french stopword: as in ES, that match source yields no
+    # intervals — all_of then matches nothing, any_of ignores it
+    from hive2es_offline_spark.plans.analysis import using
+
+    les = {"match": {"query": "les"}}
+    bet = {"prefix": {"prefix": "bet"}}
+
+    def all_of(*sources):
+        return {"intervals": {"txt": {"all_of": {
+            "ordered": True, "intervals": list(sources)}}}}
+
+    def any_of(*sources):
+        return {"any_of": {"intervals": list(sources)}}
+
+    with using("french"):
+        assert ids(docs, all_of({"match": {"query": "alpha"}}, bet)) == [1, 3]
+        assert ids(docs, all_of(les, bet)) == []
+        assert ids(docs, all_of(
+            any_of(les, {"match": {"query": "alpha"}}), bet)) == [1, 3]
+        assert ids(docs, all_of(any_of(les, les), bet)) == []
+        assert ids(docs, {"intervals": {"txt": any_of(
+            les, {"prefix": {"prefix": "sig"}})}}) == [6]
+        # a source of two or more terms is still refused
+        with pytest.raises(ValueError, match="single-term"):
+            ids(docs, all_of({"match": {"query": "alpha gamma"}}, bet))
+
+
 def test_intervals_loud_rejections(docs):
     with pytest.raises(ValueError, match="intervals rule"):
         ids(docs, {"intervals": {"txt": {"fuzzy": {"term": "alpha"}}}})

@@ -5,6 +5,11 @@ one Spark job (the bundle write), a repeat read of an unchanged table
 launches none, and a rewritten table is inferred again.  Jobs are
 counted with ``statusTracker`` job ids under a job group.
 
+Spark jobs for BM25 scoring: a scored query reduces its corpus
+statistics to one 1-row aggregate that each row reads, so a scored
+search is a few jobs however many text fields and arms it scores, and
+an ES|QL ``METADATA _score`` build runs none.
+
 py4j round trips for the analysis-chain and positions-clause builds:
 the chain, and a whole phrase, span or intervals clause, is Spark-SQL
 text parsed once, so building it costs a few dozen gateway calls, not
@@ -126,6 +131,67 @@ def test_schema_cache_shared_between_threads():
     assert errors == []
     for s in sessions:
         assert 0 < len(cache._by_session[s]) <= 4
+
+
+def _documents(spark):
+    """The seeded documents corpus, read with a warm schema cache."""
+    read_table(spark, "documents", SF_SMOKE)
+    return read_table(spark, "documents", SF_SMOKE)
+
+
+def _multi_match(mm_type, query, fields, **extra):
+    return {"query": {"multi_match": {
+        "query": query, "fields": fields, "type": mm_type, **extra}},
+        "size": 5, "_source": ["doc_id"]}
+
+
+#: (body, job bound) of one scored search each, build and collect
+SCORED_SEARCHES = {
+    "match": ({"query": {"match": {"text": "merge stream vector"}},
+               "size": 10, "_source": ["doc_id"]}, 3),
+    "cross_fields": (_multi_match(
+        "cross_fields", "merge src3", ["text", "source"],
+        operator="and", tie_breaker=0.3), 3),
+    # no score reads a term map here: no statistics job either
+    "phrase_prefix": (_multi_match("phrase_prefix", "slow sc", ["text"]), 1),
+}
+
+
+@pytest.mark.parametrize("search", sorted(SCORED_SEARCHES))
+def test_scored_search_jobs(spark, search):
+    from hive2es_offline_spark.plans.scoring import es_scored_search
+
+    body, bound = SCORED_SEARCHES[search]
+    docs = _documents(spark)
+    with spark_jobs(spark) as jobs:
+        rows = es_scored_search(docs, body, id_field="doc_id").collect()
+    assert rows
+    assert len(jobs) <= bound, f"{search}: jobs {jobs}"
+
+
+def test_six_arm_multi_match_msearch_jobs(spark):
+    import __spark_entry__ as entry
+
+    _documents(spark)
+    with spark_jobs(spark) as jobs:
+        rows = entry.q_es_multi_match_types(spark, SF_SMOKE).collect()
+    assert {r["mm_type"] for r in rows} >= {"best_fields", "cross_fields"}
+    assert len(jobs) <= 10, f"jobs {jobs}"
+
+
+def test_esql_score_build_runs_no_job(spark):
+    from hive2es_offline_spark.plans.esql import esql
+
+    docs = _documents(spark)
+    with spark_jobs(spark) as jobs:
+        out = esql({"documents": docs}, """
+            FROM documents METADATA _score
+            | WHERE MATCH(text, "merge stream") AND TERM(source, "src3")
+            | WHERE MULTI_MATCH("merge", text, source)
+            | KEEP doc_id, _score | SORT _score DESC, doc_id ASC | LIMIT 5
+        """)
+    assert jobs == []
+    assert out.count() >= 0
 
 
 @contextmanager

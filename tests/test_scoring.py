@@ -1471,10 +1471,11 @@ def test_scored_slice_partitions_and_shares_corpus_stats(corpus):
 
 
 def test_shared_tsmaps_keyed_by_source_frame(spark):
-    # (ADVICE r12) the tsmap cache key now includes the frame identity:
-    # one shared_tsmaps() scope spanning two different corpora must not
-    # serve frame A's BM25 term map for frame B.
-    from hive2es_offline_spark.plans.scoring import shared_tsmaps
+    # scored searches over two different corpora never share corpus
+    # statistics: not when their plans run as one action (Spark merges
+    # the statistics subqueries of one query only over the SAME
+    # relation), and not across the arms of one scored es_msearch each
+    from hive2es_offline_spark.plans.query_dsl import es_msearch
 
     a = spark.createDataFrame(
         [(1, "merge merge merge"), (2, "other words here")],
@@ -1483,17 +1484,25 @@ def test_shared_tsmaps_keyed_by_source_frame(spark):
         [(1, "merge once"), (2, "merge twice still"), (3, "no hit")],
         "doc_id long, text string")
     body = {"query": {"match": {"text": "merge"}}, "size": 10}
-    solo_a = {r["doc_id"]: r["_score"] for r in es_scored_search(
-        a, body, id_field="doc_id").collect()}
-    solo_b = {r["doc_id"]: r["_score"] for r in es_scored_search(
-        b, body, id_field="doc_id").collect()}
-    with shared_tsmaps():
-        got_a = {r["doc_id"]: r["_score"] for r in es_scored_search(
-            a, body, id_field="doc_id").collect()}
-        got_b = {r["doc_id"]: r["_score"] for r in es_scored_search(
-            b, body, id_field="doc_id").collect()}
-    assert got_a == solo_a
-    assert got_b == solo_b  # would inherit frame A's map without the fix
+    solo = {}
+    for tag, frame in (("a", a), ("b", b)):
+        solo[tag] = {r["doc_id"]: r["_score"] for r in es_scored_search(
+            frame, body, id_field="doc_id").collect()}
+    assert solo["a"] != solo["b"]
+    both = es_scored_search(a, body, id_field="doc_id").select(
+        F.lit("a").alias("tag"), "doc_id", "_score").unionByName(
+        es_scored_search(b, body, id_field="doc_id").select(
+            F.lit("b").alias("tag"), "doc_id", "_score"))
+    got = {"a": {}, "b": {}}
+    for r in both.collect():
+        got[r["tag"]][r["doc_id"]] = r["_score"]
+    assert got == solo
+    for tag, frame in (("a", a), ("b", b)):
+        ms = es_msearch(frame, [body, {**body, "size": 5}],
+                        id_field="doc_id", scored=True).collect()
+        for i in (0, 1):
+            assert {r["doc_id"]: r["_score"] for r in ms
+                    if r["request_index"] == i} == solo[tag]
 
 
 def test_sliced_export_resolves_lookups_and_knn_globally(spark):
