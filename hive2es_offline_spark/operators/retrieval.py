@@ -58,7 +58,7 @@ def bm25_topk(
         raise ValueError("query has no terms after analysis")
 
     st = CorpusStats(k1, b)
-    m = st.partial_map("_bm25_map", text_col, terms)
+    m = st.partial_map(text_col, terms)
     ranked = (
         st.attach(docs, docs)
         .where(F.col(m).isNotNull())  # docs holding a query term

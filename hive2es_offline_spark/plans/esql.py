@@ -17,9 +17,11 @@ anti-silent policy):
                                   at plan time); METADATA _score (9.1)
                                   starts _score at 0.0 and each
                                   WHERE's full-text functions ADD
-                                  their clause scores (row-local
-                                  BM25 over a 1-row corpus-stats
-                                  subquery — see _ft_score_contrib);
+                                  their clause scores (the DSL
+                                  scorer's build of the clause:
+                                  row-local BM25 over a 1-row
+                                  corpus-stats subquery — see
+                                  _P._ft);
                                   _id/_version
                                   reject — no flat-frame meaning
 - ``ROW name = <expr>, …``        one-row constant source (full scalar
@@ -465,11 +467,19 @@ class _P:
     def _ft(self, pred: Column, dsl: dict) -> str:
         """Route one full-text WHERE function's predicate through the
         METADATA _score accumulator: when a scored compile is active,
-        record the clause's gated score contribution (collected by
-        _stage_where after the filter applies)."""
+        record the clause's score contribution, collected by
+        _stage_where after the filter applies.  The contribution is the
+        DSL scorer's build of the clause (plans/scoring._ScoreCompiler),
+        which gates on ``pred`` rather than compiling it again.  The
+        statistics it reads are declared on the stage's
+        ``CorpusStats``, which _stage_where attaches."""
         if _SCORE_CTX is not None:
+            from .scoring import CorpusStats, _ScoreCompiler
+
+            if getattr(self, "scorer", None) is None:
+                self.scorer = _ScoreCompiler("_id", CorpusStats(1.2, 0.75))
             contribs = getattr(self, "score_contribs", None) or []
-            contribs.append(_ft_score_contrib(self, dsl, pred))
+            contribs.append(self.scorer.build(dsl, pred))
             self.score_contribs = contribs
         return self._bridge(pred)
 
@@ -935,7 +945,7 @@ class _P:
             # Live ES restricts full-text functions to WHERE; the same
             # rule applies here.  Under ``FROM … METADATA _score``
             # (9.1) MATCH/MATCH_PHRASE/TERM/MULTI_MATCH additionally
-            # contribute their clause scores (_ft_score_contrib);
+            # contribute their clause scores (_P._ft);
             # QSTR/KQL stay filter-only and reject in a scored query.
             if not getattr(self, "in_where", False):
                 raise ValueError(
@@ -1948,64 +1958,10 @@ def _name_list(p: _P) -> list[str]:
 #: esql() for the span of ONE compilation when the query declares
 #: ``FROM … METADATA _score`` — {"src": the FROM-time frame (corpus
 #: statistics are INDEX-wide, the engine's stats_over convention)}.
-#: Single-threaded per call, reset in a finally.
+#: While it is set, each WHERE's full-text functions score through one
+#: DSL score compiler per stage (_P._ft).  Single-threaded per call,
+#: reset in a finally.
 _SCORE_CTX: dict | None = None
-
-
-def _ft_bm25_sum(stats, field: str, terms: list[str]) -> Column:
-    """Row-local BM25 sum for ``terms`` over ``field`` — the DSL
-    scorer's construction (plans/scoring.CorpusStats: tf/dl from THIS
-    row's analyzed tokens, N/avgdl/df from one 1-row corpus aggregate,
-    k1=1.2, b=0.75, per-partial round-6, DECIMAL(28,6) sum).  No id
-    column needed, so it serves ES|QL frames that have no document
-    identity."""
-    from .scoring import bm25_sum_sql
-
-    terms = sorted(set(terms))
-    if not terms:
-        return F.lit(0.0)
-    m = stats.partial_map(f"_bm25_m{len(stats.outs)}", field, terms)
-    return F.expr(bm25_sum_sql(m, terms))
-
-
-def _ft_score_contrib(p: "_P", dsl: dict, pred: Column) -> Column:
-    """METADATA _score contribution of ONE full-text WHERE function:
-    the clause's relevance when its predicate matches, else 0 (Lucene's
-    sum-over-matching-clauses).  match/match_phrase = the BM25 term
-    sum (phrase scored by its terms — the es_rescore phrase-replay
-    convention); term = keyword idf (tf=1, dl=avgdl — the DSL term-leaf
-    convention); multi_match = best_fields max over per-field sums.
-    The statistics the clause reads are declared on the stage's
-    ``CorpusStats`` (``p.score_stats``), which _stage_where attaches."""
-    from .scoring import CorpusStats
-
-    stats = getattr(p, "score_stats", None)
-    if stats is None:
-        stats = p.score_stats = CorpusStats(1.2, 0.75)
-    (kind, spec), = dsl.items()
-    if kind in ("match", "match_phrase"):
-        (field, query), = spec.items()
-        score = _ft_bm25_sum(stats, field, _es_analyze_text(str(query)))
-    elif kind == "term":
-        (field, value), = spec.items()
-        score = F.col(stats.idf(f"_bm25_i{len(stats.outs)}",
-                                F.col(field) == F.lit(value)))
-    elif kind == "multi_match":
-        terms = _es_analyze_text(str(spec["query"]))
-        sums = [_ft_bm25_sum(stats, f, terms) for f in spec["fields"]]
-        score = F.greatest(*sums) if len(sums) > 1 else sums[0]
-    else:
-        raise ValueError(
-            f"ES|QL: {kind.upper()} cannot contribute to METADATA "
-            "_score — score with MATCH/MATCH_PHRASE/TERM/MULTI_MATCH "
-            "(QSTR/KQL compile to filter-only predicates here)")
-    return F.when(pred, score).otherwise(F.lit(0.0))
-
-
-def _es_analyze_text(q: str) -> list[str]:
-    from .analysis import analyze_text
-
-    return analyze_text(q)
 
 
 def _stage_where(df: DataFrame, p: _P) -> DataFrame:
@@ -2024,8 +1980,9 @@ def _stage_where(df: DataFrame, p: _P) -> DataFrame:
         # clause score gated on its own predicate, so the addition is
         # order-exact and oracle-replayable.  Their corpus statistics
         # are one 1-row aggregate over the FROM-time frame
-        stats = getattr(p, "score_stats", None)
-        if stats is not None and stats.outs:
+        scorer = getattr(p, "scorer", None)
+        stats = scorer.stats if scorer is not None else None
+        if stats is not None and stats.names:
             out = stats.attach(out, _SCORE_CTX["src"])
         total = contribs[0]
         for c in contribs[1:]:
@@ -2033,7 +1990,7 @@ def _stage_where(df: DataFrame, p: _P) -> DataFrame:
         out = out.withColumn(
             "_score", F.round(F.col("_score") + total, 6))
         if stats is not None:
-            out = out.drop(*stats.helpers, *stats.outs)
+            out = out.drop(*stats.helpers, *stats.names)
     return out
 
 
@@ -2956,7 +2913,7 @@ def esql(tables: Mapping[str, DataFrame], query: str, *,
         if "_score" in want_meta:
             # ES|QL 9.1 scored search: _score starts at 0.0 and each
             # WHERE's full-text functions ADD their clause scores
-            # (_stage_where / _ft_score_contrib); corpus statistics
+            # (_P._ft / _stage_where); corpus statistics
             # are index-wide = this FROM-time frame
             if "_score" in df.columns:
                 raise ValueError(

@@ -5445,6 +5445,34 @@ def _mlt_to_bool(df: DataFrame, body: dict, id_field: str) -> dict:
     return {"bool": {"should": should, "minimum_should_match": 1}}
 
 
+#: text clauses keyed by the field they analyze, and those that list
+#: their fields under "fields"
+_FIELD_KEYED_TEXT = ("match", "match_phrase", "match_phrase_prefix",
+                     "match_bool_prefix")
+_FIELD_LISTING_TEXT = ("multi_match", "combined_fields")
+
+
+def _text_clause_fields(node) -> set[str]:
+    """The fields the text clauses anywhere in ``node`` analyze, with a
+    search_as_you_type subfield (``text._2gram``) mapped to its root."""
+    from .analysis import sayt_subfield
+
+    found: set[str] = set()
+    if isinstance(node, list):
+        for c in node:
+            found |= _text_clause_fields(c)
+    elif isinstance(node, dict):
+        for k, v in node.items():
+            if k in _FIELD_KEYED_TEXT and isinstance(v, dict):
+                found.update(str(f) for f in v)
+            elif k in _FIELD_LISTING_TEXT and isinstance(v, dict):
+                found.update(str(f).partition("^")[0]
+                             for f in v.get("fields", []))
+            else:
+                found |= _text_clause_fields(v)
+    return {(sayt_subfield(f) or (f,))[0] for f in found}
+
+
 def es_msearch(
     df: DataFrame,
     bodies: list[dict],
@@ -5478,39 +5506,29 @@ def es_msearch(
         raise ValueError("_msearch needs at least one body")
     if scored and len(bodies) > 1:
         # shared analysis across the request's score trees (VERDICT r11
-        # #7): N scored bodies each re-tokenize every scored field — the
-        # term-score maps read a materialized __analyzed__<field>
-        # column instead when the frame carries one, so the tokenize
-        # runs ONCE per field for the whole request (checkpointed; see
-        # with_shared_analysis).  Field discovery walks each body's
-        # normalized clause tree with the same collector the score
-        # compiler uses; any body the collector cannot digest here
-        # (lookup forms that need expansion, unsupported sugar) simply
-        # disables the sharing — the per-body compile below remains the
-        # correctness path.
+        # #7): N scored bodies each re-tokenize every text field — the
+        # hit filters and the corpus statistics read a materialized
+        # __analyzed__<field> column instead when the frame carries one,
+        # so the tokenize runs ONCE per field for the whole request
+        # (checkpointed; see with_shared_analysis).  The fields are the
+        # ones the bodies' text clauses name (_text_clause_fields); a
+        # field no arm ends up tokenizing costs one extra column, never
+        # a wrong score.  A body that does not normalize here (bad
+        # query-string sugar) disables the sharing — the per-body
+        # compile below raises the real error.
         from .analysis import using
-        from .scoring import _normalize, _ScoreCompiler, with_shared_analysis
+        from .scoring import _normalize, with_shared_analysis
 
-        fields: set[str] = set()
-        with using(analyzer):
-            # collect under the REQUEST's analyzer: term sets (and
-            # therefore which fields score at all) depend on the grammar
-            # — ambient-default collection could skip a shared field or
-            # materialize one no arm reads (code-review r12)
-            try:
-                for b in bodies:
-                    comp = _ScoreCompiler(id_field)
-                    comp.collect(
-                        _normalize(b.get("query", {"match_all": {}})))
-                    fields.update(
-                        f for f, ts in comp.field_terms.items() if ts)
-                    fields.update(
-                        f for flds, _ in comp.xf_groups for f in flds)
-                    fields.update(f for flds, _, _ in comp.cf_groups
-                                  for f in flds)
-            except Exception:
-                fields = set()
-            if fields:
+        try:
+            fields = set().union(*(
+                _text_clause_fields(
+                    _normalize(b.get("query", {"match_all": {}})))
+                for b in bodies))
+        except Exception:
+            fields = set()
+        fields &= set(df.columns)
+        if fields:
+            with using(analyzer):
                 df = with_shared_analysis(df, fields)
 
     def build(i: int, b: dict) -> DataFrame:

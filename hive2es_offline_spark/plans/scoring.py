@@ -104,7 +104,7 @@ _CONSTANT_ONE_KINDS = {
 
 def _normalize(q: dict) -> dict:
     """Expand query_string/simple_query_string into plain clause trees so
-    the collector and the score builder see one grammar."""
+    the score builder and the hit filter see one grammar."""
     (kind, body), = q.items()
     if kind == "wrapper":
         import base64 as _b64
@@ -152,134 +152,63 @@ def _normalize(q: dict) -> dict:
     return q
 
 
+#: score-tree nodes whose score needs no match predicate of their own:
+#: they score through their children (a non-``cross_fields``
+#: ``multi_match`` through its per-field clauses), and the caller's hit
+#: filter compiles — and so validates — the whole tree anyway
+_UNGATED_KINDS = {"match_all", "dis_max", "pinned", "function_score",
+                  "boosting", "semantic", "weighted_tokens"}
+
+
+def _dis_max(parts: list[Column], tie: float) -> Column:
+    """ES's dis_max combine: the best part plus ``tie`` times the sum of
+    the others."""
+    best = F.greatest(*parts) if len(parts) > 1 else parts[0]
+    if tie and len(parts) > 1:
+        total = parts[0]
+        for p in parts[1:]:
+            total = total + p
+        best = best + F.lit(tie) * (total - best)
+    return best
+
+
 class _ScoreCompiler:
-    """Two-pass walk of a normalized query tree: ``collect`` gathers the
-    BM25 text-field terms and keyword-idf leaves; ``build`` emits the
-    score Column over the per-field term-score map columns and the idf
-    columns, and records in ``reads`` the map columns it reads, which
-    the caller then attaches."""
+    """One walk of a normalized query tree: ``build`` emits the score
+    Column and, as each arm reads a corpus statistic (a term-score map or
+    a keyword idf), declares it on ``stats``.  ``stats.attach`` then
+    renders exactly what the score reads.
 
-    def __init__(self, id_field: str):
+    A node's own match predicate is compiled only where the node gates on
+    it; ``pred`` hands ``build`` the root's predicate when the caller has
+    compiled it already (ES|QL's full-text WHERE functions)."""
+
+    def __init__(self, id_field: str, stats: "CorpusStats"):
         self.id_field = id_field
-        self.field_terms: dict[str, set[str]] = {}   # text field -> terms
-        self.term_leaves: list[tuple[str, object]] = []  # (field, value)
-        #: cross_fields groups: (fields-tuple, sorted-terms-tuple) — each
-        #: gets blended-df maps ``_xfmap_<gi>_<field>`` from score_frame
-        self.xf_groups: list[tuple[tuple[str, ...], tuple[str, ...]]] = []
-        #: combined_fields groups: (fields, boosts, sorted terms) — each
-        #: gets ONE BM25F map ``_cfmap_<gi>`` from score_frame
-        self.cf_groups: list[
-            tuple[tuple[str, ...], tuple[float, ...], tuple[str, ...]]
-        ] = []
-        #: term-score map columns the built score reads
-        self.reads: set[str] = set()
+        self.stats = stats
 
-    # -- pass 1 -------------------------------------------------------------
-    def collect(self, q: dict) -> None:
+    def build(self, q: dict, pred: Column | None = None) -> Column:
         (kind, body), = q.items()
-        if kind in ("match", "match_phrase"):
-            field, raw = next(iter(body.items()))
-            query = raw["query"] if isinstance(raw, dict) else raw
-            self.field_terms.setdefault(field, set()).update(
-                _analyze_terms(str(query))
-            )
-        elif kind == "multi_match":
-            mm_type = str(body.get("type", "best_fields"))
-            terms = _analyze_terms(str(body["query"]))
-            if mm_type == "cross_fields":
-                # term-centric: one blended-df map group, not per-field
-                # plain maps (per-field idf would break cross-field
-                # score comparability — the point of df blending)
-                from .query_dsl import _split_field_boosts
-
-                flds = tuple(_split_field_boosts(body["fields"])[0])
-                key = (flds, tuple(sorted(set(terms))))
-                if key[1] and key not in self.xf_groups:
-                    self.xf_groups.append(key)
-            elif mm_type == "bool_prefix":
-                # only the full terms score BM25; the trailing prefix is
-                # a constant-score clause (Lucene prefix rewrite).  A
-                # search_as_you_type shingle subfield collects SHINGLE
-                # terms (its own "analyzer"), round 13
-                from .analysis import sayt_subfield, shingle_terms
-
-                for f in body["fields"]:
-                    fname = str(f).partition("^")[0]
-                    sub = sayt_subfield(fname)
-                    ft = (shingle_terms(terms, sub[1]) if sub is not None
-                          else terms)
-                    full = list(dict.fromkeys(ft[:-1])) if ft else []
-                    self.field_terms.setdefault(fname, set()).update(full)
-            else:
-                for f in body["fields"]:
-                    self.field_terms.setdefault(
-                        str(f).partition("^")[0], set()).update(terms)
-        elif kind == "match_bool_prefix":
-            from .analysis import sayt_subfield, shingle_terms
-
-            field, raw = next(iter(body.items()))
-            query = raw["query"] if isinstance(raw, dict) else raw
-            terms = _analyze_terms(str(query))
-            sub = sayt_subfield(field)
-            if sub is not None:
-                terms = shingle_terms(terms, sub[1])
-            if len(terms) > 1:
-                self.field_terms.setdefault(field, set()).update(terms[:-1])
-        elif kind == "combined_fields":
-            from .query_dsl import _split_field_boosts
-
-            flds, boosts = _split_field_boosts(body["fields"], min_boost=1.0)
-            terms = tuple(sorted(set(_analyze_terms(str(body["query"])))))
-            key = (tuple(flds), tuple(boosts), terms)
-            if terms and key not in self.cf_groups:
-                self.cf_groups.append(key)
-        elif kind == "term":
-            field, raw = next(iter(body.items()))
-            value = raw["value"] if isinstance(raw, dict) else raw
-            if (field, value) not in self.term_leaves:
-                self.term_leaves.append((field, value))
-        elif kind == "bool":
-            for sec in ("must", "should"):
-                for c in body.get(sec, []):
-                    self.collect(c)
-            # filter / must_not never contribute score — nothing to collect
-        elif kind == "constant_score":
-            pass  # inner filter scores 0; only the boost surfaces
-        elif kind == "dis_max":
-            for c in body["queries"]:
-                self.collect(c)
-        elif kind == "function_score":
-            self.collect(body["query"])
-        elif kind == "script_score":
-            self.collect(body["query"])
-        elif kind == "pinned":
-            self.collect(body["organic"])
-        elif kind == "boosting":
-            self.collect(body["positive"])
-            # the negative query is only a gate — its own score is unused
-        elif kind == "knn":
+        if kind == "knn":
             raise ValueError(
                 "knn has its own scored path in es_search — not valid here"
             )
+        if pred is None and kind not in _UNGATED_KINDS and not (
+                kind == "multi_match"
+                and body.get("type", "best_fields") != "cross_fields"):
+            # compiled before the arm runs: compile_query also validates
+            pred = compile_query(q, self.id_field)
 
-    # -- pass 2 -------------------------------------------------------------
-    def build(self, q: dict) -> Column:
-        (kind, body), = q.items()
-        pred = F.coalesce(compile_query(q, self.id_field), F.lit(False))
+        def gate(score: Column) -> Column:
+            """``score`` where this node matches, else 0."""
+            return F.when(pred, score).otherwise(F.lit(0.0))
+
         if kind == "match_all":
             return F.lit(float(body.get("boost", 1.0)))
-        if kind == "match":
+        if kind in ("match", "match_phrase"):
             field, raw = next(iter(body.items()))
             spec = raw if isinstance(raw, dict) else {"query": raw}
             boost = float(spec.get("boost", 1.0))
-            return F.when(pred, self._bm25(field, str(spec["query"])) * boost
-                          ).otherwise(F.lit(0.0))
-        if kind == "match_phrase":
-            field, raw = next(iter(body.items()))
-            spec = raw if isinstance(raw, dict) else {"query": raw}
-            boost = float(spec.get("boost", 1.0))
-            return F.when(pred, self._bm25(field, str(spec["query"])) * boost
-                          ).otherwise(F.lit(0.0))
+            return gate(self._bm25(field, str(spec["query"]), boost))
         if kind == "match_bool_prefix":
             # bool of term queries + trailing prefix: the full terms sum
             # their BM25 partials; the prefix clause contributes the
@@ -302,7 +231,7 @@ class _ScoreCompiler:
                 # the scored terms and the prefix clause read shingles
                 terms = shingle_terms(terms, sub[1])
             if not terms:
-                return F.when(pred, F.lit(boost)).otherwise(F.lit(0.0))
+                return gate(F.lit(boost))
             full = list(dict.fromkeys(terms[:-1]))
             root = sub[0] if sub is not None else field
             pre = preanalyzed_stream(root)
@@ -315,7 +244,7 @@ class _ScoreCompiler:
             prefix = F.exists(toks, lambda x: x.startswith(last))
             score = (self._bm25_terms(field, full)
                      + F.when(prefix, F.lit(1.0)).otherwise(F.lit(0.0)))
-            return F.when(pred, score * boost).otherwise(F.lit(0.0))
+            return gate(score * boost)
         if kind == "multi_match":
             boost = float(body.get("boost", 1.0))
             tie = float(body.get("tie_breaker", 0.0))
@@ -332,26 +261,16 @@ class _ScoreCompiler:
                 flds, boosts = _split_field_boosts(body["fields"])
                 terms = sorted(set(_analyze_terms(str(body["query"]))))
                 if not terms:
-                    return F.when(pred, F.lit(boost)).otherwise(F.lit(0.0))
-                gi = self.xf_groups.index((tuple(flds), tuple(terms)))
-                self.reads.update(f"_xfmap_{gi}_{f}" for f in flds)
+                    return gate(F.lit(boost))
+                maps = [self.stats.partial_map(f, terms, df_fields=flds)
+                        for f in flds]
                 total: Column = F.lit(0).cast("decimal(28,6)")
                 for t in terms:
-                    per_f = [
-                        F.coalesce(
-                            F.col(f"_xfmap_{gi}_{f}").getItem(t), F.lit(0.0)
-                        ) * F.lit(fb)
-                        for f, fb in zip(flds, boosts)
-                    ]
-                    best = F.greatest(*per_f) if len(per_f) > 1 else per_f[0]
-                    if tie and len(per_f) > 1:
-                        tsum = per_f[0]
-                        for p in per_f[1:]:
-                            tsum = tsum + p
-                        best = best + F.lit(tie) * (tsum - best)
+                    best = _dis_max([
+                        F.coalesce(F.col(m).getItem(t), F.lit(0.0)) * F.lit(fb)
+                        for m, fb in zip(maps, boosts)], tie)
                     total = total + F.round(best, 6).cast("decimal(28,6)")
-                return F.when(pred, total.cast("double") * F.lit(boost)
-                              ).otherwise(F.lit(0.0))
+                return gate(total.cast("double") * F.lit(boost))
             per = []
             for f in body["fields"]:
                 f2, _, fb = str(f).partition("^")
@@ -397,19 +316,13 @@ class _ScoreCompiler:
                 for p in per[1:]:
                     total = total + p
                 return total * F.lit(boost)
-            best = F.greatest(*per) if len(per) > 1 else per[0]
-            if tie and len(per) > 1:
-                total = per[0]
-                for p in per[1:]:
-                    total = total + p
-                best = best + F.lit(tie) * (total - best)
-            return best * F.lit(boost)
+            return _dis_max(per, tie) * F.lit(boost)
         if kind == "term":
             field, raw = next(iter(body.items()))
             value = raw["value"] if isinstance(raw, dict) else raw
             boost = float(raw.get("boost", 1.0)) if isinstance(raw, dict) else 1.0
-            i = self.term_leaves.index((field, value))
-            return F.when(pred, F.col(f"_idf_{i}") * boost).otherwise(F.lit(0.0))
+            idf = self.stats.idf(field, value)
+            return gate(F.expr(f"{idf} * {boost!r}D"))
         if kind == "bool":
             parts: list[Column] = []
             for c in body.get("must", []):
@@ -419,7 +332,7 @@ class _ScoreCompiler:
             if not parts:
                 # filter/must_not-only bool: constant 1.0 like ES's
                 # ConstantScore(…) rewrite of a pure-filter query
-                return F.when(pred, F.lit(1.0)).otherwise(F.lit(0.0))
+                return gate(F.lit(1.0))
             out = parts[0]
             for p in parts[1:]:
                 out = out + p
@@ -428,27 +341,18 @@ class _ScoreCompiler:
             # when individual should-children match (code-review r8: the
             # ungated sum leaked a non-matching inner bool's child scores
             # into a matching outer should)
-            return F.when(pred, out).otherwise(F.lit(0.0))
+            return gate(out)
         if kind == "constant_score":
-            return F.when(pred, F.lit(float(body.get("boost", 1.0)))
-                          ).otherwise(F.lit(0.0))
+            return gate(F.lit(float(body.get("boost", 1.0))))
         if kind == "dis_max":
-            subs = [self.build(c) for c in body["queries"]]
-            tie = float(body.get("tie_breaker", 0.0))
-            best = F.greatest(*subs) if len(subs) > 1 else subs[0]
-            if tie and len(subs) > 1:
-                total = subs[0]
-                for s in subs[1:]:
-                    total = total + s
-                best = best + F.lit(tie) * (total - best)
-            return best
+            return _dis_max([self.build(c) for c in body["queries"]],
+                            float(body.get("tie_breaker", 0.0)))
         if kind == "script":
             # constant-scored like every structural clause, but script's
             # boost is a SIBLING of the "script" key (the generic
             # constant-kind extraction would read the inner spec and
             # silently drop it — code-review r10)
-            boost = float(body.get("boost", 1.0))
-            return F.when(pred, F.lit(boost)).otherwise(F.lit(0.0))
+            return gate(F.lit(float(body.get("boost", 1.0))))
         if kind == "pinned":
             # ES pinned: the listed ids sort ABOVE every organic hit, in
             # list order — live ES pins with scores descending from
@@ -469,20 +373,17 @@ class _ScoreCompiler:
             # tf and dl are per-field values weighted by the field
             # boosts and SUMMED into one synthetic field; df counts docs
             # where the term appears in ANY field.  Per-term partials
-            # come from the group's single ``_cfmap_<gi>`` map; terms
+            # come from the group's single ``_cfmap_*`` map; terms
             # sum decimal-rounded like every BM25 family member
             from .query_dsl import _split_field_boosts
 
             flds, boosts = _split_field_boosts(body["fields"], min_boost=1.0)
             terms = tuple(sorted(set(_analyze_terms(str(body["query"])))))
-            if not terms:
-                return F.when(pred, F.lit(float(body.get("boost", 1.0)))
-                              ).otherwise(F.lit(0.0))
-            gi = self.cf_groups.index((tuple(flds), tuple(boosts), terms))
-            self.reads.add(f"_cfmap_{gi}")
-            total = F.expr(bm25_sum_sql(f"_cfmap_{gi}", terms))
             boost = float(body.get("boost", 1.0))
-            return F.when(pred, total * F.lit(boost)).otherwise(F.lit(0.0))
+            if not terms:
+                return gate(F.lit(boost))
+            m = self.stats.combined_map(flds, boosts, terms)
+            return gate(F.expr(bm25_sum_sql(m, terms)) * F.lit(boost))
         if kind == "rank_feature":
             # ES rank_feature: a monotonic function of a positive
             # numeric feature field — saturation x/(x+pivot) (pivot
@@ -526,8 +427,7 @@ class _ScoreCompiler:
                                            + F.lit(pv ** ex))
             else:
                 s = x
-            return F.when(pred, F.round(s * F.lit(boost), 6)
-                          ).otherwise(F.lit(0.0))
+            return gate(F.round(s * F.lit(boost), 6))
         if kind == "distance_feature":
             # ES distance_feature: boost * pivot / (pivot + distance)
             # from origin — geo (haversine meters) or date
@@ -585,8 +485,7 @@ class _ScoreCompiler:
                     - F.unix_millis(ocol)
                 ).cast("double")
             s = F.lit(float(pv)) / (F.lit(float(pv)) + dist)
-            return F.when(pred, F.round(s * F.lit(boost), 6)
-                          ).otherwise(F.lit(0.0))
+            return gate(F.round(s * F.lit(boost), 6))
         if kind == "max_sim":
             # late-interaction maxSim (ES rank_vectors
             # maxSimDotProduct): Σ over QUERY vectors of the best dot
@@ -626,19 +525,17 @@ class _ScoreCompiler:
                                         6).cast("decimal(28,6)")
             boost = float(body.get("boost", 1.0))
             score = total.cast("double") * F.lit(boost)
-            return F.when(
-                pred,
+            return gate(
                 F.when(bad_dim, F.raise_error(F.concat(
                     F.lit(f"max_sim: doc vector dimension != {dim} "
                           f"(query_vectors dimension) on field "),
                     F.lit(str(body["field"])))).cast("double"))
-                .otherwise(score)
-            ).otherwise(F.lit(0.0))
+                .otherwise(score))
         if kind == "semantic":
             # semantic_text stand-in: the standard analysis chain IS
             # the "inference" — distinct query tokens at weight 1.0,
             # rewritten onto sparse_vector (validation in the filter
-            # branch, which compile_query already ran).  NOTE: use the
+            # branch, which the caller's hit filter runs).  NOTE: use the
             # module-level _analyze_terms (= analysis.analyze_text,
             # identical to query_dsl's wrapper) — a local import here
             # would shadow the name for the WHOLE method and break the
@@ -651,8 +548,8 @@ class _ScoreCompiler:
                 **({"boost": body["boost"]} if "boost" in body else {})}})
         if kind == "weighted_tokens":
             # field-keyed precursor of sparse_vector — rewrite and
-            # recurse (validation lives in the filter branch, which
-            # compile_query already ran for this clause's predicate)
+            # recurse (validation lives in the filter branch, which the
+            # caller's hit filter runs)
             from .query_dsl import _field_spec
 
             field, spec = _field_spec(body)
@@ -678,8 +575,7 @@ class _ScoreCompiler:
                     F.coalesce(m.getItem(str(t)), F.lit(0.0))
                     * F.lit(float(qv[t])), 6).cast("decimal(28,6)")
             boost = float(body.get("boost", 1.0))
-            return F.when(pred, total.cast("double") * F.lit(boost)
-                          ).otherwise(F.lit(0.0))
+            return gate(total.cast("double") * F.lit(boost))
         if kind == "function_score":
             return self._function_score(body)
         if kind == "script_score":
@@ -696,8 +592,7 @@ class _ScoreCompiler:
                 )
             inner = self.build(body["query"])
             v = _script_score(body, inner)
-            return F.when(pred, F.round(v * F.lit(float(body.get("boost", 1.0))),
-                                        6)).otherwise(F.lit(0.0))
+            return gate(F.round(v * F.lit(float(body.get("boost", 1.0))), 6))
         if kind == "boosting":
             # ES boosting: positive score, multiplied by negative_boost
             # when the negative query matches (demotion, never exclusion)
@@ -710,19 +605,24 @@ class _ScoreCompiler:
         if kind in _CONSTANT_ONE_KINDS:
             spec = next(iter(body.values()))
             boost = float(spec.get("boost", 1.0)) if isinstance(spec, dict) else 1.0
-            return F.when(pred, F.lit(boost)).otherwise(F.lit(0.0))
+            return gate(F.lit(boost))
         raise ValueError(f"unsupported clause in score context: {kind}")
 
-    def _bm25(self, field: str, query: str) -> Column:
-        """Sum of the per-term partials from this doc's term-score map for
-        ``field`` (the ``_tsmap_<field>`` column score_frame attaches)."""
-        return self._bm25_terms(field, sorted(set(_analyze_terms(query))))
+    def _bm25(self, field: str, query: str, boost: float) -> Column:
+        """``boost`` times the sum of the per-term partials from this
+        doc's term-score map for ``field`` (the ``_tsmap_<field>`` column
+        ``stats`` renders), as one SQL expression."""
+        terms = sorted(set(_analyze_terms(query)))
+        if not terms:
+            return F.lit(0.0) * boost
+        m = self.stats.partial_map(field, terms)
+        return F.expr(f"{bm25_sum_sql(m, terms)} * {boost!r}D")
 
     def _bm25_terms(self, field: str, terms: list[str]) -> Column:
         if not terms:
             return F.lit(0.0)
-        self.reads.add(_tsmap_name(field))
-        return F.expr(bm25_sum_sql(_tsmap_name(field), terms))
+        return F.expr(bm25_sum_sql(self.stats.partial_map(field, terms),
+                                   terms))
 
     # -- function_score ------------------------------------------------------
     def _function_score(self, body: dict) -> Column:
@@ -1136,9 +1036,11 @@ class CorpusStats:
 
     Lucene scores a document from its own tf and length; the only
     index-wide inputs are N, avgdl and each term's df.  Callers declare
-    the maps they need (``partial_map``, ``combined_map``) and keyword
-    idf leaves (``idf``); ``attach`` then adds, in three projections
-    over the scored frame:
+    the maps they read (``partial_map``, ``combined_map``) and keyword
+    idf leaves (``idf``); each declaration returns the output column's
+    name, and a map declared again gains the new terms.  ``attach``
+    renders the declarations and adds, in three projections over the
+    scored frame:
 
     - the analyzed token stream of each field, once per row, and the
       statistics row as a scalar subquery over the corpus frame (Spark
@@ -1150,16 +1052,57 @@ class CorpusStats:
       order with their ``_bm25_partial_sql`` partials, and is NULL when
       the row holds none of them.
 
-    Helper columns are named ``_bm25_*``; ``helpers`` lists them for the
-    caller to drop."""
+    Helper columns are named ``_bm25_*``; ``helpers`` lists them and
+    ``names`` the outputs, for the caller to drop."""
 
     def __init__(self, k1: float, b: float):
         self.k1, self.b = k1, b
+        #: (kind, field(s), df fields | boosts) -> (output column, terms)
+        self.maps: dict = {}
+        self.idfs: list = []             # (field, value) -> _idf_<index>
         self.fields: list[str] = []      # token streams, by index
         self.stats: dict = {}            # key -> (struct field, SQL agg)
         self.cols: dict = {}             # key -> (row column, SQL)
-        self.flags: list[Column] = []    # term-leaf match flags, corpus side
-        self.outs: dict[str, str] = {}   # output column -> SQL
+
+    def _declare(self, spec, name: str, terms) -> str:
+        name, held = self.maps.setdefault(spec, (name, set()))
+        held.update(terms)
+        return name
+
+    def partial_map(self, field: str, terms, df_fields=None) -> str:
+        """map<term, partial> of ``field``.  ``df_fields`` blends the df
+        as its MAX over those fields (Lucene's BlendedTermQuery,
+        multi_match ``cross_fields``); tf, dl and avgdl stay ``field``'s
+        own."""
+        if df_fields:
+            return self._declare(("tf", field, tuple(df_fields)),
+                                 f"_xfmap_{len(self.maps)}", terms)
+        return self._declare(("tf", field, ()), _tsmap_name(field), terms)
+
+    def combined_map(self, fields, boosts, terms) -> str:
+        """BM25F map<term, partial> over ``fields`` (Lucene
+        CombinedFieldQuery): tf and dl are the boost-weighted sums of the
+        per-field values, df counts docs holding the term in ANY field."""
+        return self._declare(("cf", tuple(fields), tuple(boosts)),
+                             f"_cfmap_{len(self.maps)}", terms)
+
+    def idf(self, field: str, value) -> str:
+        """Keyword idf of the leaf ``field == value`` (tf=1 and dl=avgdl
+        for a keyword, so score = idf)."""
+        if (field, value) not in self.idfs:
+            self.idfs.append((field, value))
+        return f"_idf_{self.idfs.index((field, value))}"
+
+    @property
+    def names(self) -> list[str]:
+        return [*[n for n, _ in self.maps.values()],
+                *[f"_idf_{i}" for i in range(len(self.idfs))]]
+
+    @property
+    def helpers(self) -> list[str]:
+        return ["_bm25_stats",
+                *[f"_bm25_t{i}" for i in range(len(self.fields))],
+                *[c for c, _ in self.cols.values()]]
 
     def _toks(self, field: str) -> str:
         if field not in self.fields:
@@ -1194,20 +1137,16 @@ class CorpusStats:
         return self._stat(("df", tuple(fields), term),
                           f"CAST(sum(CAST({hit} AS INT)) AS DOUBLE)")
 
-    def _map(self, name: str, entries) -> str:
+    @staticmethod
+    def _map_sql(entries) -> str:
         """``entries``: (term, tf column, partial SQL), terms sorted."""
         items = ", ".join(f"IF({tf} > 0D, struct({_sqs(t)}, {p}), NULL)"
                           for t, tf, p in entries)
         hit = " OR ".join(f"{tf} > 0D" for _, tf, _ in entries)
-        self.outs[name] = (f"IF({hit}, map_from_entries(array_compact("
-                           f"array({items}))), NULL)")
-        return name
+        return (f"IF({hit}, map_from_entries(array_compact("
+                f"array({items}))), NULL)")
 
-    def partial_map(self, name: str, field: str, terms, df_fields=None) -> str:
-        """``name`` = map<term, partial> of ``field``.  ``df_fields``
-        blends the df as its MAX over those fields (Lucene's
-        BlendedTermQuery, multi_match ``cross_fields``); tf, dl and avgdl
-        stay ``field``'s own."""
+    def _partial_sql(self, field: str, df_fields, terms) -> str:
         dl = self._col(("dl", field), self._dl_sql(field))
         avgdl = self._stat(("avgdl", field), f"avg({self._dl_sql(field)})")
         entries = []
@@ -1218,17 +1157,14 @@ class CorpusStats:
             entries.append((t, tf, _bm25_partial_sql(
                 self.k1, self.b, tf=tf, dl=dl, df=df, n=self._n(),
                 avgdl=avgdl)))
-        return self._map(name, entries)
+        return self._map_sql(entries)
 
-    def combined_map(self, name: str, fields, boosts, terms) -> str:
-        """``name`` = BM25F map<term, partial> over ``fields`` (Lucene
-        CombinedFieldQuery): tf and dl are the boost-weighted sums of the
-        per-field values, df counts docs holding the term in ANY field."""
+    def _combined_sql(self, fields, boosts, terms) -> str:
         def wsum(render):
             return "0.0D" + "".join(f" + {render(f)} * {float(w)!r}D"
                                     for f, w in zip(fields, boosts))
 
-        key = (tuple(fields), tuple(boosts))
+        key = (fields, boosts)
         dl = self._col(("cfdl", key), wsum(self._dl_sql))
         avgdl = self._stat(("cfavgdl", key), f"avg({wsum(self._dl_sql)})")
         entries = []
@@ -1239,32 +1175,27 @@ class CorpusStats:
             entries.append((t, tf, _bm25_partial_sql(
                 self.k1, self.b, tf=tf, dl=dl, df=self._df(fields, t),
                 n=self._n(), avgdl=avgdl)))
-        return self._map(name, entries)
-
-    def idf(self, name: str, match: Column) -> str:
-        """``name`` = keyword idf of the leaf whose row predicate is
-        ``match`` (tf=1 and dl=avgdl for a keyword, so score = idf)."""
-        i = len(self.flags)
-        self.flags.append(match.cast("int").alias(f"_bm25_f{i}"))
-        n, df = "CAST(count(1) AS DOUBLE)", f"CAST(sum(_bm25_f{i}) AS DOUBLE)"
-        self.outs[name] = self._stat(
-            ("idf", i),
-            f"round(ln(1.0D + ({n} - {df} + 0.5D) / ({df} + 0.5D)), 6)")
-        return name
-
-    @property
-    def helpers(self) -> list[str]:
-        return ["_bm25_stats",
-                *[f"_bm25_t{i}" for i in range(len(self.fields))],
-                *[c for c, _ in self.cols.values()]]
+        return self._map_sql(entries)
 
     def attach(self, frame: DataFrame, corpus: DataFrame) -> DataFrame:
         """``frame`` + the declared outputs (and the helper columns), with
         the statistics aggregated over ``corpus``."""
+        outs = {name: (self._partial_sql(field, arg, terms) if kind == "tf"
+                       else self._combined_sql(field, arg, terms))
+                for (kind, field, arg), (name, terms) in self.maps.items()}
+        flags = []
+        for i, (field, value) in enumerate(self.idfs):
+            flags.append((F.col(field) == F.lit(value)).cast("int")
+                         .alias(f"_bm25_f{i}"))
+            n, df = ("CAST(count(1) AS DOUBLE)",
+                     f"CAST(sum(_bm25_f{i}) AS DOUBLE)")
+            outs[f"_idf_{i}"] = self._stat(
+                ("idf", i),
+                f"round(ln(1.0D + ({n} - {df} + 0.5D) / ({df} + 0.5D)), 6)")
         body = ", ".join(f"{_sqs(k)}, {sql}" for k, sql in self.stats.values())
         stats = corpus.select(
             *[_toks_expr(corpus, f).alias(f"_bm25_t{i}")
-              for i, f in enumerate(self.fields)], *self.flags,
+              for i, f in enumerate(self.fields)], *flags,
         ).selectExpr(f"named_struct({body})").scalar()
         out = frame.select(
             "*", *[_toks_expr(frame, f).alias(f"_bm25_t{i}")
@@ -1275,7 +1206,7 @@ class CorpusStats:
                 "*", *[f"{sql} AS {c}" for c, sql in self.cols.values()])
         return out.selectExpr("*", *[
             f"{sql} AS `{name.replace('`', '``')}`"
-            for name, sql in self.outs.items()])
+            for name, sql in outs.items()])
 
 
 def _apply_query_rescore(
@@ -1343,35 +1274,18 @@ def score_frame(
     ``id_field``.  Ids are unique per frame, as in ES; rows sharing an
     id are each scored from their own tokens."""
     q = _normalize(query)
-    comp = _ScoreCompiler(id_field)
-    comp.collect(q)
-    score = F.round(comp.build(q), 6)
-    # attach only the maps the score or the explanation reads: a map
-    # nothing reads would still add the statistics subquery to the plan
-    want = set(comp.reads)
-    if explain:
-        want.update(_tsmap_name(f) for f, ts in comp.field_terms.items() if ts)
     st = CorpusStats(k1, b)
-    for field, terms in sorted(comp.field_terms.items()):
-        if _tsmap_name(field) in want:
-            st.partial_map(_tsmap_name(field), field, terms)
-    for gi, (flds, terms) in enumerate(comp.xf_groups):
-        for f in flds:
-            if f"_xfmap_{gi}_{f}" in want:
-                st.partial_map(f"_xfmap_{gi}_{f}", f, terms, df_fields=flds)
-    for gi, (flds, boosts, terms) in enumerate(comp.cf_groups):
-        if f"_cfmap_{gi}" in want:
-            st.combined_map(f"_cfmap_{gi}", flds, boosts, terms)
-    for i, (field, value) in enumerate(comp.term_leaves):
-        st.idf(f"_idf_{i}", F.col(field) == F.lit(value))
+    score = F.round(_ScoreCompiler(id_field, st).build(q), 6)
     out = df
-    if st.outs:
+    if st.names:
         out = st.attach(df, stats_over if stats_over is not None else df)
     out = out.withColumn("_score", score)
     if explain:
         import json as _json
 
-        fields = [f for f in sorted(comp.field_terms) if comp.field_terms[f]]
+        # the term-score maps the score reads, one per text field
+        fields = sorted(f for kind, f, df_fields in st.maps
+                        if kind == "tf" and not df_fields)
         expl = F.to_json(F.struct(
             F.col("_score").alias("value"),
             F.lit(f"score(k1={k1}, b={b}), clause tree: "
@@ -1382,10 +1296,10 @@ def score_frame(
             *[F.col(f"_idf_{i}").alias(
                 "idf_" + "".join(ch if ch.isalnum() else "_"
                                  for ch in f"{fld}_{val}"))
-              for i, (fld, val) in enumerate(comp.term_leaves)],
+              for i, (fld, val) in enumerate(st.idfs)],
         ))
         out = out.withColumn("_explanation", expl)
-    return out.drop(*st.helpers, *st.outs)
+    return out.drop(*st.helpers, *st.names)
 
 
 def es_retriever_search(
@@ -1998,7 +1912,11 @@ def _es_scored_search_impl(
         if want_explain:
             raise ValueError("explain is not supported for knn-only bodies")
         scored = df.withColumn("_score", F.lit(0.0))
+        qpred = F.lit(False)
     else:
+        # the hit filter, compiled (and so validated) before the score
+        # tree, whose wrapper nodes compile no predicate of their own
+        qpred = compile_query(_normalize(query), id_field)
         scored = score_frame(df, query, id_field, k1=k1, b=b,
                              stats_over=_slice_stats,
                              explain=want_explain)
@@ -2066,10 +1984,6 @@ def _es_scored_search_impl(
     # kept the wrapper, so every scored search read every row group).
     # Only the knn-union OR needs NULL→false coalescing (a NULL qpred
     # would poison the disjunction for knn-only hits).
-    if knn_only:
-        qpred = F.lit(False)
-    else:
-        qpred = compile_query(_normalize(query), id_field)
     if knn is not None:
         scored = scored.where(
             F.coalesce(qpred, F.lit(False)) | F.col("_knn_score").isNotNull()

@@ -58,12 +58,9 @@ def get_spark(
         # §3.1/§9): SHJ skips the per-partition sort of both sides that
         # sort-merge pays, and AQE's skew splitting covers SHJ too.  The
         # planner still falls back to sort-merge when neither side can
-        # build a local map, so spill-safety at scale is unchanged.
-        # Parameterised so a cluster profile can restore the default.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        # build a local map, so spill-safety at scale is unchanged.  A
+        # cluster profile restores Spark's default through extra_conf.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # 128 MB input splits: the sweet spot for parquet scans at scale.

@@ -1281,6 +1281,37 @@ class TestMetadataScore:
         # identical fields: best_fields max == the single-field score
         assert r["_score"] == pytest.approx(ref["_score"], abs=1e-9)
 
+    def _dsl_rows(self, df, query):
+        from hive2es_offline_spark.plans.scoring import es_scored_search
+
+        return sorted((r["id"], r["_score"]) for r in es_scored_search(
+            df, {"query": query, "size": 100, "_source": ["id"]},
+            id_field="id").collect())
+
+    def test_multi_match_two_fields_is_the_dsl_score(self, spark):
+        df = self._docs(spark).withColumn(
+            "alt", F.when(F.col("id") % 2 == 0, F.lit("stream merge stream"))
+            .otherwise(F.lit("nothing")))
+        got = sorted((r["id"], r["_score"]) for r in esql({"t": df}, '''
+            FROM t METADATA _score
+            | WHERE MULTI_MATCH("merge stream", text, alt)
+            | KEEP id, _score
+        ''').collect())
+        want = self._dsl_rows(df, {"multi_match": {
+            "query": "merge stream", "fields": ["text", "alt"]}})
+        assert len(got) > 1 and got == want
+
+    def test_match_and_term_is_the_dsl_bool_score(self, spark):
+        df = self._docs(spark)
+        got = sorted((r["id"], r["_score"]) for r in esql({"t": df}, '''
+            FROM t METADATA _score
+            | WHERE MATCH(text, "merge stream") AND TERM(kw, "k1")
+            | KEEP id, _score
+        ''').collect())
+        want = self._dsl_rows(df, {"bool": {"must": [
+            {"match": {"text": "merge stream"}}, {"term": {"kw": "k1"}}]}})
+        assert len(got) > 1 and got == want
+
     def test_score_column_without_fulltext_stays_zero(self, spark):
         r = esql({"t": self._docs(spark)}, '''
             FROM t METADATA _score | WHERE id == 5 | KEEP id, _score

@@ -13,8 +13,11 @@ an ES|QL ``METADATA _score`` build runs none.
 py4j round trips for the analysis-chain and positions-clause builds:
 the chain, and a whole phrase, span or intervals clause, is Spark-SQL
 text parsed once, so building it costs a few dozen gateway calls, not
-one per expression node."""
+one per expression node.  The six-arm scored multi-search build is
+gated too: a score-tree node compiles its match predicate only where
+it gates on it."""
 
+import threading
 import uuid
 from contextlib import contextmanager
 
@@ -196,16 +199,19 @@ def test_esql_score_build_runs_no_job(spark):
 
 @contextmanager
 def py4j_calls(spark):
-    """Count the gateway commands sent inside the block.  Release
-    commands, which py4j sends whenever Python's GC frees a proxy, are
-    left out: their number depends on GC timing, not on the code."""
+    """Count the gateway commands sent inside the block, from any
+    thread.  Release commands, which py4j sends whenever Python's GC
+    frees a proxy, are left out: their number depends on GC timing, not
+    on the code."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     calls = [0]
+    lock = threading.Lock()
 
     def counted(command, *args, **kwargs):
         if not command.startswith(MEMORY_COMMAND_NAME):
-            calls[0] += 1
+            with lock:
+                calls[0] += 1
         return send(command, *args, **kwargs)
 
     client.send_command = counted
@@ -213,6 +219,19 @@ def py4j_calls(spark):
         yield calls
     finally:
         client.send_command = send
+
+
+def test_six_arm_multi_match_msearch_build_py4j_calls(spark):
+    # a score-tree node compiles its match predicate only where it gates
+    # on it: compiling one at every node made this build 3 378 calls;
+    # gating nodes only, 2 892
+    import __spark_entry__ as entry
+
+    _documents(spark)
+    entry.q_es_multi_match_types(spark, SF_SMOKE)  # warm
+    with py4j_calls(spark) as calls:
+        entry.q_es_multi_match_types(spark, SF_SMOKE)
+    assert 0 < calls[0] <= 3200, f"{calls[0]} py4j calls"
 
 
 CHAIN_BUILDS = {

@@ -834,6 +834,26 @@ def test_explain_emits_score_breakdown(corpus):
     assert "_explanation" not in out.columns
 
 
+def test_explain_phrase_prefix_lists_no_partials(spark):
+    """A multi_match phrase_prefix scores the constant 1.0, so its
+    explanation lists no BM25 partials: the explanation carries exactly
+    the maps the score reads."""
+    import json as _json
+
+    df = spark.createDataFrame(
+        [(1, "slow scan of the table"), (2, "a slow scanner"),
+         (3, "fast merge")], "doc_id long, text string")
+    body = {"query": {"multi_match": {
+        "query": "slow sc", "fields": ["text"], "type": "phrase_prefix"}},
+        "explain": True, "_source": ["doc_id"]}
+    rows = es_scored_search(df, body, id_field="doc_id").collect()
+    assert sorted(r["doc_id"] for r in rows) == [1, 2]
+    for r in rows:
+        e = _json.loads(r["_explanation"])
+        assert r["_score"] == e["value"] == 1.0
+        assert not [k for k in e if k.startswith("bm25_partials_")], e
+
+
 # --- multi_match cross_fields / bool_prefix (round 10) ----------------------
 
 
