@@ -1571,9 +1571,9 @@ def q_embed_quantize(spark, sf_dir):
 
     The int8 code array is projected to a comma-joined string for the
     driver compare: the driver's canonicalizer sorts columns with pandas
-    and dies on array cells (``unhashable type: numpy.ndarray``,
-    CORRECTNESS_r06).  Internal consumers (pq/ivf, webdataset export) keep
-    the array form from ``similarity.quantize_embeddings`` directly."""
+    and dies on array cells (``unhashable type: numpy.ndarray``).
+    Internal consumers (pq/ivf, webdataset export) keep the array form
+    from ``similarity.quantize_embeddings`` directly."""
     e = _t(spark, sf_dir, "embeddings")
     q = similarity.quantize_embeddings(e)
     return q.select(
@@ -4301,7 +4301,7 @@ def q_es_esql_ip(spark, sf_dir):
     runtime (_to_ip_sql docstring); this frame is valid by construction.
     EVAL-once shape: the guarded parse runs once and the WHERE/EVAL
     read the column (probed 2.04x vs spelling TO_IP(ip) at every use —
-    tools/probe_round15.py #3).  The oracle replays
+    SCALE.md "Round-15 probes").  The oracle replays
     functions/ip.ip_to_long_sql — the established engine↔oracle twin."""
     from hive2es_offline_spark.plans.esql import esql
 
@@ -9377,7 +9377,7 @@ def _goldens_b() -> dict[str, str]:
         # semantics differ, floor does not.  The code array is serialized to
         # a comma-joined string (q_csv) on BOTH sides so the driver's
         # pandas-based canonicalizer can hash it (array cells are
-        # unhashable, CORRECTNESS_r06).
+        # unhashable).
         "embed_quantize": """
             WITH v AS (
               SELECT vec_id,

@@ -51,6 +51,12 @@ def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def sql_path(name: str) -> str:
+    """Field name → SQL text with ``F.col``'s dotted-path semantics
+    (``a.b`` = nested field ``b`` of ``a``, every segment quoted)."""
+    return ".".join(sql_ident(s) for s in name.split("."))
+
+
 def sql_string(s: str) -> str:
     """Spark-SQL single-quoted string literal (escapedStringLiterals=false
     default: backslash escapes are processed, so double them)."""
@@ -70,7 +76,7 @@ def sql_bind(col: Column | str, render: Callable[[str], str]) -> Column:
     ``_a`` is a leaf, so a ``render`` that reads its argument several
     times re-reads a value instead of re-evaluating ``col``."""
     if isinstance(col, str):
-        return F.expr(render(".".join(sql_ident(s) for s in col.split("."))))
+        return F.expr(render(sql_path(col)))
     return F.element_at(F.call_function(
         "transform", F.array(col), F.expr(f"_a -> {render('_a')}")), 1)
 
@@ -86,7 +92,7 @@ def sql_let(values: Sequence[str], body: Callable[[list[str]], str]) -> str:
     subexpression cache in interpreted eval).  With per-term position
     arrays that derive from tokenize+filter chains, that turns a phrase
     predicate into O(|A|) full re-tokenizations per row (measured 10×
-    on a 1M-doc sloppy phrase, tools/probe_round11.py).  Binding trick:
+    on a 1M-doc sloppy phrase, SCALE.md "Round-11 probes").  Binding trick:
     wrap the values in a single-element array of struct and
     ``transform`` over it — inside the lambda each value is a
     GetStructField on the lambda variable, O(1) to re-read.

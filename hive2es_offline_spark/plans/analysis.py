@@ -87,7 +87,8 @@ __all__ = [
     "SPANISH_STOPWORDS", "ITALIAN_STOPWORDS", "PORTUGUESE_STOPWORDS",
     "RUSSIAN_STOPWORDS", "DUTCH_STOPWORDS",
     "stem_text", "fold_text",
-    "sayt_subfield", "shingle_col", "shingle_terms", "duckdb_shingles",
+    "sayt_subfield", "shingle_col", "shingle_terms", "field_terms",
+    "duckdb_shingles",
 ]
 
 #: Java regex (Spark side).  \p{L}/\p{N} are Unicode general categories.
@@ -109,7 +110,7 @@ _CJK_RANGES = ("぀-ヿ" "㐀-䶿" "一-鿿"
 #: regex over the whole text priced at 12× the two-pass form on an
 #: ASCII corpus (the common case at corpus scale — the intersection
 #: class defeats the regex engine's ASCII fast path on every position)
-#: and was no faster on CJK-heavy text (tools/probe_round14.py).
+#: and was no faster on CJK-heavy text (SCALE.md "Round-14 probes").
 #: Tokens with NO CJK character pass through whole, keeping the full
 #: standard grammar (incl. apostrophe/dot joining); a token containing
 #: CJK splits on the plain two-class pattern (its rare interior
@@ -1103,7 +1104,7 @@ def _char_filters_sql(toks: str, spec: _AnalyzerSpec) -> str:
     """The token-TEXT rewriting filters (possessive, elision,
     asciifolding) that run before the stop filter.
 
-    Hot-path guarded (measured at 1M docs, probe_round11): the
+    Hot-path guarded (measured at 1M docs, SCALE.md "Round-11 probes"): the
     possessive/elision regexps only run on tokens containing an
     apostrophe (contains() is a substring scan, +2 s vs +8.6 s for
     regexp-always); the fold is translate()+replace(), linear scans
@@ -1258,7 +1259,7 @@ def candidate_tokens_col(
     if ``t.startswith(s[:-1])``.  Filtering the raw token array on those
     cheap prefixes FIRST means the six stemmer passes run over a
     near-empty array on non-matching rows — measured 14× faster on a
-    1M-doc match (tools/probe_round11.py).  Synonym chains add the
+    1M-doc match (SCALE.md "Round-11 probes").  Synonym chains add the
     prefixes of every source token that rewrites to a queried term.
     Output values are identical to ``analyze_col`` restricted to the
     matching tokens, so membership/intersection semantics (match,
@@ -1312,7 +1313,7 @@ def _positions_sql(ts: str, term: str, spec: _AnalyzerSpec,
     stemmer passes over just the (near-empty on non-matching rows)
     candidate token array, and zips the surviving indices back
     (measured 65× → ~2× on a 1M-doc english phrase,
-    tools/probe_round11.py).  The guard is the suffix-only invariant:
+    SCALE.md "Round-11 probes").  The guard is the suffix-only invariant:
     chain(t) can equal/extend ``term`` only if
     ``t.startswith(term[:-1])`` (synonym sources included; for
     ``prefix`` mode every canonical starting with ``term`` contributes
@@ -1521,6 +1522,15 @@ def shingle_terms(terms: list[str], n: int) -> list[str]:
     re-assembled into ``n``-gram shingle terms (what ES's per-subfield
     query analyzer produces)."""
     return [" ".join(terms[i:i + n]) for i in range(len(terms) - n + 1)]
+
+
+def field_terms(field: str, text: str) -> list[str]:
+    """``text``'s analyzed query terms as ``field`` indexes them: the
+    terms themselves, or their shingles for a search_as_you_type
+    subfield."""
+    terms = analyze_text(str(text))
+    sub = sayt_subfield(field)
+    return terms if sub is None else shingle_terms(terms, sub[1])
 
 
 def duckdb_shingles(expr: str, n: int, analyzer: str = "standard") -> str:

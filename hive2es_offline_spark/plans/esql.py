@@ -201,6 +201,8 @@ from typing import Callable, Mapping
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..operators.util import sql_path, sql_string
+
 __all__ = ["esql"]
 
 
@@ -408,20 +410,6 @@ def _drop_bridges(df: DataFrame, bridges: list) -> DataFrame:
     return df.drop(*[name for name, _ in bridges]) if bridges else df
 
 
-def _bq_name(name: str) -> str:
-    """Identifier → SQL text with F.col's dotted-name semantics (dots
-    split into nested references, every segment backtick-quoted)."""
-    return ".".join("`" + seg.replace("`", "``") + "`"
-                    for seg in name.split("."))
-
-
-def _sql_str(s: str) -> str:
-    """String literal → SQL text under the default parser mode
-    (``spark.sql.parser.escapedStringLiterals=false``: backslash
-    escapes are processed, so both backslashes and quotes double)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def _num_sql(text: str) -> str:
     """Numeric token text → SQL literal matching ``F.lit``'s types: a
     bare SQL decimal like ``2.5`` parses as DECIMAL(2,1), but
@@ -439,7 +427,7 @@ def _py_sql(v) -> str:
         return repr(v) + "D"
     if isinstance(v, int):
         return str(v)
-    return _sql_str(v)
+    return sql_string(v)
 
 
 class _P:
@@ -462,7 +450,7 @@ class _P:
         """Register a bridge Column; return its hidden name as SQL."""
         name = f"\x00b{len(self.bridges)}"
         self.bridges.append((name, col))
-        return _bq_name(name)
+        return sql_path(name)
 
     def _ft(self, pred: Column, dsl: dict) -> str:
         """Route one full-text WHERE function's predicate through the
@@ -544,13 +532,13 @@ class _P:
                 raise ValueError("ES|QL: LIKE needs a string pattern")
             from .query_dsl import _wildcard_to_regex
 
-            return f"({left} RLIKE {_sql_str(_wildcard_to_regex(t2[1]))})"
+            return f"({left} RLIKE {sql_string(_wildcard_to_regex(t2[1]))})"
         if kw == "RLIKE":
             self.next()
             t2 = self.next()
             if t2[0] != "str":
                 raise ValueError("ES|QL: RLIKE needs a string pattern")
-            return f"({left} RLIKE {_sql_str(t2[1])})"
+            return f"({left} RLIKE {sql_string(t2[1])})"
         if kw == "IN":
             self.next()
             self.expect_op("(")
@@ -612,7 +600,7 @@ class _P:
     def _primary(self) -> str:
         t = self.next()
         if t[0] == "str":
-            return _sql_str(t[1])
+            return sql_string(t[1])
         if t[0] == "num":
             return _num_sql(t[1])
         if t == ("op", "("):
@@ -627,7 +615,7 @@ class _P:
         if self.peek() == ("op", "("):
             self.next()
             return self._call(up)
-        return _bq_name(name)
+        return sql_path(name)
 
     def _call(self, fn: str) -> str:
         if fn == "COUNT" and self.peek() == ("op", "*"):
@@ -709,7 +697,7 @@ class _P:
             self.expect_op(",")
             arg = self.expr()
             self.expect_op(")")
-            return f"date_trunc({_sql_str(unit)}, {arg})"
+            return f"date_trunc({sql_string(unit)}, {arg})"
         if fn == "BUCKET":
             # ES|QL BUCKET(field, span): the date-histogram idiom of
             # STATS … BY.  Two span forms (the 4-arg auto-range form
@@ -739,14 +727,14 @@ class _P:
                         raise ValueError(
                             f"ES|QL: BUCKET calendar span must be "
                             f"1 {unit} (got {t[1]}{_at(t)})")
-                    return f"date_trunc({_sql_str(unit)}, {arg})"
+                    return f"date_trunc({sql_string(unit)}, {arg})"
                 if unit not in fixed or count < 1:
                     raise ValueError(
                         f"ES|QL: unsupported BUCKET span {t[1]} "
                         f"{unit_t[1]}{_at(t)} (N minute|hour|day or "
                         "1 week|month|quarter|year)")
                 if count == 1:
-                    return f"date_trunc({_sql_str(unit)}, {arg})"
+                    return f"date_trunc({sql_string(unit)}, {arg})"
                 secs = count * fixed[unit]
                 return ("timestamp_seconds((FLOOR((CAST(CAST("
                         f"{arg} AS TIMESTAMP) AS DOUBLE) / {secs})) "
@@ -770,7 +758,7 @@ class _P:
             self.expect_op(",")
             arg = self.expr()
             self.expect_op(")")
-            return f"date_format({arg}, {_sql_str(t[1])})"
+            return f"date_format({arg}, {sql_string(t[1])})"
         if fn == "DATE_DIFF":
             # DATE_DIFF("hour", start, end): signed count of WHOLE
             # fixed-width units from start to end, truncated toward
@@ -855,7 +843,7 @@ class _P:
             self.expect_op(",")
             arg = self.expr()
             self.expect_op(")")
-            return f"to_timestamp({arg}, {_sql_str(t[1])})"
+            return f"to_timestamp({arg}, {sql_string(t[1])})"
         if fn == "IP_PREFIX":
             # ES|QL IP_PREFIX(ip, v4_len, v6_len): mask to the network
             # prefix and render — uint32 math through the SAME guarded
@@ -894,7 +882,7 @@ class _P:
                     f"ES|QL: MV_CONCAT delimiter must be a literal "
                     f"string{_at(t)}")
             self.expect_op(")")
-            return f"array_join({arg}, {_sql_str(t[1])})"
+            return f"array_join({arg}, {sql_string(t[1])})"
         if fn == "SPLIT":
             # ES|QL SPLIT(str, delim) splits on the LITERAL delimiter
             # (not a regex) — the literal requirement lets the compiler
@@ -907,7 +895,7 @@ class _P:
                     "ES|QL: SPLIT needs a non-empty literal delimiter "
                     f"string{_at(t)}")
             self.expect_op(")")
-            return f"split({arg}, {_sql_str(re.escape(t[1]))})"
+            return f"split({arg}, {sql_string(re.escape(t[1]))})"
         if fn == "LOCATE":
             # ES|QL LOCATE(string, substring[, start]) — 1-based, 0 when
             # absent; the substring must be a literal
@@ -927,7 +915,7 @@ class _P:
                         f"literal{_at(st)}")
                 start = int(st[1])
             self.expect_op(")")
-            return f"locate({_sql_str(t[1])}, {arg}, {start})"
+            return f"locate({sql_string(t[1])}, {arg}, {start})"
         if fn in ("MATCH", "QSTR", "MATCH_PHRASE", "TERM",
                   "MULTI_MATCH", "KQL", "KNN"):
             # ES|QL full-text WHERE functions (ES 8.14→8.18): the
@@ -1408,7 +1396,7 @@ def _mv_percentile_sql(v: str, p: str) -> str:
     lov = f"CAST(get({s}, {lo}) AS DOUBLE)"
     hiv = f"CAST(get({s}, least(({lo} + 1), ({n} - 1))) AS DOUBLE)"
     val = f"({lov} + ({frac} * ({hiv} - {lov})))"
-    msg = _sql_str("ES|QL: MV_PERCENTILE percentile must be in "
+    msg = sql_string("ES|QL: MV_PERCENTILE percentile must be in "
                    "0..100, got ")
     return (
         f"CASE WHEN ({n} > 0) THEN "
@@ -1471,10 +1459,10 @@ def _to_version_sql(c: str) -> str:
       accepts any string and sorts invalid AFTER valid, alphabetically
       (so this is the documented contract, not a silent fallback).
     - NULL passes through."""
-    dot = _sql_str(r"\.")
-    digits = _sql_str(r"^\d+$")
+    dot = sql_string(r"\.")
+    digits = sql_string(r"^\d+$")
     s = f"CAST({c} AS STRING)"
-    valid = (f"({s} RLIKE " + _sql_str(
+    valid = (f"({s} RLIKE " + sql_string(
         r"^\d+(\.\d+){0,3}(-[0-9A-Za-z-]+(\.[0-9A-Za-z-]+)*)?$") + ")")
     parts = f"split({s}, '-', 2)"
     core = f"get({parts}, 0)"
@@ -1507,7 +1495,7 @@ def _hash_fn_sql(alg: str, v: str) -> str:
     raise_error).  NULL input → NULL, like the shortcut forms."""
     b = f"CAST({v} AS BINARY)"
     a = f"lower({alg})"
-    msg = _sql_str("ES|QL: HASH algorithm must be one of md5 sha1 "
+    msg = sql_string("ES|QL: HASH algorithm must be one of md5 sha1 "
                    "sha224 sha256 sha384 sha512, got ")
     poison = f"CAST(concat({msg}, {alg}) AS INT)"
     return (
@@ -1525,7 +1513,7 @@ def _nonneg_count_sql(n: str, fn: str) -> str:
     count (Spark's ``repeat`` silently returns "" — a silent-divergence
     trap).  ANSI-cast poison on the negative branch, same rationale as
     _hash_fn_sql."""
-    msg = _sql_str(f"ES|QL: {fn} count must be non-negative, got ")
+    msg = sql_string(f"ES|QL: {fn} count must be non-negative, got ")
     return (f"CASE WHEN ({n} >= 0) THEN {n} ELSE "
             f"CAST(concat({msg}, CAST({n} AS STRING)) AS INT) END")
 
@@ -1551,8 +1539,8 @@ def _to_ip_sql(c: str) -> str:
     from ..functions.ip import ip_to_long_spark
 
     s = f"CAST({c} AS STRING)"
-    msg_a = _sql_str("ES|QL: TO_IP cannot parse ")
-    msg_b = _sql_str(" as an IPv4 address")
+    msg_a = sql_string("ES|QL: TO_IP cannot parse ")
+    msg_b = sql_string(" as an IPv4 address")
     return (f"CASE WHEN ({s} IS NULL) THEN CAST(NULL AS BIGINT) "
             f"ELSE coalesce({ip_to_long_spark(s)}, "
             f"CAST(concat({msg_a}, {s}, {msg_b}) AS BIGINT)) END")
@@ -2299,10 +2287,10 @@ def _stage_stats_ts(df: DataFrame, p: _P,
             s1.append(F.sum(F.col(f"\x00incr_{c}").cast("decimal(28,6)"))
                       .cast("double").alias(f"\x00rsum{i}"))
         elif inner in ("AVG_OVER_TIME", "SUM_OVER_TIME"):
-            s1.append(F.expr(_AGGS[inner[:3]]([_bq_name(c)])).alias(v))
+            s1.append(F.expr(_AGGS[inner[:3]]([sql_path(c)])).alias(v))
         elif inner in ("MIN_OVER_TIME", "MAX_OVER_TIME",
                        "COUNT_OVER_TIME"):
-            s1.append(F.expr(_AGGS[inner.split("_")[0]]([_bq_name(c)]))
+            s1.append(F.expr(_AGGS[inner.split("_")[0]]([sql_path(c)]))
                       .alias(v))
         elif inner == "LAST_OVER_TIME":
             s1.append(F.max_by(F.col(c), F.struct(
@@ -2325,7 +2313,7 @@ def _stage_stats_ts(df: DataFrame, p: _P,
                     F.when((F.col("\x00n_rows") >= 2) & (span_s > 0),
                            F.col(f"\x00rsum{i}") / span_s))
 
-    s2 = [F.expr(_AGGS[outer]([_bq_name(f"\x00v{i}")])).alias(name)
+    s2 = [F.expr(_AGGS[outer]([sql_path(f"\x00v{i}")])).alias(name)
           for i, (name, outer, _, _) in enumerate(aggs)]
     if key_names:
         return g1.groupBy(*[F.col(n) for n in key_names]).agg(*s2)

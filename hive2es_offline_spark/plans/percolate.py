@@ -126,7 +126,8 @@ def es_percolate(
     # codegen's subexpression elimination then computes shared pieces
     # (e.g. the tokenize of a field several match bodies touch) ONCE —
     # folding them into the explode's Generate node re-evaluated them
-    # per query (4 match queries cost 4 tokenize passes, probe_round11)
+    # per query (4 match queries cost 4 tokenize passes, SCALE.md
+    # "Round-11 probes")
     names = [f"__pq{i}" for i in range(len(flags))]
     flagged = df.select(
         F.col(id_field),

@@ -106,10 +106,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import ip as _ip
-from ..operators.util import sql_bind, sql_let, sql_string
+from ..operators.util import sql_bind, sql_let, sql_path, sql_string
 from .analysis import (
-    analyze_sql, hit_positions_sql, let_cols, term_hit_sql,
-    with_chain_positions,
+    analyze_sql, field_terms, hit_positions_sql, let_cols, sayt_subfield,
+    shingle_col, term_hit_sql, with_chain_positions,
 )
 
 __all__ = ["compile_query", "compile_aggs", "es_search", "es_count",
@@ -1015,7 +1015,39 @@ def _term_centric_predicate(
 
     # each field's token array binds once per row (T terms x F fields
     # used to re-tokenize TxF times — analysis.let_cols)
-    return let_cols([_analyze(_ref(f, col)) for f in flds], grouped)
+    return let_cols([_field_tokens(f, col) for f in flds], grouped)
+
+
+def _field_tokens(field: str, col) -> Column:
+    """``field``'s analyzed token stream; a search_as_you_type subfield
+    reads its root's stream, shingled."""
+    sub = sayt_subfield(field)
+    if sub is None:
+        return _analyze(_ref(field, col))
+    return shingle_col(_analyze(_ref(sub[0], col)), sub[1])
+
+
+def _analyzer_groups(flds: list[str]) -> list[list[int]]:
+    """Indices of ``flds`` grouped by analyzer, as ES groups a
+    ``cross_fields`` query's fields: the root fields, then one group per
+    search_as_you_type shingle size.  Each group matches its own terms;
+    the groups combine like ``best_fields``."""
+    groups: dict[int, list[int]] = {}
+    for i, f in enumerate(flds):
+        sub = sayt_subfield(f)
+        groups.setdefault(sub[1] if sub else 1, []).append(i)
+    return list(groups.values())
+
+
+def _reject_sayt_subfield(kind: str, body: dict) -> None:
+    """Only the match family reads a search_as_you_type subfield's
+    shingle stream; any other clause on one raises."""
+    for f in (*body, body.get("field")):
+        if isinstance(f, str) and sayt_subfield(f) is not None:
+            raise ValueError(
+                f"{kind} on the search_as_you_type subfield {f!r} is not "
+                "supported: query it with match, match_bool_prefix or "
+                "multi_match, or query the root field")
 
 
 def compile_query(
@@ -1035,6 +1067,8 @@ def compile_query(
     if len(q) != 1:
         raise ValueError(f"query clause must have exactly one key, got {sorted(q)}")
     kind, body = next(iter(q.items()))
+    if isinstance(body, dict) and kind not in ("match", "match_bool_prefix"):
+        _reject_sayt_subfield(kind, body)
 
     if kind == "match_all":
         return F.lit(True)
@@ -1383,10 +1417,15 @@ def compile_query(
             # different fields (the people-name/address shape best_fields
             # cannot express)
             flds, _ = _split_field_boosts(body["fields"])
-            return _term_centric_predicate(
-                _analyze_terms(str(query)), flds, operator,
-                body.get("minimum_should_match"), col,
-                zero_terms=_zero_terms_result(body))
+            out = None
+            for g in _analyzer_groups(flds):
+                group = [flds[i] for i in g]
+                p = _term_centric_predicate(
+                    field_terms(group[0], query), group, operator,
+                    body.get("minimum_should_match"), col,
+                    zero_terms=_zero_terms_result(body))
+                out = p if out is None else out | p
+            return out
         else:
             raise ValueError(
                 f"unsupported multi_match type: {mm_type!r} (best_fields | "
@@ -1406,15 +1445,21 @@ def compile_query(
         query = spec["query"] if isinstance(spec, dict) else spec
         operator = (spec.get("operator", "or") if isinstance(spec, dict) else "or").lower()
         msm = spec.get("minimum_should_match") if isinstance(spec, dict) else None
-        terms = _analyze_terms(query)
+        terms = field_terms(field, query)
         if not terms:
             # ES zero_terms_query: a query that analyzes to nothing
             # matches NOTHING by default ("none"); "all" opts into
             # match_all (pre-r10 the engine silently did "all")
             return _zero_terms_result(spec)
         fuzz = spec.get("fuzziness") if isinstance(spec, dict) else None
-        pre = _pre_stream(field)
-        if pre is not None and fuzz is None:
+        sub = sayt_subfield(field)
+        pre = _pre_stream(sub[0] if sub else field)
+        if sub is not None:
+            # a search_as_you_type subfield: the root's stream, shingled
+            # (as match_bool_prefix reads it)
+            toks = shingle_col(F.col(pre) if pre is not None
+                               else _analyze(_ref(sub[0], col)), sub[1])
+        elif pre is not None and fuzz is None:
             # shared-analysis override (VERDICT r11 #7): the frame
             # carries this field's materialized full-chain stream —
             # membership semantics are identical, zero re-tokenize
@@ -1422,7 +1467,8 @@ def compile_query(
         elif fuzz is None and not _plain_chain():
             # membership fast path for filter chains: prune the token
             # array by the stem-prefix invariant BEFORE the six stemmer
-            # passes (14× on a 1M-doc english match — probe_round11).
+            # passes (14× on a 1M-doc english match — SCALE.md
+            # "Round-11 probes").
             # Fuzzy keeps the full stream (edit-1 neighbors need not
             # share the prefix).
             from .analysis import candidate_tokens_col
@@ -1515,18 +1561,15 @@ def compile_query(
         # stream derived from the root's analyzed tokens, and the query
         # terms re-assemble into shingles of the same size — so a prefix
         # typed mid-phrase matches via the 2/3-gram, like ES.
-        from .analysis import sayt_subfield, shingle_col, shingle_terms
-
         field, spec = _field_spec(body)
         query = spec["query"] if isinstance(spec, dict) else spec
         operator = (spec.get("operator", "or")
                     if isinstance(spec, dict) else "or").lower()
         msm = spec.get("minimum_should_match") if isinstance(spec, dict) else None
-        terms = _analyze_terms(query)
+        terms = field_terms(field, query)
         sub = sayt_subfield(field)
         if sub is not None:
             field, gram_n = sub
-            terms = shingle_terms(terms, gram_n)
         if not terms:
             return _zero_terms_result(spec)
         *full, last = terms
@@ -1561,6 +1604,7 @@ def compile_query(
             raise ValueError(
                 f"unsupported combined_fields option(s): {sorted(unknown)}")
         flds, _ = _split_field_boosts(body["fields"], min_boost=1.0)
+        _reject_sayt_subfield(kind, dict.fromkeys(flds))
         return _term_centric_predicate(
             _analyze_terms(str(body["query"])), flds,
             body.get("operator", "or"),
@@ -2586,7 +2630,8 @@ def compile_aggs(df: DataFrame, aggs: dict, id_field: str = "_id") -> DataFrame:
         if metric_only:
             # ONE aggregate carries doc_count AND the metrics — a
             # second count pass would double the sampled-scan cost
-            # (measured ×2 the floor before this, probe_round13b)
+            # (measured ×2 the floor before this, SCALE.md "Round-13
+            # probes, second batch")
             exprs = [F.count(F.lit(1)).alias("doc_count")]
             for sub_name, sub_spec in subs.items():
                 (mk, ms), = [(k, v) for k, v in sub_spec.items()
@@ -2957,12 +3002,6 @@ def _fd(v: float) -> str:
     return repr(float(v)) + "D"
 
 
-def _bq_field(name: str) -> str:
-    """Field name → SQL text with F.col's dotted-name semantics."""
-    return ".".join("`" + seg.replace("`", "``") + "`"
-                    for seg in name.split("."))
-
-
 def geohash_cell_sql(lat: str, lon: str, precision: int) -> str:
     """Base-32 geohash of a point at ``precision`` chars (1..12) — pure
     codegen bit math: quantize lon/lat to ceil/floor(5p/2) bits (indices
@@ -3054,7 +3093,8 @@ def hex_cell_sql(lat: str, lon: str, precision: int) -> str:
     q/r are LET-BOUND (one array-of-struct transform, the shape of
     analysis.let_cols; each reference is a struct-field read): the
     cube-round tree references them ~20×, and unbound that re-expansion
-    measured ×4.3 the geotile floor at 1M rows (tools/probe_round13b.py)
+    measured ×4.3 the geotile floor at 1M rows (SCALE.md "Round-13
+    probes, second batch")
     — bound it is within noise of it."""
     if not 0 <= precision <= 15:
         raise ValueError(f"hex_grid precision must be 0..15, got {precision}")
@@ -3108,7 +3148,7 @@ def _bucket_key_col(kind: str, bspec: dict) -> Column:
         host = 32 - plen
         # rendered via the functions/ip SQL renderers and parsed once
         # (round 16, guide §7.3)
-        net = _ip.ip_to_long_spark(_bq_field(field))
+        net = _ip.ip_to_long_spark(sql_path(field))
         if host:
             net = f"shiftleft(shiftrightunsigned({net}, {host}), {host})"
         # an unparseable ip yields a NULL key (dropped like the grid kinds)
@@ -3118,7 +3158,7 @@ def _bucket_key_col(kind: str, bspec: dict) -> Column:
         if unknown:
             raise ValueError(
                 f"unsupported {kind} option(s): {sorted(unknown)}")
-        lat, lon = f"{_bq_field(field)}.lat", f"{_bq_field(field)}.lon"
+        lat, lon = f"{sql_path(field)}.lat", f"{sql_path(field)}.lon"
         if kind == "geohash_grid":
             return F.expr(geohash_cell_sql(
                 lat, lon, int(bspec.get("precision", 5))))
@@ -4726,7 +4766,7 @@ def _compile_cond_bucket(df: DataFrame, spec: dict, id_field: str) -> DataFrame:
         # uint32 bucket bounds (VERDICT r10 #5): from inclusive / to
         # EXCLUSIVE like ES's ip_range; a `mask` entry is the inclusive
         # CIDR block.  Same one-ungrouped-aggregate shape as `range`.
-        ipl = F.expr(_ip.ip_to_long_spark(_bq_field(bspec["field"])))
+        ipl = F.expr(_ip.ip_to_long_spark(sql_path(bspec["field"])))
         for r in bspec["ranges"]:
             if "mask" in r:
                 lo, hi = _ip.cidr_bounds(r["mask"])
@@ -5455,8 +5495,6 @@ _FIELD_LISTING_TEXT = ("multi_match", "combined_fields")
 def _text_clause_fields(node) -> set[str]:
     """The fields the text clauses anywhere in ``node`` analyze, with a
     search_as_you_type subfield (``text._2gram``) mapped to its root."""
-    from .analysis import sayt_subfield
-
     found: set[str] = set()
     if isinstance(node, list):
         for c in node:

@@ -60,7 +60,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .analysis import analyze_col
+from ..operators.util import sql_ident, sql_string
+from .analysis import analyze_col, field_terms
 from .analysis import analyze_text as _analyze_terms
 from .query_dsl import compile_query
 
@@ -214,22 +215,15 @@ class _ScoreCompiler:
             # their BM25 partials; the prefix clause contributes the
             # constant 1.0 when it matches (Lucene's constant-score
             # prefix rewrite), all gated on the clause's own predicate
-            from .analysis import (
-                preanalyzed_stream,
-                sayt_subfield,
-                shingle_col,
-                shingle_terms,
-            )
+            from .analysis import preanalyzed_stream, sayt_subfield, shingle_col
 
             field, raw = next(iter(body.items()))
             spec = raw if isinstance(raw, dict) else {"query": raw}
             boost = float(spec.get("boost", 1.0))
-            terms = _analyze_terms(str(spec["query"]))
+            # a search_as_you_type shingle subfield (round 13): both the
+            # scored terms and the prefix clause read shingles
+            terms = field_terms(field, spec["query"])
             sub = sayt_subfield(field)
-            if sub is not None:
-                # search_as_you_type shingle subfield (round 13): both
-                # the scored terms and the prefix clause read shingles
-                terms = shingle_terms(terms, sub[1])
             if not terms:
                 return gate(F.lit(boost))
             full = list(dict.fromkeys(terms[:-1]))
@@ -255,22 +249,30 @@ class _ScoreCompiler:
                 # the rest, per-field boosts applied to each field's
                 # score), then the per-term contributions sum — rounded
                 # to 6 and DECIMAL-added so the total is order-
-                # independent and oracle-reproducible
-                from .query_dsl import _split_field_boosts
+                # independent and oracle-reproducible.  Fields group by
+                # analyzer (a search_as_you_type subfield scores its
+                # shingles apart from its root); groups combine by dismax
+                from .query_dsl import _analyzer_groups, _split_field_boosts
 
                 flds, boosts = _split_field_boosts(body["fields"])
-                terms = sorted(set(_analyze_terms(str(body["query"]))))
-                if not terms:
+                parts = []
+                for g in _analyzer_groups(flds):
+                    group = [flds[i] for i in g]
+                    terms = sorted(set(field_terms(group[0], body["query"])))
+                    if not terms:
+                        continue
+                    maps = [self.stats.partial_map(f, terms, df_fields=group)
+                            for f in group]
+                    total: Column = F.lit(0).cast("decimal(28,6)")
+                    for t in terms:
+                        best = _dis_max([
+                            F.coalesce(F.col(m).getItem(t), F.lit(0.0))
+                            * F.lit(boosts[i]) for m, i in zip(maps, g)], tie)
+                        total = total + F.round(best, 6).cast("decimal(28,6)")
+                    parts.append(total.cast("double"))
+                if not parts:
                     return gate(F.lit(boost))
-                maps = [self.stats.partial_map(f, terms, df_fields=flds)
-                        for f in flds]
-                total: Column = F.lit(0).cast("decimal(28,6)")
-                for t in terms:
-                    best = _dis_max([
-                        F.coalesce(F.col(m).getItem(t), F.lit(0.0)) * F.lit(fb)
-                        for m, fb in zip(maps, boosts)], tie)
-                    total = total + F.round(best, 6).cast("decimal(28,6)")
-                return gate(total.cast("double") * F.lit(boost))
+                return gate(_dis_max(parts, tie) * F.lit(boost))
             per = []
             for f in body["fields"]:
                 f2, _, fb = str(f).partition("^")
@@ -612,7 +614,7 @@ class _ScoreCompiler:
         """``boost`` times the sum of the per-term partials from this
         doc's term-score map for ``field`` (the ``_tsmap_<field>`` column
         ``stats`` renders), as one SQL expression."""
-        terms = sorted(set(_analyze_terms(query)))
+        terms = sorted(set(field_terms(field, query)))
         if not terms:
             return F.lit(0.0) * boost
         m = self.stats.partial_map(field, terms)
@@ -1001,12 +1003,6 @@ def with_shared_analysis(df: DataFrame, fields) -> DataFrame:
     return out.localCheckpoint(eager=False)
 
 
-def _sqs(s: str) -> str:
-    """Spark-SQL single-quoted string literal (expression-string builders
-    below — each py4j round trip costs ~0.5 ms, r15)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def _bm25_partial_sql(k1: float, b: float, *, tf: str, dl: str, df: str,
                       n: str, avgdl: str) -> str:
     """The BM25 per-(doc, term) partial as ONE SQL expression over the
@@ -1024,8 +1020,8 @@ def bm25_sum_sql(map_col: str, terms) -> str:
     ``map_col`` (a term the row lacks adds 0).  Partials are rounded to
     6 decimals, so DECIMAL(28,6) addition is exact and order-independent
     — what lets an ANSI-SQL oracle reproduce the sum bit-for-bit."""
-    m = "`" + map_col.replace("`", "``") + "`"
-    parts = "".join(f" + CAST(coalesce({m}[{_sqs(t)}], 0.0D)"
+    m = sql_ident(map_col)
+    parts = "".join(f" + CAST(coalesce({m}[{sql_string(t)}], 0.0D)"
                     " AS DECIMAL(28,6))" for t in terms)
     return f"CAST(CAST(0 AS DECIMAL(28,6)){parts} AS DOUBLE)"
 
@@ -1124,7 +1120,7 @@ class CorpusStats:
 
     def _tf_sql(self, field: str, term: str) -> str:
         t = self._toks(field)
-        return (f"CAST(size({t}) - size(array_remove({t}, {_sqs(term)}))"
+        return (f"CAST(size({t}) - size(array_remove({t}, {sql_string(term)}))"
                 " AS DOUBLE)")
 
     def _dl_sql(self, field: str) -> str:
@@ -1132,7 +1128,8 @@ class CorpusStats:
 
     def _df(self, fields, term: str) -> str:
         """Docs holding ``term`` in any of ``fields``."""
-        hit = " OR ".join(f"array_contains({self._toks(f)}, {_sqs(term)})"
+        t = sql_string(term)
+        hit = " OR ".join(f"array_contains({self._toks(f)}, {t})"
                           for f in fields)
         return self._stat(("df", tuple(fields), term),
                           f"CAST(sum(CAST({hit} AS INT)) AS DOUBLE)")
@@ -1140,7 +1137,7 @@ class CorpusStats:
     @staticmethod
     def _map_sql(entries) -> str:
         """``entries``: (term, tf column, partial SQL), terms sorted."""
-        items = ", ".join(f"IF({tf} > 0D, struct({_sqs(t)}, {p}), NULL)"
+        items = ", ".join(f"IF({tf} > 0D, struct({sql_string(t)}, {p}), NULL)"
                           for t, tf, p in entries)
         hit = " OR ".join(f"{tf} > 0D" for _, tf, _ in entries)
         return (f"IF({hit}, map_from_entries(array_compact("
@@ -1192,7 +1189,8 @@ class CorpusStats:
             outs[f"_idf_{i}"] = self._stat(
                 ("idf", i),
                 f"round(ln(1.0D + ({n} - {df} + 0.5D) / ({df} + 0.5D)), 6)")
-        body = ", ".join(f"{_sqs(k)}, {sql}" for k, sql in self.stats.values())
+        body = ", ".join(f"{sql_string(k)}, {sql}"
+                         for k, sql in self.stats.values())
         stats = corpus.select(
             *[_toks_expr(corpus, f).alias(f"_bm25_t{i}")
               for i, f in enumerate(self.fields)], *flags,
@@ -1483,7 +1481,7 @@ def es_retriever_search(
             # into the corpus scan, so the text fetch prunes row groups
             # instead of re-scanning the whole text column (a broadcast
             # semi-join still paid a corpus-sized column read — probed
-            # +1.0 s at 1M docs, tools/probe_round15.py #4).  Same
+            # +1.0 s at 1M docs, SCALE.md "Round-15 probes").  Same
             # bounded-collect shape as the terms-lookup and rescore
             # windows.
             win_ids = [r[0] for r in child.select(id_field).collect()]

@@ -100,7 +100,7 @@ def write_jsonl(
 
     ``validate`` picks the post-write guarantee (measured at sf0.1, 32
     cores: full = write 0.22 s + re-read 0.14 s; fast skips the re-read —
-    see BENCH_DIAGNOSIS_r06.md):
+    see SCALE.md, "JSONL export"):
 
     * ``"full"`` (default) — re-read what was written (one extra decompress
       pass, the bundle sink's doc-count gate) and record per-shard ROW

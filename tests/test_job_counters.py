@@ -15,7 +15,12 @@ the chain, and a whole phrase, span or intervals clause, is Spark-SQL
 text parsed once, so building it costs a few dozen gateway calls, not
 one per expression node.  The six-arm scored multi-search build is
 gated too: a score-tree node compiles its match predicate only where
-it gates on it."""
+it gates on it.
+
+py4j round trips and Spark jobs of each ``search_mix`` family's warm
+build, as ``perfbench/workloads.py`` builds it: the counters the
+benchmark's trace reports per family, gated here so a regression
+shows without a benchmark run."""
 
 import threading
 import uuid
@@ -295,3 +300,52 @@ def test_positions_build_py4j_calls(spark, build):
         with py4j_calls(spark) as calls:
             compile_query(clause, "id")
     assert 0 < calls[0] <= 40, f"{build}: {calls[0]} py4j calls"
+
+
+#: fixed parameters of the generated search_mix queries
+SEARCH_MIX_PARAMS = {
+    "filter_topk": {"lo": 5, "hi": 20, "flag": "R", "status": "O", "k": 10},
+    "aggs_terms": {"discount": 0.03},
+    "aggs_date_histogram": {"status": "F", "interval": "month"},
+    "match_bm25": {"terms": ["merge", "stream"], "k": 10},
+    "esql_stats": {"year": 1995, "discount": 0.03},
+}
+
+#: (py4j bound, build-job bound) of one warm build each; a bound is the
+#: count measured when the gate was added plus at most 10 %
+SEARCH_MIX_BUILDS = {
+    "filter_topk": (302, 0),            # 275 calls, 0 jobs
+    "aggs_terms": (264, 0),             # 240, 0
+    "aggs_date_histogram": (191, 0),    # 174, 0
+    "match_bm25": (326, 0),             # 297, 0
+    "es_retriever_rrf": (1667, 0),      # 1 516, 0
+    "es_retriever_pinned": (1580, 3),   # 1 437, 3
+    "es_knn": (723, 1),                 # 658, 1: the knn top-k collect
+    "esql_stats": (161, 0),             # 147, 0
+    "es_esql_score": (331, 0),          # 301, 0
+    "es_esql_knn": (815, 1),            # 741, 1: the KNN boundary
+}
+
+
+def _search_mix_build(spark, name):
+    """A registered ``es_`` query, or a generated body compiled over its
+    table, as ``perfbench``'s search_mix builds each op."""
+    if name.startswith("es_"):
+        import __spark_entry__ as entry
+
+        return lambda: entry.queries()[name](spark, SF_SMOKE)
+    from perfbench.workloads import _compile, render
+
+    entry_fn, request, _, _ = render(name, SEARCH_MIX_PARAMS[name])
+    return lambda: _compile(spark, SF_SMOKE, name, entry_fn, request)
+
+
+@pytest.mark.parametrize("name", sorted(SEARCH_MIX_BUILDS))
+def test_search_mix_build_counters(spark, name):
+    py4j_bound, jobs_bound = SEARCH_MIX_BUILDS[name]
+    build = _search_mix_build(spark, name)
+    build()  # warm: schema inference and first-use lookups
+    with spark_jobs(spark) as jobs, py4j_calls(spark) as calls:
+        build()
+    assert 0 < calls[0] <= py4j_bound, f"{name}: {calls[0]} py4j calls"
+    assert len(jobs) <= jobs_bound, f"{name}: build jobs {jobs}"

@@ -83,7 +83,7 @@ def test_canon_distinguishes_int_from_float():
 def test_window_schemas_driver_hashable(spark):
     """The driver's canonicalizer pandas-sorts every output column;
     array/map/struct cells are unhashable there (``unhashable type:
-    numpy.ndarray`` — the embed_quantize red row in CORRECTNESS_r06 and the
+    numpy.ndarray`` — the embed_quantize red row in r06 and the
     audio_features/video_frames red rows in r07).  EVERY driver-window
     query — rows-only included; the driver canonicalizes those too, the
     r06 exemption here is disproven — must project complex types to

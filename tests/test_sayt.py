@@ -110,3 +110,67 @@ def test_shingles_ride_language_chains(spark):
     got = sorted(r["id"] for r in es_search(
         df, body, id_field="id", analyzer="english").collect())
     assert got == [1]
+
+
+def scores(df, query, **extra):
+    body = {"query": query, "size": 10, "_source": ["id"], **extra}
+    return {r["id"]: r["_score"]
+            for r in es_scored_search(df, body, id_field="id").collect()}
+
+
+def test_match_on_subfield_reads_shingles(docs):
+    # match on a shingle subfield matches adjacent query terms only, in
+    # filter and score context alike
+    assert hits(docs, {"match": {"t._2gram": "quick brown"}}) == [1, 4]
+    assert hits(docs, {"match": {"t._3gram": "quick brown fox"}}) == [1]
+    # a query shorter than the shingle has no terms: zero_terms_query
+    assert hits(docs, {"match": {"t._2gram": "quick"}}) == []
+    s = scores(docs, {"match": {"t._2gram": "quick brown"}})
+    assert set(s) == {1, 4} and all(v > 0 for v in s.values())
+    # doc 4 holds the shingle once among 3, doc 1 once among 4
+    assert s[4] > s[1]
+
+
+def test_best_fields_over_root_and_subfield(docs):
+    body = {"multi_match": {"query": "quick brown",
+                            "fields": ["t", "t._2gram"]}}
+    assert hits(docs, body) == [1, 2, 3, 4]
+    s = scores(docs, body)
+    # the subfield arm lifts adjacent quick brown above the bag of words
+    assert s[1] > s[2]
+    gram = scores(docs, {"match": {"t._2gram": "quick brown"}})
+    root = scores(docs, {"match": {"t": "quick brown"}})
+    for i, v in s.items():
+        assert v == pytest.approx(max(root[i], gram.get(i, 0.0)))
+
+
+def test_cross_fields_groups_subfield_apart(docs):
+    # ES groups cross_fields fields by analyzer: the root group counts
+    # the terms, the 2-gram group its shingles; the groups dismax
+    body = {"multi_match": {"query": "quick brown", "type": "cross_fields",
+                            "fields": ["t", "t._2gram"], "operator": "and",
+                            "tie_breaker": 0.3}}
+    assert hits(docs, body) == [1, 2, 4]
+    s = scores(docs, body)
+    root = scores(docs, {"multi_match": {
+        "query": "quick brown", "type": "cross_fields", "fields": ["t"],
+        "operator": "and"}})
+    gram = scores(docs, {"match": {"t._2gram": "quick brown"}})
+    assert set(s) == {1, 2, 4}
+    for i, v in s.items():
+        a, b = root[i], gram.get(i, 0.0)
+        assert v == pytest.approx(max(a, b) + 0.3 * min(a, b))
+
+
+@pytest.mark.parametrize("clause", [
+    {"match_phrase": {"t._2gram": "quick brown"}},
+    {"term": {"t._2gram": "quick brown"}},
+    {"prefix": {"t._3gram": "quick"}},
+    {"exists": {"field": "t._2gram"}},
+    {"combined_fields": {"query": "quick", "fields": ["t", "t._2gram"]}},
+])
+def test_other_clauses_on_subfield_raise(docs, clause):
+    with pytest.raises(ValueError, match=r"t\._[23]gram"):
+        hits(docs, clause)
+    with pytest.raises(ValueError, match=r"t\._[23]gram"):
+        scores(docs, clause)
