@@ -4039,7 +4039,7 @@ def q_es_search_as_you_type(spark, sf_dir):
     ("data stream fas" must hit "… data stream fast …" via the 2-gram
     full term + trailing prefix shingle).  Subfield streams derive from
     the root's analyzed tokens in one codegen transform
-    (plans/analysis.py::shingle_col) — no index-time materialization, no
+    (plans/analysis.py::shingle_sql) — no index-time materialization, no
     UDF, no extra shuffle; the oracle rebuilds the same shingle lists
     with duckdb_shingles."""
     from hive2es_offline_spark.plans.query_dsl import es_search

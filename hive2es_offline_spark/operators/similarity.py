@@ -744,7 +744,7 @@ def incremental_semantic_dedup(
     both sides assign against the same frozen cells, so a day's batch
     never re-clusters the accumulated corpus.  Re-train centroids only
     when corpus drift degrades cell balance (monitor with
-    ``quality.psi_drift``).
+    ``quality.column_drift``).
 
     Scale shape: one map-only assignment pass per side (no shuffle), one
     shuffle on the cell id, then per-cell new x seen cosine as chunked

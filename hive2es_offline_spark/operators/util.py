@@ -63,6 +63,20 @@ def sql_string(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def sql_literal(v) -> str:
+    """Python constant → Spark-SQL literal of the type ``F.lit`` gives it:
+    a float is a DOUBLE (``2.5D``; a bare ``2.5`` would parse as
+    DECIMAL(2,1)), an int an INT or, past 32 bits, a BIGINT, a bool a
+    BOOLEAN, a string a quoted STRING."""
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, float):
+        return repr(v) + "D"
+    if isinstance(v, int):
+        return str(v)
+    return sql_string(v)
+
+
 def sql_bind(col: Column | str, render: Callable[[str], str]) -> Column:
     """``render(ref)`` — Spark-SQL text over the reference ``ref`` —
     applied to ``col``, parsed in one ``F.expr`` call.
@@ -105,3 +119,28 @@ def sql_let(values: Sequence[str], body: Callable[[list[str]], str]) -> str:
     fields = ", ".join(f"'c{i}', {v}" for i, v in enumerate(values))
     return (f"element_at(transform(array(named_struct({fields})), _l{k} -> "
             f"{body([f'_l{k}.c{i}' for i in range(len(values))])}), 1)")
+
+
+def bridge(bridges: list, col: Column, tag: str = "b") -> str:
+    """Register ``col`` — a Column another module's builder made — on
+    ``bridges`` under a hidden ``\x00<tag><n>`` name and return that
+    name as SQL text (renderers sharing a frame use distinct tags).  The
+    stage that parses the text projects its bridges first
+    (``with_bridges``) and drops them after (``drop_bridges``)."""
+    name = f"\x00{tag}{len(bridges)}"
+    bridges.append((name, col))
+    return sql_ident(name)
+
+
+def with_bridges(df: DataFrame, bridges: list) -> DataFrame:
+    """Project each registered bridge Column under its hidden name, in
+    registration order (a bridge may read an earlier one)."""
+    for name, col in bridges:
+        df = df.withColumn(name, col)
+    return df
+
+
+def drop_bridges(df: DataFrame, bridges: list, *also: str) -> DataFrame:
+    """``df`` without the bridge columns (and the ``also`` columns)."""
+    names = [*also, *[name for name, _ in bridges]]
+    return df.drop(*names) if names else df

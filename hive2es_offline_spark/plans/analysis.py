@@ -75,7 +75,6 @@ from dataclasses import dataclass, field
 from contextlib import contextmanager
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from ..operators.util import sql_bind, sql_let
 from ..operators.util import sql_string as _sq
@@ -87,7 +86,7 @@ __all__ = [
     "SPANISH_STOPWORDS", "ITALIAN_STOPWORDS", "PORTUGUESE_STOPWORDS",
     "RUSSIAN_STOPWORDS", "DUTCH_STOPWORDS",
     "stem_text", "fold_text",
-    "sayt_subfield", "shingle_col", "shingle_terms", "field_terms",
+    "sayt_subfield", "shingle_sql", "shingle_terms", "field_terms",
     "duckdb_shingles",
 ]
 
@@ -1270,19 +1269,6 @@ def candidate_tokens_col(
     return sql_bind(col, lambda ref: candidate_tokens_sql(ref, terms, analyzer))
 
 
-def let_cols(cols, fn) -> Column:
-    """LET-BINDING of Columns: evaluate each of ``cols`` exactly ONCE
-    per row and hand the results to ``fn`` as lambda-variable field
-    reads — the Column-API form of ``operators.util.sql_let`` (see
-    there for why), for builders that still assemble Columns."""
-    bound = F.array(F.struct(*[c.alias(f"c{i}") for i, c in enumerate(cols)]))
-    return F.element_at(
-        F.transform(
-            bound,
-            lambda s: fn([s[f"c{i}"] for i in range(len(cols))])),
-        1)
-
-
 def term_hit_sql(term: str, prefix: bool = False) -> str:
     """SQL predicate over the token ``x``: it equals ``term`` (or starts
     with it, ``prefix=True``)."""
@@ -1496,9 +1482,10 @@ def sayt_subfield(field: str) -> tuple[str, int] | None:
     return None
 
 
-def shingle_col(toks: Column, n: int) -> Column:
-    """``n``-token shingles of an analyzed token array — the Spark
-    rendering of the search_as_you_type ``._Ngram`` stream.  Composed
+def shingle_sql(toks: str, n: int) -> str:
+    """``n``-token shingles of the analyzed token array ``toks`` (SQL
+    text) — the Spark rendering of the search_as_you_type ``._Ngram``
+    stream.  Composed
     as ``n-1`` ``zip_with`` passes against shifted tails instead of a
     per-element ``slice`` + ``concat_ws`` transform: slice inside a
     lambda copies the whole array once PER SHINGLE PER ROW (measured
@@ -1507,18 +1494,16 @@ def shingle_col(toks: Column, n: int) -> Column:
     partial shingles concat to NULL and one final filter drops them —
     which also makes arrays shorter than ``n`` yield the empty list
     (ES's shingle filter emits nothing).  NULL input stays NULL, like
-    ``analyze_col``."""
+    ``analyze_sql``."""
     out = toks
     for k in range(1, n):
-        tail = F.slice(toks, k + 1,
-                       F.greatest(F.size(toks) - k, F.lit(0)))
-        out = F.zip_with(out, tail,
-                         lambda x, y: F.concat(x, F.lit(" "), y))
-    return F.filter(out, lambda x: x.isNotNull())
+        tail = f"slice({toks}, {k + 1}, greatest(size({toks}) - {k}, 0))"
+        out = f"zip_with({out}, {tail}, (x, y) -> concat(x, ' ', y))"
+    return f"filter({out}, x -> x IS NOT NULL)"
 
 
 def shingle_terms(terms: list[str], n: int) -> list[str]:
-    """Query-side twin of :func:`shingle_col`: the analyzed query terms
+    """Query-side twin of :func:`shingle_sql`: the analyzed query terms
     re-assembled into ``n``-gram shingle terms (what ES's per-subfield
     query analyzer produces)."""
     return [" ".join(terms[i:i + n]) for i in range(len(terms) - n + 1)]
@@ -1534,7 +1519,7 @@ def field_terms(field: str, text: str) -> list[str]:
 
 
 def duckdb_shingles(expr: str, n: int, analyzer: str = "standard") -> str:
-    """Oracle-side twin of :func:`shingle_col` — DuckDB SQL for the
+    """Oracle-side twin of :func:`shingle_sql` — DuckDB SQL for the
     shingle list of ``expr``'s token stream (NULL input stays NULL,
     matching the column rendering exactly — code-review r13)."""
     toks = duckdb_tokens(expr, analyzer)

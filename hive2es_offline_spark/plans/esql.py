@@ -174,7 +174,8 @@ plans/kql.py, 8.17; for QSTR/KQL bare terms reject loudly — a flat
 frame has no index mapping to supply default fields) and
 ``KNN(field, [v…], k)`` (9.1 — pre-filtered exact knn: rounded
 cosine vs a literal vector, tie-inclusive k-th boundary from one
-bounded plan-build job; scores the cosine under METADATA _score).  ``CATEGORIZE(msg)`` is the
+bounded plan-build job; scores the cosine under METADATA _score).
+``CATEGORIZE(msg)`` is the
 STATS-BY log-categorization key — the deterministic exact-signature
 contract of the categorize_text agg (number-bearing tokens removed,
 pure codegen; live ES runs the drain-style ML categorizer — documented
@@ -189,6 +190,11 @@ engine (order-exact, oracle-hashable); MEDIAN/PERCENTILE are exact
 (live ES|QL uses TDigest — the documented oracle-favoring divergence
 class of the `percentiles` agg).
 
+Rendering: each stage is Spark-SQL text parsed once; a Column from
+another module's builder enters it as a bridge (``operators.util.bridge``,
+shared with the DSL score compiler, whose SQL build of a full-text
+clause is that clause's ``METADATA _score`` contribution).
+
 Reference parity: the reference engine has no ES|QL; this surface
 covers the consumer who queries the LOADED index through ES|QL instead
 of the search DSL (public ES|QL docs are the semantic source).
@@ -201,7 +207,9 @@ from typing import Callable, Mapping
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..operators.util import sql_path, sql_string
+from ..operators.util import (
+    bridge, drop_bridges, sql_literal, sql_path, sql_string, with_bridges,
+)
 
 __all__ = ["esql"]
 
@@ -388,26 +396,11 @@ def _parse_wkt(s: str) -> dict:
 # round trip costs ~0.5 ms on a PySpark driver, so building each node
 # through the Column API made one ES|QL compile cost 0.3-1 s of pure
 # driver latency (es_esql_ip measured ~1 830 calls).  Calls that reuse
-# another module's Column builder — the full-text predicates, the geo
-# relations and ST_DISTANCE, KNN, CATEGORIZE — are BRIDGES:
-# ``_P._bridge`` registers the Column under a hidden ``\x00b<n>`` name
-# and returns that name as SQL text.  The stage that parsed the
-# expression projects its bridges just before its own operator
-# (``_with_bridges``) and drops them after it (``_drop_bridges``), so a
-# bridge composes under any operator and no hidden column reaches the
-# output frame.
-
-
-def _with_bridges(df: DataFrame, bridges: list) -> DataFrame:
-    """Project each registered bridge Column under its hidden name, in
-    registration order (a bridge may read an earlier one)."""
-    for name, col in bridges:
-        df = df.withColumn(name, col)
-    return df
-
-
-def _drop_bridges(df: DataFrame, bridges: list) -> DataFrame:
-    return df.drop(*[name for name, _ in bridges]) if bridges else df
+# another module's Column builder are BRIDGES (``_P._bridge``): the
+# stage that parsed the expression projects its bridges just before its
+# own operator (``with_bridges``) and drops them after it
+# (``drop_bridges``), so a bridge composes under any operator and no
+# hidden column reaches the output frame.
 
 
 def _num_sql(text: str) -> str:
@@ -416,18 +409,6 @@ def _num_sql(text: str) -> str:
     ``F.lit(2.5)`` is a DOUBLE — the D suffix keeps the tiers
     identical.  Integers parse to int/bigint on both paths."""
     return text + "D" if "." in text else text
-
-
-def _py_sql(v) -> str:
-    """Folded Python literal (IN lists, WKT coordinates) → SQL text,
-    same type mapping as ``F.lit``."""
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, float):
-        return repr(v) + "D"
-    if isinstance(v, int):
-        return str(v)
-    return sql_string(v)
 
 
 class _P:
@@ -448,28 +429,32 @@ class _P:
 
     def _bridge(self, col: Column) -> str:
         """Register a bridge Column; return its hidden name as SQL."""
-        name = f"\x00b{len(self.bridges)}"
-        self.bridges.append((name, col))
-        return sql_path(name)
+        return bridge(self.bridges, col)
 
     def _ft(self, pred: Column, dsl: dict) -> str:
-        """Route one full-text WHERE function's predicate through the
-        METADATA _score accumulator: when a scored compile is active,
-        record the clause's score contribution, collected by
-        _stage_where after the filter applies.  The contribution is the
-        DSL scorer's build of the clause (plans/scoring._ScoreCompiler),
-        which gates on ``pred`` rather than compiling it again.  The
+        """Bridge one full-text WHERE function's predicate and, when a
+        METADATA _score compile is active, record the clause's score
+        contribution, collected by _stage_where after the filter
+        applies.  The contribution is the DSL scorer's SQL build of the
+        clause (plans/scoring._ScoreCompiler), which gates on the
+        predicate's bridge rather than compiling it again.  The
         statistics it reads are declared on the stage's
         ``CorpusStats``, which _stage_where attaches."""
+        name = self._bridge(pred)
         if _SCORE_CTX is not None:
             from .scoring import CorpusStats, _ScoreCompiler
 
             if getattr(self, "scorer", None) is None:
                 self.scorer = _ScoreCompiler("_id", CorpusStats(1.2, 0.75))
-            contribs = getattr(self, "score_contribs", None) or []
-            contribs.append(self.scorer.build(dsl, pred))
-            self.score_contribs = contribs
-        return self._bridge(pred)
+            self._contribute(self.scorer.build(dsl, name))
+        return name
+
+    def _contribute(self, score: str) -> None:
+        """Add one clause's SQL score to this stage's METADATA _score
+        contributions."""
+        contribs = getattr(self, "score_contribs", None) or []
+        contribs.append(score)
+        self.score_contribs = contribs
 
     def peek_kw(self) -> str | None:
         t = self.peek()
@@ -547,7 +532,7 @@ class _P:
                 self.next()
                 vals.append(self._literal_value())
             self.expect_op(")")
-            return f"({left} IN ({', '.join(map(_py_sql, vals))}))"
+            return f"({left} IN ({', '.join(map(sql_literal, vals))}))"
         if kw == "IS":
             self.next()
             neg = False
@@ -784,7 +769,7 @@ class _P:
             self.expect_op(")")
             d = (f"(CAST(CAST({end} AS TIMESTAMP) AS DOUBLE) - "
                  f"CAST(CAST({start} AS TIMESTAMP) AS DOUBLE))")
-            return f"CAST(({d} / {_py_sql(float(secs))}) AS BIGINT)"
+            return f"CAST(({d} / {sql_literal(float(secs))}) AS BIGINT)"
         if fn == "DATE_EXTRACT":
             # DATE_EXTRACT("year", date) — java.time ChronoField names,
             # case-insensitive, mapped to codegen date functions.
@@ -1005,17 +990,13 @@ class _P:
                             .where(F.col("_s").isNotNull())
                             .orderBy(F.col("_s").desc()).limit(k)
                             .collect()]
-                if not boundary:
-                    pred = F.lit(False)  # no comparable vectors at all
-                else:
-                    pred = sim >= F.lit(float(boundary[-1]))
+                s = self._bridge(sim)
+                # no boundary: no comparable vectors at all
+                pred = (f"({s} >= {sql_literal(float(boundary[-1]))})"
+                        if boundary else "FALSE")
                 if _SCORE_CTX is not None:
-                    contribs = getattr(self, "score_contribs",
-                                       None) or []
-                    contribs.append(
-                        F.when(pred, sim).otherwise(F.lit(0.0)))
-                    self.score_contribs = contribs
-                return self._bridge(pred)
+                    self._contribute(f"CASE WHEN {pred} THEN {s} ELSE 0.0D END")
+                return pred
             if fn in ("MATCH", "MATCH_PHRASE"):
                 fld = self.next()
                 if fld[0] != "id":
@@ -1147,8 +1128,8 @@ class _P:
                         f"ES|QL: TO_GEOPOINT needs a WKT POINT, got "
                         f"{t[1]!r}")
                 lon, lat = shape["coordinates"]
-                return (f"named_struct('lat', {_py_sql(lat)}, "
-                        f"'lon', {_py_sql(lon)})")
+                return (f"named_struct('lat', {sql_literal(lat)}, "
+                        f"'lon', {sql_literal(lon)})")
             # TO_GEOSHAPE outside an ST_* argument has no column
             # meaning (shapes are plan-time literals, not row values)
             raise ValueError(
@@ -1960,26 +1941,27 @@ def _stage_where(df: DataFrame, p: _P) -> DataFrame:
         raise ValueError(
             f"ES|QL: trailing tokens after WHERE: "
             f"{p.peek()[1]!r}{_at(p.peek())}")
-    out = _drop_bridges(_with_bridges(df, p.bridges).where(cond), p.bridges)
+    out = with_bridges(df, p.bridges).where(cond)
     contribs = getattr(p, "score_contribs", None)
+    scratch: list[str] = []
     if contribs:
         # METADATA _score: this WHERE's full-text contributions add to
         # the running score — each is already a round-6 decimal-summed
-        # clause score gated on its own predicate, so the addition is
-        # order-exact and oracle-replayable.  Their corpus statistics
-        # are one 1-row aggregate over the FROM-time frame
+        # clause score gated on its own predicate's bridge, so the
+        # addition is order-exact and oracle-replayable.  Their corpus
+        # statistics are one 1-row aggregate over the FROM-time frame,
+        # and the score reads the stage's bridges before they drop
         scorer = getattr(p, "scorer", None)
-        stats = scorer.stats if scorer is not None else None
-        if stats is not None and stats.names:
-            out = stats.attach(out, _SCORE_CTX["src"])
-        total = contribs[0]
-        for c in contribs[1:]:
-            total = total + c
-        out = out.withColumn(
-            "_score", F.round(F.col("_score") + total, 6))
-        if stats is not None:
-            out = out.drop(*stats.helpers, *stats.names)
-    return out
+        if scorer is not None:
+            stats = scorer.stats
+            if stats.names:
+                out = stats.attach(out, _SCORE_CTX["src"])
+            out = with_bridges(out, scorer.bridges)
+            scratch = [*stats.helpers, *stats.names,
+                       *[name for name, _ in scorer.bridges]]
+        out = out.withColumn("_score", F.expr(
+            f"round(`_score` + ({' + '.join(contribs)}), 6)"))
+    return drop_bridges(out, p.bridges, *scratch)
 
 
 def _assignments(p: _P) -> list[tuple[str, str, list]]:
@@ -2010,8 +1992,8 @@ def _stage_eval(df: DataFrame, p: _P) -> DataFrame:
     # order; an assignment's bridges are projected just before it, so
     # they may read the earlier assignments too
     for name, expr, bridges in _assignments(p):
-        df = _with_bridges(df, bridges).withColumn(name, F.expr(expr))
-        df = _drop_bridges(df, bridges)
+        df = with_bridges(df, bridges).withColumn(name, F.expr(expr))
+        df = drop_bridges(df, bridges)
     return df
 
 
@@ -2084,7 +2066,7 @@ def _stage_stats(df: DataFrame, p: _P) -> DataFrame:
             for n, e in _parse_by_keys(p, by_i)]
     exprs = [F.expr(e).alias(n) for n, e in aggs]
     # the aggregate consumes the bridge columns: nothing to drop after
-    df = _with_bridges(df, p.bridges)
+    df = with_bridges(df, p.bridges)
     if keys:
         return df.groupBy(*keys).agg(*exprs)
     return df.agg(*exprs)
@@ -2262,7 +2244,7 @@ def _stage_stats_ts(df: DataFrame, p: _P,
             gb.append(F.expr(e).alias(n))
 
     rate_cols = sorted({c for _, _, inner, c in aggs if inner == "RATE"})
-    work = _with_bridges(df, p.bridges)  # consumed by the stage-1 groupBy
+    work = with_bridges(df, p.bridges)  # consumed by the stage-1 groupBy
     if rate_cols:
         from pyspark.sql import Window
 
@@ -2456,7 +2438,7 @@ def _stage_inlinestats(df: DataFrame, p: _P) -> DataFrame:
         raise ValueError("ES|QL: INLINESTATS needs at least one aggregate")
     keys = _parse_by_keys(p, by_i)
     compiled = [(n, _inline_agg(kind, args)) for n, kind, args in aggs]
-    df = _with_bridges(df, p.bridges)
+    df = with_bridges(df, p.bridges)
     if keys:
         # computed keys materialize as columns first (ES|QL keeps them
         # in the output frame), bare keys partition directly
@@ -2466,7 +2448,7 @@ def _stage_inlinestats(df: DataFrame, p: _P) -> DataFrame:
         w = Window.partitionBy(*[name for name, _ in keys])
         for name, (_, win_builder) in compiled:
             df = df.withColumn(name, win_builder(w))
-        return _drop_bridges(df, p.bridges)
+        return drop_bridges(df, p.bridges)
     # like EVAL (and the window path's withColumn), an INLINESTATS name
     # that already exists REPLACES the column — ES|QL semantics; the
     # aggregates are computed from the pre-drop frame
@@ -2474,7 +2456,7 @@ def _stage_inlinestats(df: DataFrame, p: _P) -> DataFrame:
     clash = [n for n, _ in compiled if n in df.columns]
     if clash:
         df = df.drop(*clash)
-    return _drop_bridges(df.crossJoin(F.broadcast(scalars)), p.bridges)
+    return drop_bridges(df.crossJoin(F.broadcast(scalars)), p.bridges)
 
 
 def _stage_sort(df: DataFrame, p: _P) -> DataFrame:
@@ -2507,8 +2489,8 @@ def _stage_sort(df: DataFrame, p: _P) -> DataFrame:
             raise ValueError(
                 f"ES|QL: expected ',' between SORT keys, got "
                 f"{p.peek()[1]!r}")
-    return _drop_bridges(_with_bridges(df, p.bridges).orderBy(*cols),
-                         p.bridges)
+    return drop_bridges(with_bridges(df, p.bridges).orderBy(*cols),
+                        p.bridges)
 
 
 #: GROK built-in patterns (the high-frequency core of the public grok
@@ -2805,8 +2787,8 @@ def esql(tables: Mapping[str, DataFrame], query: str, *,
         # assignments — `ROW x = id + 1` would silently resolve id=0
         # instead of failing at analysis (ADVICE r13 #2); rename it to
         # a name the identifier grammar cannot produce
-        df = _with_bridges(spark.range(1).toDF("\x00esql_row"),
-                           head.bridges).select(
+        df = with_bridges(spark.range(1).toDF("\x00esql_row"),
+                          head.bridges).select(
             *[F.expr(e).alias(n) for n, e, _ in assigns])
     elif cmd[0] == "id" and cmd[1].upper() == "FROM":
         # index names until an optional METADATA keyword (round 14):

@@ -106,10 +106,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import ip as _ip
-from ..operators.util import sql_bind, sql_let, sql_path, sql_string
+from ..operators.util import (
+    sql_bind, sql_ident, sql_let, sql_literal, sql_path, sql_string,
+)
 from .analysis import (
-    analyze_sql, field_terms, hit_positions_sql, let_cols, sayt_subfield,
-    shingle_col, term_hit_sql, with_chain_positions,
+    analyze_sql, field_terms, hit_positions_sql, sayt_subfield, shingle_sql,
+    term_hit_sql, with_chain_positions,
 )
 
 __all__ = ["compile_query", "compile_aggs", "es_search", "es_count",
@@ -144,6 +146,18 @@ def _ref(field: str, col) -> "Column | str":
     resolved Column (custom resolvers, e.g. nested/inner-hit scopes),
     which ``operators.util.sql_bind`` binds as a SQL lambda argument."""
     return field if col is F.col else col(field)
+
+
+def _bind_fields(fields: list[str], col, render) -> Column:
+    """``render(refs)`` — Spark-SQL text over one reference per name in
+    ``fields`` — parsed in one call: the quoted names under the plain
+    ``F.col`` resolver; a custom resolver's Columns bind as the fields
+    of one struct through ``operators.util.sql_bind``."""
+    if col is F.col:
+        return F.expr(render([sql_path(f) for f in fields]))
+    return sql_bind(
+        F.struct(*[col(f).alias(f"f{i}") for i, f in enumerate(fields)]),
+        lambda ref: render([f"{ref}.f{i}" for i in range(len(fields))]))
 
 
 def _ip_long(field: str, col) -> Column:
@@ -746,7 +760,22 @@ def osa_distance(a: str, b: str, cap: int = 2) -> int:
     return min(prev[lb], cap + 1)
 
 
-def _fuzzy_predicate(c: Column, value: str, f: int) -> Column:
+def _fuzzy_sql(ref: str, value: str, f: int) -> str:
+    """SQL predicate over ``ref``: within Damerau edit budget ``f`` ∈
+    {0, 1} of the literal ``value`` (see ``_fuzzy_predicate``)."""
+    if f == 0:
+        return f"({ref} = {sql_string(value)})"
+    # thresholded levenshtein early-exits the DP; it returns -1 when
+    # the distance EXCEEDS the threshold, so "matches" is >= 0
+    pred = f"(levenshtein({ref}, {sql_string(value)}, 1) >= 0)"
+    variants = _transposition_variants(value)
+    if variants:
+        pred = (f"({pred} OR {ref} IN "
+                f"({', '.join(map(sql_string, variants))}))")
+    return pred
+
+
+def _fuzzy_predicate(c: "Column | str", value: str, f: int) -> Column:
     """Damerau (transposition = one edit) fuzzy match at edit budget
     ``f`` ∈ {0, 1, 2}, matching ES where plain ``levenshtein`` misses
     transposed pairs (the r6 documented divergence, now closed).
@@ -760,17 +789,12 @@ def _fuzzy_predicate(c: Column, value: str, f: int) -> Column:
       evaluates the cheap guard BELOW the Python eval, so only rows
       within ±2 length ever cross into Arrow.  Fuzzy is ES's
       expensive-query class; the slow path is confined to exactly this
-      branch."""
-    if f == 0:
-        return c == F.lit(value)
-    if f == 1:
-        # thresholded levenshtein early-exits the DP; it returns -1 when
-        # the distance EXCEEDS the threshold, so "matches" is >= 0
-        pred = F.levenshtein(c, F.lit(value), 1) >= F.lit(0)
-        variants = _transposition_variants(value)
-        if variants:
-            pred = pred | c.isin(variants)
-        return pred
+      branch.
+
+    ``c`` is a column name or a Column, as for ``sql_bind``."""
+    if f <= 1:
+        return sql_bind(c, lambda ref: _fuzzy_sql(ref, value, f))
+    c = F.col(c) if isinstance(c, str) else c
 
     import pandas as pd  # noqa: F401 — resolved lazily for the UDF hints
     from pyspark.sql.functions import pandas_udf
@@ -972,24 +996,16 @@ def _split_field_boosts(fields, min_boost: float | None = None
     return flds, boosts
 
 
-def _count_fold(preds: list[Column], operator: str, msm) -> Column:
-    """ES match-family fold of per-term predicates: ``and`` needs all,
-    ``minimum_should_match`` at least ``_msm_threshold`` of them, else
-    any one."""
+def _count_fold(preds: list[str], operator: str, msm) -> str:
+    """ES match-family fold of per-term SQL predicates: ``and`` needs
+    all, ``minimum_should_match`` at least ``_msm_threshold`` of them,
+    else any one."""
     if str(operator).lower() == "and":
-        out = preds[0]
-        for p in preds[1:]:
-            out = out & p
-        return out
+        return f"({' AND '.join(preds)})"
     if msm is not None:
-        hits: Column = preds[0].cast("int")
-        for p in preds[1:]:
-            hits = hits + p.cast("int")
-        return hits >= F.lit(_msm_threshold(msm, len(preds)))
-    out = preds[0]
-    for p in preds[1:]:
-        out = out | p
-    return out
+        hits = " + ".join(f"CAST({p} AS INT)" for p in preds)
+        return f"(({hits}) >= {_msm_threshold(msm, len(preds))})"
+    return f"({' OR '.join(preds)})"
 
 
 def _term_centric_predicate(
@@ -1003,28 +1019,25 @@ def _term_centric_predicate(
         # ES zero_terms_query (default none = match nothing)
         return zero_terms if zero_terms is not None else F.lit(False)
     uniq = list(dict.fromkeys(terms))
+    subs = [sayt_subfield(f) for f in flds]
 
-    def grouped(bound):
-        per_term: list[Column] = []
-        for t in uniq:
-            anyf = F.array_contains(bound[0], t)
-            for b in bound[1:]:
-                anyf = anyf | F.array_contains(b, t)
-            per_term.append(anyf)
-        return _count_fold(per_term, operator, msm)
+    def streams(refs: list[str]) -> list[str]:
+        # a search_as_you_type subfield reads its root's stream, shingled
+        return [analyze_sql(r) if sub is None
+                else shingle_sql(analyze_sql(r), sub[1])
+                for r, sub in zip(refs, subs)]
+
+    def grouped(ts: list[str]) -> str:
+        return _count_fold([
+            "(" + " OR ".join(f"array_contains({b}, {sql_string(t)})"
+                              for b in ts) + ")" for t in uniq],
+            operator, msm)
 
     # each field's token array binds once per row (T terms x F fields
-    # used to re-tokenize TxF times — analysis.let_cols)
-    return let_cols([_field_tokens(f, col) for f in flds], grouped)
-
-
-def _field_tokens(field: str, col) -> Column:
-    """``field``'s analyzed token stream; a search_as_you_type subfield
-    reads its root's stream, shingled."""
-    sub = sayt_subfield(field)
-    if sub is None:
-        return _analyze(_ref(field, col))
-    return shingle_col(_analyze(_ref(sub[0], col)), sub[1])
+    # used to re-tokenize TxF times)
+    return _bind_fields(
+        [sub[0] if sub else f for f, sub in zip(flds, subs)], col,
+        lambda refs: sql_let(streams(refs), grouped))
 
 
 def _analyzer_groups(flds: list[str]) -> list[list[int]]:
@@ -1348,7 +1361,7 @@ def compile_query(
             raise ValueError(
                 "fuzziness 2 (pandas-UDF path) is not supported inside nested"
             )
-        return _fuzzy_predicate(col(field), value, budget)
+        return _fuzzy_predicate(_ref(field, col), value, budget)
     if kind == "multi_match":
         # filter context: the match clause applied per field, OR across
         # fields (any best_fields/most_fields type distinction only affects
@@ -1457,8 +1470,10 @@ def compile_query(
         if sub is not None:
             # a search_as_you_type subfield: the root's stream, shingled
             # (as match_bool_prefix reads it)
-            toks = shingle_col(F.col(pre) if pre is not None
-                               else _analyze(_ref(sub[0], col)), sub[1])
+            toks = sql_bind(pre if pre is not None else _ref(sub[0], col),
+                            lambda ref: shingle_sql(
+                                ref if pre is not None else analyze_sql(ref),
+                                sub[1]))
         elif pre is not None and fuzz is None:
             # shared-analysis override (VERDICT r11 #7): the frame
             # carries this field's materialized full-chain stream —
@@ -1482,12 +1497,6 @@ def compile_query(
             # budget — exists() keeps it codegen, which caps the budget
             # at 1 (the pandas-UDF budget-2 path can't run inside a
             # lambda; use the whole-value `fuzzy` clause for that)
-            def tok_pred(term: str, budget: int):
-                # a plain unary closure: a default-arg lambda would look
-                # binary to F.exists and receive the element INDEX as the
-                # second argument
-                return lambda x: _fuzzy_predicate(x, term, budget)
-
             preds = []
             for t in terms:
                 budget = _parse_fuzziness(fuzz, len(t))
@@ -1497,8 +1506,10 @@ def compile_query(
                         "(per-token budget 2 needs the Python DP; use the "
                         "fuzzy clause for whole-value matching)"
                     )
-                preds.append(F.exists(toks, tok_pred(t, budget)))
-            return _count_fold(preds, operator, msm)
+                preds.append((t, budget))
+            return sql_bind(toks, lambda ts: _count_fold(
+                [f"exists({ts}, x -> {_fuzzy_sql('x', t, budget)})"
+                 for t, budget in preds], operator, msm))
         # true array Literal, not a per-row CreateArray (2-3× on scans)
         qarr = F.lit(list(dict.fromkeys(terms)))
         if operator == "and":
@@ -1574,18 +1585,21 @@ def compile_query(
             return _zero_terms_result(spec)
         *full, last = terms
 
-        def bool_prefix(bound):
-            toks, = bound
-            preds = [F.array_contains(toks, t) for t in dict.fromkeys(full)]
-            preds.append(F.exists(toks, lambda x: x.startswith(last)))
+        def bool_prefix(ts: list[str]) -> str:
+            preds = [f"array_contains({ts[0]}, {sql_string(t)})"
+                     for t in dict.fromkeys(full)]
+            preds.append(
+                f"exists({ts[0]}, x -> startswith(x, {sql_string(last)}))")
             return _count_fold(preds, operator, msm)
+
+        def stream(ref: str) -> str:
+            toks = ref if pre is not None else analyze_sql(ref)
+            return toks if sub is None else shingle_sql(toks, gram_n)
 
         # the analyzed stream evaluates once per row, not once per term
         pre = _pre_stream(field)
-        stream = F.col(pre) if pre is not None else _analyze(_ref(field, col))
-        if sub is not None:
-            stream = shingle_col(stream, gram_n)
-        return let_cols([stream], bool_prefix)
+        return sql_bind(pre if pre is not None else _ref(field, col),
+                        lambda ref: sql_let([stream(ref)], bool_prefix))
     if kind == "intervals":
         # the modern position-aware API over the span renderers: match /
         # prefix / all_of / any_of with ordered + max_gaps (see
@@ -2997,11 +3011,6 @@ _GEOHASH32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 # keys (NULLs, poles, antimeridian edges); the DuckDB oracles in
 # __spark_entry__.py replay the same arithmetic.
 
-def _fd(v: float) -> str:
-    """Python float → SQL DOUBLE literal (repr round-trips IEEE)."""
-    return repr(float(v)) + "D"
-
-
 def geohash_cell_sql(lat: str, lon: str, precision: int) -> str:
     """Base-32 geohash of a point at ``precision`` chars (1..12) — pure
     codegen bit math: quantize lon/lat to ceil/floor(5p/2) bits (indices
@@ -3016,10 +3025,11 @@ def geohash_cell_sql(lat: str, lon: str, precision: int) -> str:
     nbits = 5 * precision
     lonbits = (nbits + 1) // 2
     latbits = nbits // 2
+    lonw, latw = sql_literal(2.0 ** lonbits), sql_literal(2.0 ** latbits)
     loni = (f"least(greatest(CAST(FLOOR(((({lon} + 180.0D) / 360.0D) "
-            f"* {_fd(2 ** lonbits)})) AS BIGINT), 0), {2 ** lonbits - 1})")
+            f"* {lonw})) AS BIGINT), 0), {2 ** lonbits - 1})")
     lati = (f"least(greatest(CAST(FLOOR(((({lat} + 90.0D) / 180.0D) "
-            f"* {_fd(2 ** latbits)})) AS BIGINT), 0), {2 ** latbits - 1})")
+            f"* {latw})) AS BIGINT), 0), {2 ** latbits - 1})")
     h = "CAST(0 AS BIGINT)"
     for k in range(nbits):
         if k % 2 == 0:
@@ -3060,14 +3070,14 @@ def geotile_cell_sql(lat: str, lon: str, zoom: int) -> str:
 
     if not 0 <= zoom <= 29:
         raise ValueError(f"geotile precision must be 0..29, got {zoom}")
-    n = _fd(2 ** zoom)
+    n = sql_literal(2.0 ** zoom)
     lim = int(2 ** zoom - 1)
     x = (f"least(greatest(CAST(FLOOR(((({lon} + 180.0D) / 360.0D) "
          f"* {n})) AS BIGINT), 0), {lim})")
     merc = f"least(greatest({lat}, -85.05112878D), 85.05112878D)"
     latr = f"radians({merc})"
     y = (f"least(greatest(CAST(FLOOR((((1.0D - (ln((tan({latr}) "
-         f"+ (1.0D / cos({latr})))) / {_fd(_math.pi)})) / 2.0D) "
+         f"+ (1.0D / cos({latr})))) / {sql_literal(_math.pi)})) / 2.0D) "
          f"* {n})) AS BIGINT), 0), {lim})")
     return (f"CASE WHEN (({lat} IS NOT NULL) AND ({lon} IS NOT NULL)) "
             f"THEN concat('{zoom}/', CAST({x} AS STRING), '/', "
@@ -3091,7 +3101,7 @@ def hex_cell_sql(lat: str, lon: str, precision: int) -> str:
     the same keys.  NULL coordinates yield a NULL key.
 
     q/r are LET-BOUND (one array-of-struct transform, the shape of
-    analysis.let_cols; each reference is a struct-field read): the
+    ``operators.util.sql_let``; each reference is a struct-field read): the
     cube-round tree references them ~20×, and unbound that re-expansion
     measured ×4.3 the geotile floor at 1M rows (SCALE.md "Round-13
     probes, second batch")
@@ -3100,9 +3110,10 @@ def hex_cell_sql(lat: str, lon: str, precision: int) -> str:
         raise ValueError(f"hex_grid precision must be 0..15, got {precision}")
     size = 45.0 / (2.0 ** precision)
     x, y = f"CAST({lon} AS DOUBLE)", f"CAST({lat} AS DOUBLE)"
-    q0 = (f"((({_fd(3.0 ** 0.5 / 3.0)} * {x}) - ({_fd(1.0 / 3.0)} "
-          f"* {y})) / {_fd(size)})")
-    r0 = f"(({_fd(2.0 / 3.0)} * {y}) / {_fd(size)})"
+    third, cell = sql_literal(1.0 / 3.0), sql_literal(size)
+    q0 = (f"((({sql_literal(3.0 ** 0.5 / 3.0)} * {x}) - ({third} "
+          f"* {y})) / {cell})")
+    r0 = f"(({sql_literal(2.0 / 3.0)} * {y}) / {cell})"
     q, r = "s.c0", "s.c1"
     s_ = f"((- {q}) - {r})"
     rq, rr, rs = f"round({q}, 0)", f"round({r}, 0)", f"round({s_}, 0)"
@@ -4988,9 +4999,11 @@ def _apply_response_fields(
     proj = base + [f for f in fld_names if f not in base]
     proj += [n for n in sf if n not in proj]
     if proj:
+        # extra columns are selected by their literal names: a
+        # highlight column of a subfield is named ``text._2gram_highlight``
         return df.select(*proj,
-                         *[c for c in extra_cols if c in df.columns
-                           and c not in proj])
+                         *[sql_ident(c) for c in extra_cols
+                           if c in df.columns and c not in proj])
     return df
 
 
@@ -5010,7 +5023,10 @@ def _apply_highlight(df: DataFrame, body: dict) -> tuple[DataFrame, list[str]]:
     windows) + a per-fragment tag wrap, all codegen; JSON-encoded so the
     flat contract stays scalar (the driver canonicalizer hashes every
     column).  Without fragment options the whole field is wrapped, as
-    before."""
+    before.
+
+    A search_as_you_type subfield (``text._2gram``) has no text of its
+    own: it highlights its root field's text with the query's terms."""
     hspec = body.get("highlight") or {}
     added: list[str] = []
     pre_default = (hspec.get("pre_tags") or ["<em>"])[0]
@@ -5021,6 +5037,8 @@ def _apply_highlight(df: DataFrame, body: dict) -> tuple[DataFrame, list[str]]:
             continue
         pre = (fspec.get("pre_tags") or [pre_default])[0]
         post = (fspec.get("post_tags") or [post_default])[0]
+        sub = sayt_subfield(hf)
+        text = F.col(sub[0] if sub is not None else hf)
         escaped = [_regex_escape(t) for t in terms]
         pat = r"(?i)\b(" + "|".join(escaped) + r")\b"
         wrap = pre + "$1" + post
@@ -5028,20 +5046,20 @@ def _apply_highlight(df: DataFrame, body: dict) -> tuple[DataFrame, list[str]]:
         n_frags = fspec.get("number_of_fragments",
                             hspec.get("number_of_fragments"))
         if frag_size is None and n_frags is None:
-            out_col = F.regexp_replace(F.col(hf), F.lit(pat), F.lit(wrap))
+            out_col = F.regexp_replace(text, F.lit(pat), F.lit(wrap))
         else:
             fs = 100 if frag_size is None else int(frag_size)
             # `or` would swallow the legitimate 0 (= whole field, ES)
             nf = 5 if n_frags is None else int(n_frags)
             if nf == 0:
                 # ES: number_of_fragments 0 = no fragmenting, whole field
-                out_col = F.regexp_replace(F.col(hf), F.lit(pat), F.lit(wrap))
+                out_col = F.regexp_replace(text, F.lit(pat), F.lit(wrap))
             else:
                 half = max(1, fs // 2)
                 frag_pat = (r"(?i).{0," + str(half) + r"}\b(?:"
                             + "|".join(escaped) + r")\b.{0," + str(half) + "}")
                 frags = F.slice(
-                    F.regexp_extract_all(F.col(hf), F.lit(frag_pat), F.lit(0)),
+                    F.regexp_extract_all(text, F.lit(frag_pat), F.lit(0)),
                     1, nf,
                 )
                 out_col = F.to_json(F.transform(

@@ -50,6 +50,11 @@ and each row computes its own tf and dl in codegen.  No explode, no
 expression tree is plain codegen over the row.  No per-clause scans,
 no Python.
 
+Rendering: the score tree is ONE Spark-SQL text (``_ScoreCompiler``)
+parsed by one ``F.expr`` — never inside a ``transform`` lambda, which
+Spark interprets.  A Column another module builds enters the text as a
+bridge (``operators.util.bridge``, shared with ES|QL).
+
 Determinism: per-(doc, term) partials are rounded to 6 decimals (same as
 ``bm25_topk``), DECIMAL(28,6) sums, final ``_score`` rounded to 6 — an
 ANSI-SQL oracle reproduces the exact values.
@@ -57,11 +62,16 @@ ANSI-SQL oracle reproduces the exact values.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.util import sql_ident, sql_string
-from .analysis import analyze_col, field_terms
+from ..operators.util import (
+    bridge, drop_bridges, sql_bind, sql_ident, sql_let, sql_literal, sql_path,
+    sql_string, with_bridges,
+)
+from .analysis import analyze_col, analyze_sql, field_terms, shingle_sql
 from .analysis import analyze_text as _analyze_terms
 from .query_dsl import compile_query
 
@@ -81,17 +91,11 @@ def sparse_tf_vector(text, analyzer: str | None = None):
     the map builds via array_distinct + a counting filter — all codegen
     higher-order functions, no UDF, no shuffle; O(distinct × len)
     comparisons per row on in-register tokens."""
-    from .analysis import let_cols
-
-    toks = analyze_col(text,
-                       analyzer)
-    return let_cols([toks], lambda ts: F.map_from_entries(
-        F.transform(
-            F.array_distinct(ts[0]),
-            lambda t: F.struct(
-                t.alias("key"),
-                F.size(F.filter(ts[0], lambda x: x == t))
-                .cast("double").alias("value")))))
+    return sql_bind(text, lambda ref: sql_let(
+        [analyze_sql(ref, analyzer)], lambda ts: (
+            f"map_from_entries(transform(array_distinct({ts[0]}), "
+            f"t -> struct(t AS key, CAST(size(filter({ts[0]}, x -> x = t))"
+            " AS DOUBLE) AS value)))")))
 
 #: clauses that score as the constant 1.0 when they match (ES's
 #: filter-to-query rewrite wraps them in a constant score)
@@ -161,33 +165,62 @@ _UNGATED_KINDS = {"match_all", "dis_max", "pinned", "function_score",
                   "boosting", "semantic", "weighted_tokens"}
 
 
-def _dis_max(parts: list[Column], tie: float) -> Column:
+def _dis_max(parts: list[str], tie: float) -> str:
     """ES's dis_max combine: the best part plus ``tie`` times the sum of
     the others."""
-    best = F.greatest(*parts) if len(parts) > 1 else parts[0]
+    best = f"greatest({', '.join(parts)})" if len(parts) > 1 else parts[0]
     if tie and len(parts) > 1:
-        total = parts[0]
-        for p in parts[1:]:
-            total = total + p
-        best = best + F.lit(tie) * (total - best)
+        best = f"({best} + {sql_literal(tie)} * ({_sum(parts)} - {best}))"
     return best
 
 
+def _sum(parts: list[str]) -> str:
+    """``parts`` added left to right."""
+    return f"({' + '.join(parts)})" if len(parts) > 1 else parts[0]
+
+
+def _decimal_sum(parts) -> str:
+    """Σ of ``parts``, each rounded to 6 decimals so DECIMAL(28,6)
+    addition is exact and order-independent, as a DOUBLE — the
+    BM25-family convention an ANSI-SQL oracle replays bit-for-bit."""
+    adds = "".join(f" + CAST(round({p}, 6) AS DECIMAL(28,6))" for p in parts)
+    return f"CAST(CAST(0 AS DECIMAL(28,6)){adds} AS DOUBLE)"
+
+
+def _times(score: str, factor: float) -> str:
+    return f"({score} * {sql_literal(float(factor))})"
+
+
 class _ScoreCompiler:
-    """One walk of a normalized query tree: ``build`` emits the score
-    Column and, as each arm reads a corpus statistic (a term-score map or
-    a keyword idf), declares it on ``stats``.  ``stats.attach`` then
-    renders exactly what the score reads.
+    """One walk of a normalized query tree: ``build`` renders the score
+    as Spark-SQL text and, as each arm reads a corpus statistic (a
+    term-score map or a keyword idf), declares it on ``stats``.
+    ``stats.attach`` then renders exactly what the score reads.
+
+    A Column another module builds — a node's match predicate
+    (``compile_query``), a script (``_script_column``), a haversine
+    distance — enters the text as a BRIDGE (``operators.util.bridge``):
+    the caller projects ``bridges`` in registration order after
+    ``stats.attach`` (a script bridge reads the inner score's
+    statistics and bridges) and before it parses the score.
 
     A node's own match predicate is compiled only where the node gates on
-    it; ``pred`` hands ``build`` the root's predicate when the caller has
-    compiled it already (ES|QL's full-text WHERE functions)."""
+    it; ``pred`` hands ``build`` the root's predicate as SQL text when the
+    caller has compiled it already (ES|QL's full-text WHERE functions)."""
 
     def __init__(self, id_field: str, stats: "CorpusStats"):
         self.id_field = id_field
         self.stats = stats
+        self.bridges: list = []
 
-    def build(self, q: dict, pred: Column | None = None) -> Column:
+    def _bridge(self, col: Column) -> str:
+        return bridge(self.bridges, col, "s")
+
+    def _matches(self, q: dict) -> str:
+        """``q``'s match predicate, NULL read as false."""
+        return f"coalesce({self._bridge(compile_query(q, self.id_field))}, FALSE)"
+
+    def build(self, q: dict, pred: str | None = None) -> str:
         (kind, body), = q.items()
         if kind == "knn":
             raise ValueError(
@@ -197,14 +230,14 @@ class _ScoreCompiler:
                 kind == "multi_match"
                 and body.get("type", "best_fields") != "cross_fields"):
             # compiled before the arm runs: compile_query also validates
-            pred = compile_query(q, self.id_field)
+            pred = self._bridge(compile_query(q, self.id_field))
 
-        def gate(score: Column) -> Column:
+        def gate(score: str) -> str:
             """``score`` where this node matches, else 0."""
-            return F.when(pred, score).otherwise(F.lit(0.0))
+            return f"CASE WHEN {pred} THEN {score} ELSE 0.0D END"
 
         if kind == "match_all":
-            return F.lit(float(body.get("boost", 1.0)))
+            return sql_literal(float(body.get("boost", 1.0)))
         if kind in ("match", "match_phrase"):
             field, raw = next(iter(body.items()))
             spec = raw if isinstance(raw, dict) else {"query": raw}
@@ -215,7 +248,7 @@ class _ScoreCompiler:
             # their BM25 partials; the prefix clause contributes the
             # constant 1.0 when it matches (Lucene's constant-score
             # prefix rewrite), all gated on the clause's own predicate
-            from .analysis import preanalyzed_stream, sayt_subfield, shingle_col
+            from .analysis import preanalyzed_stream, sayt_subfield
 
             field, raw = next(iter(body.items()))
             spec = raw if isinstance(raw, dict) else {"query": raw}
@@ -225,20 +258,18 @@ class _ScoreCompiler:
             terms = field_terms(field, spec["query"])
             sub = sayt_subfield(field)
             if not terms:
-                return gate(F.lit(boost))
+                return gate(sql_literal(boost))
             full = list(dict.fromkeys(terms[:-1]))
             root = sub[0] if sub is not None else field
             pre = preanalyzed_stream(root)
-            toks = F.coalesce(
-                pre if pre is not None else analyze_col(root),
-                F.lit([]).cast("array<string>"))
+            toks = _nonnull_toks(sql_path(pre) if pre is not None
+                                 else analyze_sql(sql_path(root)))
             if sub is not None:
-                toks = shingle_col(toks, sub[1])
-            last = terms[-1]
-            prefix = F.exists(toks, lambda x: x.startswith(last))
-            score = (self._bm25_terms(field, full)
-                     + F.when(prefix, F.lit(1.0)).otherwise(F.lit(0.0)))
-            return gate(score * boost)
+                toks = shingle_sql(toks, sub[1])
+            prefix = f"exists({toks}, x -> startswith(x, {sql_string(terms[-1])}))"
+            score = (f"({self._bm25_terms(field, full)}"
+                     f" + CASE WHEN {prefix} THEN 1.0D ELSE 0.0D END)")
+            return gate(_times(score, boost))
         if kind == "multi_match":
             boost = float(body.get("boost", 1.0))
             tie = float(body.get("tie_breaker", 0.0))
@@ -261,18 +292,15 @@ class _ScoreCompiler:
                     terms = sorted(set(field_terms(group[0], body["query"])))
                     if not terms:
                         continue
-                    maps = [self.stats.partial_map(f, terms, df_fields=group)
-                            for f in group]
-                    total: Column = F.lit(0).cast("decimal(28,6)")
-                    for t in terms:
-                        best = _dis_max([
-                            F.coalesce(F.col(m).getItem(t), F.lit(0.0))
-                            * F.lit(boosts[i]) for m, i in zip(maps, g)], tie)
-                        total = total + F.round(best, 6).cast("decimal(28,6)")
-                    parts.append(total.cast("double"))
+                    maps = [sql_ident(self.stats.partial_map(
+                        f, terms, df_fields=group)) for f in group]
+                    parts.append(_decimal_sum(_dis_max([
+                        _times(f"coalesce({m}[{sql_string(t)}], 0.0D)",
+                               boosts[i]) for m, i in zip(maps, g)], tie)
+                        for t in terms))
                 if not parts:
-                    return gate(F.lit(boost))
-                return gate(_dis_max(parts, tie) * F.lit(boost))
+                    return gate(sql_literal(boost))
+                return gate(_times(_dis_max(parts, tie), boost))
             per = []
             for f in body["fields"]:
                 f2, _, fb = str(f).partition("^")
@@ -314,19 +342,15 @@ class _ScoreCompiler:
                 # most_fields and bool_prefix SUM the per-field scores
                 # (ES's Type enum groups both with tieBreaker 1.0);
                 # tie_breaker applies to the best_fields family only
-                total = per[0]
-                for p in per[1:]:
-                    total = total + p
-                return total * F.lit(boost)
-            return _dis_max(per, tie) * F.lit(boost)
+                return _times(_sum(per), boost)
+            return _times(_dis_max(per, tie), boost)
         if kind == "term":
             field, raw = next(iter(body.items()))
             value = raw["value"] if isinstance(raw, dict) else raw
             boost = float(raw.get("boost", 1.0)) if isinstance(raw, dict) else 1.0
-            idf = self.stats.idf(field, value)
-            return gate(F.expr(f"{idf} * {boost!r}D"))
+            return gate(_times(self.stats.idf(field, value), boost))
         if kind == "bool":
-            parts: list[Column] = []
+            parts: list[str] = []
             for c in body.get("must", []):
                 parts.append(self.build(c))
             for c in body.get("should", []):
@@ -334,18 +358,15 @@ class _ScoreCompiler:
             if not parts:
                 # filter/must_not-only bool: constant 1.0 like ES's
                 # ConstantScore(…) rewrite of a pure-filter query
-                return gate(F.lit(1.0))
-            out = parts[0]
-            for p in parts[1:]:
-                out = out + p
+                return gate("1.0D")
             # gate on the bool's OWN match predicate: a nested bool whose
             # must/must_not/minimum_should_match fails scores ZERO even
             # when individual should-children match (code-review r8: the
             # ungated sum leaked a non-matching inner bool's child scores
             # into a matching outer should)
-            return gate(out)
+            return gate(_sum(parts))
         if kind == "constant_score":
-            return gate(F.lit(float(body.get("boost", 1.0))))
+            return gate(sql_literal(float(body.get("boost", 1.0))))
         if kind == "dis_max":
             return _dis_max([self.build(c) for c in body["queries"]],
                             float(body.get("tie_breaker", 0.0)))
@@ -354,22 +375,22 @@ class _ScoreCompiler:
             # boost is a SIBLING of the "script" key (the generic
             # constant-kind extraction would read the inner spec and
             # silently drop it — code-review r10)
-            return gate(F.lit(float(body.get("boost", 1.0))))
+            return gate(sql_literal(float(body.get("boost", 1.0))))
         if kind == "pinned":
             # ES pinned: the listed ids sort ABOVE every organic hit, in
             # list order — live ES pins with scores descending from
             # Float.MAX_VALUE; the engine uses 1e10 - position, far
             # above any BM25 value and oracle-expressible
             ids = [str(v) for v in body["ids"]]
-            organic = self.build(body["organic"])
-            idc = F.col(self.id_field).cast("string")
-            out = organic
+            out = self.build(body["organic"])
+            idc = f"CAST({sql_path(self.id_field)} AS STRING)"
             for i in range(len(ids) - 1, -1, -1):
-                out = F.when(idc == ids[i], F.lit(1e10 - i)).otherwise(out)
+                out = (f"CASE WHEN {idc} = {sql_string(ids[i])} THEN "
+                       f"{sql_literal(1e10 - i)} ELSE {out} END")
             # the query-level boost multiplies pinned constants and
             # organic scores alike (code-review r10: it validated as an
             # allowed key but was silently dropped)
-            return out * F.lit(float(body.get("boost", 1.0)))
+            return _times(out, body.get("boost", 1.0))
         if kind == "combined_fields":
             # BM25F over the combined field (Lucene CombinedFieldQuery):
             # tf and dl are per-field values weighted by the field
@@ -383,9 +404,9 @@ class _ScoreCompiler:
             terms = tuple(sorted(set(_analyze_terms(str(body["query"])))))
             boost = float(body.get("boost", 1.0))
             if not terms:
-                return gate(F.lit(boost))
+                return gate(sql_literal(boost))
             m = self.stats.combined_map(flds, boosts, terms)
-            return gate(F.expr(bm25_sum_sql(m, terms)) * F.lit(boost))
+            return gate(_times(bm25_sum_sql(m, terms), boost))
         if kind == "rank_feature":
             # ES rank_feature: a monotonic function of a positive
             # numeric feature field — saturation x/(x+pivot) (pivot
@@ -401,7 +422,7 @@ class _ScoreCompiler:
                 raise ValueError(
                     f"bad rank_feature options: {sorted(unknown) or fns}")
             boost = float(body.get("boost", 1.0))
-            x = F.col(body["field"]).cast("double")
+            x = f"CAST({sql_path(body['field'])} AS DOUBLE)"
             fn = fns[0] if fns else "saturation"
             spec_f = body.get(fn) or {}
             if fn == "saturation":
@@ -412,12 +433,12 @@ class _ScoreCompiler:
                         "pass it for deterministic scores)")
                 if float(spec_f["pivot"]) <= 0:
                     raise ValueError("rank_feature pivot must be positive")
-                s = x / (x + F.lit(float(spec_f["pivot"])))
+                s = f"({x} / ({x} + {sql_literal(float(spec_f['pivot']))}))"
             elif fn == "log":
                 if float(spec_f["scaling_factor"]) <= 0:
                     raise ValueError(
                         "rank_feature scaling_factor must be positive")
-                s = F.log(F.lit(float(spec_f["scaling_factor"])) + x)
+                s = f"ln({sql_literal(float(spec_f['scaling_factor']))} + {x})"
             elif fn == "sigmoid":
                 pv = float(spec_f["pivot"])
                 ex = float(spec_f["exponent"])
@@ -425,11 +446,11 @@ class _ScoreCompiler:
                     raise ValueError(
                         "rank_feature sigmoid pivot/exponent must be "
                         "positive")
-                s = F.pow(x, F.lit(ex)) / (F.pow(x, F.lit(ex))
-                                           + F.lit(pv ** ex))
+                pw = f"power({x}, {sql_literal(ex)})"
+                s = f"({pw} / ({pw} + {sql_literal(pv ** ex)}))"
             else:
                 s = x
-            return gate(F.round(s * F.lit(boost), 6))
+            return gate(f"round({_times(s, boost)}, 6)")
         if kind == "distance_feature":
             # ES distance_feature: boost * pivot / (pivot + distance)
             # from origin — geo (haversine meters) or date
@@ -449,9 +470,9 @@ class _ScoreCompiler:
                     raise ValueError(
                         f"bad distance_feature pivot: {pivot!r}")
                 fld = F.col(body["field"])
-                dist = haversine_meters(
+                dist = self._bridge(haversine_meters(
                     fld["lat"], fld["lon"],
-                    float(origin["lat"]), float(origin["lon"]))
+                    float(origin["lat"]), float(origin["lon"])))
             else:
                 pv = _parse_duration_ms(pivot)
                 if pv is None:
@@ -465,7 +486,7 @@ class _ScoreCompiler:
                 # rule — reject with the fix spelled out
                 if isinstance(origin, (int, float)) and not isinstance(
                         origin, bool):
-                    ocol = F.timestamp_millis(F.lit(int(origin)))
+                    ocol = f"timestamp_millis({int(origin)})"
                 else:
                     o = str(origin)
                     if o.strip().lower().startswith("now"):
@@ -481,13 +502,11 @@ class _ScoreCompiler:
                         raise ValueError(
                             f"bad distance_feature origin: {origin!r} "
                             "(ISO timestamp or epoch millis)") from None
-                    ocol = F.lit(o).cast("timestamp")
-                dist = F.abs(
-                    F.unix_millis(F.col(body["field"]).cast("timestamp"))
-                    - F.unix_millis(ocol)
-                ).cast("double")
-            s = F.lit(float(pv)) / (F.lit(float(pv)) + dist)
-            return gate(F.round(s * F.lit(boost), 6))
+                    ocol = f"CAST({sql_string(o)} AS TIMESTAMP)"
+                dist = (f"CAST(abs(unix_millis(CAST({sql_path(body['field'])}"
+                        f" AS TIMESTAMP)) - unix_millis({ocol})) AS DOUBLE)")
+            pvl = sql_literal(float(pv))
+            return gate(f"round({_times(f'({pvl} / ({pvl} + {dist}))', boost)}, 6)")
         if kind == "max_sim":
             # late-interaction maxSim (ES rank_vectors
             # maxSimDotProduct): Σ over QUERY vectors of the best dot
@@ -500,39 +519,27 @@ class _ScoreCompiler:
             # DECIMAL(28,6) addition (the BM25-family convention), so
             # a DuckDB oracle replays the sum hash-identically via
             # list_dot_product/list_max.
-            doc = F.col(body["field"])
-
-            def _dot_with(lit_q):
-                # closure factory, NOT a default-arg lambda — a
-                # two-param callable looks BINARY to F.transform and
-                # receives the element INDEX as its second argument
-                def dot(d):
-                    return F.aggregate(
-                        F.zip_with(d, lit_q,
-                                   lambda a, b: a.cast("double") * b),
-                        F.lit(0.0), lambda acc, x: acc + x)
-                return dot
-
+            doc = sql_path(body["field"])
             # a doc vector of the wrong dimension would zip_with into
             # NULL products that array_max skips and coalesce turns
             # into a silent 0 score (round-14 review) — reject loudly
             # at runtime instead, the engine's anti-silent policy
             dim = len(body["query_vectors"][0])
-            bad_dim = F.exists(doc, lambda d: F.size(d) != F.lit(dim))
-            total: Column = F.lit(0).cast("decimal(28,6)")
+            bests = []
             for qv in body["query_vectors"]:
-                lit_q = F.lit([float(x) for x in qv])
-                best = F.array_max(F.transform(doc, _dot_with(lit_q)))
-                total = total + F.round(F.coalesce(best, F.lit(0.0)),
-                                        6).cast("decimal(28,6)")
-            boost = float(body.get("boost", 1.0))
-            score = total.cast("double") * F.lit(boost)
+                lit_q = ", ".join(sql_literal(float(x)) for x in qv)
+                bests.append(
+                    f"coalesce(array_max(transform({doc}, d -> aggregate("
+                    f"zip_with(d, array({lit_q}), (a, b) -> CAST(a AS DOUBLE)"
+                    " * b), 0.0D, (acc, x) -> acc + x))), 0.0D)")
+            msg = sql_string(f"max_sim: doc vector dimension != {dim} "
+                             "(query_vectors dimension) on field ")
             return gate(
-                F.when(bad_dim, F.raise_error(F.concat(
-                    F.lit(f"max_sim: doc vector dimension != {dim} "
-                          f"(query_vectors dimension) on field "),
-                    F.lit(str(body["field"])))).cast("double"))
-                .otherwise(score))
+                f"CASE WHEN exists({doc}, d -> size(d) != {dim}) THEN "
+                f"CAST(raise_error(concat({msg}, "
+                f"{sql_string(str(body['field']))})) AS DOUBLE) "
+                f"ELSE {_times(_decimal_sum(bests), body.get('boost', 1.0))}"
+                " END")
         if kind == "semantic":
             # semantic_text stand-in: the standard analysis chain IS
             # the "inference" — distinct query tokens at weight 1.0,
@@ -569,15 +576,12 @@ class _ScoreCompiler:
             # order-exact and an ANSI oracle replays it hash-identically
             # (the BM25-family convention).  Validation in
             # plans/query_dsl.py's filter branch.
-            m = F.col(body["field"])
+            m = sql_path(body["field"])
             qv = body["query_vector"]
-            total: Column = F.lit(0).cast("decimal(28,6)")
-            for t in sorted(qv):
-                total = total + F.round(
-                    F.coalesce(m.getItem(str(t)), F.lit(0.0))
-                    * F.lit(float(qv[t])), 6).cast("decimal(28,6)")
-            boost = float(body.get("boost", 1.0))
-            return gate(total.cast("double") * F.lit(boost))
+            total = _decimal_sum(
+                _times(f"coalesce({m}[{sql_string(str(t))}], 0.0D)", qv[t])
+                for t in sorted(qv))
+            return gate(_times(total, body.get("boost", 1.0)))
         if kind == "function_score":
             return self._function_score(body)
         if kind == "script_score":
@@ -592,42 +596,35 @@ class _ScoreCompiler:
                     "script_score's min_score param is not supported — "
                     "use the search body's top-level min_score"
                 )
-            inner = self.build(body["query"])
-            v = _script_score(body, inner)
-            return gate(F.round(v * F.lit(float(body.get("boost", 1.0))), 6))
+            v = self._bridge(_script_score(body, self.build(body["query"])))
+            return gate(f"round({_times(v, body.get('boost', 1.0))}, 6)")
         if kind == "boosting":
             # ES boosting: positive score, multiplied by negative_boost
             # when the negative query matches (demotion, never exclusion)
             pos = self.build(body["positive"])
-            neg = F.coalesce(
-                compile_query(body["negative"], self.id_field), F.lit(False)
-            )
-            nb = float(body.get("negative_boost", 0.5))
-            return F.when(neg, pos * F.lit(nb)).otherwise(pos)
+            neg = self._matches(body["negative"])
+            nb = body.get("negative_boost", 0.5)
+            return f"CASE WHEN {neg} THEN {_times(pos, nb)} ELSE {pos} END"
         if kind in _CONSTANT_ONE_KINDS:
             spec = next(iter(body.values()))
             boost = float(spec.get("boost", 1.0)) if isinstance(spec, dict) else 1.0
-            return gate(F.lit(boost))
+            return gate(sql_literal(boost))
         raise ValueError(f"unsupported clause in score context: {kind}")
 
-    def _bm25(self, field: str, query: str, boost: float) -> Column:
+    def _bm25(self, field: str, query: str, boost: float) -> str:
         """``boost`` times the sum of the per-term partials from this
         doc's term-score map for ``field`` (the ``_tsmap_<field>`` column
-        ``stats`` renders), as one SQL expression."""
-        terms = sorted(set(field_terms(field, query)))
-        if not terms:
-            return F.lit(0.0) * boost
-        m = self.stats.partial_map(field, terms)
-        return F.expr(f"{bm25_sum_sql(m, terms)} * {boost!r}D")
+        ``stats`` renders)."""
+        return _times(self._bm25_terms(
+            field, sorted(set(field_terms(field, query)))), boost)
 
-    def _bm25_terms(self, field: str, terms: list[str]) -> Column:
+    def _bm25_terms(self, field: str, terms: list[str]) -> str:
         if not terms:
-            return F.lit(0.0)
-        return F.expr(bm25_sum_sql(self.stats.partial_map(field, terms),
-                                   terms))
+            return "0.0D"
+        return bm25_sum_sql(self.stats.partial_map(field, terms), terms)
 
     # -- function_score ------------------------------------------------------
-    def _function_score(self, body: dict) -> Column:
+    def _function_score(self, body: dict) -> str:
         base = self.build(body["query"])
         fn_kinds = ("field_value_factor", "gauss", "exp", "linear",
                     "random_score", "script_score")
@@ -647,9 +644,9 @@ class _ScoreCompiler:
             funcs = [{k: v for k, v in body.items()
                       if k in (*fn_kinds, "weight", "filter")}]
             funcs = [f for f in funcs if set(f) - {"filter"}]
-        vals: list[Column] = []
-        matched: list[Column] = []
-        null_poison: Column | None = None
+        vals: list[str] = []
+        matched: list[str] = []
+        poisons: list[str] = []
         for fn in funcs:
             unsupported = set(fn) - {"filter", "weight", *fn_kinds}
             if unsupported:
@@ -661,88 +658,74 @@ class _ScoreCompiler:
                     "one scoring function per functions[] entry "
                     f"(got {sorted(set(fn) & set(fn_kinds))})"
                 )
-            v: Column = F.lit(1.0)
+            v = "1.0D"
             if "field_value_factor" in fn:
                 v = _field_value_factor(fn["field_value_factor"])
             for dk in ("gauss", "exp", "linear"):
                 if dk in fn:
-                    v = _decay_column(dk, fn[dk])
+                    v = _decay_column(dk, fn[dk], self._bridge)
             if "random_score" in fn:
                 v = _random_score(fn["random_score"])
             if "script_score" in fn:
                 # inside function_score, the script sees _score = the
                 # INNER QUERY's score (ES semantics)
-                v = _script_score(fn["script_score"], base)
+                v = self._bridge(_script_score(fn["script_score"], base))
             if "weight" in fn:
-                v = v * F.lit(float(fn["weight"]))
-            if "filter" in fn:
-                gate = F.coalesce(
-                    compile_query(fn["filter"], self.id_field), F.lit(False)
-                )
-            else:
-                gate = F.lit(True)
-            vals.append(F.when(gate, v))          # NULL when not matched
-            matched.append(gate.cast("int"))
+                v = _times(v, fn["weight"])
+            gate = self._matches(fn["filter"]) if "filter" in fn else "TRUE"
+            vals.append(f"CASE WHEN {gate} THEN {v} END")  # NULL unmatched
+            matched.append(f"CAST({gate} AS INT)")
             # a function that MATCHED but produced a NULL factor (missing
             # field without `missing`, out-of-domain modifier input) must
             # not be silently coalesced into the neutral element — it
             # poisons the whole score to NULL (ADVICE r8, documented in
             # _field_value_factor)
-            poison = gate & v.isNull()
-            null_poison = (poison if null_poison is None
-                           else (null_poison | poison))
+            poisons.append(f"({gate} AND {v} IS NULL)")
         score_mode = str(body.get("score_mode", "multiply"))
+
+        def fold(op: str, unit: str) -> str:
+            return f"({f' {op} '.join(f'coalesce({v}, {unit})' for v in vals)})"
+
         if not vals:
-            fscore = F.lit(1.0)
+            fscore = "1.0D"
         elif score_mode == "multiply":
-            fscore = F.coalesce(vals[0], F.lit(1.0))
-            for v in vals[1:]:
-                fscore = fscore * F.coalesce(v, F.lit(1.0))
+            fscore = fold("*", "1.0D")
         elif score_mode == "sum":
-            fscore = F.coalesce(vals[0], F.lit(0.0))
-            for v in vals[1:]:
-                fscore = fscore + F.coalesce(v, F.lit(0.0))
-        elif score_mode == "max":
-            fscore = F.coalesce(F.greatest(*vals) if len(vals) > 1 else vals[0],
-                                F.lit(1.0))
-        elif score_mode == "min":
-            fscore = F.coalesce(F.least(*vals) if len(vals) > 1 else vals[0],
-                                F.lit(1.0))
+            fscore = fold("+", "0.0D")
+        elif score_mode in ("max", "min"):
+            best = ("greatest" if score_mode == "max" else "least")
+            fscore = (f"coalesce({best}({', '.join(vals)}), 1.0D)"
+                      if len(vals) > 1 else f"coalesce({vals[0]}, 1.0D)")
         elif score_mode == "avg":
-            total = F.coalesce(vals[0], F.lit(0.0))
-            n = matched[0]
-            for v, m in zip(vals[1:], matched[1:]):
-                total = total + F.coalesce(v, F.lit(0.0))
-                n = n + m
-            fscore = F.when(n > 0, total / n).otherwise(F.lit(1.0))
+            fscore = (f"CASE WHEN {_sum(matched)} > 0 THEN "
+                      f"{fold('+', '0.0D')} / {_sum(matched)} ELSE 1.0D END")
         elif score_mode == "first":
-            fscore = F.coalesce(*vals, F.lit(1.0))
+            fscore = f"coalesce({', '.join(vals)}, 1.0D)"
         else:
             raise ValueError(f"unsupported score_mode: {score_mode}")
         if "max_boost" in body:
             # least() skips NULLs, so cap before the poison wrap
-            fscore = F.least(fscore, F.lit(float(body["max_boost"])))
+            fscore = f"least({fscore}, {sql_literal(float(body['max_boost']))})"
         boost_mode = str(body.get("boost_mode", "multiply"))
         combiners = {
-            "multiply": lambda: base * fscore,
-            "sum": lambda: base + fscore,
-            "replace": lambda: fscore,
-            "max": lambda: F.greatest(base, fscore),
-            "min": lambda: F.least(base, fscore),
-            "avg": lambda: (base + fscore) / F.lit(2.0),
+            "multiply": f"({base} * {fscore})",
+            "sum": f"({base} + {fscore})",
+            "replace": fscore,
+            "max": f"greatest({base}, {fscore})",
+            "min": f"least({base}, {fscore})",
+            "avg": f"(({base} + {fscore}) / 2.0D)",
         }
         if boost_mode not in combiners:
             raise ValueError(f"unsupported boost_mode: {boost_mode}")
-        out = combiners[boost_mode]()
-        if null_poison is not None:
-            # applied AFTER the boost_mode combine: greatest/least would
-            # otherwise skip the NULL factor and leak the base score
-            out = F.when(null_poison, F.lit(None).cast("double")
-                         ).otherwise(out)
-        return out
+        if not poisons:
+            return combiners[boost_mode]
+        # applied AFTER the boost_mode combine: greatest/least would
+        # otherwise skip the NULL factor and leak the base score
+        return (f"CASE WHEN ({' OR '.join(poisons)}) THEN CAST(NULL AS DOUBLE)"
+                f" ELSE {combiners[boost_mode]} END")
 
 
-def _field_value_factor(spec: dict) -> Column:
+def _field_value_factor(spec: dict) -> str:
     """ES ``field_value_factor``: modifier(factor * field), with
     ``missing`` substituted for NULL — every modifier is codegen math.
 
@@ -754,28 +737,28 @@ def _field_value_factor(spec: dict) -> Column:
     error for the same inputs; a distributed engine cannot fail one row's
     query, so the row is deterministically demoted instead (pass
     ``missing`` to restore ES behavior).  The domain guards are explicit
-    ``when()`` gates so every modifier returns NULL — never NaN or
+    ``CASE WHEN`` gates so every modifier returns NULL — never NaN or
     ±Infinity, which would poison the sort order."""
-    v = F.coalesce(
-        F.col(spec["field"]).cast("double"),
-        F.lit(float(spec["missing"])) if "missing" in spec else F.lit(None),
-    ) * F.lit(float(spec.get("factor", 1.0)))
+    missing = (sql_literal(float(spec["missing"])) if "missing" in spec
+               else "NULL")
+    v = _times(f"coalesce(CAST({sql_path(spec['field'])} AS DOUBLE), {missing})",
+               spec.get("factor", 1.0))
     modifier = str(spec.get("modifier", "none"))
     mods = {
         "none": lambda c: c,
-        "log": lambda c: F.when(c > 0, F.log10(c)),
-        "log1p": lambda c: F.when(c > -1, F.log10(c + 1.0)),
-        "log2p": lambda c: F.when(c > -2, F.log10(c + 2.0)),
-        "ln": lambda c: F.when(c > 0, F.log(c)),
-        "ln1p": lambda c: F.when(c > -1, F.log(c + 1.0)),
-        "ln2p": lambda c: F.when(c > -2, F.log(c + 2.0)),
-        "sqrt": lambda c: F.when(c >= 0, F.sqrt(c)),
-        "square": lambda c: c * c,
-        "reciprocal": lambda c: F.when(c != 0, F.lit(1.0) / c),
+        "log": lambda c: f"CASE WHEN {c} > 0 THEN log10({c}) END",
+        "log1p": lambda c: f"CASE WHEN {c} > -1 THEN log10({c} + 1.0D) END",
+        "log2p": lambda c: f"CASE WHEN {c} > -2 THEN log10({c} + 2.0D) END",
+        "ln": lambda c: f"CASE WHEN {c} > 0 THEN ln({c}) END",
+        "ln1p": lambda c: f"CASE WHEN {c} > -1 THEN ln({c} + 1.0D) END",
+        "ln2p": lambda c: f"CASE WHEN {c} > -2 THEN ln({c} + 2.0D) END",
+        "sqrt": lambda c: f"CASE WHEN {c} >= 0 THEN sqrt({c}) END",
+        "square": lambda c: f"({c} * {c})",
+        "reciprocal": lambda c: f"CASE WHEN {c} != 0 THEN 1.0D / {c} END",
     }
     if modifier not in mods:
         raise ValueError(f"unsupported field_value_factor modifier: {modifier}")
-    return F.round(mods[modifier](v), 6)
+    return f"round({mods[modifier](v)}, 6)"
 
 
 _DURATION_MS = {"ms": 1, "s": 1000, "m": 60_000, "h": 3_600_000,
@@ -804,7 +787,8 @@ def _parse_distance_m(s) -> float | None:
     return float(m.group(1)) * _DISTANCE_M[m.group(2) or "m"]
 
 
-def _decay_column(kind: str, body: dict) -> Column:
+def _decay_column(kind: str, body: dict,
+                  bridge: Callable[[Column], str]) -> str:
     """ES ``function_score`` decay functions ``gauss`` / ``exp`` /
     ``linear`` over numeric, date, or geo-point fields — closed-form
     codegen math over the scored frame (VERDICT r8 #3):
@@ -821,7 +805,8 @@ def _decay_column(kind: str, body: dict) -> Column:
     ``now`` anchors need the engine's pinned-clock extension key ``now``
     in the spec, same determinism rule as range date math), anything else
     is numeric.  A NULL field value scores 1.0, exactly ES's documented
-    decay behavior for missing fields.  Rounded to 6 like every factor."""
+    decay behavior for missing fields.  Rounded to 6 like every factor.
+    ``bridge`` registers the haversine distance Column of a geo field."""
     spec = dict(body)
     now = spec.pop("now", None)
     (field, fspec), = spec.items()
@@ -840,13 +825,11 @@ def _decay_column(kind: str, body: dict) -> Column:
         # explicit NULL gate: haversine's trig pipeline does not propagate
         # NULL coordinates, and ES scores missing fields 1.0 (the final
         # coalesce handles that once dist is properly NULL)
-        dist = F.when(
-            F.col(field)["lat"].isNotNull() & F.col(field)["lon"].isNotNull(),
-            haversine_meters(
-                F.col(field)["lat"], F.col(field)["lon"],
-                float(origin["lat"]), float(origin["lon"]),
-            ),
-        )
+        far = bridge(haversine_meters(
+            F.col(field)["lat"], F.col(field)["lon"],
+            float(origin["lat"]), float(origin["lon"])))
+        dist = (f"CASE WHEN {sql_path(field + '.lat')} IS NOT NULL AND "
+                f"{sql_path(field + '.lon')} IS NOT NULL THEN {far} END")
         scale_v = _parse_distance_m(scale)
         offset_v = _parse_distance_m(offset)
         if scale_v is None or offset_v is None:
@@ -862,16 +845,15 @@ def _decay_column(kind: str, body: dict) -> Column:
         anchor, _ = parse_date_math(
             o if ("||" in o or o.startswith("now")) else o + "||", now=now)
         origin_ms = (anchor - datetime(1970, 1, 1)).total_seconds() * 1000.0
-        dist = F.abs(
-            F.unix_millis(F.col(field).cast("timestamp")).cast("double")
-            - F.lit(origin_ms)
-        )
+        dist = (f"abs(CAST(unix_millis(CAST({sql_path(field)} AS TIMESTAMP))"
+                f" AS DOUBLE) - {sql_literal(origin_ms)})")
         scale_v = _parse_duration_ms(scale)
         offset_v = (_parse_duration_ms(offset) if offset != 0 else 0.0)
         if offset_v is None:
             raise ValueError(f"bad date decay offset: {offset!r}")
     else:  # numeric
-        dist = F.abs(F.col(field).cast("double") - F.lit(float(origin)))
+        dist = (f"abs(CAST({sql_path(field)} AS DOUBLE) - "
+                f"{sql_literal(float(origin))})")
         scale_v, offset_v = float(scale), float(offset)
     if scale_v <= 0:
         raise ValueError(f"decay scale must be positive, got {scale!r}")
@@ -879,29 +861,29 @@ def _decay_column(kind: str, body: dict) -> Column:
 
     # greatest() would silently skip a NULL distance and hand the decay a
     # 0 — keep NULL flowing so the final coalesce applies ES's missing→1.0
-    d = F.when(dist.isNotNull(),
-               F.greatest(dist - F.lit(float(offset_v)), F.lit(0.0)))
+    d = (f"CASE WHEN {dist} IS NOT NULL THEN greatest({dist} - "
+         f"{sql_literal(float(offset_v))}, 0.0D) END")
     ln_decay = _math.log(decay)
     if kind == "gauss":
-        out = F.exp(d * d * F.lit(ln_decay / (scale_v * scale_v)))
+        out = f"exp({d} * {d} * {sql_literal(ln_decay / (scale_v * scale_v))})"
     elif kind == "exp":
-        out = F.exp(d * F.lit(ln_decay / scale_v))
+        out = f"exp({d} * {sql_literal(ln_decay / scale_v)})"
     else:  # linear
-        s = scale_v / (1.0 - decay)
+        s = sql_literal(scale_v / (1.0 - decay))
         # same NULL guard as d: greatest's zero floor must not swallow a
         # missing-field NULL before the coalesce
-        out = F.when(d.isNotNull(),
-                     F.greatest((F.lit(s) - d) / F.lit(s), F.lit(0.0)))
+        out = (f"CASE WHEN {d} IS NOT NULL THEN "
+               f"greatest(({s} - {d}) / {s}, 0.0D) END")
     # ES: documents missing the field get a decay factor of 1.0
-    return F.round(F.coalesce(out, F.lit(1.0)), 6)
+    return f"round(coalesce({out}, 1.0D), 6)"
 
 
-def _script_score(spec: dict, score: Column) -> Column:
+def _script_score(spec: dict, score: str) -> Column:
     """ES ``script_score``: the Painless arithmetic subset
     (``query_dsl._script_column`` — doc refs, params, Math.* calls)
-    with ``_score`` bound to the inner query's score.  Same codegen
-    class as every other score function; anything outside the subset
-    rejects loudly."""
+    with ``_score`` bound to the inner query's score, the SQL text
+    ``score``.  Same codegen class as every other score function;
+    anything outside the subset rejects loudly."""
     import re as _re
 
     from .query_dsl import _script_column
@@ -915,11 +897,11 @@ def _script_score(spec: dict, score: Column) -> Column:
     if not src:
         raise ValueError("script_score needs a script source")
     src = _re.sub(r"(?<![\w.])_score(?![\w.])", "params.__score", src)
-    params["__score"] = score
+    params["__score"] = F.expr(score)
     return F.round(_script_column(src, params, columns="*"), 6)
 
 
-def _random_score(spec: dict) -> Column:
+def _random_score(spec: dict) -> str:
     """ES ``random_score`` with ``seed`` + ``field``: deterministic
     pseudo-random [0, 1) per document from a 64-bit hash of (field value,
     seed).  ES requires exactly this pair for reproducible scores; the
@@ -932,11 +914,11 @@ def _random_score(spec: dict) -> Column:
             "random_score needs both seed and field for deterministic "
             "scores (ES's own reproducibility requirement)"
         )
-    seed = int(spec["seed"])
-    mod = F.lit(1_048_576.0)
-    h = F.pmod(F.xxhash64(F.col(str(spec["field"])), F.lit(seed)),
-               mod.cast("long")).cast("double")
-    return F.round(h / mod, 6)
+    # the seed renders as F.lit would type it (INT, or BIGINT past 32
+    # bits): xxhash64 hashes the literal's type
+    h = (f"pmod(xxhash64({sql_path(str(spec['field']))}, {int(spec['seed'])}),"
+         " CAST(1048576.0D AS BIGINT))")
+    return f"round(CAST({h} AS DOUBLE) / 1048576.0D, 6)"
 
 
 #: marker prefix for materialized shared-analysis token columns; the
@@ -961,29 +943,33 @@ def _tsmap_name(field: str) -> str:
     struct access inside ``F.col`` — mangle them out of the name."""
     return "_tsmap_" + field.replace(".", "__")
 
-def _toks_expr(frame: DataFrame, field: str) -> Column:
-    """Full-chain token stream for ``field`` over ``frame`` — reads the
-    materialized shared-analysis column when the frame carries one
-    built under the ACTIVE analyzer (``with_shared_analysis``), else
-    tokenizes inline.  NULL text coalesces to the empty token list
-    either way — F.size(NULL) is -1, which would poison avgdl for the
-    whole corpus.
+def _nonnull_toks(toks: str) -> str:
+    """The token array ``toks`` (SQL), NULL read as the empty list —
+    size(NULL) is -1, which would poison avgdl for the whole corpus."""
+    return f"coalesce({toks}, CAST(array() AS ARRAY<STRING>))"
+
+
+def _toks_sql(columns, field: str) -> str:
+    """Full-chain token stream for ``field`` as SQL text over a frame
+    with ``columns`` — reads the materialized shared-analysis column
+    when the frame carries one built under the ACTIVE analyzer
+    (``with_shared_analysis``), else tokenizes inline; NULL text reads
+    as no tokens either way.
 
     A search_as_you_type shingle subfield (``root._2gram`` /
     ``root._3gram``, round 13) derives from the ROOT's stream — which
     keeps reading the materialized root column when one exists — so
     BM25 tf/df/dl over shingle "terms" costs one extra codegen
     transform, never a second tokenization."""
-    from .analysis import sayt_subfield, shingle_col
+    from .analysis import sayt_subfield
 
     sub = sayt_subfield(field)
     if sub is not None:
         root, n = sub
-        return shingle_col(_toks_expr(frame, root), n)
+        return shingle_sql(_toks_sql(columns, root), n)
     pre = _analyzed_col_name(field)
-    base = (F.col(pre) if pre in frame.columns
-            else analyze_col(field))
-    return F.coalesce(base, F.lit([]).cast("array<string>"))
+    return _nonnull_toks(sql_path(pre) if pre in columns
+                         else analyze_sql(sql_path(field)))
 
 
 def with_shared_analysis(df: DataFrame, fields) -> DataFrame:
@@ -995,7 +981,7 @@ def with_shared_analysis(df: DataFrame, fields) -> DataFrame:
     aggregates.  Checkpointing trades memory (token arrays ≈ corpus
     text size, spillable) for tokenizing each field exactly once no
     matter how many score trees read it; ``CorpusStats`` picks the
-    columns up via ``_toks_expr``.  Build it under the SAME analyzer
+    columns up via ``_toks_sql``.  Build it under the SAME analyzer
     scope as the queries that will consume it."""
     out = df
     for f in sorted(set(fields)):
@@ -1182,8 +1168,8 @@ class CorpusStats:
                 for (kind, field, arg), (name, terms) in self.maps.items()}
         flags = []
         for i, (field, value) in enumerate(self.idfs):
-            flags.append((F.col(field) == F.lit(value)).cast("int")
-                         .alias(f"_bm25_f{i}"))
+            flags.append(f"CAST(({sql_path(field)} = {sql_literal(value)})"
+                         f" AS INT) AS _bm25_f{i}")
             n, df = ("CAST(count(1) AS DOUBLE)",
                      f"CAST(sum(_bm25_f{i}) AS DOUBLE)")
             outs[f"_idf_{i}"] = self._stat(
@@ -1191,14 +1177,14 @@ class CorpusStats:
                 f"round(ln(1.0D + ({n} - {df} + 0.5D) / ({df} + 0.5D)), 6)")
         body = ", ".join(f"{sql_string(k)}, {sql}"
                          for k, sql in self.stats.values())
-        stats = corpus.select(
-            *[_toks_expr(corpus, f).alias(f"_bm25_t{i}")
-              for i, f in enumerate(self.fields)], *flags,
-        ).selectExpr(f"named_struct({body})").scalar()
-        out = frame.select(
-            "*", *[_toks_expr(frame, f).alias(f"_bm25_t{i}")
-                   for i, f in enumerate(self.fields)],
-            stats.alias("_bm25_stats"))
+        def toks(df: DataFrame) -> list[str]:
+            return [f"{_toks_sql(df.columns, f)} AS _bm25_t{i}"
+                    for i, f in enumerate(self.fields)]
+
+        stats = corpus.selectExpr(*toks(corpus), *flags).selectExpr(
+            f"named_struct({body})").scalar()
+        out = frame.selectExpr("*", *toks(frame)).withColumn(
+            "_bm25_stats", stats)
         if self.cols:
             out = out.selectExpr(
                 "*", *[f"{sql} AS {c}" for c, sql in self.cols.values()])
@@ -1224,26 +1210,25 @@ def _apply_query_rescore(
         top, rspec["rescore_query"], id_field, k1=k1, b=b,
         stats_over=stats_over,
     ).withColumnRenamed("_score", "_rescore")
-    qw = F.lit(float(rspec.get("query_weight", 1.0)))
-    rqw = F.lit(float(rspec.get("rescore_query_weight", 1.0)))
-    a, b_ = qw * F.col("_score0"), rqw * F.col("_rescore")
+    qw = sql_literal(float(rspec.get("query_weight", 1.0)))
+    rqw = sql_literal(float(rspec.get("rescore_query_weight", 1.0)))
+    a, b_ = f"({qw} * `_score0`)", f"({rqw} * `_rescore`)"
     mode = str(rspec.get("score_mode", "total"))
     blend = {
-        "total": a + b_,
-        "multiply": a * b_,
-        "avg": (a + b_) / F.lit(2.0),
-        "max": F.greatest(a, b_),
-        "min": F.least(a, b_),
+        "total": f"({a} + {b_})",
+        "multiply": f"({a} * {b_})",
+        "avg": f"(({a} + {b_}) / 2.0D)",
+        "max": f"greatest({a}, {b_})",
+        "min": f"least({a}, {b_})",
     }.get(mode)
     if blend is None:
         raise ValueError(f"unsupported rescore score_mode: {mode}")
-    rpred = F.coalesce(
-        compile_query(_normalize(rspec["rescore_query"]), id_field),
-        F.lit(False),
-    )
-    return top.withColumn(
-        "_score", F.round(F.when(rpred, blend).otherwise(a), 6)
-    ).drop("_score0", "_rescore")
+    bridges: list = []
+    rpred = bridge(bridges, compile_query(
+        _normalize(rspec["rescore_query"]), id_field))
+    top = with_bridges(top, bridges).withColumn("_score", F.expr(
+        f"round(CASE WHEN coalesce({rpred}, FALSE) THEN {blend} ELSE {a} END, 6)"))
+    return drop_bridges(top, bridges, "_score0", "_rescore")
 
 
 def score_frame(
@@ -1273,11 +1258,13 @@ def score_frame(
     id are each scored from their own tokens."""
     q = _normalize(query)
     st = CorpusStats(k1, b)
-    score = F.round(_ScoreCompiler(id_field, st).build(q), 6)
+    sc = _ScoreCompiler(id_field, st)
+    score = sc.build(q)
     out = df
     if st.names:
         out = st.attach(df, stats_over if stats_over is not None else df)
-    out = out.withColumn("_score", score)
+    out = with_bridges(out, sc.bridges).withColumn(
+        "_score", F.expr(f"round({score}, 6)"))
     if explain:
         import json as _json
 
@@ -1297,7 +1284,7 @@ def score_frame(
               for i, (fld, val) in enumerate(st.idfs)],
         ))
         out = out.withColumn("_explanation", expl)
-    return out.drop(*st.helpers, *st.names)
+    return drop_bridges(out, sc.bridges, *st.helpers, *st.names)
 
 
 def es_retriever_search(
@@ -1351,6 +1338,28 @@ def es_retriever_search(
         raise ValueError("retriever body needs exactly one retriever root")
     size = int(body.get("size", 10))
 
+    def by_score(frame: DataFrame, window: int | None = None) -> DataFrame:
+        """(id, _score, rank) of ``frame``, ranked by _score then id, the
+        first ``window`` ranks."""
+        w = Window.orderBy(F.col("_score").desc(), F.col(id_field).asc())
+        out = frame.select(id_field, "_score",
+                           F.row_number().over(w).alias("rank"))
+        return out if window is None else out.where(F.col("rank") <= window)
+
+    def pin(child: DataFrame, pinned: list[str]) -> DataFrame:
+        """``child`` without the ``pinned`` ids, plus a rank-0 row per
+        pinned id scored 1e10 - its position (the pinned query's rule)."""
+        idc = f"CAST({sql_path(id_field)} AS STRING)"
+        listed = f"{idc} IN ({', '.join(map(sql_string, pinned))})"
+        score = "CAST(NULL AS DOUBLE)"
+        for i in range(len(pinned) - 1, -1, -1):
+            score = (f"CASE WHEN {idc} = {sql_string(pinned[i])} THEN "
+                     f"{sql_literal(1e10 - i)} ELSE {score} END")
+        pins = df.where(listed).select(
+            id_field, F.expr(score).alias("_score"), F.lit(0).alias("rank"))
+        return (child.where(f"NOT ({listed})")
+                .select(id_field, "_score", "rank").unionByName(pins))
+
     def ranked(node: dict, window: int) -> DataFrame:
         """(id, _score, rank) for one child retriever."""
         if not isinstance(node, dict) or len(node) != 1:
@@ -1366,12 +1375,8 @@ def es_retriever_search(
             if "filter" in rbody:
                 q = {"bool": {"must": [q], "filter": [rbody["filter"]]}}
             sub = {"query": q, "size": window, "_source": [id_field]}
-            hits = es_scored_search(df, sub, id_field,
-                                    k1=k1, b=b, analyzer=analyzer)
-            w = Window.orderBy(F.col("_score").desc(),
-                               F.col(id_field).asc())
-            return hits.select(id_field, "_score",
-                               F.row_number().over(w).alias("rank"))
+            return by_score(es_scored_search(df, sub, id_field,
+                                             k1=k1, b=b, analyzer=analyzer))
         if rkind == "knn":
             unk = set(rbody) - {"field", "query_vector", "k", "filter",
                                 "num_candidates"}
@@ -1392,11 +1397,7 @@ def es_retriever_search(
                                      rbody["query_vector"]],
                               k=kk, id_col=id_field,
                               vec_col=rbody["field"])
-            w = Window.orderBy(F.col("score").desc(),
-                               F.col(id_field).asc())
-            return top.select(
-                id_field, F.col("score").alias("_score"),
-                F.row_number().over(w).alias("rank"))
+            return by_score(top.withColumnRenamed("score", "_score"))
         if rkind == "text_similarity_reranker":
             # ES 8.15 semantic reranker retriever (round 15, VERDICT
             # r14 #5): fetch the child's top rank_window_size, rescore
@@ -1495,12 +1496,7 @@ def es_retriever_search(
             if "min_score" in rbody:
                 scored = scored.where(
                     F.col("_score") >= float(rbody["min_score"]))
-            w = Window.orderBy(F.col("_score").desc(),
-                               F.col(id_field).asc())
-            return (scored
-                    .select(id_field, "_score",
-                            F.row_number().over(w).alias("rank"))
-                    .where(F.col("rank") <= window))
+            return by_score(scored, window)
         if rkind == "pinned":
             # ES 8.18 pinned retriever: the named docs rank FIRST in
             # their given order, then the child retriever's organic
@@ -1537,24 +1533,8 @@ def es_retriever_search(
                 raise ValueError(
                     f"rank_window_size ({child_window}) must be >= "
                     f"the consuming window ({window})")
-            child = ranked(rbody["retriever"], child_window)
-            idc = F.col(id_field).cast("string")
-            child = child.where(~idc.isin(pinned))
-            score = F.lit(None).cast("double")
-            for i in range(len(pinned) - 1, -1, -1):
-                score = F.when(idc == pinned[i],
-                               F.lit(1e10 - i)).otherwise(score)
-            pins = (df.where(idc.isin(pinned))
-                    .select(id_field, score.alias("_score"),
-                            F.lit(0).alias("rank")))
-            merged = child.select(id_field, "_score", "rank") \
-                .unionByName(pins)
-            w = Window.orderBy(F.col("_score").desc(),
-                               F.col(id_field).asc())
-            return (merged
-                    .select(id_field, "_score",
-                            F.row_number().over(w).alias("rank"))
-                    .where(F.col("rank") <= window))
+            return by_score(
+                pin(ranked(rbody["retriever"], child_window), pinned), window)
         if rkind == "rescorer":
             # ES 8.18 rescorer retriever: apply a query rescore to the
             # child retriever's top window — the SAME
@@ -1614,14 +1594,8 @@ def es_retriever_search(
             win_ids = [r[0] for r in win_rows]
             top = df.where(F.col(id_field).isin(win_ids)) \
                 .join(F.broadcast(win), id_field)
-            rescored = _apply_query_rescore(
-                top, rspec, id_field, k1=k1, b=b, stats_over=df)
-            w = Window.orderBy(F.col("_score").desc(),
-                               F.col(id_field).asc())
-            return (rescored
-                    .select(id_field, "_score",
-                            F.row_number().over(w).alias("rank"))
-                    .where(F.col("rank") <= window))
+            return by_score(_apply_query_rescore(
+                top, rspec, id_field, k1=k1, b=b, stats_over=df), window)
         if rkind == "rule":
             # ES 8.16 rule retriever: apply query rules on top of a
             # child retriever.  Rule evaluation is pure driver-side
@@ -1658,26 +1632,10 @@ def es_retriever_search(
                     f"rank_window_size ({child_window}) must be >= "
                     f"the consuming window ({window})")
             child = ranked(rbody["retriever"], child_window)
-            idc = F.col(id_field).cast("string")
             if excluded:
-                child = child.where(~idc.isin(excluded))
-            if pinned:
-                child = child.where(~idc.isin(pinned))
-                score = F.lit(None).cast("double")
-                for i in range(len(pinned) - 1, -1, -1):
-                    score = F.when(idc == pinned[i],
-                                   F.lit(1e10 - i)).otherwise(score)
-                pins = (df.where(idc.isin(pinned))
-                        .select(id_field, score.alias("_score"),
-                                F.lit(0).alias("rank")))
-                child = child.select(id_field, "_score", "rank") \
-                    .unionByName(pins)
-            w = Window.orderBy(F.col("_score").desc(),
-                               F.col(id_field).asc())
-            return (child
-                    .select(id_field, "_score",
-                            F.row_number().over(w).alias("rank"))
-                    .where(F.col("rank") <= window))
+                child = child.where(
+                    ~F.col(id_field).cast("string").isin(excluded))
+            return by_score(pin(child, pinned) if pinned else child, window)
         raise ValueError(
             f"unsupported retriever: {rkind!r} "
             "(standard | knn | rrf | linear | rule | pinned | "
@@ -1955,10 +1913,8 @@ def _es_scored_search_impl(
             F.broadcast(top_ids),
             scored[id_field] == top_ids["_knn_id"], "left",
         ).drop("_knn_id")
-        scored = scored.withColumn(
-            "_score",
-            F.round(F.col("_score") + F.coalesce("_knn_score", F.lit(0.0)), 6),
-        )
+        scored = scored.withColumn("_score", F.expr(
+            "round(`_score` + coalesce(`_knn_score`, 0.0D), 6)"))
     rescore = body.get("rescore")
     if isinstance(rescore, list):
         # ES accepts a list of rescorers; one is supported — reject the

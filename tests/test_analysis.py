@@ -641,19 +641,19 @@ class TestStemPrefixInvariant:
                 "english").alias("x")).collect()]
             assert ref == fast, (term, ref, fast)
 
-    def test_let_cols_binds_and_returns(self, spark):
-        from hive2es_offline_spark.plans.analysis import let_cols
+    def test_sql_let_binds_and_returns(self, spark):
+        from hive2es_offline_spark.operators.util import sql_let
 
         df = spark.createDataFrame([(1, [1, 2, 3], [4, 5])],
                                    "id long, a array<int>, b array<int>")
-        out = df.select(let_cols(
-            [F.col("a"), F.col("b")],
-            lambda cs: F.size(cs[0]) + F.size(cs[1])).alias("n"))
+        out = df.select(F.expr(sql_let(
+            ["a", "b"],
+            lambda cs: f"size({cs[0]}) + size({cs[1]})")).alias("n"))
         assert out.collect()[0]["n"] == 5
         # NULL arrays flow through as NULL field reads, not errors
         df2 = spark.createDataFrame([(1, None)], "id long, a array<int>")
-        out2 = df2.select(let_cols(
-            [F.col("a")], lambda cs: F.size(cs[0])).alias("n"))
+        out2 = df2.select(F.expr(sql_let(
+            ["a"], lambda cs: f"size({cs[0]})")).alias("n"))
         assert out2.collect()[0]["n"] is None  # size(NULL) = NULL (ANSI)
 
 

@@ -15,7 +15,8 @@ the chain, and a whole phrase, span or intervals clause, is Spark-SQL
 text parsed once, so building it costs a few dozen gateway calls, not
 one per expression node.  The six-arm scored multi-search build is
 gated too: a score-tree node compiles its match predicate only where
-it gates on it.
+it gates on it.  So is each score-tree family's warm build: the score
+is one Spark-SQL text over bridged Columns, parsed once.
 
 py4j round trips and Spark jobs of each ``search_mix`` family's warm
 build, as ``perfbench/workloads.py`` builds it: the counters the
@@ -229,14 +230,85 @@ def py4j_calls(spark):
 def test_six_arm_multi_match_msearch_build_py4j_calls(spark):
     # a score-tree node compiles its match predicate only where it gates
     # on it: compiling one at every node made this build 3 378 calls;
-    # gating nodes only, 2 892
+    # gating nodes only, 2 892; the score as one SQL text, 1 068
     import __spark_entry__ as entry
 
     _documents(spark)
     entry.q_es_multi_match_types(spark, SF_SMOKE)  # warm
     with py4j_calls(spark) as calls:
         entry.q_es_multi_match_types(spark, SF_SMOKE)
-    assert 0 < calls[0] <= 3200, f"{calls[0]} py4j calls"
+    assert 0 < calls[0] <= 1175, f"{calls[0]} py4j calls"  # 1 068
+
+
+def _scored_frame(spark):
+    """Two documents with a field for each score-tree family."""
+    import datetime
+
+    return spark.createDataFrame([
+        ("1", "the quick brown fox", "quick fox", "a", 3.0,
+         datetime.datetime(2024, 1, 3), (1.0, 1.0), {"quick": 2.0, "fox": 1.0}),
+        ("2", "a lazy dog sleeps", "lazy dog", "b", 7.0,
+         datetime.datetime(2024, 2, 1), (2.0, 2.0), {"dog": 1.0}),
+    ], "id string, text string, title string, tag string, n double, "
+       "ts timestamp, loc struct<lat: double, lon: double>, "
+       "sv map<string, double>")
+
+
+#: (query, py4j bound) of one warm ``es_scored_search`` build each; a
+#: bound is the count measured when the gate was added plus 10 %
+SCORE_TREE_BUILDS = {
+    # 382 calls; 1 452 when the score was assembled from Columns
+    "function_score": ({"function_score": {
+        "query": {"match": {"text": "quick fox"}},
+        "functions": [
+            {"gauss": {"n": {"origin": 5, "scale": 2}}},
+            {"exp": {"ts": {"origin": "2024-01-01", "scale": "10d"}}},
+            {"linear": {"loc": {"origin": {"lat": 0, "lon": 0},
+                                "scale": "500km"}}},
+            {"field_value_factor": {"field": "n", "modifier": "log1p",
+                                    "missing": 1}},
+            {"weight": 2.0, "filter": {"term": {"tag": "a"}}}],
+        "score_mode": "sum", "boost_mode": "multiply"}}, 420),
+    # 240; 461
+    "pinned_boosting": ({"pinned": {"ids": ["2"], "organic": {"boosting": {
+        "positive": {"match": {"text": "quick"}},
+        "negative": {"term": {"tag": "b"}}, "negative_boost": 0.5}}}}, 264),
+    # 357; 752
+    "bool_dis_max": ({"bool": {
+        "must": [{"dis_max": {"queries": [
+            {"match": {"text": "quick"}}, {"match": {"title": "fox"}}],
+            "tie_breaker": 0.3}}],
+        "should": [{"term": {"tag": "a"}}, {"range": {"n": {"gte": 1}}}]}},
+        393),
+    # 661; 991
+    "sparse_rank_feature": ({"bool": {"should": [
+        {"sparse_vector": {"field": "sv",
+                           "query_vector": {"quick": 1.0, "fox": 0.5}}},
+        {"rank_feature": {"field": "n", "saturation": {"pivot": 3}}}]}},
+        727),
+    # 136; 1 073
+    "cross_fields": ({"multi_match": {
+        "query": "quick fox", "fields": ["text", "title^2"],
+        "type": "cross_fields", "tie_breaker": 0.3}}, 150),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SCORE_TREE_BUILDS))
+def test_score_tree_build_py4j_calls(spark, name):
+    from hive2es_offline_spark.plans.scoring import es_scored_search
+
+    query, bound = SCORE_TREE_BUILDS[name]
+    df = _scored_frame(spark)
+
+    def build():
+        return es_scored_search(df, {"query": query, "size": 5},
+                                id_field="id")
+
+    build()  # warm
+    with py4j_calls(spark) as calls:
+        build()
+    assert 0 < calls[0] <= bound, f"{name}: {calls[0]} py4j calls"
+    assert build().count() > 0
 
 
 CHAIN_BUILDS = {
@@ -312,18 +384,19 @@ SEARCH_MIX_PARAMS = {
 }
 
 #: (py4j bound, build-job bound) of one warm build each; a bound is the
-#: count measured when the gate was added plus at most 10 %
+#: latest measured count plus at most 10 %, and a count in parentheses
+#: is the one before scores rendered as Spark-SQL text
 SEARCH_MIX_BUILDS = {
     "filter_topk": (302, 0),            # 275 calls, 0 jobs
     "aggs_terms": (264, 0),             # 240, 0
     "aggs_date_histogram": (191, 0),    # 174, 0
-    "match_bm25": (326, 0),             # 297, 0
-    "es_retriever_rrf": (1667, 0),      # 1 516, 0
-    "es_retriever_pinned": (1580, 3),   # 1 437, 3
+    "match_bm25": (198, 0),             # 180, 0 (297)
+    "es_retriever_rrf": (1516, 0),      # 1 379, 0 (1 516)
+    "es_retriever_pinned": (997, 3),    # 907, 3 (1 437)
     "es_knn": (723, 1),                 # 658, 1: the knn top-k collect
     "esql_stats": (161, 0),             # 147, 0
-    "es_esql_score": (331, 0),          # 301, 0
-    "es_esql_knn": (815, 1),            # 741, 1: the KNN boundary
+    "es_esql_score": (168, 0),          # 153, 0 (301)
+    "es_esql_knn": (751, 1),            # 683, 1: the KNN boundary (741)
 }
 
 

@@ -174,3 +174,20 @@ def test_other_clauses_on_subfield_raise(docs, clause):
         hits(docs, clause)
     with pytest.raises(ValueError, match=r"t\._[23]gram"):
         scores(docs, clause)
+
+
+@pytest.mark.parametrize("scored", [False, True])
+def test_highlight_on_subfield_wraps_root_text(spark, scored):
+    # the subfield has no text of its own: its highlight wraps the
+    # root's text with the query's terms, and the column survives the
+    # _source projection under its literal dotted name
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox"), (2, "quick red fox"), (3, "a brown dog")],
+        "id long, text string")
+    body = {"query": {"match": {"text._2gram": "quick brown"}},
+            "highlight": {"fields": {"text._2gram": {}}},
+            "_source": ["id"]}
+    search = es_scored_search if scored else es_search
+    rows = search(df, body, id_field="id").collect()
+    assert [(r["id"], r["text._2gram_highlight"]) for r in rows] == [
+        (1, "the <em>quick</em> <em>brown</em> fox")]
