@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import datetime
 import re
 from collections.abc import Callable, Sequence
 
@@ -67,13 +68,21 @@ def sql_literal(v) -> str:
     """Python constant → Spark-SQL literal of the type ``F.lit`` gives it:
     a float is a DOUBLE (``2.5D``; a bare ``2.5`` would parse as
     DECIMAL(2,1)), an int an INT or, past 32 bits, a BIGINT, a bool a
-    BOOLEAN, a string a quoted STRING."""
+    BOOLEAN, None a NULL, a datetime a TIMESTAMP and a date a DATE (read
+    in the session time zone, UTC for every entry point), a string a
+    quoted STRING."""
+    if v is None:
+        return "NULL"
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
     if isinstance(v, float):
         return repr(v) + "D"
     if isinstance(v, int):
         return str(v)
+    if isinstance(v, datetime.datetime):
+        return f"TIMESTAMP '{v.isoformat(sep=' ')}'"
+    if isinstance(v, datetime.date):
+        return f"DATE '{v.isoformat()}'"
     return sql_string(v)
 
 
@@ -121,13 +130,12 @@ def sql_let(values: Sequence[str], body: Callable[[list[str]], str]) -> str:
             f"{body([f'_l{k}.c{i}' for i in range(len(values))])}), 1)")
 
 
-def bridge(bridges: list, col: Column, tag: str = "b") -> str:
+def bridge(bridges: list, col: Column) -> str:
     """Register ``col`` — a Column another module's builder made — on
-    ``bridges`` under a hidden ``\x00<tag><n>`` name and return that
-    name as SQL text (renderers sharing a frame use distinct tags).  The
-    stage that parses the text projects its bridges first
+    ``bridges`` under a hidden ``\x00b<n>`` name and return that name as
+    SQL text.  The stage that parses the text projects its bridges first
     (``with_bridges``) and drops them after (``drop_bridges``)."""
-    name = f"\x00{tag}{len(bridges)}"
+    name = f"\x00b{len(bridges)}"
     bridges.append((name, col))
     return sql_ident(name)
 

@@ -1318,18 +1318,24 @@ def _positions_sql(ts: str, term: str, spec: _AnalyzerSpec,
             f"CASE WHEN {hit} THEN p ELSE -1 END), p -> p >= 0)")
 
 
-def with_chain_positions(col: "Column | str", term_specs, fn,
-                         analyzer: str | None = None) -> Column:
+def chain_positions_sql(col_sql: str, term_specs, fn,
+                        analyzer: str | None = None) -> str:
     """``fn`` — SQL text over the per-term position arrays (SQL text) of
     ``term_specs``, a list of ``(term, is_prefix)`` — over ONE let-bound
-    post-stop token stream (``_pre_stem_sql``), so the chain evaluates
-    once per row however many terms there are (``sql_let``); each
-    term's positions are ``_positions_sql``.  ``col`` is a name or a
-    Column, as for ``analyze_col``; the whole text parses in one call."""
+    post-stop token stream (``_pre_stem_sql``) of ``col_sql``, so the
+    chain evaluates once per row however many terms there are
+    (``sql_let``); each term's positions are ``_positions_sql``."""
     spec = _spec(analyzer or current_analyzer())
-    return sql_bind(col, lambda ref: sql_let(
-        [_pre_stem_sql(ref, spec)], lambda ts: fn([
-            _positions_sql(ts[0], t, spec, prefix=p) for t, p in term_specs])))
+    return sql_let([_pre_stem_sql(col_sql, spec)], lambda ts: fn([
+        _positions_sql(ts[0], t, spec, prefix=p) for t, p in term_specs]))
+
+
+def with_chain_positions(col: "Column | str", term_specs, fn,
+                         analyzer: str | None = None) -> Column:
+    """:func:`chain_positions_sql` over ``col``, a name or a Column, as
+    for ``analyze_col``; the whole text parses in one call."""
+    return sql_bind(col, lambda ref: chain_positions_sql(
+        ref, term_specs, fn, analyzer))
 
 
 def _analyze_tokens(text: str, spec: _AnalyzerSpec) -> list[str]:

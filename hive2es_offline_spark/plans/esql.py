@@ -190,10 +190,12 @@ engine (order-exact, oracle-hashable); MEDIAN/PERCENTILE are exact
 (live ES|QL uses TDigest — the documented oracle-favoring divergence
 class of the `percentiles` agg).
 
-Rendering: each stage is Spark-SQL text parsed once; a Column from
-another module's builder enters it as a bridge (``operators.util.bridge``,
-shared with the DSL score compiler, whose SQL build of a full-text
-clause is that clause's ``METADATA _score`` contribution).
+Rendering: each stage is Spark-SQL text parsed once.  The full-text
+functions read the query-DSL clause renderer's text
+(``query_dsl.query_sql``; the DSL score compiler's SQL build of the
+clause is its ``METADATA _score`` contribution) and the spatial ones the
+geo renderers' text.  Only two Columns enter as bridges
+(``operators.util.bridge``): the KNN similarity and the CATEGORIZE key.
 
 Reference parity: the reference engine has no ES|QL; this surface
 covers the consumer who queries the LOADED index through ES|QL instead
@@ -395,10 +397,10 @@ def _parse_wkt(s: str) -> dict:
 # parsed ONCE per stage (``df.where(str)`` / one ``F.expr``): a py4j
 # round trip costs ~0.5 ms on a PySpark driver, so building each node
 # through the Column API made one ES|QL compile cost 0.3-1 s of pure
-# driver latency (es_esql_ip measured ~1 830 calls).  Calls that reuse
-# another module's Column builder are BRIDGES (``_P._bridge``): the
-# stage that parsed the expression projects its bridges just before its
-# own operator (``with_bridges``) and drops them after it
+# driver latency (es_esql_ip measured ~1 830 calls).  The two calls that
+# reuse a Column builder (KNN, CATEGORIZE) are BRIDGES (``_P._bridge``):
+# the stage that parsed the expression projects its bridges just before
+# its own operator (``with_bridges``) and drops them after it
 # (``drop_bridges``), so a bridge composes under any operator and no
 # hidden column reaches the output frame.
 
@@ -431,23 +433,26 @@ class _P:
         """Register a bridge Column; return its hidden name as SQL."""
         return bridge(self.bridges, col)
 
-    def _ft(self, pred: Column, dsl: dict) -> str:
-        """Bridge one full-text WHERE function's predicate and, when a
-        METADATA _score compile is active, record the clause's score
-        contribution, collected by _stage_where after the filter
-        applies.  The contribution is the DSL scorer's SQL build of the
-        clause (plans/scoring._ScoreCompiler), which gates on the
-        predicate's bridge rather than compiling it again.  The
+    def _ft(self, dsl: dict) -> str:
+        """One full-text WHERE function's predicate, the DSL clause's
+        SQL (``query_dsl.query_sql``); when a METADATA _score compile is
+        active, also record the clause's score contribution, collected
+        by _stage_where after the filter applies.  The contribution is
+        the DSL scorer's SQL build of the clause
+        (plans/scoring._ScoreCompiler), gated on the same predicate
+        text, which re-evaluates on the rows the WHERE keeps.  The
         statistics it reads are declared on the stage's
         ``CorpusStats``, which _stage_where attaches."""
-        name = self._bridge(pred)
+        from .query_dsl import query_sql
+
+        pred = query_sql(dsl)
         if _SCORE_CTX is not None:
             from .scoring import CorpusStats, _ScoreCompiler
 
             if getattr(self, "scorer", None) is None:
                 self.scorer = _ScoreCompiler("_id", CorpusStats(1.2, 0.75))
-            self._contribute(self.scorer.build(dsl, name))
-        return name
+            self._contribute(self.scorer.build(dsl, pred))
+        return pred
 
     def _contribute(self, score: str) -> None:
         """Add one clause's SQL score to this stage's METADATA _score
@@ -906,7 +911,7 @@ class _P:
             # ES|QL full-text WHERE functions (ES 8.14→8.18): the
             # bridge from the ES|QL grammar into the query-DSL
             # compilers — MATCH(field, "query") compiles the DSL match
-            # clause (analyzed OR-of-terms, plans/query_dsl.compile_query),
+            # clause (analyzed OR-of-terms, plans/query_dsl.query_sql),
             # MATCH_PHRASE(field, "query") the positional phrase clause,
             # TERM(field, value) the un-analyzed exact term clause,
             # MULTI_MATCH("query", f1, f2, …) the per-field match OR,
@@ -924,7 +929,7 @@ class _P:
                 raise ValueError(
                     f"ES|QL: {fn}() is a full-text function and is "
                     "only allowed in WHERE (like live ES|QL)")
-            from .query_dsl import compile_query
+            from .query_dsl import query_sql
 
             if fn == "KNN":
                 # ES|QL 9.1 KNN(field, [v, …][, k]) — keep the rows
@@ -1016,8 +1021,7 @@ class _P:
                         "— use the query DSL clause for those")
                 self.expect_op(")")
                 kind = "match" if fn == "MATCH" else "match_phrase"
-                dsl = {kind: {fld[1]: qt[1]}}
-                return self._ft(compile_query(dsl), dsl)
+                return self._ft({kind: {fld[1]: qt[1]}})
             if fn == "TERM":
                 # ES 8.16 TERM(field, value): exact un-analyzed
                 # equality (the DSL term clause — value literal may be
@@ -1037,8 +1041,7 @@ class _P:
                 val = vt[1]
                 if vt[0] == "num":
                     val = float(val) if "." in str(val) else int(val)
-                dsl = {"term": {fld[1]: val}}
-                return self._ft(compile_query(dsl), dsl)
+                return self._ft({"term": {fld[1]: val}})
             if fn == "MULTI_MATCH":
                 # ES 8.18 MULTI_MATCH("query", field1, field2, …):
                 # the DSL multi_match in filter context (per-field
@@ -1064,8 +1067,8 @@ class _P:
                     raise ValueError(
                         "ES|QL: MULTI_MATCH needs at least one field "
                         "after the query string")
-                dsl = {"multi_match": {"query": qt[1], "fields": fields}}
-                return self._ft(compile_query(dsl), dsl)
+                return self._ft(
+                    {"multi_match": {"query": qt[1], "fields": fields}})
             if fn == "KQL":
                 qt = self.next()
                 if qt[0] != "str":
@@ -1087,7 +1090,7 @@ class _P:
                         "ES|QL: KQL() is filter-only and cannot "
                         "contribute to METADATA _score — score with "
                         "MATCH/MATCH_PHRASE/TERM/MULTI_MATCH")
-                return self._bridge(compile_query(parse_kql(qt[1])))
+                return query_sql(parse_kql(qt[1]))
             qt = self.next()
             if qt[0] != "str":
                 raise ValueError(
@@ -1107,8 +1110,7 @@ class _P:
                     "ES|QL: QSTR() is filter-only and cannot "
                     "contribute to METADATA _score — score with "
                     "MATCH/MATCH_PHRASE/TERM/MULTI_MATCH")
-            return self._bridge(
-                compile_query({"query_string": {"query": qt[1]}}))
+            return query_sql({"query_string": {"query": qt[1]}})
         if fn in ("TO_GEOPOINT", "TO_GEOSHAPE"):
             # literal WKT only: a geo column in a flat frame IS a
             # struct{lat,lon} column already (the DSL geo clauses'
@@ -1194,8 +1196,8 @@ class _P:
     def _geo_arg(self) -> tuple:
         """One ST_* argument: ('shape', geojson-dict) for a plan-time
         literal (WKT string or TO_GEOSHAPE/TO_GEOPOINT of one), else
-        ('point', lat Column, lon Column) for a struct{lat,lon} point
-        expression (the geo builders take Columns)."""
+        ('point', lat SQL, lon SQL) for a struct{lat,lon} point
+        expression."""
         t = self.peek()
         nxt = self.toks[self.i + 1] if self.i + 1 < len(self.toks) else None
         if (t is not None and t[0] == "id"
@@ -1218,8 +1220,8 @@ class _P:
         if t is not None and t[0] == "str":
             self.next()
             return ("shape", _parse_wkt(t[1]))
-        e = F.expr(self.expr())
-        return ("point", e.getField("lat"), e.getField("lon"))
+        e = self.expr()
+        return ("point", f"({e}).lat", f"({e}).lon")
 
     def _st_call(self, fn: str) -> str:
         """ES|QL spatial functions (round 15, VERDICT r14 #3) — the
@@ -1233,8 +1235,7 @@ class _P:
         engine's geo_point representation); shape literals are WKT.
         Point-contains-polygon and within-point-of-shape reject loudly
         (constant-false is a user error, not a result).  ST_X/ST_Y and
-        the grid keys render as SQL; the distance and relation Columns
-        return as bridges."""
+        the grid keys, the distance and the relations render as SQL."""
         from .query_dsl import _shape_intersects, haversine_cols
 
         if fn in ("ST_X", "ST_Y"):
@@ -1282,7 +1283,7 @@ class _P:
             if arg[1]["type"] != "point":
                 return None
             lon, lat = arg[1]["coordinates"]
-            return F.lit(float(lat)), F.lit(float(lon))
+            return sql_literal(float(lat)), sql_literal(float(lon))
 
         if fn == "ST_DISTANCE":
             pa, pb = pt_cols(a), pt_cols(b)
@@ -1290,11 +1291,11 @@ class _P:
                 raise ValueError(
                     "ES|QL: ST_DISTANCE needs two points (shape-to-"
                     "shape distance is not supported)")
-            return self._bridge(haversine_cols(pa[0], pa[1], pb[0], pb[1]))
+            return haversine_cols(pa[0], pa[1], pb[0], pb[1])
 
-        def relation(pa, pb) -> Column:
+        def relation(pa, pb) -> str:
             if pa is not None and pb is not None:  # point/point
-                return (pa[0] == pb[0]) & (pa[1] == pb[1])
+                return f"(({pa[0]} = {pb[0]}) AND ({pa[1]} = {pb[1]}))"
             if fn == "ST_INTERSECTS":
                 # point/shape, shape/point — symmetric
                 if pa is not None:
@@ -1320,7 +1321,7 @@ class _P:
                 "shape cannot be within a point (constant false; use "
                 "ST_CONTAINS(shape, point))")
 
-        return self._bridge(relation(pt_cols(a), pt_cols(b)))
+        return relation(pt_cols(a), pt_cols(b))
 
 
 # ---- ES|QL renderers with more structure than one SQL function call.
@@ -1947,18 +1948,17 @@ def _stage_where(df: DataFrame, p: _P) -> DataFrame:
     if contribs:
         # METADATA _score: this WHERE's full-text contributions add to
         # the running score — each is already a round-6 decimal-summed
-        # clause score gated on its own predicate's bridge, so the
-        # addition is order-exact and oracle-replayable.  Their corpus
-        # statistics are one 1-row aggregate over the FROM-time frame,
-        # and the score reads the stage's bridges before they drop
+        # clause score gated on its own predicate, so the addition is
+        # order-exact and oracle-replayable.  Their corpus statistics
+        # are one 1-row aggregate over the FROM-time frame, and the
+        # score reads the stage's bridges (a KNN similarity) before
+        # they drop
         scorer = getattr(p, "scorer", None)
         if scorer is not None:
             stats = scorer.stats
             if stats.names:
                 out = stats.attach(out, _SCORE_CTX["src"])
-            out = with_bridges(out, scorer.bridges)
-            scratch = [*stats.helpers, *stats.names,
-                       *[name for name, _ in scorer.bridges]]
+            scratch = [*stats.helpers, *stats.names]
         out = out.withColumn("_score", F.expr(
             f"round(`_score` + ({' + '.join(contribs)}), 6)"))
     return drop_bridges(out, p.bridges, *scratch)

@@ -99,7 +99,8 @@ def es_percolate(
     document.  Pair output keeps the result driver-hashable and joins
     back to either side trivially.
 
-    Scale shape: predicates are plan-time Columns — N stored queries add
+    Scale shape: each predicate is one parsed Spark-SQL expression
+    (``compile_query``) — N stored queries add
     N boolean expressions to one projection, not N scans or joins; the
     per-row match-id array is built with ``array_compact`` (nulls =
     non-matches dropped) and exploded.  100 TB of candidates percolate in

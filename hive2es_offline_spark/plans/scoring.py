@@ -52,8 +52,9 @@ no Python.
 
 Rendering: the score tree is ONE Spark-SQL text (``_ScoreCompiler``)
 parsed by one ``F.expr`` — never inside a ``transform`` lambda, which
-Spark interprets.  A Column another module builds enters the text as a
-bridge (``operators.util.bridge``, shared with ES|QL).
+Spark interprets.  The pieces other modules render — a node's match
+predicate (``query_dsl.query_sql``), a script, a haversine distance —
+are Spark-SQL text too, read inline.
 
 Determinism: per-(doc, term) partials are rounded to 6 decimals (same as
 ``bm25_topk``), DECIMAL(28,6) sums, final ``_score`` rounded to 6 — an
@@ -62,18 +63,15 @@ ANSI-SQL oracle reproduces the exact values.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.util import (
-    bridge, drop_bridges, sql_bind, sql_ident, sql_let, sql_literal, sql_path,
-    sql_string, with_bridges,
+    sql_bind, sql_ident, sql_let, sql_literal, sql_path, sql_string,
 )
 from .analysis import analyze_col, analyze_sql, field_terms, shingle_sql
 from .analysis import analyze_text as _analyze_terms
-from .query_dsl import compile_query
+from .query_dsl import compile_query, haversine_meters, query_sql
 
 __all__ = ["es_scored_search", "es_retriever_search", "score_frame",
            "with_shared_analysis", "sparse_tf_vector", "CorpusStats",
@@ -197,28 +195,18 @@ class _ScoreCompiler:
     term-score map or a keyword idf), declares it on ``stats``.
     ``stats.attach`` then renders exactly what the score reads.
 
-    A Column another module builds — a node's match predicate
-    (``compile_query``), a script (``_script_column``), a haversine
-    distance — enters the text as a BRIDGE (``operators.util.bridge``):
-    the caller projects ``bridges`` in registration order after
-    ``stats.attach`` (a script bridge reads the inner score's
-    statistics and bridges) and before it parses the score.
-
-    A node's own match predicate is compiled only where the node gates on
-    it; ``pred`` hands ``build`` the root's predicate as SQL text when the
-    caller has compiled it already (ES|QL's full-text WHERE functions)."""
+    A node's own match predicate (``query_dsl.query_sql``) is rendered
+    only where the node gates on it; ``pred`` hands ``build`` the root's
+    predicate when the caller has rendered it already (ES|QL's full-text
+    WHERE functions)."""
 
     def __init__(self, id_field: str, stats: "CorpusStats"):
         self.id_field = id_field
         self.stats = stats
-        self.bridges: list = []
-
-    def _bridge(self, col: Column) -> str:
-        return bridge(self.bridges, col, "s")
 
     def _matches(self, q: dict) -> str:
         """``q``'s match predicate, NULL read as false."""
-        return f"coalesce({self._bridge(compile_query(q, self.id_field))}, FALSE)"
+        return f"coalesce({query_sql(q, self.id_field)}, FALSE)"
 
     def build(self, q: dict, pred: str | None = None) -> str:
         (kind, body), = q.items()
@@ -229,8 +217,8 @@ class _ScoreCompiler:
         if pred is None and kind not in _UNGATED_KINDS and not (
                 kind == "multi_match"
                 and body.get("type", "best_fields") != "cross_fields"):
-            # compiled before the arm runs: compile_query also validates
-            pred = self._bridge(compile_query(q, self.id_field))
+            # rendered before the arm runs: query_sql also validates
+            pred = query_sql(q, self.id_field)
 
         def gate(score: str) -> str:
             """``score`` where this node matches, else 0."""
@@ -463,16 +451,14 @@ class _ScoreCompiler:
             boost = float(body.get("boost", 1.0))
             origin, pivot = body["origin"], body["pivot"]
             if isinstance(origin, dict):
-                from .query_dsl import haversine_meters
-
                 pv = _parse_distance_m(pivot)
                 if pv is None:
                     raise ValueError(
                         f"bad distance_feature pivot: {pivot!r}")
-                fld = F.col(body["field"])
-                dist = self._bridge(haversine_meters(
-                    fld["lat"], fld["lon"],
-                    float(origin["lat"]), float(origin["lon"])))
+                fld = sql_path(body["field"])
+                dist = haversine_meters(
+                    f"{fld}.lat", f"{fld}.lon",
+                    float(origin["lat"]), float(origin["lon"]))
             else:
                 pv = _parse_duration_ms(pivot)
                 if pv is None:
@@ -596,7 +582,7 @@ class _ScoreCompiler:
                     "script_score's min_score param is not supported — "
                     "use the search body's top-level min_score"
                 )
-            v = self._bridge(_script_score(body, self.build(body["query"])))
+            v = _script_score(body, self.build(body["query"]))
             return gate(f"round({_times(v, body.get('boost', 1.0))}, 6)")
         if kind == "boosting":
             # ES boosting: positive score, multiplied by negative_boost
@@ -663,13 +649,13 @@ class _ScoreCompiler:
                 v = _field_value_factor(fn["field_value_factor"])
             for dk in ("gauss", "exp", "linear"):
                 if dk in fn:
-                    v = _decay_column(dk, fn[dk], self._bridge)
+                    v = _decay_column(dk, fn[dk])
             if "random_score" in fn:
                 v = _random_score(fn["random_score"])
             if "script_score" in fn:
                 # inside function_score, the script sees _score = the
                 # INNER QUERY's score (ES semantics)
-                v = self._bridge(_script_score(fn["script_score"], base))
+                v = _script_score(fn["script_score"], base)
             if "weight" in fn:
                 v = _times(v, fn["weight"])
             gate = self._matches(fn["filter"]) if "filter" in fn else "TRUE"
@@ -787,8 +773,7 @@ def _parse_distance_m(s) -> float | None:
     return float(m.group(1)) * _DISTANCE_M[m.group(2) or "m"]
 
 
-def _decay_column(kind: str, body: dict,
-                  bridge: Callable[[Column], str]) -> str:
+def _decay_column(kind: str, body: dict) -> str:
     """ES ``function_score`` decay functions ``gauss`` / ``exp`` /
     ``linear`` over numeric, date, or geo-point fields — closed-form
     codegen math over the scored frame (VERDICT r8 #3):
@@ -805,8 +790,7 @@ def _decay_column(kind: str, body: dict,
     ``now`` anchors need the engine's pinned-clock extension key ``now``
     in the spec, same determinism rule as range date math), anything else
     is numeric.  A NULL field value scores 1.0, exactly ES's documented
-    decay behavior for missing fields.  Rounded to 6 like every factor.
-    ``bridge`` registers the haversine distance Column of a geo field."""
+    decay behavior for missing fields.  Rounded to 6 like every factor."""
     spec = dict(body)
     now = spec.pop("now", None)
     (field, fspec), = spec.items()
@@ -820,14 +804,12 @@ def _decay_column(kind: str, body: dict,
     if not (0.0 < decay < 1.0):
         raise ValueError(f"decay must be in (0, 1), got {decay}")
     if isinstance(origin, dict):  # geo point
-        from .query_dsl import haversine_meters
-
         # explicit NULL gate: haversine's trig pipeline does not propagate
         # NULL coordinates, and ES scores missing fields 1.0 (the final
         # coalesce handles that once dist is properly NULL)
-        far = bridge(haversine_meters(
-            F.col(field)["lat"], F.col(field)["lon"],
-            float(origin["lat"]), float(origin["lon"])))
+        far = haversine_meters(
+            sql_path(field + ".lat"), sql_path(field + ".lon"),
+            float(origin["lat"]), float(origin["lon"]))
         dist = (f"CASE WHEN {sql_path(field + '.lat')} IS NOT NULL AND "
                 f"{sql_path(field + '.lon')} IS NOT NULL THEN {far} END")
         scale_v = _parse_distance_m(scale)
@@ -878,27 +860,28 @@ def _decay_column(kind: str, body: dict,
     return f"round(coalesce({out}, 1.0D), 6)"
 
 
-def _script_score(spec: dict, score: str) -> Column:
+def _script_score(spec: dict, score: str) -> str:
     """ES ``script_score``: the Painless arithmetic subset
-    (``query_dsl._script_column`` — doc refs, params, Math.* calls)
+    (``query_dsl._script_sql`` — doc refs, params, Math.* calls)
     with ``_score`` bound to the inner query's score, the SQL text
     ``score``.  Same codegen class as every other score function;
     anything outside the subset rejects loudly."""
     import re as _re
 
-    from .query_dsl import _script_column
+    from .query_dsl import _script_sql
 
     raw = spec.get("script")
     if isinstance(raw, dict):
         src = raw.get("source", "")
-        params = {k: F.lit(v) for k, v in (raw.get("params") or {}).items()}
+        params = {k: sql_literal(v)
+                  for k, v in (raw.get("params") or {}).items()}
     else:
         src, params = str(raw), {}
     if not src:
         raise ValueError("script_score needs a script source")
     src = _re.sub(r"(?<![\w.])_score(?![\w.])", "params.__score", src)
-    params["__score"] = F.expr(score)
-    return F.round(_script_column(src, params, columns="*"), 6)
+    params["__score"] = score
+    return f"round({_script_sql(src, params, columns='*')}, 6)"
 
 
 def _random_score(spec: dict) -> str:
@@ -1223,12 +1206,10 @@ def _apply_query_rescore(
     }.get(mode)
     if blend is None:
         raise ValueError(f"unsupported rescore score_mode: {mode}")
-    bridges: list = []
-    rpred = bridge(bridges, compile_query(
-        _normalize(rspec["rescore_query"]), id_field))
-    top = with_bridges(top, bridges).withColumn("_score", F.expr(
+    rpred = query_sql(_normalize(rspec["rescore_query"]), id_field)
+    top = top.withColumn("_score", F.expr(
         f"round(CASE WHEN coalesce({rpred}, FALSE) THEN {blend} ELSE {a} END, 6)"))
-    return drop_bridges(top, bridges, "_score0", "_rescore")
+    return top.drop("_score0", "_rescore")
 
 
 def score_frame(
@@ -1263,8 +1244,7 @@ def score_frame(
     out = df
     if st.names:
         out = st.attach(df, stats_over if stats_over is not None else df)
-    out = with_bridges(out, sc.bridges).withColumn(
-        "_score", F.expr(f"round({score}, 6)"))
+    out = out.withColumn("_score", F.expr(f"round({score}, 6)"))
     if explain:
         import json as _json
 
@@ -1284,7 +1264,12 @@ def score_frame(
               for i, (fld, val) in enumerate(st.idfs)],
         ))
         out = out.withColumn("_explanation", expl)
-    return drop_bridges(out, sc.bridges, *st.helpers, *st.names)
+    if not st.names:
+        return out
+    # one parsed projection: a drop of N names costs N py4j calls
+    return out.selectExpr("* EXCEPT ("
+                          + ", ".join(map(sql_ident, [*st.helpers, *st.names]))
+                          + ")")
 
 
 def es_retriever_search(

@@ -226,24 +226,14 @@ def test_cidr_prefix_out_of_range_rejects_loudly():
 
 def test_cidr_hedge_flag_disables_range_arm(spark):
     # (ADVICE r11) the term/terms CIDR hedge over-matches on keyword
-    # fields holding dotted-quad strings; both the module switch and the
-    # per-term `"cidr": false` key compile exact equality only
-    from hive2es_offline_spark.plans import query_dsl
-
+    # fields holding dotted-quad strings; the per-term `"cidr": false`
+    # key compiles exact equality only
     df = spark.createDataFrame(
         [(1, "10.0.0.0/8"), (2, "10.1.2.3"), (3, "11.0.0.0")],
         "id long, subnet string")
     # per-term key: only the literal string matches
     assert ids(df, {"term": {"subnet": {
         "value": "10.0.0.0/8", "cidr": False}}}) == [1]
-    # module switch: term AND terms drop the range arm
-    old = query_dsl.CIDR_TERM_RANGE_ARM
-    try:
-        query_dsl.CIDR_TERM_RANGE_ARM = False
-        assert ids(df, {"term": {"subnet": "10.0.0.0/8"}}) == [1]
-        assert ids(df, {"terms": {"subnet": ["10.0.0.0/8"]}}) == [1]
-    finally:
-        query_dsl.CIDR_TERM_RANGE_ARM = old
     # default hedge behavior is unchanged
     assert ids(df, {"term": {"subnet": "10.0.0.0/8"}}) == [1, 2]
 

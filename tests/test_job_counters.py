@@ -16,7 +16,11 @@ text parsed once, so building it costs a few dozen gateway calls, not
 one per expression node.  The six-arm scored multi-search build is
 gated too: a score-tree node compiles its match predicate only where
 it gates on it.  So is each score-tree family's warm build: the score
-is one Spark-SQL text over bridged Columns, parsed once.
+is one Spark-SQL text, parsed once.
+
+py4j round trips of a filter clause's warm ``compile_query`` build: the
+clause tree renders as one Spark-SQL text, so any clause costs the one
+parse.
 
 py4j round trips and Spark jobs of each ``search_mix`` family's warm
 build, as ``perfbench/workloads.py`` builds it: the counters the
@@ -230,14 +234,16 @@ def py4j_calls(spark):
 def test_six_arm_multi_match_msearch_build_py4j_calls(spark):
     # a score-tree node compiles its match predicate only where it gates
     # on it: compiling one at every node made this build 3 378 calls;
-    # gating nodes only, 2 892; the score as one SQL text, 1 068
+    # gating nodes only, 2 892; the score as one SQL text, 1 068; the
+    # match predicates as SQL text too, 849; the helper columns dropped
+    # by one parsed projection, 800
     import __spark_entry__ as entry
 
     _documents(spark)
     entry.q_es_multi_match_types(spark, SF_SMOKE)  # warm
     with py4j_calls(spark) as calls:
         entry.q_es_multi_match_types(spark, SF_SMOKE)
-    assert 0 < calls[0] <= 1175, f"{calls[0]} py4j calls"  # 1 068
+    assert 0 < calls[0] <= 880, f"{calls[0]} py4j calls"  # 800
 
 
 def _scored_frame(spark):
@@ -255,9 +261,10 @@ def _scored_frame(spark):
 
 
 #: (query, py4j bound) of one warm ``es_scored_search`` build each; a
-#: bound is the count measured when the gate was added plus 10 %
+#: bound is the latest measured count plus 10 %, earlier counts follow it
 SCORE_TREE_BUILDS = {
-    # 382 calls; 1 452 when the score was assembled from Columns
+    # 109 calls; 382 before filter clauses rendered as Spark-SQL text;
+    # 1 452 when the score was assembled from Columns
     "function_score": ({"function_score": {
         "query": {"match": {"text": "quick fox"}},
         "functions": [
@@ -268,28 +275,28 @@ SCORE_TREE_BUILDS = {
             {"field_value_factor": {"field": "n", "modifier": "log1p",
                                     "missing": 1}},
             {"weight": 2.0, "filter": {"term": {"tag": "a"}}}],
-        "score_mode": "sum", "boost_mode": "multiply"}}, 420),
-    # 240; 461
+        "score_mode": "sum", "boost_mode": "multiply"}}, 120),
+    # 108; 240; 461
     "pinned_boosting": ({"pinned": {"ids": ["2"], "organic": {"boosting": {
         "positive": {"match": {"text": "quick"}},
-        "negative": {"term": {"tag": "b"}}, "negative_boost": 0.5}}}}, 264),
-    # 357; 752
+        "negative": {"term": {"tag": "b"}}, "negative_boost": 0.5}}}}, 119),
+    # 115; 357; 752
     "bool_dis_max": ({"bool": {
         "must": [{"dis_max": {"queries": [
             {"match": {"text": "quick"}}, {"match": {"title": "fox"}}],
             "tie_breaker": 0.3}}],
         "should": [{"term": {"tag": "a"}}, {"range": {"n": {"gte": 1}}}]}},
-        393),
-    # 661; 991
+        127),
+    # 66; 661; 991
     "sparse_rank_feature": ({"bool": {"should": [
         {"sparse_vector": {"field": "sv",
                            "query_vector": {"quick": 1.0, "fox": 0.5}}},
         {"rank_feature": {"field": "n", "saturation": {"pivot": 3}}}]}},
-        727),
-    # 136; 1 073
+        73),
+    # 115; 136; 1 073
     "cross_fields": ({"multi_match": {
         "query": "quick fox", "fields": ["text", "title^2"],
-        "type": "cross_fields", "tie_breaker": 0.3}}, 150),
+        "type": "cross_fields", "tie_breaker": 0.3}}, 127),
 }
 
 
@@ -385,18 +392,18 @@ SEARCH_MIX_PARAMS = {
 
 #: (py4j bound, build-job bound) of one warm build each; a bound is the
 #: latest measured count plus at most 10 %, and a count in parentheses
-#: is the one before scores rendered as Spark-SQL text
+#: is the one before filter clauses rendered as Spark-SQL text
 SEARCH_MIX_BUILDS = {
-    "filter_topk": (302, 0),            # 275 calls, 0 jobs
-    "aggs_terms": (264, 0),             # 240, 0
-    "aggs_date_histogram": (191, 0),    # 174, 0
-    "match_bm25": (198, 0),             # 180, 0 (297)
-    "es_retriever_rrf": (1516, 0),      # 1 379, 0 (1 516)
-    "es_retriever_pinned": (997, 3),    # 907, 3 (1 437)
-    "es_knn": (723, 1),                 # 658, 1: the knn top-k collect
+    "filter_topk": (124, 0),            # 112 calls, 0 jobs (275)
+    "aggs_terms": (238, 0),             # 216, 0 (240)
+    "aggs_date_histogram": (165, 0),    # 150, 0 (174)
+    "match_bm25": (148, 0),             # 134, 0 (180)
+    "es_retriever_rrf": (1467, 0),      # 1 333, 0 (1 379)
+    "es_retriever_pinned": (911, 3),    # 828, 3 (907)
+    "es_knn": (698, 1),                 # 634, 1: the knn top-k collect (658)
     "esql_stats": (161, 0),             # 147, 0
-    "es_esql_score": (168, 0),          # 153, 0 (301)
-    "es_esql_knn": (751, 1),            # 683, 1: the KNN boundary (741)
+    "es_esql_score": (143, 0),          # 130, 0 (153)
+    "es_esql_knn": (751, 1),            # 683, 1: the KNN boundary
 }
 
 
@@ -422,3 +429,30 @@ def test_search_mix_build_counters(spark, name):
         build()
     assert 0 < calls[0] <= py4j_bound, f"{name}: {calls[0]} py4j calls"
     assert len(jobs) <= jobs_bound, f"{name}: build jobs {jobs}"
+
+
+#: (clause, py4j bound) of one warm ``compile_query`` build each; a bound
+#: is the measured count plus 10 %, the count when the clauses were
+#: built from Columns in parentheses
+QUERY_LEAF_BUILDS = {
+    "term": ({"term": {"l_returnflag": "R"}}, 4),  # 3 calls (27)
+    "range": ({"range": {"l_quantity": {"gte": 5, "lte": 20}}}, 4),  # 3 (65)
+    "filter_topk_bool": ({"bool": {  # 3 (166)
+        "filter": [{"range": {"l_quantity": {"gte": 5, "lte": 20}}},
+                   {"term": {"l_returnflag": "R"}}],
+        "must_not": [{"term": {"l_linestatus": "O"}}]}}, 4),
+    "nested_bool": ({"nested": {"path": "items", "query": {"bool": {  # 3 (106)
+        "must": [{"term": {"items.brand": "acme"}},
+                 {"range": {"items.qty": {"gte": 5, "lte": 9}}}]}}}}, 4),
+    "geo_distance": ({"geo_distance": {  # 3 (197)
+        "distance": "10km", "loc": {"lat": 48.86, "lon": 2.35}}}, 4),
+}
+
+
+@pytest.mark.parametrize("name", sorted(QUERY_LEAF_BUILDS))
+def test_query_leaf_build_py4j_calls(spark, name):
+    clause, bound = QUERY_LEAF_BUILDS[name]
+    compile_query(clause, "id")  # warm
+    with py4j_calls(spark) as calls:
+        compile_query(clause, "id")
+    assert 0 < calls[0] <= bound, f"{name}: {calls[0]} py4j calls"

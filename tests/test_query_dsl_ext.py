@@ -174,6 +174,43 @@ def test_range_date_math_per_operator_rounding(spark):
         ids(df, {"range": {"ts": {"gte": "now-3d"}}})
 
 
+def test_range_rejects_unknown_keys(spark):
+    # a dropped time_zone shifted the bound silently: with the +01:00
+    # offset ES matches both rows, the bound read as UTC matched only
+    # the second; relation and typos were accepted the same way
+    from datetime import datetime
+
+    df = spark.createDataFrame(
+        [(1, datetime(2023, 12, 31, 23, 45)), (2, datetime(2024, 1, 1, 0, 45))],
+        "id long, ts timestamp")
+    for extra in ({"time_zone": "+01:00"}, {"bogus": 1},
+                  {"relation": "disjoint"}, {"format": "yyyy-MM-dd"}):
+        with pytest.raises(ValueError, match="unsupported range option"):
+            ids(df, {"range": {"ts": {"gte": "2024-01-01T00:30:00", **extra}}})
+    # query_string's boost rides along
+    assert ids(df, {"range": {"ts": {"gte": "2024-01-01T00:30:00",
+                                     "boost": 2.0}}}) == [2]
+
+
+def test_match_filter_plan_holds_an_array_literal(df):
+    plan = df.where(compile_query({"match": {"txt": "beta gamma"}}, "id")) \
+        ._jdf.queryExecution().optimizedPlan().toString()
+    assert "arrays_overlap" in plan and "[beta,gamma]" in plan
+    assert "array(beta" not in plan
+
+
+def test_wide_terms_and_bool_parse(spark):
+    df = spark.range(0, 20000).selectExpr("id", "CAST(id AS STRING) AS k")
+    values = [str(v) for v in range(0, 20000, 2)]  # 10 000 values
+    got = df.where(compile_query({"terms": {"k": values}}, "id")).count()
+    assert got == 10000
+    body = {"bool": {
+        "filter": [{"range": {"id": {"gte": i}}} for i in range(150)],
+        "should": [{"term": {"k": str(v)}} for v in range(140, 290)],
+        "minimum_should_match": 1}}
+    assert ids(df, body) == list(range(149, 290))
+
+
 def test_match_phrase_prefix(spark):
     df = spark.createDataFrame(
         [(1, "quick brown fox"), (2, "quick brownie"), (3, "brown quick")],
@@ -582,7 +619,7 @@ def test_bucket_script_property_vs_python_eval(spark):
     (one boolean/double column per expression over a 1-row frame)."""
     import random
 
-    from hive2es_offline_spark.plans.query_dsl import _script_column
+    from hive2es_offline_spark.plans.query_dsl import _script_sql
 
     rng = random.Random(13)
     vals = {"a": 7.0, "b": -3.0, "c": 0.5}
@@ -602,8 +639,9 @@ def test_bucket_script_property_vs_python_eval(spark):
         exprs.append(e)
 
     df = spark.createDataFrame([tuple(vals.values())], "a double, b double, c double")
-    params = {k: F.col(k) for k in vals}
-    cols = [_script_column(e, params).alias(f"e{i}") for i, e in enumerate(exprs)]
+    params = {k: k for k in vals}
+    cols = [F.expr(_script_sql(e, params)).alias(f"e{i}")
+            for i, e in enumerate(exprs)]
     row = df.select(*cols).collect()[0]
     for i, e in enumerate(exprs):
         try:
@@ -747,8 +785,8 @@ def test_geo_distance_and_bounding_box(spark):
     from pyspark.sql import functions as SF
 
     d = df.where("id = 1").select(
-        haversine_meters(SF.col("loc.lat"), SF.col("loc.lon"),
-                         48.8566, 2.3522).alias("d")
+        SF.expr(haversine_meters("loc.lat", "loc.lon",
+                                 48.8566, 2.3522)).alias("d")
     ).collect()[0]["d"]
     assert abs(d - 343_500) < 2_000
 
